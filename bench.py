@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
 import sys
 import time
@@ -315,6 +316,23 @@ def _load_query_timings(path: str) -> dict[str, float]:
         return {}
 
 
+_BENCH_NAME = re.compile(r"^BENCH(_LOCAL)?_r(\d+)(?:_c\d+)?(?:_(\d+))?\.json$")
+
+
+def _parse_bench_name(name: str) -> tuple[int, bool, int] | None:
+    """(round, is_local, seq) for a bench artifact's file name, or None.
+
+    The one parser for every artifact name: driver wrappers
+    ``BENCH_r14.json`` and ``BENCH_r14_c8.json`` (the driver's
+    core-count tag), and local histories ``BENCH_LOCAL_r14.json`` and
+    ``BENCH_LOCAL_r14_2.json`` (the ``_local_bench_path`` collision
+    suffix, ``seq`` 2)."""
+    m = _BENCH_NAME.match(name)
+    if not m:
+        return None
+    return int(m.group(2)), bool(m.group(1)), int(m.group(3) or 0)
+
+
 def _bench_round_files(here: str = _HERE) -> list[tuple[int, str]]:
     """(round, path) for every BENCH_r*/BENCH_LOCAL_r* artifact, sorted
     ascending by round; the LOCAL file for a round sorts after the
@@ -324,19 +342,27 @@ def _bench_round_files(here: str = _HERE) -> list[tuple[int, str]]:
     ``_local_bench_path``) sort after the base file of the same round,
     so the newest run of a round wins the tie."""
     import glob
-    import re
 
-    out: list[tuple[int, int, int, str]] = []
-    for rank, pattern in ((0, "BENCH_r*.json"), (1, "BENCH_LOCAL_r*.json")):
-        for p in glob.glob(os.path.join(here, pattern)):
-            m = re.search(r"r(\d+)(?:_(\d+))?\.json$", os.path.basename(p))
-            if m:
-                seq = int(m.group(2)) if m.group(2) else 0
-                out.append((int(m.group(1)), rank, seq, p))
+    out: list[tuple[int, bool, int, str]] = []
+    for p in glob.glob(os.path.join(here, "BENCH_*.json")):
+        parsed = _parse_bench_name(os.path.basename(p))
+        if parsed:
+            out.append((*parsed, p))
     return [(rnd, p) for rnd, _, _, p in sorted(out)]
 
 
-def _prior_bench(here: str = _HERE) -> dict[str, float]:
+def _artifact_cpus(path: str) -> int | None:
+    """The core count an artifact records as top-level ``cpus`` (driver
+    wrappers, and local histories this bench.py writes), or None."""
+    try:
+        with open(path) as f:
+            cpus = json.load(f).get("cpus")
+        return int(cpus) if cpus is not None else None
+    except Exception:
+        return None
+
+
+def _prior_bench(here: str = _HERE, cpus: int | None = None) -> dict[str, float]:
     """Per-query seconds from the newest PARSEABLE bench artifact of a
     PRIOR round, mapped through RENAMED_FROM so merged queries compare
     against their parts' sum.  Unparseable rounds (r02's ``parsed:
@@ -348,11 +374,21 @@ def _prior_bench(here: str = _HERE) -> dict[str, float]:
     bench.py after a regression would otherwise reset the bar to the
     regressed numbers and mask a cross-round 2× slowdown.  The current
     round is 1 + the newest driver artifact's round (``_next_round``),
-    so everything from that round on is excluded."""
+    so everything from that round on is excluded.
+
+    Same machine only: when any prior artifact records ``cpus``, only
+    an artifact with this run's ``cpus`` is a baseline (the r14 c8 run
+    compared itself against the c32 file).  With no recorded core
+    count anywhere (legacy history), the newest artifact is used."""
     cur = _next_round(here)
-    for rnd, path in reversed(_bench_round_files(here)):
-        if rnd >= cur:
-            continue
+    prior_files = [
+        (path, _artifact_cpus(path))
+        for rnd, path in reversed(_bench_round_files(here))
+        if rnd < cur
+    ]
+    if any(c is not None for _, c in prior_files):
+        prior_files = [(p, c) for p, c in prior_files if c == cpus]
+    for path, _ in prior_files:
         prior = _load_query_timings(path)
         if prior:
             return _map_renames(prior)
@@ -448,13 +484,20 @@ def _next_round(here: str = _HERE) -> int:
     (the driver writes those at round end, so during round N the newest
     is N-1)."""
     import glob
-    import re
 
     rounds = [
-        int(re.search(r"r(\d+)", os.path.basename(p)).group(1))
+        parsed[0]
         for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
+        if (parsed := _parse_bench_name(os.path.basename(p)))
     ]
     return (max(rounds) + 1) if rounds else 1
+
+
+def _run_cpus(spark) -> int:
+    """The core count of this run: N of a ``local[N]`` master, else the
+    machine's CPU count (``local[*]``)."""
+    m = re.fullmatch(r"local\[(\d+)\]", spark.sparkContext.master)
+    return int(m.group(1)) if m else os.cpu_count()
 
 
 def _local_bench_path(here: str = _HERE) -> str:
@@ -518,6 +561,7 @@ def main() -> None:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark(app_name="bench")
     specs = all_specs()
+    cpus = _run_cpus(spark)
 
     # Steady-state measurement: one untimed warmup execution per query
     # (whole-stage codegen compilation + parquet footer caching are
@@ -538,7 +582,7 @@ def main() -> None:
 
     # Load the prior BEFORE writing this round's local file (which may
     # overwrite the newest artifact the gate should compare against).
-    prior = _prior_bench()
+    prior = _prior_bench(cpus=cpus)
 
     timings: dict[str, float] = {}
     medians: dict[str, float] = {}
@@ -589,6 +633,8 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "n_queries": len(timings),
         "load_avg_1m": load_avg,
+        "cpus": cpus,
+        "defaultParallelism": spark.sparkContext.defaultParallelism,
     }
     if errors:
         out["errors"] = errors

@@ -2,7 +2,11 @@
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import DataFrame
+
+_log = logging.getLogger(__name__)
 
 
 def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
@@ -38,7 +42,13 @@ def spread_scan(df: DataFrame, factor: int = 1) -> DataFrame:
         return df
     try:
         current = df.rdd.getNumPartitions()
-    except Exception:  # pragma: no cover - planning failure falls back
+    except Exception as exc:
+        _log.warning(
+            "spread_scan: could not plan the input's partitions (%s: %s);"
+            " returning it without fan-out",
+            type(exc).__name__,
+            exc,
+        )
         return df
     if current >= target:
         return df

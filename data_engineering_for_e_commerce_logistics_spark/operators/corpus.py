@@ -654,8 +654,7 @@ def _topn_by_bucketed_key(
     payload_cols: tuple[str, ...],
 ) -> DataFrame:
     """Exact top-n-per-stratum by ascending ``skey`` WITHOUT a
-    per-stratum window — the shared tail of ``weighted_sample_flag``
-    and ``dsir_resample_flag``.  ``d`` must carry ``skey`` (the order
+    per-stratum window — the tail of ``weighted_sample_flag``.  ``d`` must carry ``skey`` (the order
     key), ``__bkt`` (a monotone-in-skey bucket id), ``strata``,
     ``id_col`` and ``payload_cols``.  Per-(stratum, bucket) counts
     fold to cumulative offsets; only buckets whose offset < n can
@@ -693,7 +692,7 @@ def _topn_by_bucketed_key(
 
 
 # ---------------------------------------------------------------------------
-# DSIR — Data Selection via Importance Resampling (Xie et al., 2023)
+# Hashed n-gram features
 # ---------------------------------------------------------------------------
 
 
@@ -706,7 +705,7 @@ def hashed_ngram_buckets(
 ) -> DataFrame:
     """One row per hashed word-{1,2}-gram OCCURRENCE: (id, carry…, b)
     with ``b = md5(feature) mod n_buckets`` — the feature extractor
-    shared by the DSIR weight estimator and the hashed quality
+    shared by the DoReMi domain grid and the hashed quality
     classifier.  Pure per-row array expressions (split → zip_with →
     explode), no shuffle, whole-stage codegen; the md5/conv bucket is
     the repo's engine-portable hash (same text → same bucket in
@@ -728,206 +727,6 @@ def hashed_ngram_buckets(
     )
     return df.select(F.col(id_col), *carry_cols, feat).select(
         F.col(id_col), *carry_cols, b.alias("b")
-    )
-
-
-def dsir_log_ratio_weights(
-    df: DataFrame,
-    target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """DSIR importance weights: fit hashed-n-gram bag-of-words models
-    on the TARGET slice (rows where ``target`` is true — the domain
-    the training mix should match) and on the RAW corpus, then score
-    every document by its log importance ratio
-    ``Σ_feat ln(p_target[b]/p_raw[b])`` under add-0.5 smoothing.
-    Returns (id, n_feats, lr_weight); docs that look like the target
-    domain score high and feed ``dsir_resample_flag``.
-
-    Cross-engine exactness: each bucket's log-ratio is ONE rounded
-    double (exact_round 9dp — the ln-then-decimal-round pattern of
-    graph_queries.price_ln), and the per-doc score is an exact
-    DECIMAL(28,9) sum of those rounded values, so Spark's unordered
-    partial aggregation and DuckDB's sequential sum agree bitwise.
-
-    Scale shape: two passes over the exploded features — (1) ONE
-    fused hash-agg on the 64-bucket key computing raw and target
-    counts together (map-side combine collapses each partition to
-    ≤64 rows, the distributed n-gram-LM fit); totals fold the tiny
-    bucket frame and broadcast back as a 1-row scalar frame; (2) the
-    per-doc score joins features against the BROADCAST 64-row
-    log-ratio table and shuffles once on id.  No driver state, no
-    UDF, no cache of the unbounded corpus."""
-    feats = hashed_ngram_buckets(
-        df.select(id_col, text_col, target.alias("__is_target")),
-        text_col,
-        id_col,
-        n_buckets,
-        carry_cols=("__is_target",),
-    )
-    counts = feats.groupBy("b").agg(
-        F.count(F.lit(1)).alias("c_r"),
-        F.sum(F.when(F.col("__is_target"), 1).otherwise(0)).alias("c_t"),
-    )
-    return _dsir_doc_scores(
-        feats.select(id_col, "b"),
-        _dsir_lr_table(counts, n_buckets),
-        id_col,
-    )
-
-
-def _dsir_lr_table(counts: DataFrame, n_buckets: int) -> DataFrame:
-    """(b, c_r, c_t) bucket counts → the broadcastable (b, lr)
-    log-ratio table under add-0.5 smoothing (9dp-rounded, the
-    ln-then-decimal-round pattern)."""
-    totals = counts.agg(
-        F.sum("c_r").alias("tot_r"), F.sum("c_t").alias("tot_t")
-    )
-    half_b = float(0.5 * n_buckets)
-    return counts.crossJoin(F.broadcast(totals)).select(
-        "b",
-        exact_round(
-            F.log(
-                (F.col("c_t") + F.lit(0.5))
-                / (F.col("tot_t") + F.lit(half_b))
-            )
-            - F.log(
-                (F.col("c_r") + F.lit(0.5))
-                / (F.col("tot_r") + F.lit(half_b))
-            ),
-            9,
-        ).alias("lr"),
-    )
-
-
-def _dsir_doc_scores(
-    feats: DataFrame, lr: DataFrame, id_col: str
-) -> DataFrame:
-    """(id, b) feature stream × broadcast (b, lr) → per-doc
-    (id, n_feats, lr_weight) with the exact DECIMAL(28,9) sum."""
-    return (
-        feats.join(F.broadcast(lr), "b")
-        .groupBy(id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_feats"),
-            F.sum(F.col("lr").cast("decimal(28,9)"))
-            .cast("double")
-            .alias("lr_weight"),
-        )
-    )
-
-
-def dsir_bucket_index(
-    df: DataFrame,
-    target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-) -> DataFrame:
-    """The persisted DSIR state: (b, c_r, c_t) hashed-n-gram bucket
-    counts — 64 rows no matter the corpus, the whole reason DSIR
-    suits incremental ingest (contrast the dedup families, whose
-    indexes grow with the corpus)."""
-    feats = hashed_ngram_buckets(
-        df.select(id_col, text_col, target.alias("__is_target")),
-        text_col,
-        id_col,
-        n_buckets,
-        carry_cols=("__is_target",),
-    )
-    return feats.groupBy("b").agg(
-        F.count(F.lit(1)).alias("c_r"),
-        F.sum(F.when(F.col("__is_target"), 1).otherwise(0)).alias("c_t"),
-    )
-
-
-def dsir_score_batch(
-    batch: DataFrame,
-    index: DataFrame,
-    target: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-) -> tuple[DataFrame, DataFrame]:
-    """Incremental DSIR step: score a fresh batch against the LMs the
-    index already holds (one broadcast of 64 rows + one batch-side
-    shuffle on id — the 100 TB corpus is never re-read), then accrue
-    the batch's own counts into the index.  Returns (new_index,
-    batch_scores); scoring sees the PRE-batch index, so re-ingesting
-    the same batch yields identical scores — the family's
-    determinism law."""
-    feats = hashed_ngram_buckets(
-        batch.select(id_col, text_col, target.alias("__is_target")),
-        text_col,
-        id_col,
-        n_buckets,
-        carry_cols=("__is_target",),
-    ).cache()
-    scores = _dsir_doc_scores(
-        feats.select(id_col, "b"),
-        _dsir_lr_table(index, n_buckets),
-        id_col,
-    )
-    batch_counts = feats.groupBy("b").agg(
-        F.count(F.lit(1)).alias("c_r"),
-        F.sum(F.when(F.col("__is_target"), 1).otherwise(0)).alias("c_t"),
-    )
-    new_index = (
-        index.unionByName(batch_counts)
-        .groupBy("b")
-        .agg(F.sum("c_r").alias("c_r"), F.sum("c_t").alias("c_t"))
-    )
-    return new_index, scores
-
-
-def dsir_resample_flag(
-    weights: DataFrame,
-    n: int,
-    id_col: str = "doc_id",
-    weight_col: str = "lr_weight",
-    payload_cols: tuple[str, ...] = ("n_feats",),
-) -> DataFrame:
-    """Gumbel-top-n importance resampling in LOG space: DSIR draws n
-    docs without replacement with probability ∝ exp(lr_weight), which
-    is Sequential Poisson order on ξ = u / exp(lr) — ranked here by
-    ln ξ = ln u − lr so the comparison path never evaluates exp()
-    (unbounded magnitude + not cross-engine bit-stable; ln u IS
-    rounded to the same 9dp grid as lr, making the key a plain
-    difference of two exact-decimal images).  Top-n via the bucketed
-    ladder (``_topn_by_bucketed_key``) — the log-space ladder is the
-    INTEGER grid floor(key) (exact on decimal-image doubles), clamped
-    to ±80 (ln u ∈ [−22.2, 0], |lr| bounded by n_feats × max|ratio|;
-    outside keys collapse into end buckets — balance degrades, never
-    correctness).  No global window, no exp, no rand()."""
-    ln_u = exact_round(
-        F.log(
-            (
-                F.conv(
-                    F.substring(F.md5(F.col(id_col).cast("string")), 1, 8),
-                    16,
-                    10,
-                ).cast("double")
-                + F.lit(1.0)
-            )
-            / F.lit(4294967296.0)
-        ),
-        9,
-    )
-    d = weights.select(
-        F.col(id_col),
-        *payload_cols,
-        F.col(weight_col),
-        (ln_u - F.col(weight_col)).alias("skey"),
-    ).withColumn(
-        "__bkt",
-        F.greatest(
-            F.least(F.floor(F.col("skey")), F.lit(80)), F.lit(-80)
-        ).cast("long"),
-    )
-    return _topn_by_bucketed_key(
-        d, (), n, id_col, (*payload_cols, weight_col)
     )
 
 
@@ -1096,7 +895,7 @@ def domain_reweight(
     the final iteration.
 
     Cross-engine exactness: every transcendental (ln, exp) output is
-    9dp-rounded before it enters a sum (the PSI/DSIR recipe); sums
+    9dp-rounded before it enters a sum (the PSI recipe); sums
     accumulate as DECIMAL before ONE double cast; everything else is
     single IEEE ops on identical inputs, so the unrolled-CTE DuckDB
     oracle replays bitwise.
@@ -1597,8 +1396,7 @@ def tfidf_topk(
 
     ``tf_table`` lets a caller share one materialized ``(id, term,
     tf)`` frame across the lexical family (TF-IDF + BM25 both derive
-    everything from it — the ``lexical_retrieval_suite``
-    consolidation); when omitted the pass is built internally."""
+    everything from it); when omitted the pass is built internally."""
     if tf_table is None:
         terms = df.select(
             F.col(id_col), F.explode(tokens_col(text_col)).alias("term")
@@ -2273,10 +2071,8 @@ def ngram_masks(
     ``bit_or`` is associative, commutative, and idempotent, so the
     index is MERGEABLE exactly like the CMS (cell = ngram, merge =
     bit_or instead of sum): masks(C1 ∪ C2) = bit_or-merge(masks(C1),
-    masks(C2)), replayed batches change nothing, and the generic
-    streaming accumulator loop (``start_cms_stream`` with
-    ``merge_expr=F.bit_or(...)``) maintains it per ingest batch with
-    append-only segments.  Unlike the CMS grid the state grows with
+    masks(C2)), replayed batches change nothing, and per-ingest-batch
+    indexes accrue as append-only segments.  Unlike the CMS grid the state grows with
     DISTINCT ngrams — the dedup-index contrast, stated not hidden."""
     if len(sources) > COVERAGE_MAX_SOURCES:
         raise ValueError(

@@ -94,8 +94,7 @@ def triangle_count(
 def _measured_width(
     df: DataFrame, n_rows: int, per_partition: int = 2_000_000
 ) -> int:
-    """The iterative-graph width rule, shared by both CC variants
-    (review r10: two drifting copies): ~per_partition rows per
+    """The iterative-graph width rule: ~per_partition rows per
     partition keeps a billion-edge graph at cluster width while a
     small one runs single-task rounds."""
     return max(
@@ -173,8 +172,7 @@ def connected_components(
     lifetime, and each iteration's intermediate checkpoint blocks are
     reclaimed by the JVM ContextCleaner only after their Python
     handles are GC'd — so a long-lived session that holds many label
-    frames can accumulate O(rounds) label copies until GC runs (same
-    pattern in ``cc_alternating`` and ``kcenter_seed``)."""
+    frames can accumulate O(rounds) label copies until GC runs."""
     edges = (
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(pairs.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
@@ -204,10 +202,10 @@ def connected_components(
         .localCheckpoint()
     )
 
-    # AQE off + width pinned on measured-small graphs (r11, shared
-    # with cc_alternating — see _pinned_loop_conf): the fixpoint's
-    # per-iteration join/agg/repartition otherwise each materialize
-    # as their own AQE query-stage job.
+    # AQE off + width pinned on measured-small graphs (r11, see
+    # _pinned_loop_conf): the fixpoint's per-iteration
+    # join/agg/repartition otherwise each materialize as their own AQE
+    # query-stage job.
     with _pinned_loop_conf(pairs.sparkSession, n_edges < 2_000_000, p):
         while True:
             neighbor_min = (
@@ -250,248 +248,4 @@ def connected_components(
     edges.unpersist()
     return labels
 
-def _contract_to_star_forest(
-    edges: DataFrame, small: bool, p: int, max_rounds: int
-) -> tuple[DataFrame, int]:
-    """The alternating large-star / small-star contraction loop of
-    ``cc_alternating``: run rounds until the edge set is a star
-    forest, returning ``(final_edges, rounds)``.  Factored out so the
-    caller can pin session conf (AQE off, width = p on small graphs)
-    around exactly the loop's own internal actions."""
-    from pyspark.sql import Window
 
-    rounds = 0
-    while rounds < max_rounds:
-        # large-star: every strictly-larger neighbor of u re-points at
-        # min(N(u) ∪ {u}); output rows keep the (larger, smaller)
-        # orientation by construction (v > u >= m).  TWO physical
-        # forms, chosen by the MEASURED EDGE COUNT (r10):
-        # * small graph (under edges_per_partition edges): the minimum
-        #   rides a WINDOW over the partition key — per-row in the
-        #   same pass, no aggregate-then-self-join (each join costs an
-        #   exchange plus a broadcast collect through the driver), and
-        #   single-task buffering of a partition group is harmless at
-        #   this size.  This is the fixed-cost path the small-graph
-        #   rounds were paying ~2 broadcast collects for.
-        # * large graph: the groupBy+join form — partial (map-side)
-        #   aggregation computes the min without materializing any
-        #   node's full neighborhood in one task, which matters
-        #   precisely on big graphs where contraction funnels a
-        #   component's whole neighborhood onto its root (a
-        #   billion-member component would otherwise buffer ~1e9 rows
-        #   in ONE window task per round; the join streams it).
-        sym = edges.select(
-            F.col("a").alias("u"), F.col("b").alias("v")
-        ).union(edges.select(F.col("b"), F.col("a")))
-        if small:
-            lstar = sym.withColumn(
-                "m",
-                F.min(F.least(F.col("v"), F.col("u"))).over(
-                    Window.partitionBy("u")
-                ),
-            )
-        else:
-            gm = sym.groupBy("u").agg(
-                F.min(F.least(F.col("v"), F.col("u"))).alias("m")
-            )
-            lstar = sym.join(gm, "u")
-        lstar = (
-            lstar.where(F.col("v") > F.col("u"))
-            .select(F.col("v").alias("a"), F.col("m").alias("b"))
-            .where(F.col("a") != F.col("b"))
-        )
-        # small-star: partition by the larger endpoint; its smaller
-        # neighbors and itself all re-point at the minimum one.  (a,m)
-        # duplicates from either form are swept by the round-final
-        # distinct.
-        if small:
-            # one window pass yields both legs in the same frame, and
-            # ONE explode emits them (e2's old ``b != m`` guard is
-            # subsumed by the round-final ``x != m`` filter — an e2
-            # row IS (b, m), so the two predicates coincide)
-            sm = lstar.withColumn(
-                "m", F.min("b").over(Window.partitionBy("a"))
-            )
-            e12 = sm.select(
-                "m", F.explode(F.array("a", "b")).alias("x")
-            ).select("x", "m")
-        else:
-            # e1 reads the AGGREGATE directly (one row per a) so the
-            # join executes once, for e2 only — building both legs off
-            # the join would run it twice per round (review r10); the
-            # lstar exchange on "a" is shared by the aggregate and the
-            # join via exchange reuse
-            gmin = lstar.groupBy("a").agg(F.min("b").alias("m"))
-            e1 = gmin.select(F.col("a").alias("x"), F.col("m"))
-            e2 = (
-                lstar.join(gmin, "a")
-                .where(F.col("b") != F.col("m"))
-                .select(F.col("b").alias("x"), F.col("m"))
-            )
-            e12 = e1.union(e2)
-        new_edges = (
-            e12.where(F.col("x") != F.col("m"))
-            .select(F.col("x").alias("a"), F.col("m").alias("b"))
-            # ONE exchange: hash(a,b) at the measured width p satisfies
-            # distinct's clustered distribution, so the dedup reuses the
-            # repartition's layout instead of adding a second
-            # session-width exchange (r09 ADVICE: the old
-            # repartition-after-distinct order left the checkpointed
-            # frame at session width — small graphs paid 32+ near-empty
-            # tasks per round)
-            .repartition(p, "a", "b")
-            .distinct()
-            # lazy: the probe below is the materializing action, so
-            # checkpoint-write and convergence test share the round's
-            # terminal job (the probe's global aggregate scans every
-            # partition, which is exactly what eager=True's count()
-            # would have done in a job of its own)
-            .localCheckpoint(eager=False)
-        )
-        rounds += 1
-        edges = new_edges
-        # Star-forest probe: the alternation's fixed points are
-        # exactly star forests (every child has one parent edge and
-        # no node is both child and parent), so testing the shape
-        # directly both converges a round EARLIER than set-equality
-        # (no confirmation pass) and replaces the count + exceptAll
-        # pair.
-        probe = (
-            new_edges.select(
-                F.col("a").alias("n"),
-                F.lit(1).alias("fa"),
-                F.lit(0).alias("fb"),
-            )
-            .union(new_edges.select("b", F.lit(0), F.lit(1)))
-            .groupBy("n")
-            .agg(
-                F.sum("fa").alias("na"),
-                F.max("fa").alias("fa"),
-                F.max("fb").alias("fb"),
-            )
-            .agg(
-                F.max(F.col("fa") * F.col("fb")).alias("overlap"),
-                F.max("na").alias("max_parents"),
-            )
-            .first()
-        )
-        if (probe["overlap"] or 0) == 0 and (probe["max_parents"] or 0) <= 1:
-            return edges, rounds
-    raise RuntimeError(
-        f"cc_alternating did not converge in {max_rounds} rounds "
-        "(theoretical bound is O(log n) — this indicates a bug or "
-        "an adversarial id space, not a data-size limit)"
-    )
-
-
-def cc_alternating(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_rounds: int = 64,
-    return_rounds: bool = False,
-    edges_per_partition: int = 2_000_000,
-):
-    """Connected components via alternating large-star / small-star
-    contraction (Kiveris et al., "Connected Components in MapReduce
-    and Beyond", SoCC 2014) — the O(log n)-round twin of
-    ``connected_components``: min-label propagation needs one round
-    per hop of component DIAMETER (a 10k-event user session chain is
-    10k rounds — the driver loop, not the data, becomes the
-    bottleneck), while star contraction halves path lengths every
-    alternation, so ANY graph converges in O(log n) rounds.  Output
-    is identical: ``(node, label)`` with label = the component's
-    minimum id, for every node appearing in a pair (property-pinned
-    against ``connected_components`` and a WITH RECURSIVE oracle).
-
-    Per round: large-star points every neighbor v > u at u's
-    neighborhood minimum (edges stay (larger, smaller)); small-star
-    re-points each node's smaller neighbors (and itself) at its
-    minimum smaller neighbor.  Each is one neighborhood-min pass over
-    the CURRENT edge set — a window over the partition key on
-    measured-small graphs (cheapest fixed cost), a map-side-combining
-    groupBy + join on large ones (no single-task neighborhood
-    buffering under hub skew) — which only ever shrinks-or-holds at
-    O(#input pairs) rows, so at 100 TB the cost is a handful of
-    edge-keyed exchanges per round × ~log(n) rounds, with no
-    diameter dependence.  Each round's frame is
-    ``localCheckpoint``-ed LAZILY: iterative self-referencing joins
-    otherwise stack O(rounds) copies of the plan (the BPE lesson —
-    plan stringification alone OOMs the driver around depth 6), and
-    the convergence probe's full-scan aggregate doubles as the
-    materializing action.
-
-    Fixed-cost control on measured-small graphs (r11): the loop runs
-    with AQE disabled and ``spark.sql.shuffle.partitions`` pinned to
-    the measured width p — under AQE every exchange materializes as
-    its own query-stage JOB with a re-optimization, so one probed
-    round cost 4-5 driver round trips (53 jobs for ~11 rounds on the
-    sf0.1 chain graph) while the per-round DATA is microseconds at
-    p == 1.  With the pin, a round is ONE job of p-task stages.
-    Large graphs keep AQE — skew handling and runtime coalescing
-    matter exactly there.  The conf flip is session-scoped, applied
-    around only the loop's own internal actions, and restored in a
-    ``finally``; the returned frame reads already-materialized
-    checkpoints, so callers never execute under the pinned conf.
-
-    Convergence = the round was a no-op (same edge set): at the
-    fixed point the edges form star forests rooted at component
-    minima, so labels read off directly; roots label themselves.
-    Use this over ``connected_components`` when components can be
-    DEEP (session chains, linked lists, long near-dup chains);
-    prefer the fixpoint when diameter is known-small (typical LSH
-    dup clusters) — it does fewer exchanges per round.
-    """
-    a0 = F.greatest(F.col(id_a), F.col(id_b))
-    b0 = F.least(F.col(id_a), F.col(id_b))
-    # lazy checkpoint: the count() below is the materializing action,
-    # so setup is ONE pass over the input (checkpoint-write + count in
-    # the same job)
-    edges = (
-        pairs.select(a0.alias("a"), b0.alias("b"))
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    # Width from the MEASURED edge count (the connected_components r08
-    # lesson): on a small graph every job at session width pays 32+
-    # near-empty tasks of scheduling overhead — measured ~2s/round for
-    # a 31-edge path.  ~2M edges per partition keeps a billion-edge
-    # graph at cluster width while a small one runs single-task
-    # rounds.  Measured UP FRONT (not ridden on round 1's probe): the
-    # width picks each round's physical form — window vs
-    # groupBy+join, see _contract_to_star_forest — and letting round
-    # 1 run the join form blind measured +3.4s on the sf0.1 chain
-    # graph (the broadcast builds re-execute the not-yet-materialized
-    # input chain), more than this count job costs.
-    # edges_per_partition is the width/form knob — production keeps
-    # the 2M default; tests lower it to force the large-graph
-    # (groupBy+join) round form onto unit-sized graphs, which no
-    # fixture could otherwise reach.
-    n_edges = edges.count()
-    p = _measured_width(edges, n_edges, edges_per_partition)
-    # The round-form gate is SIZE-based, not width-based (review r10):
-    # p is capped at defaultParallelism, so on a 1-core session p == 1
-    # for ANY graph and a width gate would window-buffer a huge
-    # neighborhood in one task — exactly what the join form prevents.
-    small = n_edges < edges_per_partition
-    nodes = (
-        edges.select(F.col("a").alias("node"))
-        .union(edges.select("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-
-    with _pinned_loop_conf(pairs.sparkSession, small, p):
-        edges, rounds = _contract_to_star_forest(
-            edges, small, p, max_rounds
-        )
-
-    labels = nodes.join(
-        edges.select(F.col("a").alias("node"), F.col("b").alias("label")),
-        "node",
-        "left",
-    ).select("node", F.coalesce("label", F.col("node")).alias("label"))
-    if return_rounds:
-        return labels, rounds
-    return labels

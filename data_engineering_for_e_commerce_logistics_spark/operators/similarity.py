@@ -26,7 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import local_rows_df, spread_scan
+from ..functions import spread_scan
 
 
 def _as_double_vec(col: Column | str = "embedding") -> Column:
@@ -962,91 +962,6 @@ def decontaminate_semantic(
     )
 
 
-def standardize_embeddings(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> tuple[DataFrame, DataFrame]:
-    """Per-dimension standardization (mean-center, unit-variance) of
-    an embedding column — the whitening prep that keeps L2/cosine
-    geometry honest when raw embedding dimensions carry wildly
-    different scales (a dominant dimension otherwise owns every
-    distance the dedup/ANN family computes).
-
-    Returns ``(standardized, stats)``: the input with ``vec_col``
-    replaced by ``(x - mean_d) / std_d`` per dimension (a zero-spread
-    dimension standardizes to 0.0, not NULL/inf — the constant
-    carries no geometry), and the per-dimension ``(dim, mean, std)``
-    table.  Moments are decimal-exact: sum and sum-of-squares
-    accumulate as decimal(28,8) before ONE double division each, so
-    the oracle replay is bit-identical; std uses the population form
-    ``sqrt(E[x²] − E[x]²)``.
-
-    100 TB shape: pass 1 explodes (id, dim, x) but the per-dimension
-    partial aggregate collapses each partition to d rows BEFORE the
-    shuffle — the exchange moves ~d rows per partition, never the
-    corpus; the d-row stats table then folds to ONE broadcast row of
-    dimension-ordered arrays (the decontaminate_semantic pattern) and
-    pass 2 is map-only ``zip_with`` — no corpus shuffle anywhere.
-    """
-    vecs = df.select(F.col(id_col), _as_double_vec(vec_col).alias("__v"))
-    stats = (
-        vecs.select(F.posexplode("__v").alias("dim", "x"))
-        .groupBy("dim")
-        .agg(
-            (
-                F.expr("cast(sum(cast(x as decimal(28,8))) as double)")
-                / F.count("x")
-            ).alias("mean"),
-            F.sqrt(
-                # clamp: for a (near-)constant dimension the double
-                # rounding after the decimal sums can leave
-                # E[x²]−E[x]² marginally NEGATIVE — Spark's sqrt would
-                # yield NaN and DuckDB's would hard-error, a latent
-                # oracle divergence (ADVICE r08)
-                F.greatest(
-                    F.expr("cast(sum(cast(x*x as decimal(28,8))) as double)")
-                    / F.count("x")
-                    - F.pow(
-                        F.expr(
-                            "cast(sum(cast(x as decimal(28,8))) as double)"
-                        )
-                        / F.count("x"),
-                        F.lit(2),
-                    ),
-                    F.lit(0.0),
-                )
-            ).alias("std"),
-        )
-    )
-    stats_row = stats.agg(
-        F.array_sort(
-            F.collect_list(F.struct("dim", "mean", "std"))
-        ).alias("__s")
-    ).select(
-        F.transform("__s", lambda s: s["mean"]).alias("__means"),
-        F.transform("__s", lambda s: s["std"]).alias("__stds"),
-    )
-    standardized = (
-        df.crossJoin(F.broadcast(stats_row))
-        .withColumn(
-            vec_col,
-            F.zip_with(
-                _as_double_vec(vec_col),
-                F.zip_with(
-                    F.col("__means"), F.col("__stds"),
-                    lambda m, s: F.struct(m.alias("m"), s.alias("s")),
-                ),
-                lambda x, ms: F.when(
-                    ms["s"] > 0, (x - ms["m"]) / ms["s"]
-                ).otherwise(F.lit(0.0)),
-            ),
-        )
-        .drop("__means", "__stds")
-    )
-    return standardized, stats
-
-
 def diversity_report(
     df: DataFrame,
     group_col: str = "label",
@@ -1673,78 +1588,6 @@ def incremental_pq_dedup(
     return fresh, index_delta
 
 
-def kcenter_seed(
-    df: DataFrame,
-    k: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Deterministic farthest-point seeding (Gonzalez' 2-approximation
-    for the k-center objective, "Clustering to minimize the maximum
-    intercluster distance", TCS 1985 — the derandomized k-means++
-    everybody actually ships): seed 1 is the minimum-id vector, then
-    each round picks the point FARTHEST from the chosen set (squared
-    L2 to its nearest seed; ties break to the lower id).  Returns one
-    row per seed: ``(seed_rank, <id_col>, radius, cv)`` where
-    ``radius`` is the selected point's distance-to-chosen-set at
-    selection time (NULL for seed 1) — a provably non-increasing
-    sequence, and after k rounds an upper bound on twice the optimal
-    k-center radius.  When ``k`` exceeds the number of DISTINCT
-    vectors the loop stops at the first zero argmax (every remaining
-    point coincides with a chosen seed), returning one seed per
-    distinct vector rather than padding with repeats.  First-k-ids seeding (what the IVF family uses
-    for oracle determinism) can land all seeds in one dense cluster;
-    farthest-point guarantees every well-separated cluster gets one.
-
-    100 TB shape: a running ``dmin`` column makes the whole thing
-    O(n·k) — each round is ONE map-only pass updating
-    ``least(dmin, dist-to-new-seed)`` (the new seed rides in as a
-    broadcast literal array) plus a TakeOrdered(1) argmax pull
-    (bounded driver pull: k rows × dim doubles total, the same
-    planner-pull class as the BPE argmax).  ``localCheckpoint`` per
-    round cuts the k-deep lineage; no shuffle anywhere — the corpus
-    is never key-partitioned.
-    """
-    vecs = df.select(F.col(id_col), _as_double_vec(vec_col).alias("v"))
-    first = vecs.orderBy(F.col(id_col).asc()).first()
-    if first is None:
-        raise ValueError("kcenter_seed: empty input")
-    chosen: list[tuple] = [(1, first[id_col], None, list(first["v"]))]
-
-    def dist_to(seed_vec: list) -> F.Column:
-        sv = F.array(*[F.lit(float(x)) for x in seed_vec])
-        return _fold_sum(
-            F.zip_with(F.col("v"), sv, lambda x, y: (x - y) * (x - y))
-        )
-
-    state = vecs.withColumn("dmin", dist_to(chosen[0][3])).localCheckpoint()
-    for rank in range(2, k + 1):
-        nxt = state.orderBy(
-            F.col("dmin").desc(), F.col(id_col).asc()
-        ).first()
-        if nxt is None or float(nxt["dmin"]) == 0.0:
-            # distinct vectors exhausted: every remaining point
-            # coincides with a chosen seed (dmin = 0), so another
-            # round would re-select an already-chosen point under the
-            # id-asc tiebreak and emit duplicate seeds (r09 ADVICE).
-            # Stop early — when k exceeds the number of DISTINCT
-            # vectors the result has one seed per distinct vector,
-            # never a repeat.
-            break
-        chosen.append((rank, nxt[id_col], float(nxt["dmin"]), list(nxt["v"])))
-        if rank < k:
-            state = state.withColumn(
-                "dmin", F.least(F.col("dmin"), dist_to(chosen[-1][3]))
-            ).localCheckpoint()
-
-    spark = df.sparkSession
-    return local_rows_df(
-        spark,
-        chosen,
-        f"seed_rank int, {id_col} long, radius double, cv array<double>",
-    )
-
-
 # --- Johnson–Lindenstrauss random projection ---------------------------------
 
 # Mersenne prime + public LCG constants (Knuth / Numerical Recipes).
@@ -1864,151 +1707,3 @@ def occupancy_balance(
     )
 
 
-def diversity_cells(
-    df: DataFrame,
-    group_col: str = "label",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """The diversity report's MERGEABLE cell form — every statistic
-    the report needs is an exact decimal sum, so a per-batch partial
-    merges by cell-wise addition (the generic streaming-sketch-loop
-    contract; see ``streaming/ingest.py:start_cms_stream``):
-
-    * ``('su', d)`` / ``('sv', d)`` — per-dimension unit/raw sums;
-    * ``('n', 0)`` — kept-row count; ``('usq', 0)`` / ``('vsq', 0)``
-      — Σ‖u‖² / Σ‖v‖².
-
-    Cell key ``(label, part, dim)``, value ``cnt`` DECIMAL(28,8).
-    Decimal addition is exact and associative, so ANY batch split of
-    the corpus merges to bit-identical cells — the invariant
-    ``diversity_from_cells(merged) ≡ diversity_report(full)`` holds
-    exactly, pinned by the streaming twin test."""
-    base = (
-        df.select(
-            F.col(group_col).alias("label"),
-            _as_double_vec(vec_col).alias("__v"),
-        )
-        .withColumn("__sq", _fold_sum(F.transform("__v", lambda x: x * x)))
-        .where(F.col("__sq") > 0)
-        .withColumn(
-            "__u",
-            F.transform("__v", lambda x: x / F.sqrt(F.col("__sq"))),
-        )
-    )
-    dim_cells = (
-        base.select(
-            "label",
-            F.posexplode("__u").alias("dim", "__ud"),
-            F.col("__v").alias("__vrow"),
-        )
-        .select("label", "dim", "__ud", F.expr("__vrow[dim]").alias("__vd"))
-        .groupBy("label", "dim")
-        .agg(
-            F.sum(F.col("__ud").cast("decimal(28,8)")).alias("__su"),
-            F.sum(F.col("__vd").cast("decimal(28,8)")).alias("__sv"),
-        )
-    )
-    su = dim_cells.select(
-        "label", F.lit("su").alias("part"), F.col("dim").cast("long"),
-        F.col("__su").cast("decimal(28,8)").alias("cnt"),
-    )
-    sv = dim_cells.select(
-        "label", F.lit("sv").alias("part"), F.col("dim").cast("long"),
-        F.col("__sv").cast("decimal(28,8)").alias("cnt"),
-    )
-    rows = base.groupBy("label").agg(
-        F.count(F.lit(1)).cast("decimal(28,8)").alias("__n"),
-        F.sum(
-            F.expr(
-                "cast(aggregate(transform(__u, x -> x * x),"
-                " cast(0.0 as double), (acc, x) -> acc + x)"
-                " as decimal(28,8))"
-            )
-        ).cast("decimal(28,8)").alias("__usq"),
-        F.sum(F.col("__sq").cast("decimal(28,8)"))
-        .cast("decimal(28,8)")
-        .alias("__vsq"),
-    )
-    scalars = []
-    for part, col in (("n", "__n"), ("usq", "__usq"), ("vsq", "__vsq")):
-        scalars.append(
-            rows.select(
-                "label", F.lit(part).alias("part"),
-                F.lit(0).cast("long").alias("dim"),
-                F.col(col).alias("cnt"),
-            )
-        )
-    out = su.unionByName(sv)
-    for s in scalars:
-        out = out.unionByName(s)
-    return out
-
-
-def diversity_from_cells(cells: DataFrame, group_col: str = "label") -> DataFrame:
-    """Finish the diversity report from MERGED ``diversity_cells``
-    output — the exact arithmetic of ``diversity_report``'s final
-    stage applied to the accumulated decimal cells, so a streamed
-    corpus reports bit-identically to a batch pass."""
-    dims = (
-        cells.where(F.col("part").isin("su", "sv"))
-        .groupBy(group_col, "dim")
-        .pivot("part", ["su", "sv"])
-        .agg(F.first("cnt"))
-        .select(
-            group_col, "dim",
-            F.col("su").cast("double").alias("__su"),
-            F.col("sv").cast("double").alias("__sv"),
-        )
-    )
-    vecs = dims.groupBy(group_col).agg(
-        F.array_sort(
-            F.collect_list(F.struct("dim", "__su", "__sv"))
-        ).alias("__s")
-    ).select(
-        group_col,
-        F.transform("__s", lambda s: s["__su"]).alias("__sus"),
-        F.transform("__s", lambda s: s["__sv"]).alias("__svs"),
-    )
-    scal = (
-        cells.where(F.col("part").isin("n", "usq", "vsq"))
-        .groupBy(group_col)
-        .pivot("part", ["n", "usq", "vsq"])
-        .agg(F.first("cnt"))
-        .select(
-            group_col,
-            F.col("n").cast("long").alias("n_vecs"),
-            F.col("usq").cast("double").alias("__usq"),
-            F.col("vsq").cast("double").alias("__vsq"),
-        )
-    )
-    n_dbl = F.col("n_vecs").cast("double")
-    ssq = _fold_sum(F.transform("__sus", lambda x: x * x))
-    return (
-        scal.join(F.broadcast(vecs), group_col)
-        .select(
-            group_col,
-            "n_vecs",
-            F.when(F.col("n_vecs") < 2, F.lit(None).cast("double"))
-            .otherwise(
-                (ssq - F.col("__usq"))
-                / (F.col("n_vecs") * (F.col("n_vecs") - 1)).cast("double")
-            )
-            .alias("mean_pairwise_cos"),
-            (F.sqrt(ssq) / n_dbl).alias("mean_cos_centroid"),
-            # covariance-identity rounding (the decimal(28,8) sums
-            # quantize at 1e-8) can land ~-1e-7 for singleton groups;
-            # the trace is >= 0 by definition, so clamp — one IEEE max
-            # on identical doubles, mirrored in the DuckDB oracle.
-            F.greatest(
-                F.col("__vsq") / n_dbl
-                - _fold_sum(
-                    F.transform(
-                        "__svs",
-                        lambda x: (x / F.col("n_vecs").cast("double"))
-                        * (x / F.col("n_vecs").cast("double")),
-                    )
-                ),
-                F.lit(0.0),
-            ).alias("spread"),
-        )
-    )

@@ -353,6 +353,10 @@ def quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB quantile_cont, matched exactly."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
     n = li.count()
+    schema = "price_q25 double, price_q50 double, price_q75 double, qty_q50 double"
+    if n == 0:
+        # quantile_cont over no rows is NULL
+        return local_rows_df(spark, [(None, None, None, None)], schema)
     r = _exact_quantiles_nosort_multi(
         li.select("l_extendedprice", "l_quantity"),
         {"l_extendedprice": [0.25, 0.5, 0.75], "l_quantity": [0.5]},
@@ -368,7 +372,7 @@ def quantiles_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
                 r[("l_quantity", 0.5)],
             )
         ],
-        "price_q25 double, price_q50 double, price_q75 double, qty_q50 double",
+        schema,
     )
 
 
@@ -864,1052 +868,6 @@ SELECT event_type,
                 am IS NULL AND p45 IS NULL) AS approx_median_ok
 FROM agg
 """
-
-
-# --- Count-min sketch heavy hitters (bounded-state hot keys) -----------------
-
-CMS_WIDTH = 128
-CMS_DEPTH = 4
-CMS_TOP_K = 20
-
-
-def cms_heavy_hitters_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heavy-hitter detection over ``events.user_id`` through a
-    count-min sketch (``operators/sketches.py``): the estimate of
-    every candidate key is the MIN over its depth×width counters, the
-    top-``CMS_TOP_K`` by estimate are emitted next to their exact
-    counts, and ``est_ge_exact`` states the CMS one-sided-error law
-    (never true-count-below — deterministically TRUE for every row).
-
-    The sketch hash family is pure BIGINT arithmetic shared verbatim
-    with the oracle SQL, so both engines build the IDENTICAL sketch
-    and the estimates hash-match cell-exactly — no bounds-twin
-    weakening needed (contrast ``sketch_aggregates_events``).
-
-    Scale shape: the sketch is one map-side-combinable aggregate into
-    ≤ 512 cells (partial aggregates are per-partition sketches — the
-    shuffle moves ≤ 512 rows per partition regardless of data size),
-    and the estimate join broadcasts those cells.  The exact
-    ``groupBy(user_id)`` twin is the verification half: at corpus
-    scale you keep the sketch, feed candidates from the current batch
-    only, and spot-check exact counts on a sample — the same
-    verification-query framing as ``sketch_bounds_events``.
-    """
-    from ..operators import sketches
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    cms = sketches.cms_build(
-        ev, "user_id", width=CMS_WIDTH, depth=CMS_DEPTH
-    )
-    exact = (
-        ev.where(F.col("user_id").isNotNull())
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("exact_cnt"))
-    )
-    est = sketches.cms_estimate(
-        cms, exact, "user_id", width=CMS_WIDTH, depth=CMS_DEPTH
-    )
-    from pyspark.sql import Window
-
-    # TakeOrdered top-K first (bounded, no global-window single task),
-    # THEN rank inside the K-row frame — identical to the global rank
-    # because the limit used the same ordering.
-    topk = est.orderBy(F.desc("cms_est"), F.asc("user_id")).limit(CMS_TOP_K)
-    w = Window.orderBy(F.desc("cms_est"), F.asc("user_id"))
-    return (
-        topk.withColumn("hh_rank", F.row_number().over(w))
-        .select(
-            "hh_rank",
-            "user_id",
-            F.col("cms_est").cast("long").alias("cms_est"),
-            F.col("exact_cnt").cast("long").alias("exact_cnt"),
-            (F.col("cms_est") - F.col("exact_cnt"))
-            .cast("long")
-            .alias("est_err"),
-            (F.col("cms_est") >= F.col("exact_cnt")).alias("est_ge_exact"),
-        )
-    )
-
-
-def _cms_heavy_hitters_sql() -> str:
-    from ..operators.sketches import CMS_HASHES, _bucket_sql
-
-    hash_rows = ", ".join(
-        f"({d}, {a}, {b})" for d, (a, b) in enumerate(CMS_HASHES[:CMS_DEPTH])
-    )
-    # the same arithmetic as _bucket_sql, parameterized by the VALUES row
-    bucket = _bucket_sql("e.user_id", 1, 0, CMS_WIDTH).replace(
-        " * 1 + 0", " * h.a + h.b"
-    )
-    return f"""
-WITH h AS (SELECT * FROM (VALUES {hash_rows}) t(d, a, b)),
-cells AS (
-  SELECT h.d, {bucket} AS bucket, CAST(count(*) AS BIGINT) AS cnt
-  FROM events e CROSS JOIN h
-  WHERE e.user_id IS NOT NULL
-  GROUP BY 1, 2
-),
-exact AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS exact_cnt
-  FROM events WHERE user_id IS NOT NULL GROUP BY 1
-),
-probes AS (
-  SELECT e.user_id, e.exact_cnt, h.d, {bucket} AS bucket
-  FROM exact e CROSS JOIN h
-),
-est AS (
-  SELECT user_id, exact_cnt,
-         CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS cms_est
-  FROM probes p LEFT JOIN cells c USING (d, bucket)
-  GROUP BY 1, 2
-)
-SELECT * FROM (
-  SELECT CAST(row_number() OVER (ORDER BY cms_est DESC, user_id ASC) AS INT)
-           AS hh_rank,
-         user_id, cms_est, exact_cnt,
-         cms_est - exact_cnt AS est_err,
-         cms_est >= exact_cnt AS est_ge_exact
-  FROM est
-) WHERE hh_rank <= {CMS_TOP_K}
-"""
-
-
-CMS_HEAVY_HITTERS_SQL = _cms_heavy_hitters_sql()
-
-
-# --- CMS-informed conditional salting ----------------------------------------
-
-CMS_SALT_WIDTH = 1024  # wider than the heavy-hitter sketch: estimates
-# gate a per-key routing decision here, so width should dominate key
-# cardinality (~1.5k users at sf0.1) — still only 4096 cells
-CMS_SALT_THRESHOLD = 75
-CMS_SALT_BUCKETS = 16
-
-
-def cms_salted_rollup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-user event rollup through the sketch-gated salting path
-    (``operators/sketches.py:cms_salted_aggregate``): keys the CMS
-    estimates at ≥ {threshold} rows take a 16-way salt, the rest
-    aggregate plain — one tree, and the result is bit-identical to
-    ``groupBy(user_id)`` (the oracle is exactly that plain GROUP BY,
-    plus the deterministic flag recomputed from the shared-arithmetic
-    sketch).  ``took_salted_path`` makes the routing decision itself
-    a hash-checked cell.
-
-    The one-sided CMS law guarantees no truly-hot key dodges the
-    salt; estimate inflation under bucket collisions only ever salts
-    MORE keys (still correct, mildly more phase-2 work) — which is
-    why this spec widens the sketch to dominate key cardinality."""
-    from ..operators import sketches
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    ev = ev.where(F.col("user_id").isNotNull())
-    cms = sketches.cms_build(
-        ev, "user_id", width=CMS_SALT_WIDTH, depth=CMS_DEPTH
-    )
-    out = sketches.cms_salted_aggregate(
-        ev,
-        "user_id",
-        cms,
-        CMS_SALT_THRESHOLD,
-        sums={"__sv": "cast(value as decimal(28,8))"},
-        count_alias="n_events",
-        salt_buckets=CMS_SALT_BUCKETS,
-        width=CMS_SALT_WIDTH,
-        depth=CMS_DEPTH,
-    )
-    return out.select(
-        "user_id",
-        "n_events",
-        F.round(F.col("__sv"), 2).cast("double").alias("sum_value"),
-        "took_salted_path",
-    )
-
-
-def _cms_salted_rollup_sql() -> str:
-    from ..operators.sketches import CMS_HASHES, _bucket_sql
-
-    hash_rows = ", ".join(
-        f"({d}, {a}, {b})" for d, (a, b) in enumerate(CMS_HASHES[:CMS_DEPTH])
-    )
-    bucket = _bucket_sql("e.user_id", 1, 0, CMS_SALT_WIDTH).replace(
-        " * 1 + 0", " * h.a + h.b"
-    )
-    return f"""
-WITH h AS (SELECT * FROM (VALUES {hash_rows}) t(d, a, b)),
-ev AS (SELECT * FROM events WHERE user_id IS NOT NULL),
-cells AS (
-  SELECT h.d, {bucket} AS bucket, CAST(count(*) AS BIGINT) AS cnt
-  FROM ev e CROSS JOIN h
-  GROUP BY 1, 2
-),
-agg AS (
-  SELECT user_id, CAST(count(*) AS BIGINT) AS n_events,
-         {sql_exact_sum("value", 2)} AS sum_value
-  FROM ev GROUP BY 1
-),
-est AS (
-  SELECT p.user_id, min(coalesce(c.cnt, 0)) AS cms_est
-  FROM (SELECT e.user_id, h.d, {bucket} AS bucket
-        FROM (SELECT DISTINCT user_id FROM ev) e CROSS JOIN h) p
-  LEFT JOIN cells c USING (d, bucket)
-  GROUP BY 1
-)
-SELECT a.user_id, a.n_events, a.sum_value,
-       e.cms_est >= {CMS_SALT_THRESHOLD} AS took_salted_path
-FROM agg a JOIN est e USING (user_id)
-"""
-
-
-CMS_SALTED_ROLLUP_SQL = _cms_salted_rollup_sql()
-
-
-# --- Mergeable quantile histogram --------------------------------------------
-
-HIST_LO, HIST_HI, HIST_BINS = 0.0, 1024.0, 256  # width exactly 4.0
-HIST_QS = (0.25, 0.5, 0.9, 0.99)
-
-
-def hist_quantiles_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Quantiles from the mergeable fixed-bin histogram
-    (``operators/sketches.py:hist_build/hist_quantile``) — the
-    deterministic, cross-engine-exact alternative to
-    ``approx_percentile`` whose t-digest cells are engine-specific
-    (the reason ``sketch_aggregates_events`` is rows-only; THIS sketch
-    is hash-checked cell-exact).
-
-    * 'cell' rows — the histogram itself (≤ 258 bins incl. under/
-      overflow), built from shared binning arithmetic so both engines
-      produce identical cells;
-    * 'quantile' rows — interpolated estimates for q ∈ {0.25, 0.5,
-      0.9, 0.99} (hash-exact: pure arithmetic on identical cells) and
-      ``ok`` = |est − exact percentile| ≤ 2·width — the deterministic
-      error bound as a checked cell (exact enters ONLY through the
-      wide-margin boolean, the sketch_bounds_events discipline, since
-      engines' percentile interpolation can differ in the last ulp).
-
-    Scale: build is one map-side-combinable agg into ≤ 258 cells;
-    estimation runs entirely on the bounded histogram frame.  The
-    sketch merges cell-wise (hist_merge) and drops into
-    ``start_cms_stream``'s segment/compact loop unchanged — quantiles
-    over a 100 TB stream with 2 KB of state."""
-    from ..operators import sketches
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    hist = sketches.hist_build(
-        ev, "value", lo=HIST_LO, hi=HIST_HI, bins=HIST_BINS
-    ).cache()  # two consumers (cells + quantile walk): one evaluation
-    nd = F.lit(None).cast("double")
-    cells = hist.select(
-        F.lit("cell").alias("variant"),
-        "bin",
-        "cnt",
-        nd.alias("q"),
-        nd.alias("est"),
-        F.lit(None).cast("boolean").alias("ok"),
-    )
-    est = sketches.hist_quantile(
-        hist, list(HIST_QS), lo=HIST_LO, hi=HIST_HI, bins=HIST_BINS
-    )
-    exact = ev.agg(
-        F.expr(
-            "percentile(value, array("
-            + ", ".join(f"{q}D" for q in HIST_QS)
-            + "))"
-        ).alias("__arr")
-    ).select(
-        F.posexplode("__arr").alias("__i", "__x")
-    ).select(
-        F.element_at(
-            F.array(*[F.lit(q) for q in HIST_QS]), F.col("__i") + 1
-        ).alias("q"),
-        F.col("__x").alias("__exact"),
-    )
-    width = (HIST_HI - HIST_LO) / HIST_BINS
-    quant = (
-        est.join(F.broadcast(exact), "q")
-        .select(
-            F.lit("quantile").alias("variant"),
-            F.lit(None).cast("bigint").alias("bin"),
-            F.lit(None).cast("bigint").alias("cnt"),
-            "q",
-            exact_round(F.col("est"), 6).alias("est"),
-            (
-                F.abs(F.col("est") - F.col("__exact"))
-                <= F.lit(2.0 * width)
-            ).alias("ok"),
-        )
-    )
-    return cells.unionByName(quant)
-
-
-def _hist_quantiles_sql() -> str:
-    from ..functions import sql_exact_round
-    from ..operators.sketches import _hist_bin_sql
-
-    w = (HIST_HI - HIST_LO) / HIST_BINS
-    binsql = _hist_bin_sql("value", HIST_LO, HIST_HI, HIST_BINS)
-    exact_rows = "\nUNION ALL\n".join(
-        f"SELECT {q!r} AS q, quantile_cont(value, {q!r}) AS x FROM events"
-        for q in HIST_QS
-    )
-    est = (
-        f"greatest({HIST_LO!r}, least({HIST_HI!r},"
-        f" {HIST_LO!r} + {w!r} * bin"
-        f" + {w!r} * (need - cumb) / cnt))"
-    )
-    return f"""
-WITH h AS (
-  SELECT {binsql} AS bin, CAST(count(*) AS BIGINT) AS cnt
-  FROM events WHERE value IS NOT NULL GROUP BY 1
-),
-c AS (
-  SELECT bin, cnt,
-         CAST(sum(cnt) OVER (ORDER BY bin) AS DOUBLE) AS cum,
-         CAST(sum(cnt) OVER (ORDER BY bin) - cnt AS DOUBLE) AS cumb
-  FROM h
-),
-n AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n FROM h),
-qs AS (SELECT unnest([{", ".join(repr(q) for q in HIST_QS)}]) AS q),
-pick AS (
-  SELECT qs.q, c.bin, c.cnt, c.cumb, qs.q * n.n AS need
-  FROM c CROSS JOIN n CROSS JOIN qs
-  WHERE c.cumb < qs.q * n.n AND c.cum >= qs.q * n.n
-),
-ex AS ({exact_rows})
-SELECT 'cell' AS variant, bin, cnt, CAST(NULL AS DOUBLE) AS q,
-       CAST(NULL AS DOUBLE) AS est, CAST(NULL AS BOOLEAN) AS ok
-FROM h
-UNION ALL
-SELECT 'quantile', NULL, NULL, p.q,
-       {sql_exact_round(est, 6)},
-       abs({est} - ex.x) <= {2.0 * w!r}
-FROM pick p JOIN ex ON p.q = ex.q
-"""
-
-
-HIST_QUANTILES_SQL = _hist_quantiles_sql()
-
-GROUP_HIST_QS = (0.5, 0.9)
-
-
-def group_hist_quantiles_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group quantiles from the mergeable histogram — the
-    bounded-state twin of ``group_quantiles_events``: that spec's
-    bucketed exact rank walks the DATA per group; this one keeps a
-    fixed 258-cell grid per group, so per-group state is constant and
-    the whole estimate runs on |groups|·258 sketch rows.  Same tagged
-    union as ``hist_quantiles_events`` plus the group key; the
-    quantile window partitions on the group over SKETCH rows (fixed
-    frame, not the mega-domain cliff)."""
-    from ..operators import sketches
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    ev = ev.where(F.col("event_type").isNotNull())
-    hist = sketches.hist_build(
-        ev,
-        "value",
-        lo=HIST_LO,
-        hi=HIST_HI,
-        bins=HIST_BINS,
-        by=("event_type",),
-    ).cache()  # two consumers: one evaluation
-    nd = F.lit(None).cast("double")
-    cells = hist.select(
-        F.lit("cell").alias("variant"),
-        "event_type",
-        "bin",
-        "cnt",
-        nd.alias("q"),
-        nd.alias("est"),
-        F.lit(None).cast("boolean").alias("ok"),
-    )
-    est = sketches.hist_quantile(
-        hist,
-        list(GROUP_HIST_QS),
-        lo=HIST_LO,
-        hi=HIST_HI,
-        bins=HIST_BINS,
-        by=("event_type",),
-    )
-    exact = (
-        ev.groupBy("event_type")
-        .agg(
-            F.expr(
-                "percentile(value, array("
-                + ", ".join(f"{q}D" for q in GROUP_HIST_QS)
-                + "))"
-            ).alias("__arr")
-        )
-        .select("event_type", F.posexplode("__arr").alias("__i", "__x"))
-        .select(
-            "event_type",
-            F.element_at(
-                F.array(*[F.lit(q) for q in GROUP_HIST_QS]), F.col("__i") + 1
-            ).alias("q"),
-            F.col("__x").alias("__exact"),
-        )
-    )
-    width = (HIST_HI - HIST_LO) / HIST_BINS
-    quant = est.join(F.broadcast(exact), ["event_type", "q"]).select(
-        F.lit("quantile").alias("variant"),
-        "event_type",
-        F.lit(None).cast("bigint").alias("bin"),
-        F.lit(None).cast("bigint").alias("cnt"),
-        "q",
-        exact_round(F.col("est"), 6).alias("est"),
-        (F.abs(F.col("est") - F.col("__exact")) <= F.lit(2.0 * width)).alias(
-            "ok"
-        ),
-    )
-    return cells.unionByName(quant)
-
-
-def _group_hist_quantiles_sql() -> str:
-    from ..functions import sql_exact_round
-    from ..operators.sketches import _hist_bin_sql
-
-    w = (HIST_HI - HIST_LO) / HIST_BINS
-    binsql = _hist_bin_sql("value", HIST_LO, HIST_HI, HIST_BINS)
-    est = (
-        f"greatest({HIST_LO!r}, least({HIST_HI!r},"
-        f" {HIST_LO!r} + {w!r} * bin"
-        f" + {w!r} * (need - cumb) / cnt))"
-    )
-    return f"""
-WITH ev AS (SELECT * FROM events WHERE event_type IS NOT NULL),
-h AS (
-  SELECT event_type, {binsql} AS bin, CAST(count(*) AS BIGINT) AS cnt
-  FROM ev WHERE value IS NOT NULL GROUP BY 1, 2
-),
-c AS (
-  SELECT event_type, bin, cnt,
-         CAST(sum(cnt) OVER (PARTITION BY event_type ORDER BY bin)
-              AS DOUBLE) AS cum,
-         CAST(sum(cnt) OVER (PARTITION BY event_type ORDER BY bin) - cnt
-              AS DOUBLE) AS cumb
-  FROM h
-),
-n AS (SELECT event_type, CAST(sum(cnt) AS DOUBLE) AS n FROM h GROUP BY 1),
-qs AS (SELECT unnest([{", ".join(repr(q) for q in GROUP_HIST_QS)}]) AS q),
-pick AS (
-  SELECT qs.q, c.event_type, c.bin, c.cnt, c.cumb, qs.q * n.n AS need
-  FROM c JOIN n USING (event_type) CROSS JOIN qs
-  WHERE c.cumb < qs.q * n.n AND c.cum >= qs.q * n.n
-),
-ex AS (
-  {chr(10).join(
-      ("UNION ALL " if i else "")
-      + f"SELECT event_type, {q!r} AS q, quantile_cont(value, {q!r}) AS x"
-        " FROM ev GROUP BY 1"
-      for i, q in enumerate(GROUP_HIST_QS)
-  )}
-)
-SELECT 'cell' AS variant, event_type, bin, cnt, CAST(NULL AS DOUBLE) AS q,
-       CAST(NULL AS DOUBLE) AS est, CAST(NULL AS BOOLEAN) AS ok
-FROM h
-UNION ALL
-SELECT 'quantile', p.event_type, NULL, NULL, p.q,
-       {sql_exact_round(est, 6)},
-       abs({est} - ex.x) <= {2.0 * w!r}
-FROM pick p JOIN ex ON p.q = ex.q AND p.event_type = ex.event_type
-"""
-
-
-GROUP_HIST_QUANTILES_SQL = _group_hist_quantiles_sql()
-
-
-def hist_suite_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Histogram-family consolidation (the registry-trade vehicle for
-    ``hist_quantiles_events`` + ``group_hist_quantiles_events``): ONE
-    grouped build pass serves both — the GLOBAL histogram is the
-    marginal of the grouped one (sum cells over event_type: sketch
-    linearity again, no second corpus scan), with the null-event_type
-    mass folded in by the same marginalization that recovers it.
-    Variants 'gcell'/'gquantile' are the grouped spec's cells and
-    estimates verbatim; 'cell'/'quantile' the global spec's (both
-    specs' own oracles pin the parts; the suite oracle pins the
-    union).  At 100 TB the consolidation removes a full duplicate
-    scan+bin pass of the fact table."""
-    from ..operators import sketches
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    # grouped build includes null event types so the global marginal
-    # covers ALL rows (the grouped LEGS then filter them out, matching
-    # group_hist_quantiles_events' not-null contract)
-    ghist = sketches.hist_build(
-        ev,
-        "value",
-        lo=HIST_LO,
-        hi=HIST_HI,
-        bins=HIST_BINS,
-        by=("event_type",),
-    ).cache()  # one evaluation, four consumers
-    hist = ghist.groupBy("bin").agg(F.sum("cnt").alias("cnt"))
-    gh = ghist.where(F.col("event_type").isNotNull())
-    nd = F.lit(None).cast("double")
-    nb = F.lit(None).cast("bigint")
-    ns = F.lit(None).cast("string")
-    width = (HIST_HI - HIST_LO) / HIST_BINS
-
-    def _quant_leg(est_df, exact_df, variant, keys):
-        return est_df.join(F.broadcast(exact_df), [*keys, "q"]).select(
-            F.lit(variant).alias("variant"),
-            (F.col("event_type") if keys else ns).alias("event_type"),
-            nb.alias("bin"),
-            nb.alias("cnt"),
-            "q",
-            exact_round(F.col("est"), 6).alias("est"),
-            (
-                F.abs(F.col("est") - F.col("__exact")) <= F.lit(2.0 * width)
-            ).alias("ok"),
-        )
-
-    cells = hist.select(
-        F.lit("cell").alias("variant"),
-        ns.alias("event_type"),
-        "bin",
-        "cnt",
-        nd.alias("q"),
-        nd.alias("est"),
-        F.lit(None).cast("boolean").alias("ok"),
-    )
-    gcells = gh.select(
-        F.lit("gcell").alias("variant"),
-        "event_type",
-        "bin",
-        "cnt",
-        nd.alias("q"),
-        nd.alias("est"),
-        F.lit(None).cast("boolean").alias("ok"),
-    )
-    est = sketches.hist_quantile(
-        hist, list(HIST_QS), lo=HIST_LO, hi=HIST_HI, bins=HIST_BINS
-    )
-    exact = (
-        ev.agg(
-            F.expr(
-                "percentile(value, array("
-                + ", ".join(f"{q}D" for q in HIST_QS)
-                + "))"
-            ).alias("__arr")
-        )
-        .select(F.posexplode("__arr").alias("__i", "__x"))
-        .select(
-            F.element_at(
-                F.array(*[F.lit(q) for q in HIST_QS]), F.col("__i") + 1
-            ).alias("q"),
-            F.col("__x").alias("__exact"),
-        )
-    )
-    gest = sketches.hist_quantile(
-        gh,
-        list(GROUP_HIST_QS),
-        lo=HIST_LO,
-        hi=HIST_HI,
-        bins=HIST_BINS,
-        by=("event_type",),
-    )
-    gexact = (
-        ev.where(F.col("event_type").isNotNull())
-        .groupBy("event_type")
-        .agg(
-            F.expr(
-                "percentile(value, array("
-                + ", ".join(f"{q}D" for q in GROUP_HIST_QS)
-                + "))"
-            ).alias("__arr")
-        )
-        .select("event_type", F.posexplode("__arr").alias("__i", "__x"))
-        .select(
-            "event_type",
-            F.element_at(
-                F.array(*[F.lit(q) for q in GROUP_HIST_QS]), F.col("__i") + 1
-            ).alias("q"),
-            F.col("__x").alias("__exact"),
-        )
-    )
-    return (
-        cells.unionByName(gcells)
-        .unionByName(_quant_leg(est, exact, "quantile", []))
-        .unionByName(_quant_leg(gest, gexact, "gquantile", ["event_type"]))
-    )
-
-
-def _hist_suite_sql() -> str:
-    """The parts' SQL texts, re-keyed: the global half re-derives its
-    cells as the marginal of the grouped build (matching the Spark
-    plan's single pass), then both quantile tails run unchanged."""
-    from ..functions import sql_exact_round
-    from ..operators.sketches import _hist_bin_sql
-
-    w = (HIST_HI - HIST_LO) / HIST_BINS
-    binsql = _hist_bin_sql("value", HIST_LO, HIST_HI, HIST_BINS)
-    est = (
-        f"greatest({HIST_LO!r}, least({HIST_HI!r},"
-        f" {HIST_LO!r} + {w!r} * bin"
-        f" + {w!r} * (need - cumb) / cnt))"
-    )
-    g_exact_rows = "\n  UNION ALL\n  ".join(
-        ("" if i == 0 else "")
-        + f"SELECT event_type, {q!r} AS q, quantile_cont(value, {q!r}) AS x"
-        " FROM events WHERE event_type IS NOT NULL GROUP BY 1"
-        for i, q in enumerate(GROUP_HIST_QS)
-    )
-    exact_rows = "\n  UNION ALL\n  ".join(
-        f"SELECT {q!r} AS q, quantile_cont(value, {q!r}) AS x FROM events"
-        for q in HIST_QS
-    )
-    return f"""
-WITH gh0 AS (
-  SELECT event_type, {binsql} AS bin, CAST(count(*) AS BIGINT) AS cnt
-  FROM events WHERE value IS NOT NULL GROUP BY 1, 2
-),
-h AS (SELECT bin, CAST(sum(cnt) AS BIGINT) AS cnt FROM gh0 GROUP BY 1),
-gh AS (SELECT * FROM gh0 WHERE event_type IS NOT NULL),
-c AS (
-  SELECT bin, cnt,
-         CAST(sum(cnt) OVER (ORDER BY bin) AS DOUBLE) AS cum,
-         CAST(sum(cnt) OVER (ORDER BY bin) - cnt AS DOUBLE) AS cumb
-  FROM h
-),
-n AS (SELECT CAST(sum(cnt) AS DOUBLE) AS n FROM h),
-qs AS (SELECT unnest([{", ".join(repr(q) for q in HIST_QS)}]) AS q),
-pick AS (
-  SELECT qs.q, c.bin, c.cnt, c.cumb, qs.q * n.n AS need
-  FROM c CROSS JOIN n CROSS JOIN qs
-  WHERE c.cumb < qs.q * n.n AND c.cum >= qs.q * n.n
-),
-ex AS ({exact_rows}),
-gc AS (
-  SELECT event_type, bin, cnt,
-         CAST(sum(cnt) OVER (PARTITION BY event_type ORDER BY bin)
-              AS DOUBLE) AS cum,
-         CAST(sum(cnt) OVER (PARTITION BY event_type ORDER BY bin) - cnt
-              AS DOUBLE) AS cumb
-  FROM gh
-),
-gn AS (SELECT event_type, CAST(sum(cnt) AS DOUBLE) AS n FROM gh GROUP BY 1),
-gqs AS (SELECT unnest([{", ".join(repr(q) for q in GROUP_HIST_QS)}]) AS q),
-gpick AS (
-  SELECT gqs.q, gc.event_type, gc.bin, gc.cnt, gc.cumb, gqs.q * gn.n AS need
-  FROM gc JOIN gn USING (event_type) CROSS JOIN gqs
-  WHERE gc.cumb < gqs.q * gn.n AND gc.cum >= gqs.q * gn.n
-),
-gex AS (
-  {g_exact_rows}
-)
-SELECT 'cell' AS variant, CAST(NULL AS VARCHAR) AS event_type, bin, cnt,
-       CAST(NULL AS DOUBLE) AS q, CAST(NULL AS DOUBLE) AS est,
-       CAST(NULL AS BOOLEAN) AS ok
-FROM h
-UNION ALL
-SELECT 'gcell', event_type, bin, cnt, NULL, NULL, NULL FROM gh
-UNION ALL
-SELECT 'quantile', NULL, NULL, NULL, p.q,
-       {sql_exact_round(est, 6)}, abs({est} - ex.x) <= {2.0 * w!r}
-FROM pick p JOIN ex ON p.q = ex.q
-UNION ALL
-SELECT 'gquantile', p.event_type, NULL, NULL, p.q,
-       {sql_exact_round(est, 6)}, abs({est} - gex.x) <= {2.0 * w!r}
-FROM gpick p JOIN gex ON p.q = gex.q AND p.event_type = gex.event_type
-"""
-
-
-HIST_SUITE_SQL = _hist_suite_sql()
-
-
-# --- Distribution drift (PSI over mergeable histograms) ----------------------
-
-DRIFT_BINS = 16
-DRIFT_SCALE = 3.0
-DRIFT_THRESHOLD = 0.25
-
-
-def hist_drift_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ingest drift monitoring (``operators/sketches.py:hist_psi``):
-    Population Stability Index per event_type between a reference and
-    a current histogram, with the verdict (`drifted` = PSI > 0.25,
-    the standard alert line) as a hash-checked cell.  Two legs:
-
-    * 'split' — even vs odd event_ids: two samples of the SAME
-      distribution, PSI ≈ the B/n small-sample bias (measured ≤ 0.02
-      per type at sf0.01) → drifted FALSE everywhere;
-    * 'scaled' — even vs odd·3: a real shift, PSI ≥ 1.0 per type
-      (measured) → drifted TRUE everywhere.
-
-    Coarse DRIFT_BINS=16 keeps the small-sample bias (≈ 2B/n) far
-    under the threshold at the driver scale; at sf0.001 per-type
-    halves drop to ~100 rows and the bias can cross it — the
-    documented reason this spec's differential runs at sf0.01+.
-
-    Scale story: the reference side is a persisted 2 KB sketch (built
-    once, or accrued by the streaming loop), so per-ingest drift
-    checks cost one histogram pass over the NEW data plus sketch-frame
-    arithmetic — never a rescan of the reference corpus.  The 9dp
-    decimal term sum makes the score bit-reproducible despite ln."""
-    from ..operators import sketches
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"].where(
-        F.col("value").isNotNull() & F.col("event_type").isNotNull()
-    )
-    common = dict(lo=HIST_LO, hi=HIST_HI, bins=DRIFT_BINS, by=("event_type",))
-    ref = sketches.hist_build(
-        ev.where(F.col("event_id") % 2 == 0), "value", **common
-    ).cache()  # two PSI consumers: one evaluation of the even-half scan
-    odd = ev.where(F.col("event_id") % 2 == 1)
-    cur_split = sketches.hist_build(odd, "value", **common)
-    cur_scaled = sketches.hist_build(
-        odd.select(
-            "event_type", (F.col("value") * DRIFT_SCALE).alias("value")
-        ),
-        "value",
-        **common,
-    )
-    legs = []
-    for variant, cur in (("split", cur_split), ("scaled", cur_scaled)):
-        legs.append(
-            sketches.hist_psi(ref, cur, by=("event_type",)).select(
-                F.lit(variant).alias("variant"),
-                "event_type",
-                "psi",
-                (F.col("psi") > F.lit(DRIFT_THRESHOLD)).alias("drifted"),
-            )
-        )
-    return legs[0].unionByName(legs[1])
-
-
-def _hist_drift_sql() -> str:
-    from ..operators.sketches import _hist_bin_sql
-
-    def leg(variant: str, val_expr: str) -> str:
-        b_ref = _hist_bin_sql("value", HIST_LO, HIST_HI, DRIFT_BINS)
-        b_cur = _hist_bin_sql(val_expr, HIST_LO, HIST_HI, DRIFT_BINS)
-        p = "(rc + 0.5) / (rn + 0.5 * nb)"
-        q = "(cc + 0.5) / (cn + 0.5 * nb)"
-        term = (
-            f"cast(round(cast((({p}) - ({q})) * ln(({p}) / ({q}))"
-            f" as decimal(28,12)), 9) as decimal(28,9))"
-        )
-        return f"""
-  SELECT '{variant}' AS variant, event_type,
-         CAST(round(sum({term}), 9) AS DOUBLE) AS psi,
-         CAST(round(sum({term}), 9) AS DOUBLE) > {DRIFT_THRESHOLD}
-           AS drifted
-  FROM (
-    SELECT coalesce(r.event_type, c.event_type) AS event_type,
-           coalesce(r.cnt, 0) AS rc, coalesce(c.cnt, 0) AS cc,
-           sum(coalesce(r.cnt, 0)) OVER (
-             PARTITION BY coalesce(r.event_type, c.event_type)) AS rn,
-           sum(coalesce(c.cnt, 0)) OVER (
-             PARTITION BY coalesce(r.event_type, c.event_type)) AS cn,
-           count(*) OVER (
-             PARTITION BY coalesce(r.event_type, c.event_type)) AS nb
-    FROM (SELECT event_type, {b_ref} AS bin, count(*) AS cnt
-          FROM ev WHERE event_id % 2 = 0 GROUP BY 1, 2) r
-    FULL OUTER JOIN
-         (SELECT event_type, {b_cur} AS bin, count(*) AS cnt
-          FROM ev WHERE event_id % 2 = 1 GROUP BY 1, 2) c
-      ON r.event_type = c.event_type AND r.bin = c.bin
-  ) GROUP BY event_type"""
-
-    return f"""
-WITH ev AS (
-  SELECT event_type, event_id, value FROM events
-  WHERE value IS NOT NULL AND event_type IS NOT NULL
-)
-{leg("split", "value")}
-UNION ALL
-{leg("scaled", f"value * {DRIFT_SCALE!r}")}
-"""
-
-
-HIST_DRIFT_SQL = _hist_drift_sql()
-
-
-def cms_suite_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """CMS-family consolidation (the trade vehicle for
-    ``cms_heavy_hitters_events`` + ``cms_salted_rollup_events``): ONE
-    cached events projection feeds both sketches (widths differ by
-    design — 128 shows the one-sided error, 1024 gates routing — so
-    the SCAN is the shared pass, not the grid), the heavy-hitter leg's
-    exact candidate counts, and the salted rollup.  Padded union
-    ``(variant, user_id, n, cms_est, exact_cnt, est_err, x, flag)``:
-
-    * 'hh' rows — the heavy-hitter spec verbatim (n = hh_rank,
-      x = NULL, flag = est_ge_exact);
-    * 'rollup' rows — the salted rollup verbatim (n = n_events,
-      cms_est/exact_cnt/est_err = NULL, x = sum_value,
-      flag = took_salted_path).
-
-    Parts-equivalence is pinned in tests; at 100 TB the consolidation
-    halves the fact-table scans for the sketch-maintenance job."""
-    from ..operators import sketches
-
-    ev = (
-        load_tables(spark, sf_dir, ("events",))["events"]
-        .where(F.col("user_id").isNotNull())
-        .select("user_id", "value")
-        .cache()  # one scan, four consumers
-    )
-    nb = F.lit(None).cast("bigint")
-    nd = F.lit(None).cast("double")
-
-    cms_hh = sketches.cms_build(ev, "user_id", width=CMS_WIDTH, depth=CMS_DEPTH)
-    exact = ev.groupBy("user_id").agg(F.count(F.lit(1)).alias("exact_cnt"))
-    est = sketches.cms_estimate(
-        cms_hh, exact, "user_id", width=CMS_WIDTH, depth=CMS_DEPTH
-    )
-    from pyspark.sql import Window
-
-    topk = est.orderBy(F.desc("cms_est"), F.asc("user_id")).limit(CMS_TOP_K)
-    w = Window.orderBy(F.desc("cms_est"), F.asc("user_id"))
-    hh = topk.withColumn("hh_rank", F.row_number().over(w)).select(
-        F.lit("hh").alias("variant"),
-        "user_id",
-        F.col("hh_rank").cast("bigint").alias("n"),
-        F.col("cms_est").cast("long").alias("cms_est"),
-        F.col("exact_cnt").cast("long").alias("exact_cnt"),
-        (F.col("cms_est") - F.col("exact_cnt")).cast("long").alias("est_err"),
-        nd.alias("x"),
-        (F.col("cms_est") >= F.col("exact_cnt")).alias("flag"),
-    )
-
-    cms_salt = sketches.cms_build(
-        ev, "user_id", width=CMS_SALT_WIDTH, depth=CMS_DEPTH
-    )
-    roll = sketches.cms_salted_aggregate(
-        ev,
-        "user_id",
-        cms_salt,
-        CMS_SALT_THRESHOLD,
-        sums={"__sv": "cast(value as decimal(28,8))"},
-        count_alias="n_events",
-        salt_buckets=CMS_SALT_BUCKETS,
-        width=CMS_SALT_WIDTH,
-        depth=CMS_DEPTH,
-    ).select(
-        F.lit("rollup").alias("variant"),
-        "user_id",
-        F.col("n_events").cast("bigint").alias("n"),
-        nb.alias("cms_est"),
-        nb.alias("exact_cnt"),
-        nb.alias("est_err"),
-        F.round(F.col("__sv"), 2).cast("double").alias("x"),
-        F.col("took_salted_path").alias("flag"),
-    )
-    return hh.unionByName(roll)
-
-
-def _cms_suite_sql() -> str:
-    """The parts' oracle texts verbatim, wrapped and padded — both
-    parts keep their own oracles; the suite oracle pins the union."""
-    return f"""
-WITH hh_part AS ({CMS_HEAVY_HITTERS_SQL}),
-roll_part AS ({CMS_SALTED_ROLLUP_SQL})
-SELECT 'hh' AS variant, user_id, CAST(hh_rank AS BIGINT) AS n,
-       cms_est, exact_cnt, est_err, CAST(NULL AS DOUBLE) AS x,
-       est_ge_exact AS flag
-FROM hh_part
-UNION ALL
-SELECT 'rollup', user_id, n_events, NULL, NULL, NULL, sum_value,
-       took_salted_path
-FROM roll_part
-"""
-
-
-CMS_SUITE_SQL = _cms_suite_sql()
-
-GROUP_CMS_TOP_K = 5
-
-
-def group_cms_topk_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-group heavy hitters: one independent CMS per event_type
-    (``cms_build(by=...)``), top-{GROUP_CMS_TOP_K} users by estimate
-    within each type next to exact counts and the one-sided-law flag.
-    The per-tenant form of hot-key detection — per-group sketch state
-    stays depth×width regardless of the group's traffic.
-
-    The rank window partitions on the group over the CANDIDATE set
-    (the exact-count verification twin at test scale; at 100 TB
-    candidates come from the current batch's keys, bounded per the
-    ``cms_heavy_hitters_events`` framing)."""
-    from pyspark.sql import Window
-
-    from ..operators import sketches
-
-    ev = (
-        load_tables(spark, sf_dir, ("events",))["events"]
-        .where(F.col("user_id").isNotNull() & F.col("event_type").isNotNull())
-        .select("event_type", "user_id")
-        .cache()  # two consumers: sketch build + exact candidates
-    )
-    cms = sketches.cms_build(
-        ev, "user_id", width=CMS_WIDTH, depth=CMS_DEPTH, by=("event_type",)
-    )
-    exact = ev.groupBy("event_type", "user_id").agg(
-        F.count(F.lit(1)).alias("exact_cnt")
-    )
-    est = sketches.cms_estimate(
-        cms,
-        exact,
-        "user_id",
-        width=CMS_WIDTH,
-        depth=CMS_DEPTH,
-        by=("event_type",),
-    )
-    w = Window.partitionBy("event_type").orderBy(
-        F.desc("cms_est"), F.asc("user_id")
-    )
-    return (
-        est.withColumn("grp_rank", F.row_number().over(w))
-        .where(F.col("grp_rank") <= GROUP_CMS_TOP_K)
-        .select(
-            "event_type",
-            "grp_rank",
-            "user_id",
-            F.col("cms_est").cast("long").alias("cms_est"),
-            F.col("exact_cnt").cast("long").alias("exact_cnt"),
-            (F.col("cms_est") >= F.col("exact_cnt")).alias("est_ge_exact"),
-        )
-    )
-
-
-def _group_cms_topk_sql() -> str:
-    from ..operators.sketches import CMS_HASHES, _bucket_sql
-
-    hash_rows = ", ".join(
-        f"({d}, {a}, {b})" for d, (a, b) in enumerate(CMS_HASHES[:CMS_DEPTH])
-    )
-    bucket = _bucket_sql("e.user_id", 1, 0, CMS_WIDTH).replace(
-        " * 1 + 0", " * h.a + h.b"
-    )
-    return f"""
-WITH h AS (SELECT * FROM (VALUES {hash_rows}) t(d, a, b)),
-ev AS (SELECT event_type, user_id FROM events
-       WHERE user_id IS NOT NULL AND event_type IS NOT NULL),
-cells AS (
-  SELECT e.event_type, h.d, {bucket} AS bucket,
-         CAST(count(*) AS BIGINT) AS cnt
-  FROM ev e CROSS JOIN h
-  GROUP BY 1, 2, 3
-),
-exact AS (
-  SELECT event_type, user_id, CAST(count(*) AS BIGINT) AS exact_cnt
-  FROM ev GROUP BY 1, 2
-),
-probes AS (
-  SELECT e.event_type, e.user_id, e.exact_cnt, h.d, {bucket} AS bucket
-  FROM exact e CROSS JOIN h
-),
-est AS (
-  SELECT p.event_type, p.user_id, p.exact_cnt,
-         CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS cms_est
-  FROM probes p LEFT JOIN cells c
-    ON p.event_type = c.event_type AND p.d = c.d AND p.bucket = c.bucket
-  GROUP BY 1, 2, 3
-)
-SELECT event_type, grp_rank, user_id, cms_est, exact_cnt,
-       cms_est >= exact_cnt AS est_ge_exact
-FROM (
-  SELECT *, CAST(row_number() OVER (
-            PARTITION BY event_type
-            ORDER BY cms_est DESC, user_id ASC) AS INT) AS grp_rank
-  FROM est
-) WHERE grp_rank <= {GROUP_CMS_TOP_K}
-"""
-
-
-GROUP_CMS_TOPK_SQL = _group_cms_topk_sql()
-
-TOKEN_CMS_TOP_K = 10
-
-
-def cms_token_topk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STRING-keyed heavy hitters — the corpus hot-key case the
-    integer hash family alone can't serve (tokens, hosts, URLs):
-    every token derives a portable 60-bit integer key
-    (``sketches.string_key_int`` — md5-prefix, value-equal across
-    engines despite dialect differences in hex→int), then the
-    standard CMS pipeline runs unchanged.  Top-{k} tokens by estimate
-    next to exact counts — the vocab-pruning / stopword-discovery
-    pass over a 100 TB corpus with depth×width counters of state."""
-    from pyspark.sql import Window
-
-    from ..operators import sketches
-    from ..operators import text as text_ops
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    toks = docs.select(
-        F.explode(text_ops.tokens_col("text")).alias("term")
-    ).withColumn("__k", sketches.string_key_int("term")).cache()
-    # one cached explode: sketch build + exact candidate twin
-    cms = sketches.cms_build(toks, "__k", width=CMS_WIDTH, depth=CMS_DEPTH)
-    exact = toks.groupBy("term", "__k").agg(
-        F.count(F.lit(1)).alias("exact_cnt")
-    )
-    est = sketches.cms_estimate(
-        cms, exact, "__k", width=CMS_WIDTH, depth=CMS_DEPTH
-    )
-    topk = est.orderBy(
-        F.desc("cms_est"), F.asc("term")
-    ).limit(TOKEN_CMS_TOP_K)
-    w = Window.orderBy(F.desc("cms_est"), F.asc("term"))
-    return topk.withColumn("hh_rank", F.row_number().over(w)).select(
-        "hh_rank",
-        "term",
-        F.col("cms_est").cast("long").alias("cms_est"),
-        F.col("exact_cnt").cast("long").alias("exact_cnt"),
-        (F.col("cms_est") >= F.col("exact_cnt")).alias("est_ge_exact"),
-    )
-
-
-def _cms_token_topk_sql() -> str:
-    from ..operators.sketches import (
-        CMS_HASHES,
-        _bucket_sql,
-        sql_string_key_int,
-    )
-
-    hash_rows = ", ".join(
-        f"({d}, {a}, {b})" for d, (a, b) in enumerate(CMS_HASHES[:CMS_DEPTH])
-    )
-    bucket = _bucket_sql("e.k", 1, 0, CMS_WIDTH).replace(
-        " * 1 + 0", " * h.a + h.b"
-    )
-    return f"""
-WITH h AS (SELECT * FROM (VALUES {hash_rows}) t(d, a, b)),
-toks AS (
-  SELECT term, {sql_string_key_int("term")} AS k FROM (
-    SELECT unnest(string_split(text, ' ')) AS term FROM documents)
-),
-cells AS (
-  SELECT h.d, {bucket} AS bucket, CAST(count(*) AS BIGINT) AS cnt
-  FROM toks e CROSS JOIN h GROUP BY 1, 2
-),
-exact AS (
-  SELECT term, k, CAST(count(*) AS BIGINT) AS exact_cnt
-  FROM toks GROUP BY 1, 2
-),
-probes AS (
-  SELECT e.term, e.exact_cnt, h.d, {bucket} AS bucket
-  FROM exact e CROSS JOIN h
-),
-est AS (
-  SELECT term, exact_cnt, CAST(min(coalesce(c.cnt, 0)) AS BIGINT) AS cms_est
-  FROM probes p LEFT JOIN cells c USING (d, bucket)
-  GROUP BY 1, 2
-)
-SELECT * FROM (
-  SELECT CAST(row_number() OVER (ORDER BY cms_est DESC, term ASC) AS INT)
-           AS hh_rank,
-         term, cms_est, exact_cnt, cms_est >= exact_cnt AS est_ge_exact
-  FROM est
-) WHERE hh_rank <= {TOKEN_CMS_TOP_K}
-"""
-
-
-CMS_TOKEN_TOPK_SQL = _cms_token_topk_sql()
 
 
 # --- Set operations ---------------------------------------------------------
@@ -2800,13 +1758,18 @@ def events_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cast(sum(cast(value * value as decimal(28,8))) as double)"
         ).alias("s2"),
     )
+    # try_divide: a one-value group (n - 1 = 0) and a constant group
+    # (std = 0) give NULL, as DuckDB's division by zero does, instead
+    # of an ANSI DIVIDE_BY_ZERO error
     stats = stats.select(
         "event_type",
         "n",
         (F.col("s1") / F.col("n")).alias("mean"),
         F.sqrt(
-            (F.col("s2") - F.col("s1") * F.col("s1") / F.col("n"))
-            / (F.col("n") - 1)
+            F.try_divide(
+                F.col("s2") - F.col("s1") * F.col("s1") / F.col("n"),
+                F.col("n") - 1,
+            )
         ).alias("std"),
     )
     flagged = (
@@ -2818,7 +1781,8 @@ def events_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mean",
             "std",
             (
-                F.abs((F.col("value") - F.col("mean")) / F.col("std")) > 3.0
+                F.abs(F.try_divide(F.col("value") - F.col("mean"), F.col("std")))
+                > 3.0
             ).alias("is_outlier"),
         )
     )
@@ -2828,7 +1792,10 @@ def events_zscore_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.max("n").alias("n_values"),
         F.expr(sql_exact_round("max(mean)", 6)).alias("mean_value"),
         F.expr(sql_exact_round("max(std)", 6)).alias("std_value"),
-        F.sum(F.col("is_outlier").cast("long")).alias("n_outliers"),
+        # a NULL z (no spread) is not an outlier, as in the oracle's CASE
+        F.sum(F.when(F.col("is_outlier"), 1).otherwise(0).cast("long")).alias(
+            "n_outliers"
+        ),
     )
 
 

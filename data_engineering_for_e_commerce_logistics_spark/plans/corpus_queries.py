@@ -31,7 +31,6 @@ from ..operators.dedup import sql_shingles
 from .extended_queries import (
     INC_B1_LT,
     INC_B2_GE,
-    INC_OFFSET,
     QUALITY_SCORE_EXPR,
     QUALITY_T_SUBSELECT,
     _EN_STOP_SQL,
@@ -569,216 +568,6 @@ SELECT * FROM (
 ) WHERE sample_rank <= {WEIGHTED_SAMPLE_GLOBAL}
 """
 
-# --- DSIR importance resampling ---------------------------------------------
-
-DSIR_BUCKETS = 64
-DSIR_SAMPLE_K = 25
-DSIR_TARGET_SOURCE = "src0"
-
-
-def corpus_dsir_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DSIR — Data Selection via Importance Resampling (Xie et al.,
-    NeurIPS 2023): re-weight the raw corpus toward a target domain
-    (here ``source = 'src0'``) by the hashed-n-gram log importance
-    ratio, then draw a fixed-size sample ∝ exp(weight) without
-    replacement.  Two legs under one tagged union: variant 'weight'
-    = every doc's (n_feats, lr_weight) — the reusable DSIR artifact —
-    and variant 'sample' = the top-{k} Gumbel/Sequential-Poisson draw
-    in log space.
-
-    Scale shape: the 64-bucket n-gram LMs come from ONE fused
-    hash-agg over the exploded features (map-side combine → ≤64 rows
-    per partition); the log-ratio table BROADCASTS back; per-doc
-    weights shuffle once on doc_id; the draw ranks only candidate
-    buckets of the integer log-space ladder (no global window, no
-    exp() in the comparison path).  The per-doc weights frame (3
-    narrow columns, one row per doc) is cached for the two legs —
-    at 100 TB it is the doc-count table, disk-persistable, never the
-    corpus."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    w = corpus.dsir_log_ratio_weights(
-        docs,
-        F.col("source") == DSIR_TARGET_SOURCE,
-        n_buckets=DSIR_BUCKETS,
-    ).cache()
-    weight_leg = w.select(
-        F.lit("weight").alias("variant"),
-        "doc_id",
-        "n_feats",
-        "lr_weight",
-        F.lit(None).cast("double").alias("skey"),
-        F.lit(None).cast("long").alias("sample_rank"),
-    )
-    sample_leg = corpus.dsir_resample_flag(w, DSIR_SAMPLE_K).select(
-        F.lit("sample").alias("variant"),
-        "doc_id",
-        "n_feats",
-        "lr_weight",
-        "skey",
-        "sample_rank",
-    )
-    return weight_leg.unionByName(sample_leg)
-
-
-_DSIR_LN_U = (
-    "ln((('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT + 1.0)"
-    " / 4294967296.0)"
-)
-
-CORPUS_DSIR_SAMPLE_SQL = f"""
-WITH tok AS (
-  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
-),
-feats AS (
-  SELECT doc_id, source,
-         (('0x' || substr(md5(f), 1, 8))::BIGINT % {DSIR_BUCKETS}) AS b
-  FROM (
-    SELECT doc_id, source,
-           unnest(list_concat(t,
-             list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                            i -> t[i] || ' ' || t[i + 1]))) AS f
-    FROM tok
-  )
-),
-counts AS (
-  SELECT b, count(*) AS c_r,
-         sum(CASE WHEN source = '{DSIR_TARGET_SOURCE}' THEN 1 ELSE 0 END)
-           AS c_t
-  FROM feats GROUP BY b
-),
-tot AS (SELECT sum(c_r) AS tot_r, sum(c_t) AS tot_t FROM counts),
-lr AS (
-  SELECT b,
-         {sql_exact_round(
-             f"ln((c_t + 0.5) / (tot_t + {0.5 * DSIR_BUCKETS}))"
-             f" - ln((c_r + 0.5) / (tot_r + {0.5 * DSIR_BUCKETS}))", 9)}
-           AS lr
-  FROM counts, tot
-),
-w AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-         cast(sum(cast(lr AS DECIMAL(28,9))) AS DOUBLE) AS lr_weight
-  FROM feats JOIN lr USING (b)
-  GROUP BY doc_id
-),
-keyed AS (
-  SELECT doc_id, n_feats, lr_weight,
-         {sql_exact_round(_DSIR_LN_U, 9)} - lr_weight AS skey
-  FROM w
-)
-SELECT 'weight' AS variant, doc_id, n_feats, lr_weight,
-       CAST(NULL AS DOUBLE) AS skey, CAST(NULL AS BIGINT) AS sample_rank
-FROM w
-UNION ALL
-SELECT 'sample' AS variant, doc_id, n_feats, lr_weight, skey, sample_rank
-FROM (
-  SELECT doc_id, n_feats, lr_weight, skey,
-         CAST(row_number() OVER (ORDER BY skey, doc_id) AS BIGINT)
-           AS sample_rank
-  FROM keyed
-) WHERE sample_rank <= {DSIR_SAMPLE_K}
-"""
-
-# --- Incremental DSIR (persisted bucket-LM index) ----------------------------
-
-
-def incremental_dsir_fresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SIXTH incremental-ingest family member, DSIR flavor: batch 1
-    builds the 64-row bucket-LM index, batch 2 (the standard 20%
-    re-ingest overlap split of the exact/minhash/simhash/semdedup/PQ
-    siblings) is scored against that PRE-batch index — the corpus is
-    never re-read, and unlike the dedup siblings the persisted state
-    is O(buckets), not O(corpus), so the per-batch cost is flat BY
-    CONSTRUCTION.  Output legs: 'batch_score' = every batch-2 doc's
-    (n_feats, lr_weight) under the index LMs; 'index_after' = the
-    accrued counts after both batches (proves the update law the
-    unit equivalence test pins: accrue(index(C1), C2) =
-    index(C1 ∪ C2))."""
-    from .extended_queries import _inc_batches
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    b1, b2 = _inc_batches(docs)
-    target = F.col("source") == DSIR_TARGET_SOURCE
-    idx1 = corpus.dsir_bucket_index(b1, target, n_buckets=DSIR_BUCKETS)
-    after, scores = corpus.dsir_score_batch(
-        b2, idx1, target, n_buckets=DSIR_BUCKETS
-    )
-    score_leg = scores.select(
-        F.lit("batch_score").alias("variant"),
-        F.col("doc_id").alias("k"),
-        F.col("n_feats").alias("n"),
-        F.lit(None).cast("long").alias("c_t"),
-        "lr_weight",
-    )
-    index_leg = after.select(
-        F.lit("index_after").alias("variant"),
-        F.col("b").alias("k"),
-        F.col("c_r").alias("n"),
-        "c_t",
-        F.lit(None).cast("double").alias("lr_weight"),
-    )
-    return score_leg.unionByName(index_leg)
-
-
-INCREMENTAL_DSIR_SQL = f"""
-WITH tok AS (
-  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
-),
-feats AS (
-  SELECT doc_id, source,
-         (('0x' || substr(md5(f), 1, 8))::BIGINT % {DSIR_BUCKETS}) AS b
-  FROM (
-    SELECT doc_id, source,
-           unnest(list_concat(t,
-             list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                            i -> t[i] || ' ' || t[i + 1]))) AS f
-    FROM tok
-  )
-),
-idx1 AS (
-  SELECT b, count(*) AS c_r,
-         sum(CASE WHEN source = '{DSIR_TARGET_SOURCE}' THEN 1 ELSE 0 END)
-           AS c_t
-  FROM feats WHERE doc_id % 10 < {INC_B1_LT} GROUP BY b
-),
-tot1 AS (SELECT sum(c_r) AS tot_r, sum(c_t) AS tot_t FROM idx1),
-lr1 AS (
-  SELECT b,
-         {sql_exact_round(
-             f"ln((c_t + 0.5) / (tot_t + {0.5 * DSIR_BUCKETS}))"
-             f" - ln((c_r + 0.5) / (tot_r + {0.5 * DSIR_BUCKETS}))", 9)}
-           AS lr
-  FROM idx1, tot1
-),
-f2 AS (
-  SELECT doc_id + {INC_OFFSET} AS doc_id, source, b
-  FROM feats WHERE doc_id % 10 >= {INC_B2_GE}
-),
-scores AS (
-  SELECT doc_id, CAST(count(*) AS BIGINT) AS n_feats,
-         cast(sum(cast(lr AS DECIMAL(28,9))) AS DOUBLE) AS lr_weight
-  FROM f2 JOIN lr1 USING (b) GROUP BY doc_id
-),
-cnt2 AS (
-  SELECT b, count(*) AS c_r,
-         sum(CASE WHEN source = '{DSIR_TARGET_SOURCE}' THEN 1 ELSE 0 END)
-           AS c_t
-  FROM f2 GROUP BY b
-),
-idx_after AS (
-  SELECT coalesce(i.b, c.b) AS b,
-         CAST(coalesce(i.c_r, 0) + coalesce(c.c_r, 0) AS BIGINT) AS c_r,
-         CAST(coalesce(i.c_t, 0) + coalesce(c.c_t, 0) AS BIGINT) AS c_t
-  FROM idx1 i FULL OUTER JOIN cnt2 c ON i.b = c.b
-)
-SELECT 'batch_score' AS variant, doc_id AS k, n_feats AS n,
-       CAST(NULL AS BIGINT) AS c_t, lr_weight
-FROM scores
-UNION ALL
-SELECT 'index_after', b, c_r, c_t, CAST(NULL AS DOUBLE)
-FROM idx_after
-"""
-
 # --- Hashed logistic quality classifier --------------------------------------
 
 QC_BUCKETS = 64
@@ -939,7 +728,7 @@ FROM g CROSS JOIN tot
 
 def quality_classifier_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Classifier + calibration in ONE slot off ONE training chain
-    (pre-built r13, the bpe_suite consolidation pattern): the
+    (pre-built r13): the
     in-engine trained scored frame is cached once; variant 'scored'
     carries every doc's (y, n_feats, score, pred) verbatim and
     variant 'calib' carries the reliability bins + ECE — the
@@ -1851,65 +1640,8 @@ FROM ranked WHERE rank <= {TFIDF_TOPK}
 # --- Lexical retrieval suite: TF-IDF terms + BM25 query retrieval (THE r20
 # --- trade, pre-built r09) ---------------------------------------------------
 
-BM25_QUERY_IDS = list(range(10))
-BM25_TOPK = 5
 BM25_K1 = 1.2
 BM25_B = 0.75
-
-
-def lexical_retrieval_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lexical family consolidation + BM25 debut: ONE cached
-    ``(doc_id, term, tf)`` pass serves the retiring
-    ``corpus_tfidf_topk``'s cells verbatim AND the new BM25 query
-    retrieval leg (``operators/corpus.py:bm25_topk`` — the lexical
-    complement of ``embedding_retrieval_suite``: the first 10 doc_ids
-    are the stand-in query set, each retrieving its BM25_TOPK best
-    non-self matches over the query-term posting lists).
-
-    Padded union shape ``(variant, k, txt, n, df, score, rank)``:
-    * 'tfidf' rows: k = doc_id, txt = term, n = tf, df = df,
-      score = tfidf — the retiring spec's cells verbatim;
-    * 'bm25' rows: k = query_id, txt = the retrieved doc_id as a
-      string, n = matched-query-term count, df = NULL, score = the
-      4-dp decimal-exact BM25 sum.
-
-    100 TB shape: the tf frame is the only corpus-wide pass (one
-    (doc,term) exchange), cached once; the TF-IDF leg adds its term
-    exchange, the BM25 leg is broadcast-query joins over the same
-    cache plus one doc-keyed length join — consolidation removes a
-    full duplicate explode of the corpus."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    terms = docs.select(
-        "doc_id", F.explode(text.tokens_col("text")).alias("term")
-    )
-    tf = (
-        terms.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .cache()
-    )
-    tfidf = corpus.tfidf_topk(docs, k=TFIDF_TOPK, tf_table=tf)
-    bm = corpus.bm25_topk(
-        docs, BM25_QUERY_IDS, k=BM25_TOPK, k1=BM25_K1, b=BM25_B, tf_table=tf
-    )
-    t = tfidf.select(
-        F.lit("tfidf").alias("variant"),
-        F.col("doc_id").alias("k"),
-        F.col("term").alias("txt"),
-        F.col("tf").alias("n"),
-        "df",
-        F.col("tfidf").alias("score"),
-        "rank",
-    )
-    q = bm.select(
-        F.lit("bm25").alias("variant"),
-        F.col("query_id").alias("k"),
-        F.col("doc_id").cast("string").alias("txt"),
-        F.col("n_terms").alias("n"),
-        F.lit(None).cast("long").alias("df"),
-        F.col("bm25").alias("score"),
-        "rank",
-    )
-    return t.unionByName(q)
 
 
 _BM25_IDF = sql_exact_round(
@@ -1921,63 +1653,6 @@ _BM25_CONTRIB = (
     f"CAST({BM25_B} AS DOUBLE) * dl / (CAST(total_dl AS DOUBLE) / n_docs)))"
 )
 
-LEXICAL_RETRIEVAL_SQL = f"""
-WITH terms AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-tf AS MATERIALIZED (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM terms GROUP BY doc_id, term
-),
-docfreq AS (SELECT term, CAST(count(*) AS BIGINT) AS df
-            FROM tf GROUP BY term),
-n AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-scored AS (
-  SELECT tf.doc_id, tf.term, tf.tf, docfreq.df,
-         {sql_exact_round('tf.tf * ln((n.n_docs + 1.0) / (docfreq.df + 1.0))', 4)}
-           AS tfidf
-  FROM tf JOIN docfreq USING (term) CROSS JOIN n
-),
-ranked AS (
-  SELECT *, CAST(row_number() OVER (
-            PARTITION BY doc_id ORDER BY tfidf DESC, term ASC) AS INT) AS rank
-  FROM scored
-),
-doclen AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(dl) AS BIGINT) AS total_dl FROM doclen),
-qt AS (SELECT doc_id AS query_id, term FROM tf
-       WHERE doc_id IN ({", ".join(map(str, BM25_QUERY_IDS))})),
-qdf AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf
-        WHERE term IN (SELECT DISTINCT term FROM qt) GROUP BY term),
-contrib AS (
-  SELECT q.query_id, t.doc_id,
-         {_BM25_CONTRIB} AS contrib
-  FROM tf t
-  JOIN qt q USING (term)
-  JOIN qdf USING (term)
-  JOIN doclen l ON l.doc_id = t.doc_id
-  CROSS JOIN stats
-  WHERE t.doc_id <> q.query_id
-),
-bm AS (
-  SELECT query_id, doc_id, CAST(count(*) AS BIGINT) AS n_terms,
-         {sql_exact_sum('contrib', 4)} AS bm25
-  FROM contrib GROUP BY query_id, doc_id
-),
-bmr AS (
-  SELECT *, CAST(row_number() OVER (
-            PARTITION BY query_id ORDER BY bm25 DESC, doc_id ASC) AS INT)
-            AS rank
-  FROM bm
-)
-SELECT 'tfidf' AS variant, doc_id AS k, term AS txt, tf AS n, df,
-       tfidf AS score, rank
-FROM ranked WHERE rank <= {TFIDF_TOPK}
-UNION ALL
-SELECT 'bm25', query_id, CAST(doc_id AS VARCHAR), n_terms, NULL, bm25, rank
-FROM bmr WHERE rank <= {BM25_TOPK}
-"""
 
 # --- Hybrid retrieval: Reciprocal Rank Fusion --------------------------------
 
@@ -2008,9 +1683,8 @@ def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
     # cache the (doc, term, tf) frame: bm25_topk consumes it four ways
     # (query terms, query-vocab df, candidates, doc lengths) — without
-    # the cache each consumer re-explodes the corpus (the
-    # lexical_retrieval_suite discipline; measured 126s → ~45s at
-    # sf2.5)
+    # the cache each consumer re-explodes the corpus (measured 126s →
+    # ~45s at sf2.5)
     tf = (
         docs.select("doc_id", F.explode(text.tokens_col("text")).alias("term"))
         .groupBy("doc_id", "term")
@@ -2595,93 +2269,6 @@ FROM documents d LEFT JOIN enc e ON e.doc_id = d.doc_id
 BPE_ENCODE_SQL = _bpe_encode_sql()
 
 
-def bpe_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BPE family consolidation (THE r18 trade, pre-built r09): train
-    the merge table ONCE and serve both retiring specs' cells from the
-    same chain — ``bpe_merges_documents`` re-ran the full
-    corpus-pass + vocab-round training that ``bpe_encode_documents``
-    also ran just to get its vocab (two trains ≈ 6.7s of r08 bench for
-    one artifact).  ``bpe_train(return_vocab=True)`` yields the merge
-    rows AND the fully-merged word→symbols lookup from one loop; the
-    encode leg is then a single broadcast vocab join.
-
-    Padded union shape: ``(variant, k, txt, n)`` —
-    * 'merges' rows: k = merge_rank, txt = 'left right merged'
-      (space-joined, symbols cannot contain whitespace — they descend
-      from whitespace-split words), n = pair_count;
-    * 'encode' rows: k = doc_id, txt = the space-joined token
-      sequence, n = n_tokens.
-    Both retiring specs' cell VALUES carry verbatim into txt/n.
-    """
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    merges, vocab = text.bpe_train(
-        docs, n_merges=BPE_N_MERGES, return_vocab=True
-    )
-    enc = text.bpe_encode(docs, vocab)
-    m = merges.select(
-        F.lit("merges").alias("variant"),
-        F.col("merge_rank").cast("long").alias("k"),
-        F.concat_ws(" ", "left_sym", "right_sym", "merged").alias("txt"),
-        F.col("pair_count").alias("n"),
-    )
-    e = enc.select(
-        F.lit("encode").alias("variant"),
-        F.col("doc_id").cast("long").alias("k"),
-        F.array_join("tokens", " ").alias("txt"),
-        F.col("n_tokens").alias("n"),
-    )
-    return m.unionByName(e)
-
-
-def _bpe_suite_sql() -> str:
-    rounds = ",".join(_bpe_iter_block(i) for i in range(BPE_N_MERGES))
-    merge_rows = "\nUNION ALL\n".join(
-        f"SELECT 'merges' AS variant, {i + 1}::BIGINT AS k,"
-        f" a || ' ' || b || ' ' || a || b AS txt,"
-        f" cnt::BIGINT AS n FROM best{i}"
-        for i in range(BPE_N_MERGES)
-    )
-    return f"""
-WITH words AS MATERIALIZED (
-  SELECT w, count(*)::BIGINT AS freq
-  FROM (SELECT unnest(string_split_regex(lower(text), '\\s+')) AS w FROM documents)
-  WHERE w <> '' GROUP BY w
-),
-v0 AS MATERIALIZED (
-  SELECT w, freq,
-         list_append(list_transform(generate_series(1, length(w)), x -> w[x]),
-                     '</w>') AS s
-  FROM words
-),
-{rounds.lstrip()},
-tokpos AS MATERIALIZED (
-  SELECT doc_id, j AS wpos, toks[j] AS w
-  FROM (SELECT doc_id, string_split_regex(lower(text), '\\s+') AS toks
-        FROM documents) d,
-       unnest(generate_series(1, len(toks))) AS t(j)
-  WHERE toks[j] <> ''
-),
-enc AS (
-  SELECT tp.doc_id,
-         flatten(list(coalesce(v.s,
-           list_append(list_transform(generate_series(1, length(tp.w)),
-                                      x -> tp.w[x]), '</w>'))
-           ORDER BY tp.wpos)) AS tokens
-  FROM tokpos tp LEFT JOIN v{BPE_N_MERGES} v ON v.w = tp.w
-  GROUP BY tp.doc_id
-)
-{merge_rows}
-UNION ALL
-SELECT 'encode', d.doc_id,
-       coalesce(array_to_string(e.tokens, ' '), ''),
-       coalesce(len(e.tokens), 0)::BIGINT
-FROM documents d LEFT JOIN enc e ON e.doc_id = d.doc_id
-"""
-
-
-BPE_SUITE_SQL = _bpe_suite_sql()
-
-
 # --- Training-corpus capstone lineage report (r08 driver row) ----------------
 
 
@@ -3004,8 +2591,6 @@ FROM d JOIN trates USING (source)
 )
 
 
-
-
 # --- Coverage-maximizing source selection (submodular greedy) ----------------
 #
 # Unit-first pre-build (r13): registers when an r15+ slot frees.  The
@@ -3101,18 +2686,15 @@ def _source_coverage_sql() -> str:
 SOURCE_COVERAGE_SQL = _source_coverage_sql()
 
 
-
 # --- Incremental coverage (SEVENTH incremental-ingest family; r13) -----------
 #
 # The coverage index (ng → source bitmask) is MERGEABLE with bit_or —
-# associative, commutative, IDEMPOTENT — so it rides the generic
-# streaming accumulator loop (``start_cms_stream`` with
-# ``merge_expr=F.bit_or``) with append-only per-batch segments and
-# replay immunity stronger than the CMS's (_SUCCESS guards replays;
-# bit_or would forgive them anyway).  Per-batch cost is the batch's
+# associative, commutative, IDEMPOTENT — so batches accrue as
+# append-only per-batch segments merged with bit_or, and a replayed
+# batch changes nothing.  Per-batch cost is the batch's
 # own shingle pass plus the bounded summary refresh — the corpus is
 # never re-read; state grows with DISTINCT ngrams (the dedup-index
-# contrast; the DSIR sibling is the O(1)-state one).  The fresh spec
+# contrast).  The fresh spec
 # proves the accrual law end-to-end: the greedy over the two-batch
 # accrued index must EQUAL the one-shot full-corpus greedy (the
 # standard %10 batch split covers every doc with a 20% re-ingest

@@ -1675,184 +1675,6 @@ SELECT cell, pair_rank, id_a, id_b, cosine FROM (
 SEMDEDUP_ROUTED_PAIRS_SQL = _semdedup_routed_sql()
 
 
-def semdedup_routing_suite(
-    spark: SparkSession, sf_dir: str, n_seed: int | None = None
-) -> DataFrame:
-    """Merged-variants consolidation earmarked for r14 (pre-built
-    unit-first in r12): the two ASSIGNMENT-path SemDeDup pair miners —
-    ``semdedup_trained_pairs`` (seed assign → decimal-exact Lloyd
-    refine → flat packed re-assign) and ``semdedup_routed_pairs``
-    (two-level coarse routing, n_probe=2) — under one tagged union.
-    As separate specs each leg re-scanned ``embeddings`` and
-    re-derived the (v, nrm) projection; the suite caches that
-    projection ONCE and both assignment paths AND both cell-keyed
-    mining self-joins read the cached frame.  The mining tail
-    (within-cell cosine + per-cell top-k) is the same code for both
-    legs — only the cell assignment differs, which is exactly the
-    comparison a production corpus wants side-by-side (trained-flat
-    = exact cells at n·k cost; routed = sub-n·k with the bounded
-    mis-route tolerance SemDeDup affords).
-
-    ONE deliberate upgrade over the retiring spec (the
-    ``group_quantiles_events`` precedent — register the 100 TB
-    shape): the trained leg's seed-centroid count AUTO-SCALES to
-    ceil(sqrt(n)) like the routed leg's, instead of the standalone's
-    fixed ``N_CENTROIDS = 8``.  Fixed seeds make cells grow linearly
-    with the corpus and the per-cell pair quadratic pays factor²
-    (the documented seed-path fixture law — measured 99× at 25× data
-    on the fixed-8 form); sqrt(n) cells keep total pair work at
-    n^1.5.  Pass ``n_seed`` to pin the seed count — the unit test
-    uses ``n_seed=N_CENTROIDS`` to prove the trained leg is
-    bit-identical to the retiring spec under its own seeding.
-
-    Plan shape: everything before the two per-cell windows is
-    broadcast/packed map work over the cached projection; the only
-    shuffles are the two legs' cell-keyed exchanges (bounded per-cell
-    work under the sqrt(n) rule) plus the trained leg's k-row
-    centroid aggregate.  Nothing quadratic in the corpus."""
-    from pyspark.sql import Window
-
-    from ..operators.similarity import (
-        _as_double_vec,
-        _fold_sum,
-        _nearest_packed,
-        _pack_rows,
-        two_level_assign,
-    )
-
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    vecs = (
-        emb.select("vec_id", _as_double_vec("embedding").alias("v"))
-        .withColumn(
-            "nrm", F.sqrt(_fold_sum(F.transform(F.col("v"), lambda x: x * x)))
-        )
-        .cache()  # one scan serves both assignment paths + both mines
-    )
-
-    def assign(centroids: DataFrame) -> DataFrame:
-        return (
-            vecs.crossJoin(
-                F.broadcast(_pack_rows(centroids, "centroid_id", "cv"))
-            )
-            .withColumn(
-                "__best",
-                _nearest_packed(
-                    F.col("v"), F.col("__packed"), "centroid_id", "cv"
-                ),
-            )
-            .select("vec_id", "v", "nrm", F.col("__best.id").alias("cell"))
-        )
-
-    def mine(assigned: DataFrame, variant: str) -> DataFrame:
-        a = assigned.select(
-            "cell",
-            F.col("vec_id").alias("id_a"),
-            F.col("v").alias("va"),
-            F.col("nrm").alias("na"),
-        )
-        b = assigned.select(
-            "cell",
-            F.col("vec_id").alias("id_b"),
-            F.col("v").alias("vb"),
-            F.col("nrm").alias("nb"),
-        )
-        pairs = (
-            a.join(b, "cell")
-            .filter(F.col("id_a") < F.col("id_b"))
-            .withColumn(
-                "cosine",
-                _fold_sum(F.zip_with("va", "vb", lambda x, y: x * y))
-                / F.nullif(F.col("na") * F.col("nb"), F.lit(0.0)),
-            )
-        )
-        w_rank = Window.partitionBy("cell").orderBy(
-            F.col("cosine").desc(), F.col("id_a").asc(), F.col("id_b").asc()
-        )
-        return (
-            pairs.withColumn(
-                "pair_rank", F.row_number().over(w_rank).cast("long")
-            )
-            .filter(F.col("pair_rank") <= SEMDEDUP_TOPK)
-            .select(
-                F.lit(variant).alias("variant"),
-                "cell",
-                "pair_rank",
-                "id_a",
-                "id_b",
-                "cosine",
-            )
-        )
-
-    # shared auto-scale scalar: both legs' seed sets are the first
-    # ceil(sqrt(n)) ids (broadcast 1-row k, the routed spec's rule)
-    k = vecs.agg(
-        F.ceil(F.sqrt(F.count(F.lit(1)))).cast("long").alias("__k")
-    )
-
-    def first_k_seeds() -> DataFrame:
-        if n_seed is not None:
-            return vecs.filter(F.col("vec_id") < n_seed).select(
-                F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-            )
-        return (
-            vecs.crossJoin(F.broadcast(k))
-            .filter(F.col("vec_id") < F.col("__k"))
-            .select(
-                F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-            )
-        )
-
-    # --- trained leg: seed assign → decimal-exact refine → re-assign
-    seeds = first_k_seeds()
-    assign0 = assign(seeds)
-    refined = (
-        assign0.select("cell", F.posexplode(F.col("v")).alias("dim", "val"))
-        .groupBy(F.col("cell").alias("centroid_id"), "dim")
-        .agg(
-            (
-                F.expr("cast(sum(cast(val as decimal(28,8))) as double)")
-                / F.count(F.lit(1))
-            ).alias("cval")
-        )
-        .groupBy("centroid_id")
-        .agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "cval"))),
-                lambda s: s["cval"],
-            ).alias("cv")
-        )
-    )
-    trained = assign(refined).cache()  # both mine sides read it
-
-    # --- routed leg: auto-scaled sqrt(n) seed centroids, 2-probe
-    # coarse routing off the SAME cached projection (ALWAYS sqrt(n),
-    # matching the standalone routed spec regardless of n_seed)
-    centroids = (
-        vecs.crossJoin(F.broadcast(k))
-        .filter(F.col("vec_id") < F.col("__k"))
-        .select(
-            F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-        )
-    )
-    cells = two_level_assign(vecs, centroids, vec_col="v", n_probe=2)
-    routed = vecs.join(cells, "vec_id").select(
-        "vec_id", "v", "nrm", "cell"
-    ).cache()
-
-    return mine(trained, "trained").unionByName(mine(routed, "routed"))
-
-
-SEMDEDUP_ROUTING_SUITE_SQL = f"""
-SELECT 'trained' AS variant, cell, pair_rank, id_a, id_b, cosine
-FROM ({_semdedup_trained_sql(
-    "vec_id < (SELECT CAST(ceil(sqrt(count(*))) AS BIGINT) FROM e)"
-)})
-UNION ALL
-SELECT 'routed', cell, pair_rank, id_a, id_b, cosine
-FROM ({SEMDEDUP_ROUTED_PAIRS_SQL})
-"""
-
-
 # tau sits below the synthetic corpus's max pair cosine (0.49 at
 # sf0.01) so the drop path actually fires — a keep-all threshold
 # would leave the anti join untested.
@@ -2903,104 +2725,6 @@ ORDER BY vec_id
 INCREMENTAL_PQ_SQL = _incremental_pq_sql()
 
 
-def incremental_embedding_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Merged-variants consolidation earmarked for r14 (pre-built
-    unit-first in r12; the documents-side twin registered r12 as
-    ``incremental_dedup_suite``): the two EMBEDDING-side incremental
-    ingest flows — ``incremental_semdedup_fresh`` (full-vector cell
-    index, cosine screen) and ``incremental_pq_fresh`` (PQ-code
-    index, triangle-inequality ADC screen + exact verify) — under one
-    tagged union.  Both specs independently scanned ``embeddings``
-    and re-derived the SAME coarse centroids and the SAME
-    vec_id%10 batch split; the suite caches the raw (vec_id,
-    embedding) frame once and derives centroids, batch 1, and
-    batch 2 from the shared cache, then runs each family's unchanged
-    operator chain (the flows stay distinct by design: one persists
-    full vectors, the other 16× smaller codes — that trade-off is the
-    point of having both).  Output schema is identical across
-    variants — (variant, vec_id, cell, ingest_batch) — so no padding
-    is needed, and each leg's cells are bit-identical to its
-    standalone spec (pinned by the parts-equality unit).
-
-    Cache lifetime contract as the incremental-dedup family: one-shot
-    callers ignore it, loops ``clearCache()`` per batch.  The
-    localCheckpoint pins (batch-1 index, offline codebook) carry over
-    unchanged from the standalone specs."""
-    from ..operators.similarity import (
-        incremental_pq_dedup,
-        incremental_semdedup,
-        pq_train_encode,
-    )
-    from .extended_queries import INC_B1_LT, INC_B2_GE, INC_OFFSET
-
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"].select(
-        "vec_id", "embedding"
-    )
-    centroids = emb.filter(F.col("vec_id") < ROUTED_K).select(
-        F.col("vec_id").alias("centroid_id"), F.col("embedding").alias("cv")
-    )
-    b1 = emb.where(F.col("vec_id") % 10 < INC_B1_LT)
-    b2 = emb.where(F.col("vec_id") % 10 >= INC_B2_GE).withColumn(
-        "vec_id", F.col("vec_id") + F.lit(INC_OFFSET)
-    )
-
-    # --- semantic leg (full-vector index)
-    _, sem1 = incremental_semdedup(b1, None, centroids, tau=INC_SEM_TAU)
-    sem1 = sem1.localCheckpoint()
-    _, sem2 = incremental_semdedup(b2, sem1, centroids, tau=INC_SEM_TAU)
-    sem = sem1.select(
-        "vec_id", "cell", F.lit(1).alias("ingest_batch")
-    ).unionByName(
-        sem2.select("vec_id", "cell", F.lit(2).alias("ingest_batch"))
-    )
-
-    # --- PQ leg (compressed-code index)
-    _, codebook = pq_train_encode(
-        emb, dim=EMB_DIM, n_sub=PQ_SUB, k=PQ_K, n_refine=1
-    )
-    codebook = codebook.localCheckpoint()
-    _, pq1 = incremental_pq_dedup(
-        b1, None, centroids, codebook, INC_PQ_THETA, dim=EMB_DIM, n_sub=PQ_SUB
-    )
-    pq1 = pq1.localCheckpoint()
-    _, pq2 = incremental_pq_dedup(
-        b2,
-        pq1,
-        centroids,
-        codebook,
-        INC_PQ_THETA,
-        dim=EMB_DIM,
-        n_sub=PQ_SUB,
-        corpus_lookup=b1,
-    )
-    pq = (
-        pq1.select("vec_id", "cell")
-        .distinct()
-        .withColumn("ingest_batch", F.lit(1))
-        .unionByName(
-            pq2.select("vec_id", "cell")
-            .distinct()
-            .withColumn("ingest_batch", F.lit(2))
-        )
-    )
-
-    return (
-        sem.select(F.lit("semantic").alias("variant"), "*")
-        .unionByName(pq.select(F.lit("pq").alias("variant"), "*"))
-        .orderBy("variant", "vec_id")
-    )
-
-
-INCREMENTAL_EMBEDDING_SUITE_SQL = f"""
-SELECT 'semantic' AS variant, vec_id, cell, ingest_batch
-FROM ({INCREMENTAL_SEMDEDUP_SQL})
-UNION ALL
-SELECT 'pq', vec_id, cell, ingest_batch
-FROM ({INCREMENTAL_PQ_SQL})
-ORDER BY variant, vec_id
-"""
-
-
 # --- Semantic decontamination (third decon family member; r15 debut) --------
 
 SEM_DECON_TAU = 0.4       # = SEMDEDUP_TAU: the fixture's near-dup radius
@@ -3063,76 +2787,6 @@ SELECT c.vec_id,
        CASE WHEN c.nrm > 0 THEN p.max_cosine END AS max_cosine,
        coalesce(p.n_bench_hits, 0) > 0 AS contaminated
 FROM corp c LEFT JOIN per_vec p USING (vec_id)
-"""
-
-
-# --- Embedding standardization (r17 debut candidate) -------------------------
-
-STD_SAMPLE_MOD = 50  # vector variant: every 50th vector's values, exploded
-
-
-def standardize_embeddings_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-dimension embedding standardization (r08 unit-first, r17
-    registry candidate): the 'stats' variant carries every
-    dimension's decimal-exact (mean, std); the 'vector' variant
-    explodes the standardized values of every 50th vector so the
-    driver hash pins the actual map-only transform, not just the
-    moments.  Zero-spread dimensions standardize to 0.0."""
-    from ..operators.similarity import standardize_embeddings
-
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    standardized, stats = standardize_embeddings(emb)
-    nb = F.lit(None).cast("bigint")
-    nd = F.lit(None).cast("double")
-    s = stats.select(
-        F.lit("stats").alias("variant"),
-        F.col("dim").cast("bigint").alias("dim"),
-        nb.alias("vec_id"),
-        "mean",
-        "std",
-        nd.alias("x"),
-    )
-    v = (
-        standardized.where(F.col("vec_id") % STD_SAMPLE_MOD == 0)
-        .select(F.col("vec_id"), F.posexplode("embedding").alias("dim", "__x"))
-        .select(
-            F.lit("vector").alias("variant"),
-            F.col("dim").cast("bigint").alias("dim"),
-            "vec_id",
-            nd.alias("mean"),
-            nd.alias("std"),
-            F.col("__x").alias("x"),
-        )
-    )
-    return s.unionByName(v)
-
-
-STANDARDIZE_EMBEDDINGS_SQL = f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, zz -> CAST(zz AS DOUBLE)) AS v
-  FROM embeddings
-),
-ex AS (
-  SELECT vec_id, generate_subscripts(v, 1) - 1 AS dim, unnest(v) AS x
-  FROM e
-),
-st AS (
-  SELECT dim,
-         cast(sum(cast(x AS decimal(28,8))) AS double) / count(*) AS mean,
-         sqrt(greatest(
-              cast(sum(cast(x * x AS decimal(28,8))) AS double) / count(*)
-              - pow(cast(sum(cast(x AS decimal(28,8))) AS double)
-                    / count(*), 2), 0.0)) AS std
-  FROM ex GROUP BY dim
-)
-SELECT 'stats' AS variant, dim, CAST(NULL AS BIGINT) AS vec_id,
-       mean, std, CAST(NULL AS DOUBLE) AS x
-FROM st
-UNION ALL
-SELECT 'vector', ex.dim, ex.vec_id, NULL, NULL,
-       CASE WHEN st.std > 0 THEN (ex.x - st.mean) / st.std ELSE 0.0 END
-FROM ex JOIN st USING (dim)
-WHERE ex.vec_id % {STD_SAMPLE_MOD} = 0
 """
 
 
@@ -3255,356 +2909,7 @@ SELECT * FROM comp UNION ALL SELECT * FROM dist
 JL_PROJECT_SQL = _jl_sql()
 
 
-# --- Alternating-star CC over user activity chains (THE r18 debut,
-# --- pre-built r09) ---------------------------------------------------------
-
-CHAIN_GAP_SEC = 86400  # 1 day: consecutive-event chains run 50+ deep
-# at sf0.01 (vs max 3 under the 30-min session gap) — deep components
-# are exactly the regime the O(log n) contraction exists for
-
-
-def events_chain_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Activity-episode labeling via alternating-star connected
-    components (``operators/graph.py:cc_alternating``): consecutive
-    events of a user link when separated by under CHAIN_GAP_SEC, and
-    each event is labeled with its chain's minimum event_id.  The
-    same gaps-and-islands semantics as ``events_sessionize`` at a
-    1-day gap — but computed through the GRAPH path, because this
-    spec's job is to driver-prove the O(log n) CC twin on a real
-    deep-chain graph (the window form stops working the moment
-    linkage isn't a total order per key: near-dup graphs, entity
-    resolution, cross-user identity edges — CC is the general tool,
-    and it must be driver-checked on data where components are DEEP,
-    not the 2-3-node LSH clusters ``minhash_cluster_suite`` labels).
-
-    100 TB shape: the edge build is one user-keyed window pass
-    (lag + epoch diff); the contraction runs O(log chain-length)
-    rounds of edge-keyed exchanges over a frame bounded by #events —
-    no diameter dependence, unlike the label-propagation fixpoint
-    that would loop once per chain HOP (a 10k-event streak = 10k
-    driver-coordinated rounds).  Output: (event_id, episode_id) for
-    every event, isolated events labeling themselves.
-    """
-    from pyspark.sql import Window
-
-    from ..operators.graph import cc_alternating
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    w = Window.partitionBy("user_id").orderBy(
-        F.col("ts").asc(), F.col("event_id").asc()
-    )
-    linked = (
-        ev.select("user_id", "event_id", "ts")
-        .withColumn("prev_id", F.lag("event_id").over(w))
-        .withColumn("prev_ts", F.lag("ts").over(w))
-    )
-    edges = linked.where(
-        F.col("prev_id").isNotNull()
-        & (
-            F.unix_timestamp("ts") - F.unix_timestamp("prev_ts")
-            < F.lit(CHAIN_GAP_SEC)
-        )
-    ).select(F.col("event_id").alias("id_a"), F.col("prev_id").alias("id_b"))
-    labels = cc_alternating(edges)
-    return (
-        ev.select("event_id")
-        .join(labels.withColumnRenamed("node", "event_id"), "event_id", "left")
-        .select(
-            "event_id",
-            F.coalesce(F.col("label"), F.col("event_id"))
-            .cast("long")
-            .alias("episode_id"),
-        )
-    )
-
-
-EVENTS_CHAIN_COMPONENTS_SQL = f"""
-WITH RECURSIVE
-linked AS (
-  SELECT event_id,
-         lag(event_id) OVER (PARTITION BY user_id ORDER BY ts, event_id)
-           AS prev_id,
-         extract(epoch FROM ts) - extract(epoch FROM lag(ts) OVER (
-             PARTITION BY user_id ORDER BY ts, event_id)) AS gap
-  FROM events
-),
-pe AS (
-  SELECT event_id AS a, prev_id AS b FROM linked
-  WHERE prev_id IS NOT NULL AND gap < {CHAIN_GAP_SEC}
-),
-edges AS (SELECT a AS src, b AS dst FROM pe UNION SELECT b, a FROM pe),
-reach(node, root) AS (
-  SELECT event_id, event_id FROM events
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-)
-SELECT node AS event_id, min(root)::BIGINT AS episode_id
-FROM reach GROUP BY node
-"""
-
-
-# --- Farthest-point (k-center) seeding (THE r19 debut, pre-built r09) -------
-
-KCENTER_K = 8
-
-
-def _kcenter_round_sql(i: int) -> str:
-    """Round i (i >= 2): pick the argmax of dmin from d{i-1}, then
-    fold the new seed into the running min-distance."""
-    prev = i - 1
-    return f"""
-s{i} AS MATERIALIZED (
-  SELECT vec_id, v, dmin FROM d{prev}
-  ORDER BY dmin DESC, vec_id ASC LIMIT 1
-),
-d{i} AS MATERIALIZED (
-  SELECT d.vec_id, d.v,
-         least(d.dmin,
-               list_reduce(list_transform(list_zip(d.v, s.v),
-                           p -> (p[1] - p[2]) * (p[1] - p[2])),
-                           (a, b) -> a + b)) AS dmin
-  FROM d{prev} d, s{i} s
-)"""
-
-
-def kcenter_seed_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Farthest-point seed selection over the embeddings corpus
-    (``operators/similarity.py:kcenter_seed``): the KCENTER_K chosen
-    seeds with their selection radii — the non-increasing covering-
-    radius sequence is the quality evidence first-k-ids seeding
-    cannot produce.  Driver-comparable shape: (seed_rank, vec_id,
-    radius), radius NULL for seed 1; the oracle unrolls all rounds as
-    MATERIALIZED CTEs with the identical left-fold double distance
-    and (dmin DESC, vec_id ASC) tie rule."""
-    from ..operators.similarity import kcenter_seed
-
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    return kcenter_seed(emb, k=KCENTER_K).select(
-        "seed_rank", "vec_id", "radius"
-    )
-
-
-def _kcenter_sql() -> str:
-    rounds = ",".join(_kcenter_round_sql(i) for i in range(2, KCENTER_K + 1))
-    # dmin > 0 replays the operator's early stop (r09 ADVICE): once the
-    # argmax dmin hits 0 every later round's is 0 too (dmin only
-    # shrinks), so filtering each padded round to positive radii keeps
-    # exactly seed 1 + every genuinely-new seed — one row per distinct
-    # vector when k exceeds the distinct count, same as kcenter_seed.
-    sel = "\nUNION ALL\n".join(
-        f"SELECT {i} AS seed_rank, vec_id, dmin AS radius FROM s{i}"
-        f" WHERE dmin > 0"
-        for i in range(2, KCENTER_K + 1)
-    )
-    return f"""
-WITH e AS MATERIALIZED (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-s1 AS MATERIALIZED (SELECT vec_id, v FROM e ORDER BY vec_id ASC LIMIT 1),
-d1 AS MATERIALIZED (
-  SELECT e.vec_id, e.v,
-         list_reduce(list_transform(list_zip(e.v, s.v),
-                     p -> (p[1] - p[2]) * (p[1] - p[2])),
-                     (a, b) -> a + b) AS dmin
-  FROM e, s1 s
-),
-{rounds.lstrip()}
-SELECT 1 AS seed_rank, vec_id, CAST(NULL AS DOUBLE) AS radius FROM s1
-UNION ALL
-{sel}
-"""
-
-
-KCENTER_SEED_SQL = _kcenter_sql()
-
-
-# --- Embedding-space drift (PSI over IVF cell occupancy; r13 pre-build) ------
-#
-# The vector-pipeline twin of ``hist_drift_events``: numeric-column
-# drift has the mergeable histogram, embedding drift has CELL
-# OCCUPANCY under a FIXED coarse quantizer — assign reference and
-# current vector sets to the same broadcast seed centroids, count per
-# cell, PSI over the two occupancy vectors (``sketches.hist_psi``
-# verbatim, bin := centroid_id).  The production question it answers:
-# did the upstream embedding model (or the traffic) shift enough that
-# the ANN index's cell balance — and with it recall — is stale?
-#
-# Scale: the reference side is a ≤ n_centroids-row persisted sketch
-# (the hist_drift discipline), the current side is ONE map-only
-# broadcast-assign pass over the new vectors, and the PSI is
-# sketch-frame arithmetic — no rescan of the reference corpus, no
-# index rebuild, bounded state.  Both legs reuse the pinned
-# packed-quantizer fold (bit-identical to the IVF_ASSIGN oracle).
-
-EMB_DRIFT_THRESHOLD = 0.25
-
-
-def embedding_drift_cells(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two legs off one centroid set: 'split' (even vs odd vec_ids —
-    same distribution, PSI ≈ small-sample bias → drifted FALSE) and
-    'shifted' (odd vectors displaced by +1.0 per component — an
-    embedding-model swap/recalibration stand-in that visibly moves
-    cell occupancy → drifted TRUE; a pure reversal or rescale was
-    measured NOT to move occupancy — argmin is nearly invariant to
-    them — which is itself the point: PSI flags distribution shifts,
-    not per-vector reassignment).
-    Verdict rows are hash-checked cells: the 9dp decimal term sum
-    (DSIR discipline) keeps the ln-based score bit-reproducible."""
-    from ..operators import sketches
-    from ..operators.similarity import (
-        _as_double_vec,
-        _nearest_packed,
-        _pack_rows,
-    )
-
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    vecs = emb.select("vec_id", _as_double_vec("embedding").alias("v"))
-    centroids = vecs.filter(F.col("vec_id") < N_CENTROIDS).select(
-        F.col("vec_id").alias("centroid_id"), F.col("v").alias("cv")
-    )
-    packed = F.broadcast(_pack_rows(centroids, "centroid_id", "cv"))
-
-    def cells(vdf: DataFrame) -> DataFrame:
-        return (
-            vdf.crossJoin(packed)
-            .select(
-                _nearest_packed(
-                    F.col("v"), F.col("__packed"), "centroid_id", "cv"
-                )["id"].alias("bin")
-            )
-            .groupBy("bin")
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-
-    even = vecs.where(F.col("vec_id") % 2 == 0)
-    odd = vecs.where(F.col("vec_id") % 2 == 1)
-    ref = cells(even).cache()  # two PSI consumers of the even-half scan
-    legs = []
-    for variant, cur in (
-        ("split", cells(odd)),
-        (
-            "shifted",
-            cells(
-                odd.select(
-                    "vec_id",
-                    F.transform("v", lambda x: x + F.lit(1.0)).alias("v"),
-                )
-            ),
-        ),
-    ):
-        legs.append(
-            sketches.hist_psi(ref, cur).select(
-                F.lit(variant).alias("variant"),
-                "psi",
-                (F.col("psi") > F.lit(EMB_DRIFT_THRESHOLD)).alias("drifted"),
-            )
-        )
-    return legs[0].unionByName(legs[1])
-
-
-def _embedding_drift_sql() -> str:
-    def assign(src: str) -> str:
-        return f"""
-    SELECT bin, CAST(count(*) AS BIGINT) AS cnt FROM (
-      SELECT s.vec_id, s.centroid_id AS bin FROM (
-        SELECT e.vec_id, c.centroid_id,
-               list_reduce(list_transform(list_zip(e.v, c.cv),
-                   p -> (p[1] - p[2]) * (p[1] - p[2])),
-                   (a, b) -> a + b) AS dist,
-               row_number() OVER (PARTITION BY e.vec_id
-                   ORDER BY list_reduce(list_transform(list_zip(e.v, c.cv),
-                       p -> (p[1] - p[2]) * (p[1] - p[2])),
-                       (a, b) -> a + b) ASC, c.centroid_id ASC) AS rn
-        FROM {src} e, c
-      ) s WHERE s.rn = 1
-    ) GROUP BY bin"""
-
-    p = "(rc + 0.5) / (rn + 0.5 * nb)"
-    q = "(cc + 0.5) / (cn + 0.5 * nb)"
-    term = (
-        f"cast(round(cast((({p}) - ({q})) * ln(({p}) / ({q}))"
-        f" as decimal(28,12)), 9) as decimal(28,9))"
-    )
-
-    def leg(variant: str, cur_cte: str) -> str:
-        return f"""
-  SELECT '{variant}' AS variant,
-         CAST(round(sum({term}), 9) AS DOUBLE) AS psi,
-         CAST(round(sum({term}), 9) AS DOUBLE) > {EMB_DRIFT_THRESHOLD}
-           AS drifted
-  FROM (
-    SELECT coalesce(r.cnt, 0) AS rc, coalesce(cq.cnt, 0) AS cc,
-           sum(coalesce(r.cnt, 0)) OVER () AS rn,
-           sum(coalesce(cq.cnt, 0)) OVER () AS cn,
-           count(*) OVER () AS nb
-    FROM ref r FULL OUTER JOIN {cur_cte} cq ON r.bin = cq.bin
-  )"""
-
-    return f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-c AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < {N_CENTROIDS}),
-even AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 0),
-odd AS (SELECT vec_id, v FROM e WHERE vec_id % 2 = 1),
-oddrev AS (SELECT vec_id, list_transform(v, x -> x + 1.0) AS v FROM odd),
-ref AS ({assign("even")}),
-cur_split AS ({assign("odd")}),
-cur_rev AS ({assign("oddrev")})
-{leg("split", "cur_split")}
-UNION ALL
-{leg("shifted", "cur_rev")}
-"""
-
-
-EMBEDDING_DRIFT_SQL = _embedding_drift_sql()
-
-
-# --- Drift-monitor suite (future trade vehicle; r13 pre-build) ---------------
-#
-# Pairs BOTH drift monitors — numeric-column PSI over mergeable
-# histograms (``hist_drift_events``) and embedding-space PSI over IVF
-# cell occupancy (``embedding_drift_cells``) — under one padded
-# union, so a future trade can hold the whole "is tonight's ingest
-# distributionally sane" check in ONE registry slot.  No shared scan
-# (different tables), so the registration case is slot economy plus
-# the operational pairing; parts-equivalence is pinned by the suite
-# test, each part by its own oracle.
-
-
-def drift_monitor_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from . import analytics_queries as aq  # lazy: avoid module cycle
-
-    hist = aq.hist_drift_events(spark, sf_dir).select(
-        F.lit("hist").alias("monitor"), "variant", "event_type", "psi",
-        "drifted",
-    )
-    emb = embedding_drift_cells(spark, sf_dir).select(
-        F.lit("embedding").alias("monitor"),
-        "variant",
-        F.lit(None).cast("string").alias("event_type"),
-        "psi",
-        "drifted",
-    )
-    return hist.unionByName(emb)
-
-
-def _drift_monitor_suite_sql() -> str:
-    """Lazy cross-module SQL (the CORPUS_DECON_SUITE_SQL note): built
-    on first access so the analytics module import stays lazy."""
-    from . import analytics_queries as aq
-
-    return f"""
-WITH hist_leg AS ({aq.HIST_DRIFT_SQL}),
-emb_leg AS ({EMBEDDING_DRIFT_SQL})
-SELECT 'hist' AS monitor, variant, event_type, psi, drifted FROM hist_leg
-UNION ALL
-SELECT 'embedding', variant, CAST(NULL AS VARCHAR), psi, drifted
-FROM emb_leg
-"""
-
+# --- Near-dup verify-threshold sweep ----------------------------------------
 
 SWEEP_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
 
@@ -4002,8 +3307,7 @@ def ann_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-quantizer assignment): per-cell occupancy plus the Gini /
     max-mean-imbalance / empty-cell summary — the ANN-ops number that
     says whether n_probe cost is predictable BEFORE queries hit a hot
-    cell (the capacity twin of ``embedding_drift_cells``' PSI, same
-    broadcast map-only assign).  Scale: one corpus pass, one
+    cell (one broadcast map-only assign).  Scale: one corpus pass, one
     ≤n_cells-row summary; windows only on the bounded cell frame."""
     from ..operators.similarity import (
         _as_double_vec,
@@ -4189,9 +3493,3 @@ SELECT CAST(ra.label AS BIGINT) AS label, ra.n_vecs,
          0.0) AS spread
 FROM ra JOIN vv USING (label)
 """
-
-
-def __getattr__(name: str):
-    if name == "DRIFT_MONITOR_SUITE_SQL":
-        return _drift_monitor_suite_sql()
-    raise AttributeError(name)

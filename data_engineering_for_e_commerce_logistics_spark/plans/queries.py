@@ -3,176 +3,23 @@
 Builders live next to their operators; this module only wires them to
 the registry consumed by ``__spark_entry__`` and the pytest harness.
 
-REGISTRATION ORDER IS PART OF THE DRIVER CONTRACT (VERDICT r01): the
-driver's correctness gate checked exactly the first 50 registrations,
-so the order below is deliberate and rotates per round:
+REGISTRATION ORDER IS PART OF THE DRIVER CONTRACT: the driver's
+correctness gate checks the first 50 registrations, so the order is
+deliberate:
 
-* positions 1-50: flagship views, then every query whose
-  implementation is NEW or CHANGED since the last driver-verified
-  round, then the rotation backlog — queries whose last green row is
-  two rounds old (VERDICT r02 item 4: nothing stays unverified two
-  consecutive rounds) — then a representative slice of the
-  training-data pipeline family as regression sentries.
-* positions 51+: oracle-checked queries green in the PREVIOUS round's
-  CORRECTNESS (freshest evidence, lowest re-check urgency) — still
-  checked whenever the driver looks past 50, and rotated back into
-  the window next round.
-* last: rows-only specs (no oracle by design) — they only ever get
-  the weaker rows-only check, so they spend no verified slot.
+* positions 1-50: the flagship views, then every spec that has never
+  been checked or whose implementation changed, then the backlog of
+  specs whose newest green row is oldest;
+* positions 51+: the specs green in the newest correctness run, which
+  rotate back into the window the next round;
+* last: rows-only specs (``oracle=None``).  They only ever get the
+  weaker rows-only check, so they spend no verified slot.
 
-r13 window — THE COMMITTED TRADE (planned r12, executed here):
-``incremental_exact_fresh`` (r11-green, i.e. in THIS round's own
-backlog — the funding rule) retires to fund the
-``corpus_decon_suite`` debut (exact + fuzzy + semantic
-decontamination legs off one cached scan; pre-built and sf2.5-
-rehearsed r12) — the incremental dedup suite's exact leg preserves
-every retired cell.  ``corpus_decontaminate`` retires from the
-opposite (r12-green) half in the same commit: the suite subsumes
-it, so carrying it to r14 re-verification buys nothing.
-
-* positions 1-2: the flagship views (always in-window).
-* position 3: the ``corpus_decon_suite`` debut (never-checked —
-  MUST be in-window).
-* positions 4-50: the r11-green stale backlog (CORRECTNESS r11 ∖
-  r12) minus the retired ``incremental_exact_fresh`` — 47 specs.
-* positions 51-97: the 47 r12-green specs (48 minus the retired
-  ``corpus_decontaminate``) — they become the r14 backlog.
-* position 98: ``sketch_aggregates_events``, rows-only by design.
-
-Arithmetic: 2 + 1 + 47 = 50 exactly.  Once CORRECTNESS_r13 lands,
-every live oracle spec's last driver row is r12 or r13.
-
-WINDOW ARITHMETIC going forward: the registry is now 98 specs /
-97 oracle-paired (2 flagships + 95 rotating + 1 rows-only) — the
-trade is net −1 (2 retired, 1 debuted), so the 2-round re-check
-capacity (2 rounds × 48 free slots = 96 ≥ 95) gains one slot of
-slack over r12's exact squeeze.
-The standing rule from r11's exact-capacity squeeze: every debut
-must be funded by retiring at least as many specs FROM THAT
-ROUND'S OWN BACKLOG (a retirement from the opposite half relieves
-nothing, the lesson the r11 pull-forward encodes).
-r13 load = 2 + 1 debut + 47 backlog = 50 exactly (this window —
-executed above).
-r14 load = 2 + 47 backlog (the r12-green half above) = 49 before
-its trade; THE r14 TRADE (pre-built r12, re-rehearsed r13):
-retire ``semdedup_trained_pairs`` + ``semdedup_routed_pairs`` (both
-r12-green, r14's own backlog) into ``semdedup_routing_suite``, and
-debut ``corpus_weighted_sample`` (Sequential Poisson weighted
-sampling, pre-built r12) in the freed + spare slots: 2 + 45 + 2 =
-49 ≤ 50.
-r15+: the
-remaining pre-built runway (``standardize_embeddings_suite``; THE r18
-trade retiring ``bpe_merges_documents`` + ``bpe_encode_documents``
-into ``bpe_suite`` funding ``events_chain_components``; THE r19
-``kcenter_seed_embeddings`` debut; THE r20 trade retiring
-``corpus_tfidf_topk`` into ``lexical_retrieval_suite``) lands under
-the same rule — each trade's retiring specs must be scheduled into
-the trade's own backlog round.  NEW r12 pre-builds widening the
-runway: ``corpus_dsir_sample`` (DSIR importance resampling),
-``corpus_quality_classifier`` (in-engine hashed logistic filter —
-debut via ``quality_classifier_suite``, the r13 pre-build pairing the
-scored docs with ``quality_calibration_bins``' reliability/ECE leg
-off one cached training chain) and
-``hybrid_retrieval_rrf`` (BM25 + cosine Reciprocal Rank Fusion) are
-r15-r17 debut candidates — funding comes from the
-``incremental_embedding_suite`` trade (retiring
-``incremental_semdedup_fresh`` + ``incremental_pq_fresh`` once both
-sit in the registering round's own backlog) plus the slack the r14
-window's 49-load leaves; pin the exact arithmetic with
-``tools/rotate_registry.py`` at that round's open.  All builders sit
-in ``tools/prebuilt.py`` with solo baselines and sf0.01
-differentials.  Late-r12 additions to the runway (debut candidates
-r15+ as slots free): ``cms_heavy_hitters_events`` (count-min sketch,
-cell-exact shared-arithmetic oracle), ``cms_salted_rollup_events``
-(sketch-gated conditional salting, bit-identical to plain groupBy),
-``hard_negative_mining`` (BM25 ∖ cosine retriever-training pairs),
-``jl_project_embeddings`` (map-only ±1 dimension reduction),
-``cluster_safe_split_documents`` (leakage-safe split; shares the LSH
-chain with ``minhash_cluster_suite`` — a natural future trade) and
-``hist_quantiles_events`` + ``group_hist_quantiles_events``
-(mergeable quantile histograms, the hash-checkable counterpart of
-the rows-only t-digest spec), ``group_cms_topk_events`` (per-group
-hot keys), ``cms_token_topk_documents`` (string-keyed vocab pass)
-and ``hist_drift_events`` (PSI drift verdicts as hash-checked
-cells), and — NEW r13 pre-builds — ``source_coverage_greedy``
-(submodular greedy source selection over the exact 2^|S|-bounded
-n-gram coverage mask summary; unrolled-argmax oracle),
-``embedding_drift_cells`` (PSI over IVF cell occupancy, the vector
-twin of ``hist_drift_events``), ``drift_monitor_suite`` (the
-one-slot trade vehicle pairing both monitors; parts-equivalence
-pinned), ``source_overlap_matrix`` (cross-source contamination
-forensics off the registered LSH pair mine), and
-``incremental_coverage_fresh`` (SEVENTH incremental family — the
-bit_or-mergeable coverage index through the generic streaming loop;
-greedy-leg oracle = the one-shot SQL verbatim), and
-``tokenizer_fertility_stats`` (per-language BPE fertility /
-compression health report off the trained encode chain — the
-natural second leg of the r18 ``bpe_suite`` trade), and
-``embedding_diversity_report`` (per-label mean pairwise cosine via
-the sum-vector identity — zero pairwise work; the near-dup-collapse
-monitor), ``ann_balance_report`` (IVF occupancy Gini/imbalance — the
-n_probe-cost health twin of the drift monitor off the same map-only
-assign), ``domain_reweight_mixture`` (DoReMi-style
-multiplicative-weights domain mixture optimizer — the whole loop as
-window expressions over the K×64 bucket-LM grid),
-``source_divergence_matrix`` (pairwise JS divergence between source
-bucket-LMs — crawls that write alike), ``lang_source_independence``
-(Pearson χ² — does language depend on source),
-``corpus_mean_tokens_ci`` (deterministic Poisson bootstrap — corpus
-numbers with error bars in one pass), ``token_quota_plan_sources``
-(water-filling budget quotas — the reweight→quota→sampler chain's
-middle step; ``mixture_planning_suite`` pairs both chain stages off
-one cached reweight for the single-slot debut), and
-``quality_classifier_suite`` (scored docs + reliability/ECE bins off
-one cached training chain — the classifier-slot debut vehicle),
-``funnel_events`` (ordered-step conversion — the events-side cheap
-slot; greedy fold ≡ iterated-min oracle),
-``cohort_retention_events`` (weekly cohort retention matrix) and
-``event_transitions`` (Markov behavior matrix) — consolidated with
-the funnel into the pre-built ``event_analytics_suite`` (one cached
-scan, parts-equivalence pinned; solo 1.3s vs 2.9s for the parts),
-``ab_purchase_test`` (two-proportion z-test on the md5-parity user
-split — the experimentation readout), and
-``zipf_fit_report`` (token-ranking corpus fingerprint with in-engine
-OLS; cheap-slot filler), ``vocab_growth_curve`` (Heaps-law vocabulary
-growth off 16 hash-prefix checkpoints — shares the factored
-``ols_fit`` helper with the Zipf spec; their one-slot vehicle
-``token_stats_suite`` serves both off ONE (token → count,
-first-bucket) aggregate, parts-equivalence pinned), ``dedup_retention_ledger`` (per-source
-dedup cost forensics off the registered LSH chain), and
-``dedup_threshold_sweep`` (Jaccard-cut sensitivity off one cached
-mine) — consolidated with minhash_cluster_suite into the pre-built
-``lsh_forensics_suite`` (4 legs, one cached mine, parts-equivalence
-pinned; solo 4.3s vs ≈7.8s for the parts — the 3-slots→1 trade once
-the funding arithmetic allows).  PREFERRED DEBUT VEHICLES: ``cms_suite_events`` (one slot
-for the two CMS specs off one cached scan) and ``hist_suite_events``
-(one slot for the two histogram specs; global cells marginalized
-from the grouped build) — parts-equivalence pinned for both, so a
-future round can register each suite instead of its parts.  The
-streaming sketch loop (``start_cms_stream`` — CMS, histogram, and
-DataSketches-HLL batch-equivalence twins) is unit-pinned like the
-rest of §2.8 (no oracle slot needed).
-
-RUNWAY PRIORITIZATION (r13 session — the pre-built runway now far
-exceeds any round's free slots): debut CONSOLIDATION VEHICLES before
-their parts — each is parts-equivalence-pinned so one slot carries a
-whole family's evidence.  The session's vehicles, cheapest slot-cost
-first: ``token_stats_suite`` (Zipf + Heaps, solo 1.2s),
-``event_analytics_suite`` (funnel + cohort + transitions, 1.3s),
-``mixture_planning_suite`` (DoReMi + water-fill, 2.5s),
-``lsh_forensics_suite`` (pairs + clusters + ledger + sweep, 4.3s —
-also retires the registered minhash_cluster_suite, net −0 slots for
-4 families), ``quality_classifier_suite`` (classifier + calibration,
-8.2s).  Cheap standalone fillers when a fraction of a slot frees:
-``ab_purchase_test`` 0.67s, ``corpus_mean_tokens_ci`` 0.79s,
-``retention_decay_fit`` 0.83s,
-``zipf_fit_report`` 0.79s, ``lang_source_independence`` 0.93s,
-``ann_balance_report`` 1.08s, ``embedding_diversity_report`` 1.17s,
-``source_divergence_matrix`` 1.25s.
-
-Checked invariants (pytest test_bench_gate): every never-checked
-query sits inside the window, and no rows-only spec spends a
-verified slot.
+``python tools/rotate_registry.py`` derives the next ordering from the
+committed ``CORRECTNESS_r*.json`` artifacts and warns when the
+mandatory set overflows the window.  ``tests/test_bench_gate.py``
+checks that every never-checked spec sits inside the window and that
+no rows-only spec spends a verified slot.
 """
 
 from __future__ import annotations

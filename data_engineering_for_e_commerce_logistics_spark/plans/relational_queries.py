@@ -61,15 +61,20 @@ def profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         profile = profile.crossJoin(F.broadcast(d))
     row = profile.first()
+
+    def opt_float(v):
+        # min/max/avg are NULL over an empty (or all-NULL) column
+        return None if v is None else float(v)
+
     records = [
         (
             c,
             int(row[f"{c}__rows"]),
             int(row[f"{c}__nulls"]),
             int(row[f"{c}__distinct"]),
-            float(row[f"{c}__min"]),
-            float(row[f"{c}__max"]),
-            float(row[f"{c}__avg"]),
+            opt_float(row[f"{c}__min"]),
+            opt_float(row[f"{c}__max"]),
+            opt_float(row[f"{c}__avg"]),
         )
         for c in _PROFILE_COLS
     ]
@@ -604,13 +609,18 @@ def histogram_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("o_totalprice").alias("lo"), F.max("o_totalprice").alias("hi")
     )
     width = (F.col("hi") - F.col("lo")) / F.lit(float(HIST_N_BINS))
+    # try_divide: a single distinct price (width 0) bins as NULL, which
+    # least() skips — the last bin, as in DuckDB — instead of raising
+    # ANSI DIVIDE_BY_ZERO
     binned = (
         o.select("o_totalprice")
         .crossJoin(F.broadcast(stats))
         .select(
             F.least(
                 F.lit(HIST_N_BINS - 1),
-                F.floor((F.col("o_totalprice") - F.col("lo")) / width).cast("int"),
+                F.floor(F.try_divide(F.col("o_totalprice") - F.col("lo"), width)).cast(
+                    "int"
+                ),
             )
             .cast("long")
             .alias("bin"),

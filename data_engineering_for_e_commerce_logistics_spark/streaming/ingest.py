@@ -571,137 +571,3 @@ def start_dedup_ingest_stream(
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
     return writer.start()
-
-
-# --- Count-min sketch as streaming state --------------------------------------
-
-
-def read_sketch(
-    spark: SparkSession,
-    sketch_path: str,
-    cell_cols: tuple = ("d", "bucket"),
-    merge_expr=None,
-) -> DataFrame:
-    """Merge-on-read of the persisted sketch segments: fold every
-    committed per-batch partial with the sketch's merge (default
-    cell-wise SUM — the CMS/histogram linearity; pass ``merge_expr``
-    for non-additive merges, e.g. ``F.hll_union_agg("cnt")`` for the
-    DataSketches HLL register-max).  Between compactions the read
-    touches ≤ compact_every × |cells| rows.  ``cell_cols`` names the
-    cell key — ("d", "bucket") for the CMS, ("bin",) for the
-    histogram, () for a single-cell summary like the HLL."""
-    merged = merge_expr if merge_expr is not None else F.sum("cnt")
-    return (
-        spark.read.parquet(sketch_path)
-        .groupBy(*cell_cols)
-        .agg(merged.alias("cnt"))
-    )
-
-
-def read_cms_sketch(spark: SparkSession, sketch_path: str) -> DataFrame:
-    """The CMS view of ``read_sketch`` (cells keyed (d, bucket))."""
-    return read_sketch(spark, sketch_path, ("d", "bucket"))
-
-
-def start_cms_stream(
-    spark: SparkSession,
-    source_path: str,
-    sketch_path: str,
-    checkpoint_path: str,
-    key_col: str,
-    schema: str | T.StructType,
-    width: int = 128,
-    depth: int = 4,
-    compact_every: int = 8,
-    trigger_available_now: bool = True,
-    build=None,
-    cell_cols: tuple = ("d", "bucket"),
-    merge_expr=None,
-):
-    """Streaming frequency sketch: each micro-batch builds its OWN
-    count-min partial (``operators/sketches.py:cms_build``) and lands
-    it as a ``batch_id``-keyed segment; the live sketch is the
-    cell-wise merge of all segments (``read_cms_sketch``).  Total
-    state is ≤ depth·width counters regardless of ingest volume — the
-    streaming twin of the heavy-hitter spec's build half, and the
-    bounded-state contrast to ``running_user_totals`` (whose state
-    grows with key cardinality).
-
-    Exactly-once without a state store (the dedup-ingest discipline):
-    a replayed micro-batch recomputes an identical partial, and the
-    ``_SUCCESS``-guarded per-batch partition write skips committed
-    segments — counts can never double.  Every ``compact_every``
-    batches the segments swap-collapse into ONE (a cell-wise merge —
-    linearity again), bounding segment count by the rhythm; the
-    compaction is itself replay-idempotent (re-merging a single
-    compacted segment reproduces it, and it lands under the already-
-    committed triggering batch_id via the same write-new + swap dance
-    as ``layout.compact_in_place``).
-
-    Any MERGEABLE summary streams through the same loop: pass
-    ``build`` (batch_df → partial cells frame) and ``cell_cols`` —
-    e.g. ``build=lambda b: hist_build(b, "value", lo=.., hi=..),
-    cell_cols=("bin",)`` persists the mergeable quantile histogram —
-    and ``merge_expr`` when the merge is not cell-wise addition
-    (``F.hll_union_agg("cnt")`` with ``cell_cols=()`` persists a
-    DataSketches HLL distinct-count register set; union is a register
-    max, so replay/compaction idempotency holds exactly as for sums).
-    All three pinned by streaming batch-equivalence twins."""
-    from ..fsio import fs_delete, fs_exists, fs_join, fs_rename
-    from ..operators.sketches import cms_build
-
-    if build is None:
-        def build(b):
-            return cms_build(b, key_col, width=width, depth=depth)
-
-    def recover_compaction(sess: SparkSession) -> None:
-        # Crash recovery (ADVICE r12): the swap below has a window —
-        # between rename(sketch_path, old) and rename(tmp, sketch_path)
-        # the accumulated sketch exists ONLY as ``.compact-old``.  A
-        # replayed batch used to recreate ``sketch_path`` with just its
-        # own partial, and the next compaction rmtree'd ``.compact-old``
-        # — silently losing every prior count.  Recover BEFORE any
-        # write: if the old copy exists and the live path is missing,
-        # the crash landed mid-swap — roll the old table back; if both
-        # exist, the swap completed and only the cleanup was lost —
-        # drop the superseded copy.  (Same discipline as
-        # ``layout.compact_in_place``; all path ops go through the
-        # Hadoop FileSystem API — ``fsio`` — so the loop runs against
-        # HDFS/S3A exactly as against local disk, with the atomic-
-        # rename caveat fsio's module docstring states for S3A.)
-        old = sketch_path + ".compact-old"
-        if fs_exists(sess, old):
-            if not fs_exists(sess, sketch_path):
-                fs_rename(sess, old, sketch_path)
-            else:
-                fs_delete(sess, old)
-
-    def cms_batch(batch_df: DataFrame, batch_id: int) -> None:
-        sess = batch_df.sparkSession
-        recover_compaction(sess)
-        part = build(batch_df)
-        part_dir = fs_join(sketch_path, f"batch_id={batch_id}")
-        if not fs_exists(sess, fs_join(part_dir, "_SUCCESS")):
-            part.write.mode("overwrite").parquet(part_dir)
-        if (batch_id + 1) % compact_every == 0:
-            merged = read_sketch(sess, sketch_path, cell_cols, merge_expr)
-            tmp = sketch_path + ".compact-tmp"
-            old = sketch_path + ".compact-old"
-            fs_delete(sess, tmp)
-            fs_delete(sess, old)
-            merged.write.mode("overwrite").parquet(
-                fs_join(tmp, f"batch_id={batch_id}")
-            )
-            fs_rename(sess, sketch_path, old)
-            fs_rename(sess, tmp, sketch_path)
-            fs_delete(sess, old)
-
-    reader = spark.readStream.schema(schema)
-    writer = (
-        reader.parquet(source_path)
-        .writeStream.foreachBatch(cms_batch)
-        .option("checkpointLocation", checkpoint_path)
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()

@@ -84,6 +84,57 @@ def test_prior_bench_ignores_current_round_refresh(tmp_path):
     assert name in regs and regs[name]["prev"] == 1.0
 
 
+def test_bench_name_parser_covers_every_artifact_shape():
+    assert bench._parse_bench_name("BENCH_r14.json") == (14, False, 0)
+    assert bench._parse_bench_name("BENCH_r14_c8.json") == (14, False, 0)
+    assert bench._parse_bench_name("BENCH_LOCAL_r14.json") == (14, True, 0)
+    assert bench._parse_bench_name("BENCH_LOCAL_r14_2.json") == (14, True, 2)
+    assert bench._parse_bench_name("BENCH_SOLO_r14.json") is None
+    assert bench._parse_bench_name("BENCH_r14.json.bak") is None
+
+
+def test_core_tagged_driver_file_counts_in_both_round_helpers(tmp_path):
+    """``BENCH_r14_c8.json`` is a round-14 driver artifact to both the
+    round counter and the prior-file scan (they once disagreed: the
+    counter saw round 14, the scan skipped the file)."""
+    name = bench.HEADLINE[0]
+    path = _write(
+        tmp_path, "BENCH_r14_c8.json",
+        {"cpus": 8, "parsed": {"queries": {name: 0.7}}},
+    )
+    assert bench._next_round(str(tmp_path)) == 15
+    assert bench._bench_round_files(str(tmp_path)) == [(14, path)]
+    assert bench._prior_bench(str(tmp_path), cpus=8) == {name: 0.7}
+
+
+def test_prior_bench_matches_core_count(tmp_path):
+    """A run compares only against a prior artifact from the same core
+    count; with none on record it has no baseline rather than a wrong
+    one (the r14 c8 run compared itself against the c32 file)."""
+    name = bench.HEADLINE[0]
+    _write(tmp_path, "BENCH_r13.json", {"cpus": 32, "parsed": {"queries": {name: 1.0}}})
+    _write(tmp_path, "BENCH_r13_c8.json", {"cpus": 8, "parsed": {"queries": {name: 2.0}}})
+    _write(tmp_path, "BENCH_LOCAL_r12.json", {"cpus": 8, "queries": {name: 3.0}})
+    assert bench._prior_bench(str(tmp_path), cpus=32) == {name: 1.0}
+    assert bench._prior_bench(str(tmp_path), cpus=8) == {name: 2.0}
+    assert bench._prior_bench(str(tmp_path), cpus=4) == {}
+
+
+def test_prior_bench_same_core_local_beats_newer_other_core(tmp_path):
+    name = bench.HEADLINE[0]
+    _write(tmp_path, "BENCH_r12.json", {"cpus": 32, "parsed": {"queries": {name: 5.0}}})
+    _write(tmp_path, "BENCH_LOCAL_r12.json", {"cpus": 8, "queries": {name: 0.6}})
+    _write(tmp_path, "BENCH_r13.json", {"cpus": 32, "parsed": {"queries": {name: 1.0}}})
+    assert bench._prior_bench(str(tmp_path), cpus=8) == {name: 0.6}
+
+
+def test_prior_bench_without_recorded_cpus_uses_newest(tmp_path):
+    name = bench.HEADLINE[0]
+    _write(tmp_path, "BENCH_r05.json", {"parsed": {"queries": {name: 1.0}}})
+    _write(tmp_path, "BENCH_LOCAL_r05.json", {"queries": {name: 0.9}})
+    assert bench._prior_bench(str(tmp_path), cpus=4) == {name: 0.9}
+
+
 def test_prior_bench_maps_renames_all_parts_guard():
     prior = {"ffill_events": 0.3, "dedup_keep_first": 0.2}
     mapped = bench._map_renames(prior)

@@ -182,58 +182,6 @@ def test_bpe_encode_keeps_wordless_documents(spark):
             assert out[d].tokens == [] and out[d].n_tokens == 0
 
 
-def test_bpe_suite_matches_parts_and_duckdb(spark):
-    """THE r18 trade's unit-first differential (pre-built r09): the
-    suite's 'merges' rows carry bpe_merges_documents' cells verbatim,
-    its 'encode' rows carry bpe_encode_documents', and the whole
-    padded union is cell-exact vs the single-chain DuckDB oracle at
-    the driver's sf0.01 scale — while training the merge table ONCE
-    (the parts each ran the full corpus-pass + vocab-round train)."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        corpus_queries as xc,
-    )
-    from tests.oracle import compare_frames, duckdb_conn
-
-    sf = "/root/testdata/sf0.01"
-    spdf = xc.bpe_suite(spark, sf).toPandas()
-
-    # suite ↔ parts: merges leg
-    parts_m = xc.bpe_merges_documents(spark, sf).toPandas()
-    got_m = (
-        spdf[spdf.variant == "merges"]
-        .sort_values("k")
-        .reset_index(drop=True)
-    )
-    assert list(got_m.k) == list(parts_m.merge_rank)
-    assert list(got_m.txt) == [
-        f"{r.left_sym} {r.right_sym} {r.merged}"
-        for r in parts_m.itertuples()
-    ]
-    assert list(got_m.n) == list(parts_m.pair_count)
-
-    # suite ↔ parts: encode leg
-    parts_e = (
-        xc.bpe_encode_documents(spark, sf)
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    got_e = (
-        spdf[spdf.variant == "encode"].sort_values("k").reset_index(drop=True)
-    )
-    assert list(got_e.k) == list(parts_e.doc_id)
-    assert list(got_e.txt) == list(parts_e.tokens_str)
-    assert list(got_e.n) == list(parts_e.n_tokens)
-
-    # suite ↔ DuckDB
-    conn = duckdb_conn(sf)
-    try:
-        opdf = conn.execute(xc.BPE_SUITE_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "bpe_suite") == []
-
-
 def test_tokenizer_fertility_matches_duckdb(spark):
     """Per-language fertility/compression report off the trained
     encode chain: exact-integer sums + one IEEE division each, so the

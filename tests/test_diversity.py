@@ -134,57 +134,3 @@ def test_diversity_plan_shuffles_stats_not_corpus(spark):
     assert "SortMergeJoin" not in plan
     assert "BroadcastHashJoin" in plan  # the two tiny aggregates meet
     assert "InMemoryTableScan" in plan  # one cached scan, two readers
-
-
-def test_diversity_streams_through_sketch_loop(spark, tmp_path):
-    """The diversity statistics are cell-additive decimal sums, so
-    the monitor rides the GENERIC streaming accumulator
-    (start_cms_stream build/cell_cols contract): streaming the
-    embeddings in 4 partitions and finishing from the merged segments
-    must reproduce the batch report BIT-identically, cell for cell."""
-    from data_engineering_for_e_commerce_logistics_spark.catalog import (
-        read_parquet_table,
-    )
-    from data_engineering_for_e_commerce_logistics_spark.operators.similarity import (
-        diversity_cells,
-        diversity_from_cells,
-    )
-    from data_engineering_for_e_commerce_logistics_spark.streaming import (
-        ingest,
-    )
-
-    emb = read_parquet_table(spark, f"{SF}/embeddings.parquet").select(
-        "vec_id", "embedding", "label"
-    )
-    src = str(tmp_path / "src")
-    emb.repartition(4).write.parquet(src)
-    q = ingest.start_cms_stream(
-        spark,
-        src,
-        str(tmp_path / "cells"),
-        str(tmp_path / "ckpt"),
-        "label",
-        schema="vec_id long, embedding array<float>, label int",
-        compact_every=2,
-        build=lambda b: diversity_cells(b),
-        cell_cols=("label", "part", "dim"),
-    )
-    q.awaitTermination(120)
-    merged = ingest.read_sketch(
-        spark, str(tmp_path / "cells"), ("label", "part", "dim")
-    )
-    streamed = {
-        r.label: r for r in diversity_from_cells(merged).collect()
-    }
-    batch = {
-        r.label: r for r in diversity_report(
-            emb.select("label", "embedding")
-        ).collect()
-    }
-    assert set(streamed) == set(batch)
-    for k in batch:
-        s, b = streamed[k], batch[k]
-        assert s.n_vecs == b.n_vecs
-        assert s.mean_pairwise_cos == b.mean_pairwise_cos
-        assert s.mean_cos_centroid == b.mean_cos_centroid
-        assert s.spread == b.spread

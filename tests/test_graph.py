@@ -99,6 +99,44 @@ def test_connected_components_chain_and_isolated(spark):
     assert got == {1: 1, 2: 1, 3: 1, 10: 10, 11: 10}
 
 
+def test_connected_components_matches_union_find(spark):
+    """The fixpoint labels every node with its component's minimum id
+    on one graph holding random components, a chain and a star in
+    disjoint id ranges (checked against a Python union-find)."""
+    import random
+
+    rng = random.Random(9)
+    pairs = []
+    base = 0
+    for n, m in ((12, 8), (30, 25), (40, 40)):
+        pairs += [
+            (base + rng.randrange(n) + 1, base + rng.randrange(n) + 1)
+            for _ in range(m)
+        ]
+        base += 100
+    pairs += [(base + i, base + i + 1) for i in range(1, 11)]  # chain
+    base += 100
+    pairs += [(base + 1, base + k) for k in range(2, 15)]  # star
+    pairs = [(a, b) for a, b in pairs if a != b]
+
+    parent: dict[int, int] = {}
+
+    def find(x):
+        while parent.setdefault(x, x) != x:
+            x = parent[x]
+        return x
+
+    for a, b in pairs:
+        ra, rb = find(a), find(b)
+        parent[max(ra, rb)] = min(ra, rb)
+    want = {x: find(x) for x in parent}
+
+    df = spark.createDataFrame(pairs, "id_a long, id_b long")
+    got = {r.node: r.label for r in graph.connected_components(df).collect()}
+    assert got == want
+    assert len(set(want.values())) > 5  # many components covered
+
+
 def test_corpus_split_no_leakage_matches_duckdb_and_invariant(spark):
     """r08 registry candidate's unit-first differential + the property
     the spec exists for: every mined near-dup pair lands in ONE split,
@@ -212,88 +250,6 @@ def test_minhash_cluster_suite_matches_duckdb_and_parts(spark):
     assert len(got_clusters) == len(labels) > 0
     for r in got_clusters:
         assert labels[r.doc_id] == r.cluster_id
-
-
-def test_cc_alternating_equals_fixpoint_on_random_graphs(spark):
-    """The O(log n) contraction and the label-propagation fixpoint
-    compute the SAME (node, component-min) labeling — checked on ONE
-    union graph whose disjoint id ranges hold random components, a
-    chain, and a star (one run of each iterative algorithm: the
-    per-round driver latency, not the data, dominates these tests, so
-    five separate graphs would quintuple wall time for zero extra
-    semantic coverage)."""
-    import random
-
-    rng = random.Random(9)
-    pairs = []
-    base = 0
-    for n, m in ((12, 8), (30, 25), (40, 40)):
-        pairs += [
-            (base + rng.randrange(n) + 1, base + rng.randrange(n) + 1)
-            for _ in range(m)
-        ]
-        base += 100
-    pairs += [(base + i, base + i + 1) for i in range(1, 11)]  # chain
-    base += 100
-    pairs += [(base + 1, base + k) for k in range(2, 15)]  # star
-    pairs = [(a, b) for a, b in pairs if a != b]
-    df = spark.createDataFrame(pairs, "id_a long, id_b long")
-    alt = {r.node: r.label for r in graph.cc_alternating(df).collect()}
-    fix = {
-        r.node: r.label for r in graph.connected_components(df).collect()
-    }
-    assert alt == fix
-    assert len({v for v in alt.values()}) > 5  # many components covered
-    # the LARGE-graph round form (size-gated map-side-combining
-    # groupBy+join instead of partition-key windows — the r10 hub-skew
-    # guard) is unreachable at unit sizes under the 2M-edge default,
-    # so force it through the edges_per_partition knob (the gate is
-    # n_edges >= knob, parallelism-independent) and pin the identical
-    # labeling on the same graph
-    big_form = {
-        r.node: r.label
-        for r in graph.cc_alternating(df, edges_per_partition=8).collect()
-    }
-    assert big_form == fix
-
-
-def test_cc_alternating_logarithmic_rounds_on_deep_path(spark):
-    """A 128-node path has diameter 127 — min-label propagation
-    needs ~127 driver-coordinated iterations, while star contraction
-    must finish in O(log n): assert a hard ceiling of 15 rounds and
-    exact component minima."""
-    n = 128
-    df = spark.createDataFrame(
-        [(i, i + 1) for i in range(1, n)], "id_a long, id_b long"
-    )
-    labels, rounds = graph.cc_alternating(df, return_rounds=True)
-    got = {r.node: r.label for r in labels.collect()}
-    assert got == {i: 1 for i in range(1, n + 1)}
-    assert rounds <= 15, rounds
-
-
-def test_events_chain_components_matches_duckdb_oracle(spark):
-    """THE r18 debut's unit-first differential: activity-episode
-    labels via alternating-star CC are cell-exact vs the
-    WITH RECURSIVE min-root oracle at the driver's sf0.01 scale, one
-    output row per event (isolated events label themselves)."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        graph_queries as gq,
-    )
-    from tests.oracle import compare_frames, duckdb_conn
-
-    sf = "/root/testdata/sf0.01"
-    spdf = gq.events_chain_components(spark, sf).toPandas()
-    assert len(spdf) == 10000  # every event labeled, none dropped
-    # label is always <= the event id (component MIN) and every
-    # multi-event chain shares one label
-    assert (spdf.episode_id <= spdf.event_id).all()
-    conn = duckdb_conn(sf)
-    try:
-        opdf = conn.execute(gq.EVENTS_CHAIN_COMPONENTS_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "events_chain_components") == []
 
 
 def test_pinned_loop_conf_restores_on_success_and_error(spark):

@@ -1,8 +1,7 @@
-"""BM25 lexical retrieval (operators/corpus.py:bm25_topk) and the
-lexical_retrieval_suite consolidation: hand-replayed arithmetic on a
-tiny corpus, suite ↔ parts consistency, degenerate inputs, and the
-full DuckDB differential at the driver's sf0.01 scale (the unit-first
-pattern from tests/test_bpe.py; r09 ADVICE item 1)."""
+"""BM25 lexical retrieval (operators/corpus.py:bm25_topk):
+hand-replayed arithmetic on a tiny corpus, the shared tf-table seam
+and degenerate inputs (the unit-first pattern from tests/test_bpe.py;
+r09 ADVICE item 1)."""
 
 from __future__ import annotations
 
@@ -101,9 +100,9 @@ def test_bm25_multi_term_sum_and_topk_cut(spark):
 
 
 def test_bm25_shared_tf_table_is_equivalent(spark):
-    """Passing a pre-built (doc_id, term, tf) frame (the suite's
-    consolidation seam) yields the identical result to the internal
-    pass."""
+    """Passing a pre-built (doc_id, term, tf) frame (the seam the
+    hybrid-retrieval specs share) yields the identical result to the
+    internal pass."""
     docs = spark.createDataFrame(
         [(i, t) for i, t in enumerate(["a b", "a a c", "b c d", "d e"])],
         "doc_id long, text string",
@@ -120,69 +119,6 @@ def test_bm25_shared_tf_table_is_equivalent(spark):
     a = sorted(map(tuple, bm25_topk(docs, [0], k=5).collect()))
     b = sorted(map(tuple, bm25_topk(docs, [0], k=5, tf_table=tf).collect()))
     assert a == b
-
-
-def test_lexical_suite_matches_duckdb_oracle(spark):
-    """Full cross-engine differential at sf0.01: the padded-union
-    suite (TF-IDF leg + BM25 leg off one shared tf pass) is cell-exact
-    vs LEXICAL_RETRIEVAL_SQL — tokenization, idf rounding, decimal
-    contrib sum, and both rank windows replayed in DuckDB (registry
-    candidate lexical_retrieval_suite, THE r20 trade)."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        corpus_queries as xc,
-    )
-    from tests.oracle import compare_frames, duckdb_conn
-
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(xc.LEXICAL_RETRIEVAL_SQL).fetchdf()
-    finally:
-        conn.close()
-    spdf = xc.lexical_retrieval_suite(spark, SF).toPandas()
-    assert (spdf.variant == "bm25").sum() > 0
-    assert (spdf.variant == "tfidf").sum() > 0
-    assert compare_frames(spdf, opdf, "lexical_retrieval_suite") == []
-
-
-def test_lexical_suite_matches_parts(spark):
-    """Suite ↔ parts: the 'tfidf' rows carry the retiring
-    corpus_tfidf_topk's cells verbatim, and the 'bm25' rows equal a
-    standalone bm25_topk run at the suite's parameters."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        corpus_queries as xc,
-    )
-    from data_engineering_for_e_commerce_logistics_spark.catalog import (
-        load_tables,
-    )
-
-    suite = xc.lexical_retrieval_suite(spark, SF).toPandas()
-
-    t_part = xc.corpus_tfidf_topk(spark, SF).toPandas()
-    t_leg = suite[suite.variant == "tfidf"]
-    assert sorted(
-        map(tuple, t_leg[["k", "txt", "n", "df", "score", "rank"]].values)
-    ) == sorted(
-        map(
-            tuple,
-            t_part[["doc_id", "term", "tf", "df", "tfidf", "rank"]].values,
-        )
-    )
-
-    docs = load_tables(spark, SF, ("documents",))["documents"]
-    b_part = bm25_topk(
-        docs, xc.BM25_QUERY_IDS, k=xc.BM25_TOPK, k1=xc.BM25_K1, b=xc.BM25_B
-    ).toPandas()
-    b_leg = suite[suite.variant == "bm25"]
-    assert sorted(
-        map(tuple, b_leg[["k", "txt", "n", "score", "rank"]].values)
-    ) == sorted(
-        map(
-            tuple,
-            b_part.assign(doc_id=b_part.doc_id.astype(str))[
-                ["query_id", "doc_id", "n_terms", "bm25", "rank"]
-            ].values,
-        )
-    )
 
 
 def test_bm25_no_overlap_queries_yield_no_rows(spark):

@@ -614,40 +614,6 @@ def test_incremental_dedup_suite_shared_cached_scan(spark):
     assert "InMemoryTableScan" in plan
 
 
-def test_semdedup_routing_suite_shared_cached_scan(spark):
-    """The r14 consolidation's point: both assignment paths and both
-    cell-keyed mining self-joins read the (v, nrm) projection from
-    ONE cached frame (InMemoryTableScan) instead of four embeddings
-    scans; the only nested-loop joins are the broadcast packed-
-    centroid / scalar-k forms (never a shuffled cartesian).  The
-    routed leg's vec_id equi-join (assignment back onto the cached
-    projection, same shape as the standalone spec) may plan as a
-    sort-merge — a co-partitioned key join, fine at scale."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        graph_queries as gq,
-    )
-
-    plan = _plan_of(spark, gq.semdedup_routing_suite)
-    assert "CartesianProduct" not in plan
-    assert "InMemoryTableScan" in plan
-
-
-def test_incremental_embedding_suite_shared_cached_scan(spark):
-    """The embedding-side r14 consolidation's point: both incremental
-    flows (semantic full-vector + PQ code index) read the embeddings
-    table from ONE cached frame (InMemoryTableScan) with shared
-    centroids and batch splits, and nothing is a shuffled cartesian
-    (the broadcast packed/codebook nested loops are the designed
-    shape)."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        graph_queries as gq,
-    )
-
-    plan = _plan_of(spark, gq.incremental_embedding_suite)
-    assert "CartesianProduct" not in plan
-    assert "InMemoryTableScan" in plan
-
-
 def test_weighted_sample_bucketed_topn_shape(spark):
     """Weighted sampling's 100 TB shape: the exact-rank window
     partitions on (stratum, exponent-bucket) — never on the stratum
@@ -722,22 +688,6 @@ def test_quality_calibrate_bucketed_rank_shape(spark):
     assert "InMemoryTableScan" in plan
 
 
-def test_standardize_embeddings_no_corpus_shuffle(spark):
-    """Standardization's 100 TB shape: pass 1's per-dimension partial
-    aggregate collapses to d rows per partition before its exchange
-    (hashpartitioning on dim, never on the vector id), the d-row
-    stats fold to ONE broadcast row, and pass 2 is map-only zip_with
-    — the corpus is never key-partitioned."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        graph_queries as gq,
-    )
-
-    plan = _plan_of(spark, gq.standardize_embeddings_suite)
-    assert "BroadcastNestedLoopJoin" in plan  # the one-row stats join
-    assert "hashpartitioning(vec_id" not in plan
-    assert "CartesianProduct" not in plan
-
-
 def test_no_scale_killers_in_any_registered_plan(spark):
     """Registry-WIDE anti-pattern sweep (r11): every registered spec's
     physical plan — not just the showcased ones — must be free of the
@@ -764,33 +714,6 @@ def test_no_scale_killers_in_any_registered_plan(spark):
         spark.catalog.clearCache()
         plan = spec.build(spark, SF)._jdf.queryExecution().executedPlan().toString()
         bad = [p for p in ("CartesianProduct", "BatchEvalPython") if p in plan]
-        if bad:
-            offenders[name] = bad
-    assert not offenders, offenders
-
-
-def test_prebuilt_wide_no_scale_killers(spark):
-    """The registry-wide sweep extended to the PRE-BUILT runway
-    (tools/prebuilt.py): every not-yet-registered builder gets the
-    same two universal anti-pattern checks before it ever holds a
-    registry slot — a debut can't smuggle in a cartesian product or a
-    row-at-a-time Python UDF between its unit round and its
-    registration round."""
-    import sys
-    from pathlib import Path
-
-    sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-    from tools.prebuilt import prebuilt_builders
-
-    offenders: dict[str, list[str]] = {}
-    for name, build in prebuilt_builders().items():
-        spark.catalog.clearCache()
-        plan = (
-            build(spark, SF)._jdf.queryExecution().executedPlan().toString()
-        )
-        bad = [
-            p for p in ("CartesianProduct", "BatchEvalPython") if p in plan
-        ]
         if bad:
             offenders[name] = bad
     assert not offenders, offenders

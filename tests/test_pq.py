@@ -1,5 +1,4 @@
-"""Product quantization + ANN-assign suite: the pre-built r11 trade
-(plans/queries.py docstring).  pq_suite must match its generated
+"""Product quantization + ANN-assign suite.  pq_suite must match its generated
 DuckDB oracle cell-exact; ann_assign_suite must reproduce BOTH
 retiring specs' outputs from one shared scan and match DuckDB."""
 
@@ -210,159 +209,6 @@ def test_semdedup_suite_matches_duckdb_and_parts(spark):
     assert len(got_keep) == len(keep)
     for r in got_keep:
         assert keep[r.vec_id] == float(r.label)
-
-
-# --- Embedding standardization (r17 debut candidate) -------------------------
-
-
-def test_standardize_embeddings_suite_matches_duckdb(spark):
-    from tests.oracle import compare_frames, duckdb_conn
-
-    spdf = gq.standardize_embeddings_suite(spark, SF).toPandas()
-    conn = duckdb_conn(SF)
-    try:
-        opdf = conn.execute(gq.STANDARDIZE_EMBEDDINGS_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "standardize_embeddings_suite") == []
-    assert (spdf.variant == "stats").sum() == gq.EMB_DIM
-    assert (spdf.variant == "vector").sum() > 0
-
-
-def test_standardize_embeddings_moments_and_zero_spread(spark):
-    """After the transform every dimension has mean ~0 / std ~1 (the
-    operator's contract), and a constant dimension maps to exactly
-    0.0 — never NULL/inf."""
-    from data_engineering_for_e_commerce_logistics_spark.operators.similarity import (
-        standardize_embeddings,
-    )
-
-    df = spark.createDataFrame(
-        [(i, [float(i), 7.0, float(i % 3)]) for i in range(12)],
-        "vec_id long, embedding array<double>",
-    )
-    out, stats = standardize_embeddings(df)
-    st = {r.dim: r for r in stats.collect()}
-    assert st[1].std == 0.0  # the constant dimension
-    rows = out.collect()
-    vals = {d: [r.embedding[d] for r in rows] for d in range(3)}
-    assert all(v == 0.0 for v in vals[1])
-    for d in (0, 2):
-        n = len(vals[d])
-        mean = sum(vals[d]) / n
-        var = sum(x * x for x in vals[d]) / n - mean * mean
-        assert abs(mean) < 1e-12
-        assert abs(var - 1.0) < 1e-9
-
-
-def test_kcenter_seed_properties(spark):
-    """Farthest-point seeding on a constructed 3-cluster fixture:
-    every well-separated cluster receives a seed (first-k-ids puts
-    all three in cluster A), the covering-radius sequence is
-    non-increasing, and the selection is deterministic."""
-    from data_engineering_for_e_commerce_logistics_spark.operators.similarity import (
-        kcenter_seed,
-    )
-
-    rows = []
-    # cluster A at (0,0), B at (100,0), C at (0,100); ids ordered so
-    # the first 3 ids are ALL in cluster A
-    for i, (cx, cy) in enumerate(
-        [(0.0, 0.0)] * 4 + [(100.0, 0.0)] * 4 + [(0.0, 100.0)] * 4
-    ):
-        rows.append((i, [cx + (i % 4) * 0.25, cy + (i % 4) * 0.5]))
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    out = kcenter_seed(df, k=3).collect()
-    assert [r.seed_rank for r in out] == [1, 2, 3]
-    assert out[0].vec_id == 0 and out[0].radius is None
-    picked_clusters = {r.vec_id // 4 for r in out}
-    assert picked_clusters == {0, 1, 2}  # one seed per true cluster
-    radii = [r.radius for r in out[1:]]
-    assert radii == sorted(radii, reverse=True)
-    # deterministic replay
-    again = kcenter_seed(df, k=3).collect()
-    assert [(r.seed_rank, r.vec_id) for r in again] == [
-        (r.seed_rank, r.vec_id) for r in out
-    ]
-
-
-def test_kcenter_seed_embeddings_matches_duckdb_oracle(spark):
-    """THE r19 debut's unit-first differential: the KCENTER_K seed
-    ranks, ids, and selection radii are cell-exact vs the unrolled
-    MATERIALIZED-CTE oracle at the driver's sf0.01 scale."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        graph_queries as gq,
-    )
-    from tests.oracle import compare_frames, duckdb_conn
-
-    sf = "/root/testdata/sf0.01"
-    spdf = gq.kcenter_seed_embeddings(spark, sf).toPandas()
-    assert len(spdf) == gq.KCENTER_K
-    conn = duckdb_conn(sf)
-    try:
-        opdf = conn.execute(gq.KCENTER_SEED_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "kcenter_seed_embeddings") == []
-
-
-def test_kcenter_seed_stops_at_distinct_vectors(spark):
-    """k > #distinct vectors (r09 ADVICE): once every remaining point
-    sits at dmin=0 from the chosen set, the loop stops instead of
-    re-selecting a chosen point — one seed per distinct vector, no
-    duplicate vec_ids, and the short result is still deterministic."""
-    from data_engineering_for_e_commerce_logistics_spark.operators.similarity import (
-        kcenter_seed,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (0, [0.0, 0.0]),
-            (1, [0.0, 0.0]),  # duplicate of 0
-            (2, [3.0, 4.0]),
-            (3, [3.0, 4.0]),  # duplicate of 2
-        ],
-        "vec_id long, embedding array<double>",
-    )
-    out = kcenter_seed(df, k=4).collect()
-    assert [(r.seed_rank, r.vec_id) for r in out] == [(1, 0), (2, 2)]
-    assert out[1].radius == 25.0
-    ids = [r.vec_id for r in out]
-    assert len(ids) == len(set(ids))  # never a repeated seed
-
-    # the unrolled oracle replays the early stop (r10: its padded
-    # rounds filter to dmin > 0), so the degenerate input stays
-    # cell-exact against DuckDB too — k=KCENTER_K=8 over 2 distinct
-    # vectors must yield the same 2 rows on both engines
-    import duckdb
-
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        graph_queries as gq,
-    )
-    from data_engineering_for_e_commerce_logistics_spark.operators.similarity import (
-        kcenter_seed as _ks,
-    )
-    from tests.oracle import compare_frames
-
-    spdf = (
-        _ks(df, k=gq.KCENTER_K)
-        .select("seed_rank", "vec_id", "radius")
-        .toPandas()
-    )
-    conn = duckdb.connect()
-    try:
-        conn.execute(
-            "CREATE TABLE embeddings AS SELECT * FROM (VALUES "
-            "(0::BIGINT, [0.0, 0.0]), (1, [0.0, 0.0]), "
-            "(2, [3.0, 4.0]), (3, [3.0, 4.0])"
-            ") t(vec_id, embedding)"
-        )
-        opdf = conn.execute(gq.KCENTER_SEED_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert len(opdf) == 2
-    assert compare_frames(spdf, opdf, "kcenter_degenerate") == []
 
 
 def test_pq_recall_floor_on_clustered_fixture(spark):

@@ -119,65 +119,6 @@ def test_ngram_masks_accrual_law(spark):
     assert merged == want
 
 
-def test_streamed_coverage_index_matches_batch(spark, tmp_path):
-    """The coverage index through start_cms_stream (cell = ngram,
-    merge = bit_or): per-file micro-batches + compaction must
-    reproduce the one-shot batch index cell-exactly, and a second
-    availableNow run over the same checkpoint must change nothing."""
-    from pyspark.sql import functions as F
-
-    from data_engineering_for_e_commerce_logistics_spark.catalog import (
-        read_parquet_table,
-    )
-    from data_engineering_for_e_commerce_logistics_spark.streaming import (
-        ingest,
-    )
-
-    docs = read_parquet_table(spark, f"{SF}/documents.parquet").select(
-        "doc_id", "text", "source"
-    )
-    srcs = corpus.coverage_sources(docs)
-    src_dir = str(tmp_path / "src")
-    docs.repartition(4).write.parquet(src_dir)
-    sketch = str(tmp_path / "covidx")
-    ckpt = str(tmp_path / "ckpt")
-
-    def run():
-        q = ingest.start_cms_stream(
-            spark,
-            src_dir,
-            sketch,
-            ckpt,
-            key_col="",  # unused: custom build
-            schema="doc_id long, text string, source string",
-            compact_every=2,
-            build=lambda b: corpus.ngram_masks(b, srcs).select(
-                "ng", F.col("mask").alias("cnt")
-            ),
-            cell_cols=("ng",),
-            merge_expr=F.bit_or("cnt"),
-        )
-        q.awaitTermination(120)
-
-    run()
-    got = {
-        r.ng: r.cnt
-        for r in ingest.read_sketch(
-            spark, sketch, ("ng",), F.bit_or("cnt")
-        ).collect()
-    }
-    want = {r.ng: r.mask for r in corpus.ngram_masks(docs, srcs).collect()}
-    assert got == want
-    run()  # restart over the same checkpoint: no new files, no change
-    again = {
-        r.ng: r.cnt
-        for r in ingest.read_sketch(
-            spark, sketch, ("ng",), F.bit_or("cnt")
-        ).collect()
-    }
-    assert again == want
-
-
 def test_incremental_coverage_matches_duckdb_and_full_greedy(spark):
     spdf = xc.incremental_coverage_fresh(spark, SF).toPandas()
     conn = duckdb_conn(SF)

@@ -4,6 +4,7 @@ catalog scan-plan memo (focused tests per the optimization-round brief
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pytest
@@ -34,6 +35,26 @@ def test_spread_scan_noop_at_or_above_parallelism(spark):
     assert spread_scan(wide) is wide
     wider = spark.range(1000).repartition(target + 3)
     assert spread_scan(wider) is wider
+
+
+def test_spread_scan_fallback_warns(spark, caplog):
+    """A plan whose partition count cannot be read comes back
+    unchanged, and the fallback says so in the log."""
+
+    class _Unplannable:
+        sparkSession = spark
+
+        @property
+        def rdd(self):
+            raise RuntimeError("planning failed")
+
+    df = _Unplannable()
+    with caplog.at_level(logging.WARNING):
+        assert spread_scan(df) is df
+    assert any(
+        r.levelno == logging.WARNING and "planning failed" in r.getMessage()
+        for r in caplog.records
+    )
 
 
 def test_spread_scan_preserves_row_multiset(spark):

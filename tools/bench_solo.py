@@ -36,22 +36,16 @@ def main() -> None:
     )
     from data_engineering_for_e_commerce_logistics_spark.session import get_spark
 
-    from tools.prebuilt import prebuilt_builders
-
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="bench-solo")
     specs = all_specs()
-    # unit-first builders awaiting their registry slot time exactly
-    # like registered specs, so a spec's solo number can exist BEFORE
-    # its driver row (the rotation contract)
-    prebuilt = prebuilt_builders()
-    unknown = [n for n in names if n not in specs and n not in prebuilt]
+    unknown = [n for n in names if n not in specs]
     if unknown:
         sys.exit(f"unknown specs: {unknown}")
 
     out: dict[str, dict] = {}
     for name in names:
-        build = specs[name].build if name in specs else prebuilt[name]
+        build = specs[name].build
         spark.catalog.clearCache()
         try:
             spark.sparkContext._jvm.System.gc()

@@ -44,10 +44,6 @@ SHOWCASE = [
     ("quality_calibrate_domains", "per-domain exact percent-rank via bucketed counts — no one-task-per-domain window; single-draw cached boundaries"),
     # r13 addition
     ("corpus_decon_suite", "exact + fuzzy + semantic legs off ONE cached corpus scan; benchmark side broadcast in every leg"),
-    # r13 pre-built runway (resolved via tools/prebuilt.py until they register)
-    ("domain_reweight_mixture", "DoReMi loop as WINDOW expressions over the K×64 bucket-LM grid — one linear plan, no per-iteration joins"),
-    ("embedding_diversity_report", "pairwise cosine via the sum-vector identity: exchanges carry (label,dim) stats, corpus never pair-joined"),
-    ("lsh_forensics_suite", "pairs + clusters + ledger + sweep off ONE cached banded mine; 5-row threshold broadcast"),
 ]
 
 
@@ -69,14 +65,8 @@ def main() -> None:
         "silently regress.",
         "",
     ]
-    from tools.prebuilt import prebuilt_builders
-
-    prebuilt = prebuilt_builders()
     for name, note in SHOWCASE:
-        if name in specs:
-            df = specs[name].build(spark, sf_dir)
-        else:
-            df = prebuilt[name](spark, sf_dir)
+        df = specs[name].build(spark, sf_dir)
         plan = df._jdf.queryExecution().executedPlan().toString()
         out += [
             f"## {name}",

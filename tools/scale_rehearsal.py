@@ -498,17 +498,10 @@ def main() -> None:
         return
 
     # optional positional names: rehearse a subset (e.g. new queries)
-    # unit-first builders awaiting their registry slot: rehearsable
-    # pre-registration exactly like specs, so the scale row exists
-    # BEFORE the driver row (builders come from tools.prebuilt)
-    from tools.prebuilt import prebuilt_builders
-
-    prebuilt = prebuilt_builders()
-
     # The default list must stay resolvable as specs retire into
     # suites (ADVICE r10: routed_assign_embeddings went stale here);
     # check it with the same rule applied to CLI-passed names.
-    stale = [n for n in QUERIES if n not in specs and n not in prebuilt]
+    stale = [n for n in QUERIES if n not in specs]
     if stale:
         sys.exit(
             f"stale default QUERIES entr{'ies' if len(stale) > 1 else 'y'}:"
@@ -517,16 +510,16 @@ def main() -> None:
         )
 
     wanted = [a for a in sys.argv[1:] if not a.startswith("--")]
-    unknown = [n for n in wanted if n not in specs and n not in prebuilt]
+    unknown = [n for n in wanted if n not in specs]
     if unknown:
         sys.exit(
             f"unknown query name(s): {', '.join(unknown)} — valid names "
-            "are registered specs plus tools.prebuilt builders"
+            "are registered specs"
         )
     queries = wanted if wanted else QUERIES
 
     for name in queries:
-        build = specs[name].build if name in specs else prebuilt[name]
+        build = specs[name].build
         # codegen warmup at the small scale
         build(spark, SRC).write.format("noop").mode("overwrite").save()
         row: dict[str, float | int] = {}
