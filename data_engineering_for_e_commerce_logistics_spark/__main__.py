@@ -25,21 +25,34 @@ def main(argv: list[str] | None = None) -> int:
     parser.add_argument("--no-validate", action="store_true")
     args = parser.parse_args(argv)
 
+    from .session import get_spark
+
+    spark = get_spark(app_name="logiflow-etl")
+    pipeline = build_pipeline(spark, args.sf_dir, args.output)
+    result = pipeline.run(validate=not args.no_validate)
+    print(
+        f"run {result.run_id}: {result.status} in {result.duration_seconds}s, "
+        f"rows={result.rows}, stage_seconds={result.stage_seconds}"
+    )
+    return 0 if result.status == "success" else 1
+
+
+def build_pipeline(spark, sf_dir: str, output: str):
+    """The CLI's pipeline over the star-schema tables in ``sf_dir``,
+    loading into ``output``.  The loader reports the row count the
+    write observed, so no table is executed twice."""
     from .catalog import load_tables
     from .operators import cleaners
     from .operators.validators import DataValidator, Severity
     from .plans.pipeline import ETLPipeline
-    from .session import get_spark
     from .sources import sinks
 
-    spark = get_spark(app_name="logiflow-etl")
-
     def extractor(name):
-        return lambda s: load_tables(s, args.sf_dir, (name,))[name]
+        return lambda s: load_tables(s, sf_dir, (name,))[name]
 
     entities = ["region", "nation", "customer", "supplier", "part", "orders", "lineitem"]
 
-    pipeline = ETLPipeline(
+    return ETLPipeline(
         spark,
         extractors={name: extractor(name) for name in entities},
         transforms={
@@ -73,18 +86,11 @@ def main(argv: list[str] | None = None) -> int:
             ),
         },
         load_order=entities,  # dimension-before-fact order (O4)
-        loader=lambda name, df: (
-            sinks.write_parquet(df, f"{args.output}/{name}", mode="overwrite"),
-            df.count(),
-        )[1],
-        run_log_path=f"{args.output}/etl_run_log",
+        loader=lambda name, df: sinks.write_parquet(
+            df, f"{output}/{name}", mode="overwrite"
+        ),
+        run_log_path=f"{output}/etl_run_log",
     )
-    result = pipeline.run(validate=not args.no_validate)
-    print(
-        f"run {result.run_id}: {result.status} in {result.duration_seconds}s, "
-        f"rows={result.rows}"
-    )
-    return 0 if result.status == "success" else 1
 
 
 if __name__ == "__main__":

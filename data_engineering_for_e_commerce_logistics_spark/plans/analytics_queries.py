@@ -46,16 +46,39 @@ GROUP BY 1
 # --- ROLLUP / CUBE (grouping sets) -----------------------------------------
 
 _SUM_TOTALPRICE = sql_exact_sum("o_totalprice", 2)
+_ORDER_KEYS = ("o_orderstatus", "o_orderpriority")
+
+
+def _orders_totals() -> list:
+    return [
+        F.count(F.lit(1)).alias("n_orders"),
+        F.expr(_SUM_TOTALPRICE).alias("total_value"),
+    ]
+
+
+def _with_global_total(o: DataFrame, grouped) -> DataFrame:
+    """``grouped``'s grouping sets with the ``()`` set taken from a
+    global aggregate.  Spark's grouping-set Expand emits nothing on an
+    empty input, while SQL's grand total is one row (count 0, NULL
+    sum); a global aggregate gives that row on any input."""
+    subtotals = (
+        grouped.agg(*_orders_totals(), F.grouping_id().alias("_gid"))
+        .where(F.col("_gid") != (1 << len(_ORDER_KEYS)) - 1)
+        .drop("_gid")
+    )
+    total = o.agg(*_orders_totals()).select(
+        *[F.lit(None).cast(o.schema[k].dataType).alias(k) for k in _ORDER_KEYS],
+        "n_orders",
+        "total_value",
+    )
+    return subtotals.unionByName(total)
 
 
 def rollup_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hierarchical totals status → (status, priority) → grand total.
-    One pass; Spark expands grouping sets in the aggregate."""
+    Spark expands the non-empty grouping sets in one aggregate."""
     o = load_tables(spark, sf_dir, ("orders",))["orders"]
-    return o.rollup("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.expr(_SUM_TOTALPRICE).alias("total_value"),
-    )
+    return _with_global_total(o, o.rollup(*_ORDER_KEYS))
 
 
 ROLLUP_ORDERS_SQL = f"""
@@ -69,10 +92,7 @@ GROUP BY ROLLUP(o_orderstatus, o_orderpriority)
 
 def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_tables(spark, sf_dir, ("orders",))["orders"]
-    return o.cube("o_orderstatus", "o_orderpriority").agg(
-        F.count(F.lit(1)).alias("n_orders"),
-        F.expr(_SUM_TOTALPRICE).alias("total_value"),
-    )
+    return _with_global_total(o, o.cube(*_ORDER_KEYS))
 
 
 CUBE_ORDERS_SQL = f"""

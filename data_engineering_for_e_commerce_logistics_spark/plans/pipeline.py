@@ -17,6 +17,7 @@ from __future__ import annotations
 import time
 import uuid
 from collections.abc import Callable, Mapping
+from contextlib import contextmanager
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -35,6 +36,9 @@ class PipelineResult:
     rows: dict[str, int] = field(default_factory=dict)
     reports: dict[str, ValidationReport] = field(default_factory=dict)
     error: str | None = None
+    # wall seconds per stage (extract, transform, validate, load); a
+    # stage the run did not reach is absent
+    stage_seconds: dict[str, float] = field(default_factory=dict)
 
 
 class ETLPipeline:
@@ -69,22 +73,35 @@ class ETLPipeline:
         run_id = uuid.uuid4().hex[:12]
         t0 = time.time()
         result = PipelineResult(run_id=run_id, status="success", duration_seconds=0.0)
+
+        @contextmanager
+        def stage(name: str):
+            start = time.perf_counter()
+            try:
+                yield
+            finally:
+                result.stage_seconds[name] = round(time.perf_counter() - start, 3)
+
         try:
-            frames = {name: fn(self.spark) for name, fn in self.extractors.items()}
-            for name, steps in self.transforms.items():
-                if name in frames:
-                    for step in steps:
-                        frames[name] = step(frames[name])
-            if validate:
-                for name, validator in self.validators.items():
+            with stage("extract"):
+                frames = {name: fn(self.spark) for name, fn in self.extractors.items()}
+            with stage("transform"):
+                for name, steps in self.transforms.items():
                     if name in frames:
-                        report = validator.validate(frames[name])
-                        result.reports[name] = report
-                        # abort gate (ref main.py:112-117)
-                        report.raise_on_critical()
-            for name in self.load_order:
-                if name in frames:
-                    result.rows[name] = self.loader(name, frames[name])
+                        for step in steps:
+                            frames[name] = step(frames[name])
+            with stage("validate"):
+                if validate:
+                    for name, validator in self.validators.items():
+                        if name in frames:
+                            report = validator.validate(frames[name])
+                            result.reports[name] = report
+                            # abort gate (ref main.py:112-117)
+                            report.raise_on_critical()
+            with stage("load"):
+                for name in self.load_order:
+                    if name in frames:
+                        result.rows[name] = self.loader(name, frames[name])
         except Exception as exc:
             result.status = "failed"
             result.error = str(exc)

@@ -21,8 +21,17 @@ from __future__ import annotations
 import time
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+
+
+def _observed_rows(df: DataFrame):
+    """``df`` with a row counter attached, and a getter for the count
+    the next action over it observes — the write reports its own row
+    count, with no second execution of ``df``."""
+    obs = Observation()
+    observed = df.observe(obs, F.count(F.lit(1)).alias("rows"))
+    return observed, lambda: obs.get.get("rows", 0)
 
 
 def write_parquet(
@@ -30,14 +39,19 @@ def write_parquet(
     path: str,
     mode: str = "append",
     partition_by: list[str] | None = None,
-) -> None:
+) -> int:
     """S10/S11 upgraded: parquet with optional partition columns —
     partitionBy is the Spark replacement for the reference's B-tree
-    indexes (partition pruning instead of index seeks)."""
+    indexes (partition pruning instead of index seeks).
+
+    Returns the number of rows written, observed during the write
+    (``pyspark.sql.Observation``), so callers need no ``df.count()``."""
+    df, rows = _observed_rows(df)
     writer = df.write.mode(mode)
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
+    return rows()
 
 
 def write_table(
@@ -119,6 +133,9 @@ def upsert_parquet(
     the row-level analogue of MERGE file pruning, result-identical.
     Size ≈10 bits per update-batch key.
 
+    Returns the row count of the merged table, observed during the
+    rewrite (no re-read of the written files).
+
     Path ops go through the Hadoop FileSystem API (``fsio``, ADVICE
     r12) so the MERGE rewrite targets HDFS/S3A tables, not just the
     driver's disk — with fsio's atomic-rename caveat on S3A."""
@@ -139,12 +156,12 @@ def upsert_parquet(
         )
     else:
         merged = updates
+    merged, rows = _observed_rows(merged)
     tmp = f"{path}__tmp_upsert"
     merged.write.mode("overwrite").parquet(tmp)
-    count = spark.read.parquet(tmp).count()
     fs_delete(spark, path)
     fs_rename(spark, tmp, path)
-    return count
+    return rows()
 
 
 def generate_cdc(

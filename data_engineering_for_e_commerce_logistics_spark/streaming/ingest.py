@@ -16,6 +16,17 @@ At scale: the file source scales by listing parallelism, state is
 bounded by (windows in watermark horizon × event types), and
 foreachBatch writes are idempotent via the upsert key — giving
 effectively-exactly-once output on top of checkpointed offsets.
+
+State partitions: a stateful operator keeps one state store per
+shuffle partition and commits every one of them each micro-batch,
+however few rows it holds.  The rollup streams' state is bounded (a
+few thousand rows), so ``start_rollup_stream`` and
+``start_sliding_rollup_stream`` start their query with
+``spark.sql.shuffle.partitions`` capped at the cluster's default
+parallelism (``_start_bounded_state``) instead of the session's
+batch-sized value.  Spark records the partition count in the
+checkpoint's offset log and a restart reuses it, so a checkpoint
+started with more partitions keeps them.
 """
 
 from __future__ import annotations
@@ -121,31 +132,63 @@ def start_rollup_stream(
 
     availableNow processes the current backlog then stops — the batch
     refresh mode; drop it for a continuously-running micro-batch job.
-    """
-    from ..sources.sinks import upsert_parquet
 
+    The rollup's state is bounded, so a new checkpoint runs it on
+    min(spark.sql.shuffle.partitions, defaultParallelism) state
+    partitions; an existing checkpoint keeps the count it was started
+    with (``_start_bounded_state``).
+    """
     rollup = windowed_rollup(
         read_event_stream(spark, source_path), window_duration, watermark
     )
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(
-            batch_df.sparkSession,
-            batch_df,
-            sink_path,
-            key_columns=["window_start", "event_type"],
-        )
-
     writer = (
         rollup.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(upsert_batch)
+        .foreachBatch(_upsert_batches(sink_path, ["window_start", "event_type"]))
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_bounded_state(spark, writer)
+
+
+def _upsert_batches(sink_path: str, key_columns: list[str]):
+    """foreachBatch body: upsert each non-empty micro-batch into
+    ``sink_path`` on ``key_columns``.  The batch is persisted for the
+    body's lifetime: without it ``isEmpty`` and the upsert's write each
+    re-execute the micro-batch's stateful plan."""
+    from ..sources.sinks import upsert_parquet
+
+    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch_df.persist()
+        try:
+            if not batch_df.isEmpty():
+                upsert_parquet(
+                    batch_df.sparkSession, batch_df, sink_path, key_columns
+                )
+        finally:
+            batch_df.unpersist()
+
+    return upsert_batch
+
+
+def _start_bounded_state(spark: SparkSession, writer):
+    """Start ``writer`` with ``spark.sql.shuffle.partitions`` capped at
+    ``defaultParallelism``, for streams whose state stays small.
+
+    Each state partition is a state store committed every micro-batch,
+    so a batch-sized count (the session's 32) costs per-batch commits
+    and tasks that a few thousand state rows do not need.  The conf is
+    set only around ``start()``: the query clones the session there,
+    and the caller's session gets its value back.  A new checkpoint
+    records the capped count in its offset log; a restarted one
+    restores the count it recorded, so its state keeps its layout."""
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, str(min(int(prev), spark.sparkContext.defaultParallelism)))
+    try:
+        return writer.start()
+    finally:
+        spark.conf.set(key, prev)
 
 
 RUNNING_TOTALS_OUTPUT = T.StructType(
@@ -202,22 +245,15 @@ def start_running_totals_stream(
     checkpoint_path: str,
 ):
     """events stream → stateful running totals → foreachBatch upsert
-    keyed on user_id (latest state wins, idempotent re-runs)."""
-    from ..sources.sinks import upsert_parquet
+    keyed on user_id (latest state wins, idempotent re-runs).
 
+    State grows with distinct users, so this stream keeps the session's
+    shuffle partition count."""
     totals = running_user_totals(read_event_stream(spark, source_path))
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(
-            batch_df.sparkSession, batch_df, sink_path, key_columns=["user_id"]
-        )
-
     return (
         totals.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(upsert_batch)
+        .foreachBatch(_upsert_batches(sink_path, ["user_id"]))
         .trigger(availableNow=True)
         .start()
     )
@@ -418,31 +454,24 @@ def start_sliding_rollup_stream(
 ):
     """source → sliding rollup → foreachBatch upsert keyed on
     (window_start, window_end, event_type) — window_end joins the key
-    because sliding windows of different durations may share a start."""
-    from ..sources.sinks import upsert_parquet
+    because sliding windows of different durations may share a start.
 
+    Bounded state, like ``start_rollup_stream``: a new checkpoint runs
+    on min(spark.sql.shuffle.partitions, defaultParallelism) state
+    partitions and an existing one keeps its count."""
     rollup = sliding_rollup(
         read_event_stream(spark, source_path), window_duration, slide, watermark
     )
-
-    def upsert_batch(batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        upsert_parquet(
-            batch_df.sparkSession,
-            batch_df,
-            sink_path,
-            key_columns=["window_start", "window_end", "event_type"],
-        )
-
     writer = (
         rollup.writeStream.outputMode("update")
         .option("checkpointLocation", checkpoint_path)
-        .foreachBatch(upsert_batch)
+        .foreachBatch(
+            _upsert_batches(sink_path, ["window_start", "window_end", "event_type"])
+        )
     )
     if trigger_available_now:
         writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start_bounded_state(spark, writer)
 
 
 def start_dedup_ingest_stream(

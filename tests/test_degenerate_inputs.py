@@ -68,3 +68,9 @@ def test_one_row_tables_give_oracle_answer(spark, sf_one, name):
     want = _matches_oracle(spark, name, sf_one)
     # the single row reaches the division: one group of one value
     assert len(want) == 1
+
+
+def test_empty_orders_keep_grand_totals(spark, sf_empty):
+    want = _matches_oracle(spark, "grouping_sets_orders", sf_empty)
+    # ROLLUP's and CUBE's () sets: one row each, count 0
+    assert list(want["n_orders"]) == [0, 0]

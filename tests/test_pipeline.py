@@ -12,6 +12,7 @@ from data_engineering_for_e_commerce_logistics_spark.operators.validators import
     Severity,
 )
 from data_engineering_for_e_commerce_logistics_spark.plans.pipeline import ETLPipeline
+from data_engineering_for_e_commerce_logistics_spark.sources import sinks
 
 
 def _extractors(spark):
@@ -54,6 +55,8 @@ def test_pipeline_success_and_order(spark, tmp_path):
     assert loads == ["customers", "orders"]  # dependency order respected
     assert result.rows == {"customers": 2, "orders": 2}
     assert result.reports["orders"].passed
+    assert set(result.stage_seconds) == {"extract", "transform", "validate", "load"}
+    assert all(v >= 0 for v in result.stage_seconds.values())
     log = spark.read.parquet(str(tmp_path / "runlog"))
     assert log.count() == 1 and log.first().status == "success"
 
@@ -73,3 +76,45 @@ def test_pipeline_critical_abort(spark, tmp_path):
         p.run()
     log = spark.read.parquet(str(tmp_path / "runlog"))
     assert log.first().status == "failed"
+
+
+def _run_counting_jobs(spark, pipeline, group: str):
+    """Run ``pipeline`` under a job group; return its result and the
+    number of Spark jobs it started."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        result = pipeline.run()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the listener bus, asynchronously
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_cli_loader_runs_no_recount(spark, sf_dir, tmp_path):
+    """The CLI's loader takes the row count its write observed: the
+    counts match the written tables, and the run starts a job fewer
+    per table than a loader that recounts each frame after writing."""
+    from data_engineering_for_e_commerce_logistics_spark.__main__ import build_pipeline
+
+    out = str(tmp_path / "observed")
+    result, jobs = _run_counting_jobs(
+        spark, build_pipeline(spark, sf_dir, out), "cli-observed-loader"
+    )
+    assert result.status == "success"
+    written = {n: spark.read.parquet(f"{out}/{n}").count() for n in result.rows}
+    assert result.rows == written and len(written) == 7
+
+    recount_out = str(tmp_path / "recount")
+    recounting = build_pipeline(spark, sf_dir, recount_out)
+    recounting.loader = lambda name, df: (
+        sinks.write_parquet(df, f"{recount_out}/{name}", mode="overwrite"),
+        df.count(),
+    )[1]
+    recount_result, recount_jobs = _run_counting_jobs(
+        spark, recounting, "cli-recounting-loader"
+    )
+    assert recount_result.rows == result.rows
+    assert recount_jobs - jobs >= 7, (jobs, recount_jobs)

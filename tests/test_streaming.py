@@ -378,6 +378,89 @@ def test_stream_stream_full_outer_join_both_null_shapes(
     assert got_null_purchases, "no unmatched purchases — assumption broken"
 
 
+def _state_partitions(ckpt: str) -> int:
+    """Partition dirs of the checkpoint's first stateful operator."""
+    return sum(d.isdigit() for d in os.listdir(os.path.join(ckpt, "state", "0")))
+
+
+def _assert_matches_hourly_batch(spark, sink: str, events):
+    got = spark.read.parquet(sink).select("window_start", "event_type", "n_events")
+    batch = events.groupBy(
+        F.date_trunc("hour", "ts").alias("window_start"), "event_type"
+    ).agg(F.count(F.lit(1)).alias("b_n"))
+    assert got.count() == batch.count()
+    j = got.join(batch, ["window_start", "event_type"], "full_outer")
+    assert j.filter(~F.col("n_events").eqNullSafe(F.col("b_n"))).count() == 0
+
+
+def test_rollup_stream_state_partitions_sized_to_cluster(spark, tmp_path):
+    """A new rollup checkpoint gets min(shuffle partitions,
+    defaultParallelism) state partitions, and the caller's session
+    keeps its own shuffle partition count."""
+    source = str(tmp_path / "events_src_sized")
+    read_parquet_table(spark, f"{SF_DIR}/events.parquet").write.parquet(source)
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    parallelism = spark.sparkContext.defaultParallelism
+    spark.conf.set(key, str(parallelism + 2))
+    try:
+        ckpt = str(tmp_path / "ckpt_sized")
+        q = ingest.start_rollup_stream(spark, source, str(tmp_path / "sink"), ckpt)
+        assert spark.conf.get(key) == str(parallelism + 2)
+        q.awaitTermination(120)
+    finally:
+        spark.conf.set(key, prev)
+    assert _state_partitions(ckpt) == parallelism
+
+
+def test_rollup_checkpoint_keeps_its_partition_count_on_restart(spark, tmp_path):
+    """A checkpoint started with 32 state partitions (the session's
+    count, as the starter used before sizing) restarts under the sized
+    starter with its 32 partitions, and the sink still equals the batch
+    hourly rollup of everything landed."""
+    from data_engineering_for_e_commerce_logistics_spark.sources.sinks import (
+        upsert_parquet,
+    )
+
+    events = read_parquet_table(spark, f"{SF_DIR}/events.parquet")
+    lo, hi = events.agg(F.min("ts"), F.max("ts")).first()
+    cutoff = lo + (hi - lo) / 2
+    source = str(tmp_path / "events_src_restart")
+    events.where(F.col("ts") < cutoff).write.parquet(source)
+    sink, ckpt = str(tmp_path / "sink"), str(tmp_path / "ckpt_restart")
+
+    def upsert(batch_df, _batch_id):
+        if not batch_df.isEmpty():
+            upsert_parquet(
+                batch_df.sparkSession, batch_df, sink, ["window_start", "event_type"]
+            )
+
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "32")
+    try:
+        q = (
+            ingest.windowed_rollup(ingest.read_event_stream(spark, source))
+            .writeStream.outputMode("update")
+            .option("checkpointLocation", ckpt)
+            .foreachBatch(upsert)
+            .trigger(availableNow=True)
+            .start()
+        )
+    finally:
+        spark.conf.set(key, prev)
+    q.awaitTermination(120)
+    assert _state_partitions(ckpt) == 32
+
+    # later events only, so the watermark drops nothing
+    events.where(F.col("ts") >= cutoff).write.mode("append").parquet(source)
+    q2 = ingest.start_rollup_stream(spark, source, sink, ckpt)
+    q2.awaitTermination(120)
+    assert q2.exception() is None
+    assert _state_partitions(ckpt) == 32
+    _assert_matches_hourly_batch(spark, sink, events)
+
+
 def test_rollup_with_rocksdb_state_store(spark, tmp_path):
     """The RocksDB provider (the 100×-state path) must produce the
     same rollup as the default HDFS-backed provider — same results,
