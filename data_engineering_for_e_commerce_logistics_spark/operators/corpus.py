@@ -1383,7 +1383,6 @@ def tfidf_topk(
     text_col: str = "text",
     id_col: str = "doc_id",
     k: int = 3,
-    tf_table: DataFrame | None = None,
 ) -> DataFrame:
     """Top-k TF-IDF terms per document.
 
@@ -1392,19 +1391,9 @@ def tfidf_topk(
     score (cross-engine float drift cannot reorder rounded values),
     term-asc tiebreak.  Two hash shuffles (doc,term) and (term); the
     corpus-size scalar rides along via a broadcast 1-row cross join,
-    never a driver round-trip.
-
-    ``tf_table`` lets a caller share one materialized ``(id, term,
-    tf)`` frame across the lexical family (TF-IDF + BM25 both derive
-    everything from it); when omitted the pass is built internally."""
-    if tf_table is None:
-        terms = df.select(
-            F.col(id_col), F.explode(tokens_col(text_col)).alias("term")
-        )
-        tf_table = terms.groupBy(id_col, "term").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-    tf = tf_table
+    never a driver round-trip."""
+    terms = df.select(F.col(id_col), F.explode(tokens_col(text_col)).alias("term"))
+    tf = terms.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
     docfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n_docs = df.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (

@@ -364,31 +364,24 @@ def simhash_near_pairs(
     buckets = (
         banded.groupBy("band", "bucket")
         .agg(
-            F.array_sort(
-                F.collect_list(F.struct(F.col(id_col).alias("id"), F.col("simhash").alias("sh")))
-            ).alias("members")
+            F.expr(
+                f"array_sort(collect_list(struct(`{id_col}` AS id, simhash AS sh)))"
+                " AS members"
+            )
         )
-        .filter(F.size("members") > 1)
+        .filter("size(members) > 1")
     )
-    n = F.size("members")
-    pair_arrays = F.flatten(
-        F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.slice(F.col("members"), i + 1, n - i),
-                lambda m: F.struct(
-                    F.element_at(F.col("members"), i)["id"].alias("id_a"),
-                    m["id"].alias("id_b"),
-                    F.bit_count(
-                        F.element_at(F.col("members"), i)["sh"].bitwiseXOR(m["sh"])
-                    ).alias("hamming"),
-                ),
-            ),
-        )
-    )
+    # member i pairs with every later member j, in one expression
+    pairs = """inline(flatten(transform(
+        sequence(1, size(members) - 1),
+        i -> transform(
+            slice(members, i + 1, size(members) - i),
+            m -> named_struct(
+                'id_a', element_at(members, i).id,
+                'id_b', m.id,
+                'hamming', bit_count(element_at(members, i).sh ^ m.sh))))))"""
     return (
-        buckets.select(F.explode(pair_arrays).alias("p"))
-        .select("p.id_a", "p.id_b", "p.hamming")
+        buckets.select(F.expr(pairs))
         .filter(F.col("hamming") <= max_hamming)
         .distinct()
     )
@@ -404,8 +397,9 @@ def simhash(
     """64-bit SimHash: per shingle take md5-derived bits, per bit
     position vote +1/-1, sign of the vote is the fingerprint bit.
 
-    Expressed as explode → per-bit conditional sums → bit assembly;
-    one shuffle on id_col.  Bit-exact DuckDB oracle:
+    Expressed as explode → SWAR-packed vote sums → bit assembly in one
+    SQL expression; one shuffle on id_col, and building it runs no
+    job.  Bit-exact DuckDB oracle:
     ``plans/extended_queries.py`` DEDUP_SIMHASH_SQL /
     DEDUP_SIMHASH_PAIRS_SQL replay the same two-half nibble recovery
     (driver-green since r03), so this is hash-checked, not rows-only.
@@ -454,25 +448,24 @@ def simhash(
     # 32 + (7 - i)*4 + j%4 of w = (hi << 32) | lo for i < 8, else
     # (15 - i)*4 + j%4.  The lane→vote wiring below just inverts that
     # compile-time permutation.
+    #
+    # Every expression below is a SQL string: it parses in one py4j
+    # round trip, where the same tree built from Column objects takes
+    # several per node (thousands per build for the 64-bit assembly).
     w64 = ex.select(
         F.col(id_col),
-        (
-            F.shiftleft(
-                F.conv(F.substring(F.col("h"), 1, 8), 16, 10).cast("long"), 32
-            ).bitwiseOR(
-                F.conv(F.substring(F.col("h"), 9, 8), 16, 10).cast("long")
-            )
-        ).alias("w"),
+        F.expr(
+            "shiftleft(CAST(conv(substring(h, 1, 8), 16, 10) AS BIGINT), 32)"
+            " | CAST(conv(substring(h, 9, 8), 16, 10) AS BIGINT) AS w"
+        ),
     )
     lane_mask = 0x0001000100010001
-    packed = [
-        F.sum(
-            F.shiftrightunsigned(F.col("w"), g).bitwiseAND(F.lit(lane_mask))
-        ).alias(f"p{g}")
-        for g in range(16)
-    ]
     voted = w64.groupBy(id_col).agg(
-        F.count(F.lit(1)).alias("__n"), *packed
+        F.count(F.lit(1)).alias("__n"),
+        *[
+            F.expr(f"sum(shiftrightunsigned(w, {g}) & {lane_mask}L) AS p{g}")
+            for g in range(16)
+        ],
     )
 
     def _pos(j: int) -> int:
@@ -481,43 +474,32 @@ def simhash(
             32 + (7 - i) * 4 + (j % 4) if i < 8 else (15 - i) * 4 + (j % 4)
         )
 
-    def _ones(j: int):
+    def _bit(j: int) -> str:
+        # vote_j > 0  ⟺  2*ones_j > n; a tie (2*ones_j == n) is bit 0
         q = _pos(j)
         g, lane = q % 16, q // 16
-        return F.shiftrightunsigned(F.col(f"p{g}"), lane * 16).bitwiseAND(
-            F.lit(0xFFFF)
-        )
+        ones = f"(shiftrightunsigned(p{g}, {lane * 16}) & 65535)"
+        value = -(2**63) if j == 63 else 1 << j
+        return f"CASE WHEN {ones} * 2 > __n THEN {value}L ELSE 0L END"
 
-    sig = None
-    for j in range(bits):
-        # vote_j > 0  ⟺  2*ones_j > n
-        positive = (_ones(j) * 2) > F.col("__n")
-        term = F.when(positive, F.lit(1).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        ) * F.lit(2**j).cast("long") if j < 63 else F.when(
-            positive, F.lit(-(2**63)).cast("long")
-        ).otherwise(F.lit(0).cast("long"))
-        sig = term if sig is None else sig + term
+    # The signature is the OR of 64 per-bit CASEs over disjoint bits
+    # (equal to their sum); bit 63 is the sign bit's negative literal.
     # Runtime guard on the SWAR lane capacity (ADVICE r05): a document
     # with more than 2^15-1 shingles would carry a lane count past the
-    # 16-bit boundary and silently corrupt every higher lane (the old
-    # per-bit code had no such bound).  __n is already aggregated, so
-    # the check is one comparison per DOCUMENT row — fail loudly
-    # instead of emitting a wrong signature.
-    overflow = F.when(
-        F.col("__n") > F.lit(_SWAR_MAX_SHINGLES),
-        F.raise_error(
-            F.concat(
-                F.lit("simhash: document exceeds "),
-                F.lit(str(_SWAR_MAX_SHINGLES)),
-                F.lit(" shingles ("),
-                F.col("__n").cast("string"),
-                F.lit(") — SWAR 16-bit lane capacity; chunk upstream"
-                      " (e.g. corpus_chunk_documents) before hashing"),
-            )
-        ).cast("long"),
-    ).otherwise(sig)
-    return voted.select(F.col(id_col), overflow.alias("simhash"))
+    # 16-bit boundary and silently corrupt every higher lane.  __n is
+    # already aggregated, so the check is one comparison per DOCUMENT
+    # row — fail loudly instead of emitting a wrong signature.
+    sig = " | ".join(_bit(j) for j in range(bits))
+    return voted.select(
+        F.col(id_col),
+        F.expr(
+            f"CASE WHEN __n > {_SWAR_MAX_SHINGLES} THEN CAST(raise_error(concat("
+            f"'simhash: document exceeds {_SWAR_MAX_SHINGLES} shingles (',"
+            " CAST(__n AS STRING), ') — SWAR 16-bit lane capacity; chunk"
+            " upstream (e.g. corpus_chunk_documents) before hashing'))"
+            f" AS BIGINT) ELSE {sig} END AS simhash"
+        ),
+    )
 
 
 def incremental_exact_dedup(
@@ -752,22 +734,13 @@ def _simhash_bands(
     pigeonhole banding shared by the within-corpus pair miner and the
     incremental index screen."""
     width = 64 // n_bands
-    band_rows = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.shiftrightunsigned(F.col("simhash"), b * width)
-            .bitwiseAND(F.lit((1 << width) - 1))
-            .alias("bucket"),
-        )
+    bands = ", ".join(
+        f"named_struct('band', {b}, 'bucket',"
+        f" shiftrightunsigned(simhash, {b * width}) & {(1 << width) - 1})"
         for b in range(n_bands)
-    ]
+    )
     return sig.select(
-        F.col(id_col), F.col("simhash"), F.explode(F.array(*band_rows)).alias("bk")
-    ).select(
-        id_col,
-        "simhash",
-        F.col("bk.band").alias("band"),
-        F.col("bk.bucket").alias("bucket"),
+        F.col(id_col), F.col("simhash"), F.expr(f"inline(array({bands}))")
     )
 
 

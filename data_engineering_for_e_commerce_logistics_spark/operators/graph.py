@@ -91,16 +91,18 @@ def triangle_count(
     return tris.agg(F.count(F.lit(1)).alias("triangles"))
 
 
-def _measured_width(
-    df: DataFrame, n_rows: int, per_partition: int = 2_000_000
-) -> int:
-    """The iterative-graph width rule: ~per_partition rows per
+# Rows per partition of an iterative graph round (``_measured_width``).
+_ROWS_PER_PARTITION = 2_000_000
+
+
+def _measured_width(df: DataFrame, n_rows: int) -> int:
+    """The iterative-graph width rule: ~_ROWS_PER_PARTITION rows per
     partition keeps a billion-edge graph at cluster width while a
     small one runs single-task rounds."""
     return max(
         1,
         min(
-            n_rows // per_partition + 1,
+            n_rows // _ROWS_PER_PARTITION + 1,
             df.sparkSession.sparkContext.defaultParallelism,
         ),
     )

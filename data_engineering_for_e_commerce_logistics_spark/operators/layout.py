@@ -167,6 +167,7 @@ def read_pruned(
     col: str,
     lo,
     hi,
+    table: DataFrame,
     file_col: str = "file",
 ) -> DataFrame:
     """Manifest-planned scan: open ONLY the files whose envelope can
@@ -174,16 +175,13 @@ def read_pruned(
     envelope test is necessary, not sufficient).  With a z-ordered
     table both clustered columns prune this way — the file-level
     analogue of the row-group skipping test_layout measures.  Returns
-    an empty frame with the manifest's table schema when nothing
-    survives."""
+    an empty frame with the schema of ``table`` (the frame the
+    manifest was built from) when nothing survives, an empty table
+    included: its manifest lists no file."""
     paths = prune_files(manifest, col, lo, hi, file_col)
     pred = (F.col(col) >= F.lit(lo)) & (F.col(col) <= F.lit(hi))
     if not paths:
-        # no surviving file: derive schema from any manifest-listed file
-        any_path = [r[0] for r in manifest.select(file_col).limit(1).collect()]
-        if not any_path:
-            raise ValueError("read_pruned: manifest lists no files")
-        return spark.read.parquet(*any_path).where(F.lit(False))
+        return table.where(F.lit(False))
     return spark.read.parquet(*paths).where(pred)
 
 

@@ -7,6 +7,8 @@ exercised — each entry oracle-checked like everything else.
 
 from __future__ import annotations
 
+import bisect
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -1386,8 +1388,106 @@ GROUP BY 1, 2
 """
 
 
+# Rank accuracy of every approx sketch below: ``percentile_approx``'s
+# rank error is at most eps = 1/accuracy of the rows, so a bracket of
+# t/n ± (4·eps + 2/n) around a target rank holds the exact value with
+# margin; the rank walk raises if one ever does not.
+_SKETCH_EPS = 1e-4
+
+
+def _sketch_grid(k: int) -> list[float]:
+    """The fixed probabilities of the count-and-sketch action, which
+    runs before n is known: each ntile cut j/k and its mirror 1 - j/k
+    (the cuts of a descending metric), each ± a ladder of offsets that
+    grows ×1.5 from 4·eps to 1, plus 0 and 1.  Once n is known, the
+    driver takes the nearest grid points outside each target's safe
+    bracket; the targets sit within k/n of a cut, so at large n the
+    bracket is at most 1.5× as wide as one sketched at n-aware
+    probabilities."""
+    offsets = [0.0]
+    while offsets[-1] < 1.0:
+        offsets.append(max(4 * _SKETCH_EPS, offsets[-1] * 1.5))
+    cuts = {x for j in range(1, k) for x in (j / k, 1 - j / k)}
+    return sorted(
+        {0.0, 1.0}
+        | {min(1.0, max(0.0, x + d)) for x in cuts for o in offsets for d in (-o, o)}
+    )
+
+
+def _bracket_ranks(df, families: dict) -> dict:
+    """Exact order statistics inside known value brackets, in ONE
+    action.
+
+    ``families`` maps a name to ``(col, cond, items)``: each item
+    ``(key, t, lo, hi)`` asks for the t-th smallest (1-based) value of
+    ``col`` over the rows where the SQL predicate ``cond`` holds, a
+    value known to lie in [lo, hi].  One union collects both halves of
+    the selection: a global aggregate of conditional counts (the rows
+    below each bracket, unpivoted by ``stack``) and a value → count
+    histogram of the rows inside each family's brackets (one groupBy
+    over the in-bracket rows' (family, value) pairs).  The driver then
+    walks each rank.  Values travel as strings (one type across long,
+    decimal and double metrics) and compare as ``Decimal``.
+
+    Returns {key: (value, rows_before_value, rows_at_value)}."""
+    from decimal import Decimal
+
+    dtypes = dict(df.dtypes)
+    below, hits, pairs = {}, [], []
+    for f, (col, cond, items) in enumerate(families.values()):
+        typ = dtypes[col]
+        for i, (_key, _t, lo, _hi) in enumerate(items):
+            below[f"b{f}_{i}"] = (
+                f"count(CASE WHEN {cond} AND {col} < CAST('{lo}' AS {typ}) THEN 1 END)"
+            )
+        inside = " OR ".join(
+            f"{col} BETWEEN CAST('{lo}' AS {typ}) AND CAST('{hi}' AS {typ})"
+            for _key, _t, lo, hi in items
+        )
+        hits.append(f"({cond} AND ({inside}))")
+        pairs.append(
+            f"CASE WHEN {hits[-1]} THEN"
+            f" named_struct('k', 'h{f}', 'v', CAST({col} AS STRING)) END"
+        )
+    unpivot = ", ".join(f"'{b}', {b}" for b in below)
+    bases = (
+        df.selectExpr(*[f"{sql} AS {b}" for b, sql in below.items()])
+        .selectExpr(f"stack({len(below)}, {unpivot}) AS (k, cnt)")
+        .selectExpr("k", "CAST(NULL AS STRING) AS v", "cnt")
+    )
+    hist = (
+        df.where(" OR ".join(hits))
+        .selectExpr(f"inline(array_compact(array({', '.join(pairs)})))")
+        .groupBy("k", "v")
+        .agg(F.expr("count(1) AS cnt"))
+    )
+    counts: dict[str, int] = {}
+    values: dict[str, list] = {}
+    for r in bases.unionByName(hist).collect():
+        if r["v"] is None:
+            counts[r["k"]] = int(r["cnt"])
+        else:
+            values.setdefault(r["k"], []).append((Decimal(r["v"]), int(r["cnt"])))
+
+    found = {}
+    for f, (_col, _cond, items) in enumerate(families.values()):
+        h = sorted(values.get(f"h{f}", []))
+        for i, (key, t, lo, hi) in enumerate(items):
+            lo, hi = Decimal(str(lo)), Decimal(str(hi))
+            cum = counts[f"b{f}_{i}"]
+            for v, cnt in h:
+                if lo <= v <= hi:
+                    if cum + cnt >= t:
+                        found[key] = (v, cum, cnt)
+                        break
+                    cum += cnt
+            else:
+                raise RuntimeError(f"rank {t} not bracketed for {key}")
+    return found
+
+
 def _ntile_exact_boundaries(
-    df, n: int, specs: list[tuple[str, bool]], tiebreak: str, k: int = 4
+    df, specs: list[tuple[str, bool]], tiebreak: str, k: int = 4
 ):
     """Exact ntile(k) bucket boundaries with NO global sort — the
     distributed replacement for an un-partitioned ``ntile`` window
@@ -1410,15 +1510,31 @@ def _ntile_exact_boundaries(
     of tiebreaks) and flipping the comparison direction; the tiebreak
     stays ascending in both cases, matching ``ORDER BY m DESC, tb``.
 
+    df's row count n comes from the first action; n == 0 returns no
+    boundaries.  The tiebreak is a unique integer key.
+
     Returns {col: [(value, tiebreak_value_or_None, descending)]} —
     ``None`` tiebreak means the boundary is the LAST row of its metric
     tie group, so the bucket test needs no tiebreak compare at all
     (always the case for continuous metrics).
 
-    Cost: 3 fused jobs over ``df`` (+3 only when a boundary splits a
-    tie group); every job is a scan-shaped aggregate.  df should be
-    cached by the caller — it is scanned by each job.
+    Cost: 2 actions over ``df``, +2 only when a boundary splits a tie
+    group; each is a scan-shaped aggregate.  df should be cached by
+    the caller — it is scanned by each action.
     """
+    accuracy = int(round(1.0 / _SKETCH_EPS))
+
+    # --- action 1: row count + every metric's sketch on a fixed grid ------
+    grid = _sketch_grid(k)
+    grid_sql = ",".join(f"{p!r}D" for p in grid)
+    sk_row = df.selectExpr(
+        "count(1) AS __n",
+        *[
+            f"percentile_approx({c}, array({grid_sql}), {accuracy}) AS {c}"
+            for c, _ in specs
+        ],
+    ).first()
+    n = int(sk_row["__n"])
     if n == 0:
         # No rows → no boundaries; _ntile_score_col degenerates to a
         # constant bucket 1 over an empty frame (ADVICE r03: the t / n
@@ -1426,175 +1542,85 @@ def _ntile_exact_boundaries(
         return {c: [] for c, _ in specs}
     q, r = divmod(n, k)
     ranks = [j * q + min(r, j) for j in range(1, k)]
-    eps = 1e-4
-    delta = 4 * eps + 2.0 / max(n, 1)
-    accuracy = int(round(1.0 / eps))
+    delta = 4 * _SKETCH_EPS + 2.0 / n
 
-    # --- job 1: fused sketch — brackets around every target rank ----------
-    targets: dict[str, list[int]] = {}
-    probs: dict[str, list[tuple[float, float]]] = {}
-    for col, desc in specs:
-        ts = [(n - c + 1) if desc else c for c in ranks]
-        targets[col] = ts
-        probs[col] = [
-            (max(0.0, t / n - delta), min(1.0, t / n + delta)) for t in ts
-        ]
-    flat = {c: sorted({p for pair in probs[c] for p in pair}) for c, _ in specs}
-    sk_row = df.agg(
-        *[
-            F.expr(
-                f"percentile_approx({c}, array("
-                + ",".join(f"{p!r}D" for p in flat[c])
-                + f"), {accuracy})"
-            ).alias(c)
-            for c, _ in specs
-        ]
-    ).first()
     # percentile_approx RETURNS ACTUAL COLUMN VALUES (rank selection,
     # no interpolation), so decimal metrics stay exact end-to-end.
-    vals = {c: dict(zip(flat[c], sk_row[c])) for c, _ in specs}
-    brackets = {
-        c: [(vals[c][plo], vals[c][phi]) for plo, phi in probs[c]]
-        for c, _ in specs
+    def bracket(c, t):
+        lo = bisect.bisect_right(grid, t / n - delta) - 1
+        hi = bisect.bisect_left(grid, t / n + delta)
+        return sk_row[c][max(lo, 0)], sk_row[c][min(hi, len(grid) - 1)]
+
+    targets = {
+        c: [(n - cj + 1) if desc else cj for cj in ranks] for c, desc in specs
     }
-
-    # --- job 2: fused base ranks (rows strictly below each bracket) -------
-    bases = df.agg(
-        *[
-            F.sum(F.when(F.col(c) < F.lit(vlo), 1).otherwise(0)).alias(f"b_{c}_{i}")
-            for c, _ in specs
-            for i, (vlo, _) in enumerate(brackets[c])
-        ]
-    ).first()
-
-    # --- job 3: fused bracket histograms (distinct value → count) ---------
-    hist_parts = []
-    for c, _ in specs:
-        cond = None
-        for vlo, vhi in brackets[c]:
-            m = (F.col(c) >= F.lit(vlo)) & (F.col(c) <= F.lit(vhi))
-            cond = m if cond is None else (cond | m)
-        hist_parts.append(
-            df.filter(cond)
-            .groupBy(F.lit(c).alias("col"), F.col(c).cast("string").alias("v"))
-            .agg(F.count(F.lit(1)).alias("cnt"))
-        )
-    hist_df = hist_parts[0]
-    for part in hist_parts[1:]:
-        hist_df = hist_df.unionByName(part)
-    raw_hist: dict[str, list] = {c: [] for c, _ in specs}
-    for row in hist_df.collect():
-        raw_hist[row["col"]].append((row["v"], int(row["cnt"])))
-    # values came back as strings (union needs one type across long /
-    # decimal metrics); re-key numerically for the rank walk
-    from decimal import Decimal
-
-    hists = {
-        c: sorted((Decimal(v), cnt) for v, cnt in raw_hist[c]) for c, _ in specs
-    }
-
-    # --- driver-side exact rank walk per boundary -------------------------
+    # --- action 2: base ranks + bracket histograms, driver rank walk ------
+    at = _bracket_ranks(
+        df,
+        {
+            c: (c, "TRUE", [((c, i), t, *bracket(c, t)) for i, t in enumerate(ts)])
+            for c, ts in targets.items()
+        },
+    )
     # pending[(col, i)] = (v, within_group_pos, group_size)
     found: dict[str, list] = {c: [] for c, _ in specs}
     pending: dict[tuple[str, int], tuple] = {}
     for c, desc in specs:
-        for i, t in enumerate(targets[c]):
-            vlo, vhi = (Decimal(str(b)) for b in brackets[c][i])
-            cum = int(bases[f"b_{c}_{i}"])
-            v_at = grp = base_asc = None
-            for v, cnt in hists[c]:
-                if v < vlo or v > vhi:
-                    continue
-                if cum + cnt >= t:
-                    v_at, grp, base_asc = v, cnt, cum
-                    break
-                cum += cnt
-            if v_at is None:
-                raise RuntimeError(f"rank {t} not bracketed for {c}")
-            # asc-order position within the tie group, then translate to
-            # the QUERY order's position (desc reverses group traversal,
-            # tiebreak asc is shared by both directions)
-            p_asc = t - base_asc
-            c_query = ranks[i]
+        for i in range(k - 1):
+            v_at, base_asc, grp = at[(c, i)]
+            # translate the asc-order tie group to the QUERY order's
+            # position (desc reverses group traversal, tiebreak asc is
+            # shared by both directions)
             before_group = (n - base_asc - grp) if desc else base_asc
-            p_query = c_query - before_group
+            p_query = ranks[i] - before_group
             assert 1 <= p_query <= grp, (c, i, p_query, grp)
             if p_query == grp:
                 found[c].append((v_at, None, desc))
             else:
                 found[c].append(None)  # fill after tie-group selection
                 pending[(c, i)] = (v_at, p_query, grp)
+    if not pending:
+        return found
 
-    # --- optional jobs 4-6: boundaries that split a tie group -------------
-    if pending:
-        sel = {}
-        for (c, i), (v, p, m) in pending.items():
-            d = 4 * eps + 2.0 / max(m, 1)
-            sel[(c, i)] = (max(0.0, p / m - d), min(1.0, p / m + d))
-        tb_sk = df.agg(
-            *[
-                F.expr(
-                    f"percentile_approx(CASE WHEN {c} = CAST('{pending[(c, i)][0]}'"
-                    f" AS {dict(df.dtypes)[c]}) THEN {tiebreak} END, "
-                    f"array({sel[(c, i)][0]!r}D, {sel[(c, i)][1]!r}D), {accuracy})"
-                ).alias(f"s_{c}_{i}")
-                for (c, i) in pending
-            ]
-        ).first()
-        tb_brackets = {key: tuple(tb_sk[f"s_{key[0]}_{key[1]}"]) for key in pending}
-        tb_bases = df.agg(
-            *[
-                F.sum(
-                    F.when(
-                        (F.col(c) == F.lit(pending[(c, i)][0]))
-                        & (F.col(tiebreak) < F.lit(tb_brackets[(c, i)][0])),
-                        1,
-                    ).otherwise(0)
-                ).alias(f"tb_{c}_{i}")
-                for (c, i) in pending
-            ]
-        ).first()
-        tb_parts = []
-        for (c, i) in pending:
-            lo, hi = tb_brackets[(c, i)]
-            tb_parts.append(
-                df.filter(
-                    (F.col(c) == F.lit(pending[(c, i)][0]))
-                    & (F.col(tiebreak) >= F.lit(lo))
-                    & (F.col(tiebreak) <= F.lit(hi))
-                )
-                .select(
-                    F.lit(f"{c}_{i}").alias("key"),
-                    F.col(tiebreak).alias("tb"),
-                )
-            )
-        tb_df = tb_parts[0]
-        for part in tb_parts[1:]:
-            tb_df = tb_df.unionByName(part)
-        tb_vals: dict[str, list] = {f"{c}_{i}": [] for (c, i) in pending}
-        for row in tb_df.collect():
-            tb_vals[row["key"]].append(row["tb"])
-        for (c, i) in pending:
-            v, p, m = pending[(c, i)]
-            got = sorted(tb_vals[f"{c}_{i}"])
-            idx = p - int(tb_bases[f"tb_{c}_{i}"]) - 1  # tiebreak is unique
-            assert 0 <= idx < len(got), (c, i, idx, len(got))
-            desc = dict(specs)[c]
-            found[c][i] = (v, got[idx], desc)
+    # --- actions 3-4: boundaries that split a tie group -------------------
+    # The same selection over the tiebreak, restricted to the group's
+    # rows: the group size m is known, so the sketch is n-aware.
+    dtypes = dict(df.dtypes)
+
+    def in_group(c, v):
+        return f"{c} = CAST('{v}' AS {dtypes[c]})"
+
+    tb_sk = df.selectExpr(
+        *[
+            f"percentile_approx(CASE WHEN {in_group(c, v)} THEN {tiebreak} END,"
+            f" array({max(0.0, p / m - 4 * _SKETCH_EPS - 2.0 / m)!r}D,"
+            f" {min(1.0, p / m + 4 * _SKETCH_EPS + 2.0 / m)!r}D), {accuracy})"
+            f" AS s_{c}_{i}"
+            for (c, i), (v, p, m) in pending.items()
+        ]
+    ).first()
+    families: dict = {}
+    for (c, i), (v, p, _m) in pending.items():
+        lo, hi = tb_sk[f"s_{c}_{i}"]
+        fam = families.setdefault((c, v), (tiebreak, in_group(c, v), []))
+        fam[2].append(((c, i), p, lo, hi))
+    for (c, i), (tb, _, _) in _bracket_ranks(df, families).items():
+        found[c][i] = (pending[(c, i)][0], int(tb), dict(specs)[c])
     return found
 
 
 def _ntile_score_col(col: str, tiebreak: str, boundaries: list, dtype: str):
     """1 + Σ_j [row strictly after boundary j in the query order] —
-    the per-row literal-comparison form of ntile(4)."""
-    score = F.lit(1)
+    the per-row literal-comparison form of ntile(k), as one SQL
+    expression."""
+    terms = []
     for v, tb, desc in boundaries:
-        lit_v = F.expr(f"CAST('{v}' AS {dtype})")
-        after = F.col(col) < lit_v if desc else F.col(col) > lit_v
+        lit_v = f"CAST('{v}' AS {dtype})"
+        after = f"{col} {'<' if desc else '>'} {lit_v}"
         if tb is not None:
-            after = after | ((F.col(col) == lit_v) & (F.col(tiebreak) > F.lit(tb)))
-        score = score + after.cast("int")
-    return score.cast("long")
+            after = f"({after} OR ({col} = {lit_v} AND {tiebreak} > {tb}))"
+        terms.append(f"CAST({after} AS INT)")
+    return F.expr(f"CAST({' + '.join(['1', *terms])} AS BIGINT)")
 
 
 def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1629,9 +1655,8 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     ).persist()
     try:
-        n = per_cust.count()
         specs = [("recency_days", False), ("frequency", True), ("monetary", True)]
-        bounds = _ntile_exact_boundaries(per_cust, n, specs, tiebreak="o_custkey")
+        bounds = _ntile_exact_boundaries(per_cust, specs, tiebreak="o_custkey")
         dtypes = dict(per_cust.dtypes)
         return per_cust.select(
             "o_custkey",
@@ -1650,8 +1675,8 @@ def rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("m_score"),
         )
     finally:
-        # The cache exists for the 3-6 eager boundary jobs, which have
-        # all run by now; releasing it here means the returned (lazy)
+        # The cache exists for the 2-4 eager boundary actions, which
+        # have all run by now; releasing it here means the returned (lazy)
         # plan re-aggregates once when materialized instead of pinning
         # executor memory for the session (ADVICE r03).
         per_cust.unpersist()
@@ -1994,9 +2019,8 @@ def order_value_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_totalprice"
     ).persist()
     try:
-        n = o.count()
         bounds = _ntile_exact_boundaries(
-            o, n, [("o_totalprice", False)], tiebreak="o_orderkey", k=10
+            o, [("o_totalprice", False)], tiebreak="o_orderkey", k=10
         )
         dtypes = dict(o.dtypes)
         binned = o.select(

@@ -985,7 +985,12 @@ def supplier_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape per iteration: one join of the edge list against the
     current rank vector (both hashed on src) and one dst-keyed
     aggregate — the standard distributed PageRank plan; ranks/edges
-    never cross-join."""
+    never cross-join.
+
+    Build cost: the edge cache is filled eagerly (``edges_n.count()``
+    below), so building the query runs a Spark job even when the
+    caller only explains it (plan dumps, plan-shape tests) — kept for
+    the measured win, ADVICE (low)."""
     t = load_tables(spark, sf_dir, ("lineitem", "orders"))
     edges = (
         t["lineitem"]

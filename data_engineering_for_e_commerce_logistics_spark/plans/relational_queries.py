@@ -11,7 +11,6 @@ from ..catalog import load_tables
 from ..functions import (
     exact_avg,
     exact_round,
-    local_rows_df,
     sql_exact_avg,
     sql_exact_round,
     sql_exact_sum,
@@ -24,66 +23,61 @@ _PROFILE_COLS = ["l_quantity", "l_extendedprice", "l_discount", "l_tax"]
 
 def profile_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-column profile (row count, nulls, distincts, min/max/avg) in
-    long format, then unpivoted driver-side — the profile is
-    O(columns) scalars, so the unpivot costs nothing.
+    long format.  A lazy plan: ``build()`` runs no Spark job.
 
-    Plan shape (r05): the algebraic stats fuse into ONE aggregation
-    pass, but the four EXACT distinct counts are per-column
-    ``select(c).distinct().count`` jobs joined back as 1-row
-    broadcasts — NOT four ``countDistinct`` in the fused agg, which
-    Catalyst lowers to a 5-way Expand (one duplicated input row per
-    distinct group: 5× exchange volume; measured 3.4s vs 1.2s at
-    sf0.1).  At 100 TB the split is still the right trade: each
-    distinct job scans one parquet COLUMN (columnar pruning keeps
-    total I/O ≈ the single wide scan) and its exchange carries only
-    the per-partition-deduped distinct values, not 5× the row count.
+    Plan shape: the algebraic stats fuse into ONE aggregation pass.
+    The four EXACT distinct counts share one more pass: each row emits
+    a (column index, value) pair per profiled column (``inline``, a
+    Generate), NULLs drop, partial aggregation dedups the pairs per
+    partition before the exchange, and one count per index follows;
+    the 1-row result is cross-joined back as a broadcast.  Never put
+    ``countDistinct`` in the fused agg: Catalyst lowers it to an
+    Expand that carries every aggregate's inputs through the
+    exchange.  The single wide row is unpivoted in the plan by
+    ``inline`` over one struct per column, so the profile never
+    round-trips through the driver.  Over an empty lineitem the global
+    aggregates still give their one row: counts 0, min/max/avg NULL.
 
     Ref: csv_loader.py:217-258 profile_data (dict-of-dicts shape)."""
     li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    aggs = []
+    aggs = [F.count(F.lit(1)).alias("__rows")]
     for c in _PROFILE_COLS:
         aggs += [
-            F.count(F.lit(1)).alias(f"{c}__rows"),
             F.count(F.when(F.col(c).isNull(), 1)).alias(f"{c}__nulls"),
             F.min(F.col(c)).cast("double").alias(f"{c}__min"),
             F.max(F.col(c)).cast("double").alias(f"{c}__max"),
             exact_avg(c, 6).alias(f"{c}__avg"),
         ]
-    profile = li.agg(*aggs)
-    for c in _PROFILE_COLS:
-        # isNotNull before distinct = countDistinct semantics (the
-        # oracle's count(DISTINCT c) excludes NULL; ADVICE r05).
-        d = (
-            li.select(c)
-            .where(F.col(c).isNotNull())
-            .distinct()
-            .agg(F.count(F.lit(1)).alias(f"{c}__distinct"))
+    # the profiled columns are doubles, so one value type holds them all
+    pairs = ", ".join(
+        f"named_struct('i', {i}, 'v', CAST({c} AS DOUBLE))"
+        for i, c in enumerate(_PROFILE_COLS)
+    )
+    distinct = (
+        li.select(F.expr(f"inline(array({pairs}))"))
+        .where(F.col("v").isNotNull())  # count(DISTINCT c) excludes NULL
+        .distinct()
+        .agg(
+            *[
+                F.count(F.when(F.col("i") == i, 1)).alias(f"{c}__distinct")
+                for i, c in enumerate(_PROFILE_COLS)
+            ]
         )
-        profile = profile.crossJoin(F.broadcast(d))
-    row = profile.first()
-
-    def opt_float(v):
-        # min/max/avg are NULL over an empty (or all-NULL) column
-        return None if v is None else float(v)
-
-    records = [
-        (
-            c,
-            int(row[f"{c}__rows"]),
-            int(row[f"{c}__nulls"]),
-            int(row[f"{c}__distinct"]),
-            opt_float(row[f"{c}__min"]),
-            opt_float(row[f"{c}__max"]),
-            opt_float(row[f"{c}__avg"]),
+    )
+    profile = li.agg(*aggs).crossJoin(F.broadcast(distinct))
+    per_col = [
+        F.struct(
+            F.lit(c).alias("col_name"),
+            F.col("__rows").alias("n_rows"),
+            F.col(f"{c}__nulls").alias("n_nulls"),
+            F.col(f"{c}__distinct").alias("n_distinct"),
+            F.col(f"{c}__min").alias("min_value"),
+            F.col(f"{c}__max").alias("max_value"),
+            F.col(f"{c}__avg").alias("avg_value"),
         )
         for c in _PROFILE_COLS
     ]
-    return local_rows_df(
-        spark,
-        records,
-        "col_name string, n_rows long, n_nulls long, n_distinct long,"
-        " min_value double, max_value double, avg_value double",
-    )
+    return profile.select(F.inline(F.array(*per_col)))
 
 
 PROFILE_LINEITEM_SQL = "\nUNION ALL\n".join(
@@ -889,7 +883,7 @@ def manifest_pruned_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z = spark.read.parquet(path)
     manifest = file_manifest(z, ["o_custkey", "o_totalprice"])
-    pruned = read_pruned(spark, manifest, "o_custkey", 100, 200)
+    pruned = read_pruned(spark, manifest, "o_custkey", 100, 200, table=z)
     return pruned.groupBy("o_orderstatus").agg(
         F.count(F.lit(1)).alias("n_orders"),
         F.expr(sql_exact_sum("o_totalprice", 2)).alias("sum_price"),

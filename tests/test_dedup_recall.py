@@ -3,6 +3,8 @@ measured against the exact all-pairs Jaccard ground truth."""
 
 from __future__ import annotations
 
+import hashlib
+
 import pytest
 
 from data_engineering_for_e_commerce_logistics_spark.catalog import read_parquet_table
@@ -80,6 +82,42 @@ def test_simhash_swar_lane_overflow_raises(spark):
         shingle_k=2,
     ).collect()
     assert len(out) == 1 and out[0].simhash is not None
+
+
+def _reference_simhash(text: str, k: int = 2):
+    """Pure-Python SimHash with the engine's rule: distinct word
+    k-shingles, md5 of each, bit j votes on bit j%4 of hex digit j//4,
+    and the bit is set only on a strict majority (a tie gives 0)."""
+    toks = text.split(" ")
+    shingles = {" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)}
+    if not shingles:
+        return None, []
+    words = [int(hashlib.md5(s.encode()).hexdigest()[:16], 16) for s in shingles]
+    sig, ties = 0, []
+    for j in range(64):
+        at = 4 * (15 - j // 4) + j % 4
+        ones = sum((w >> at) & 1 for w in words)
+        if 2 * ones > len(words):
+            sig |= 1 << j
+        elif 2 * ones == len(words):
+            ties.append(j)
+    return (sig - (1 << 64) if sig >> 63 else sig), ties
+
+
+def test_simhash_bit_exact_against_python_reference(spark):
+    texts = {
+        1: "red owl",  # one shingle whose md5 sets bit 63
+        2: "red owl fox",  # two shingles: every differing bit is a tie
+        3: "a b a b a b c",  # repeated shingles count once
+        4: "the quick brown fox jumps over the lazy dog near the river bank",
+        5: "solo",  # fewer tokens than k: no shingle, no signature
+    }
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    got = {r.doc_id: r.simhash for r in dedup.simhash(df, shingle_k=2).collect()}
+    want = {i: _reference_simhash(t) for i, t in texts.items()}
+    assert got == {i: sig for i, (sig, _) in want.items() if sig is not None}
+    assert want[1][0] < 0  # bit 63 is the sign bit
+    assert want[2][1]  # the tied votes exist, and gave bit 0
 
 
 def test_exact_duplicates_no_false_positives(spark, docs):

@@ -74,3 +74,10 @@ def test_empty_orders_keep_grand_totals(spark, sf_empty):
     want = _matches_oracle(spark, "grouping_sets_orders", sf_empty)
     # ROLLUP's and CUBE's () sets: one row each, count 0
     assert list(want["n_orders"]) == [0, 0]
+
+
+def test_empty_orders_manifest_pruned_scan(spark, sf_empty):
+    """An empty table's manifest lists no file; the pruned scan still
+    answers with no rows in the table's schema."""
+    want = _matches_oracle(spark, "manifest_pruned_orders", sf_empty)
+    assert len(want) == 0

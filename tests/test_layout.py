@@ -149,7 +149,7 @@ def test_read_pruned_exact_and_skips_files(spark, zordered_table):
     df = spark.read.parquet(zordered_table)
     man = layout.file_manifest(df, ["a", "b"])
     for col in ("a", "b"):
-        pruned = layout.read_pruned(spark, man, col, 10, 20)
+        pruned = layout.read_pruned(spark, man, col, 10, 20, table=df)
         full = df.where((F.col(col) >= 10) & (F.col(col) <= 20))
         assert sorted(r.payload for r in pruned.collect()) == sorted(
             r.payload for r in full.collect()
@@ -161,7 +161,7 @@ def test_read_pruned_exact_and_skips_files(spark, zordered_table):
 def test_read_pruned_empty_selection(spark, zordered_table):
     df = spark.read.parquet(zordered_table)
     man = layout.file_manifest(df, ["a", "b"])
-    out = layout.read_pruned(spark, man, "a", 1000, 2000)
+    out = layout.read_pruned(spark, man, "a", 1000, 2000, table=df)
     assert out.count() == 0
     assert "payload" in out.columns
 

@@ -193,10 +193,55 @@ def test_rfm_segments_no_window_no_global_sort(spark):
     assert "ntile" not in plan
 
 
+def _build_cost(spark, name: str) -> tuple[int, int]:
+    """Build spec ``name`` under a job group; return the Spark jobs and
+    the SQL executions (one per driver action) the build started.  A
+    first build warms the catalog's scan memo: reading a parquet
+    table's schema the first time is a job of the catalog's, not of
+    the builder's."""
+    all_specs()[name].build(spark, SF)
+    sc = spark.sparkContext
+    store = spark._jsparkSession.sharedState().statusStore()
+    bus = sc._jsc.sc().listenerBus()
+    spark.catalog.clearCache()
+    bus.waitUntilEmpty()
+    held = store.executionsCount()
+    last = store.executionsList(held - 1, 1).head().executionId() if held else -1
+    group = f"build-{name}"
+    sc.setJobGroup(group, group)
+    try:
+        all_specs()[name].build(spark, SF)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker and store are fed by the listener bus, asynchronously
+    bus.waitUntilEmpty()
+    actions = 0
+    while store.execution(last + 1 + actions).isDefined():
+        actions += 1
+    return len(sc.statusTracker().getJobIdsForGroup(group)), actions
+
+
+@pytest.mark.parametrize("name", ["dedup_simhash_suite", "profile_lineitem"])
+def test_lazy_builds_run_no_job(spark, name):
+    """Both builders return lazy plans: building one starts no job."""
+    assert _build_cost(spark, name) == (0, 0)
+
+
+def test_rfm_build_runs_at_most_four_actions(spark):
+    """The boundary selection fuses the count into its sketch, and each
+    histogram collect with its base counts: 2 actions, +2 when a
+    boundary splits a tie group."""
+    jobs, actions = _build_cost(spark, "rfm_segments")
+    assert 2 <= actions <= 4 and jobs >= actions, (jobs, actions)
+
+
 def test_ntile_exact_boundaries_matches_ntile(spark):
     """Synthetic heavy-tie data (splits tie groups on every boundary)
-    scored via literal boundaries must equal real ntile(4) for both
-    directions."""
+    scored via literal boundaries must equal real ntile(k) for both
+    directions, at k=4 and k=10, on tiny inputs (n below k: empty
+    buckets) and on one of 1001 rows; n comes from the fused
+    count-and-sketch action."""
     from pyspark.sql import Window
 
     from data_engineering_for_e_commerce_logistics_spark.plans.analytics_queries import (
@@ -204,48 +249,23 @@ def test_ntile_exact_boundaries_matches_ntile(spark):
         _ntile_score_col,
     )
 
-    rows = [(i, (i * 7) % 5) for i in range(1, 1002)]  # 5 fat tie groups
-    df = spark.createDataFrame(rows, "ck bigint, v bigint").repartition(8)
-    df = df.persist()
-    n = df.count()
-    bounds = _ntile_exact_boundaries(df, n, [("v", False)], "ck")
-    got = df.select(
-        "ck", _ntile_score_col("v", "ck", bounds["v"], "bigint").alias("s")
-    )
-    want = df.select(
-        "ck",
-        F.ntile(4)
-        .over(Window.orderBy(F.col("v").asc(), F.col("ck").asc()))
-        .cast("long")
-        .alias("s"),
-    )
-    assert (
-        got.alias("g")
-        .join(want.alias("w"), "ck")
-        .filter("g.s <> w.s")
-        .count()
-        == 0
-    )
-    # descending direction
-    bounds_d = _ntile_exact_boundaries(df, n, [("v", True)], "ck")
-    got_d = df.select(
-        "ck", _ntile_score_col("v", "ck", bounds_d["v"], "bigint").alias("s")
-    )
-    want_d = df.select(
-        "ck",
-        F.ntile(4)
-        .over(Window.orderBy(F.col("v").desc(), F.col("ck").asc()))
-        .cast("long")
-        .alias("s"),
-    )
-    assert (
-        got_d.alias("g")
-        .join(want_d.alias("w"), "ck")
-        .filter("g.s <> w.s")
-        .count()
-        == 0
-    )
-    df.unpersist()
+    for n in (1, 3, 5, 1001):
+        rows = [(i, (i * 7) % 5) for i in range(1, n + 1)]  # 5 fat tie groups
+        df = spark.createDataFrame(rows, "ck bigint, v bigint").repartition(8)
+        df = df.persist()
+        for k in (4, 10):
+            for desc in (False, True):
+                bounds = _ntile_exact_boundaries(df, [("v", desc)], "ck", k=k)
+                order = F.col("v").desc() if desc else F.col("v").asc()
+                wrong = df.select(
+                    _ntile_score_col("v", "ck", bounds["v"], "bigint").alias("got"),
+                    F.ntile(k)
+                    .over(Window.orderBy(order, F.col("ck").asc()))
+                    .cast("long")
+                    .alias("want"),
+                ).filter("got <> want")
+                assert wrong.count() == 0, (n, k, desc, bounds)
+        df.unpersist()
 
 
 def test_ntile_exact_boundaries_empty_input(spark):
@@ -257,7 +277,7 @@ def test_ntile_exact_boundaries_empty_input(spark):
     )
 
     df = spark.createDataFrame([], "ck bigint, v bigint")
-    bounds = _ntile_exact_boundaries(df, 0, [("v", False)], "ck")
+    bounds = _ntile_exact_boundaries(df, [("v", False)], "ck")
     assert bounds == {"v": []}
     scored = df.select("ck", _ntile_score_col("v", "ck", bounds["v"], "bigint"))
     assert scored.count() == 0
