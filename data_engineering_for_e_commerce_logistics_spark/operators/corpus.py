@@ -36,7 +36,7 @@ import functools
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions import exact_round, local_rows_df, spread_scan, sql_exact_sum
+from ..functions import exact_round, local_rows_df, spread_scan
 from .dedup import shingles_from_tokens
 from .text import STOPWORDS, tokens_col
 
@@ -570,124 +570,6 @@ def pack_sequences(
         F.floor((cum - F.col("n_tokens")) / token_budget)
         .cast("long")
         .alias("bin_id"),
-    )
-
-
-def weighted_sample_flag(
-    df: DataFrame,
-    weight_col: str,
-    n_per_stratum: int,
-    strata: list[str] | tuple[str, ...] = (),
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Deterministic WEIGHTED sampling without replacement — exactly
-    the top ``n_per_stratum`` rows per stratum by the Sequential
-    Poisson Sampling order (Ohlsson 1998): rank key ``ξ = u / w``
-    ascending, where ``u`` is the uniform-(0,1] fraction encoded by
-    the row id's first 8 md5 hex digits and ``w`` the row's weight —
-    inclusion probability ≈ proportional to weight (πps), the
-    quality- or length-weighted corpus subsampling pretraining mixes
-    use instead of uniform draws.  Hash-keyed (no ``rand()``), so
-    runs, engines, and cluster sizes agree row-for-row; ξ is ONE
-    exact-rounded IEEE division of two exactly-constructed doubles,
-    so DuckDB reproduces every key bit-for-bit — no transcendental
-    (the classic Efraimidis–Spirakis ``u^(1/w)`` key would order
-    identically but its ``pow`` is not cross-engine bit-stable).
-
-    Returns ONLY the sampled rows: (strata…, id, weight, skey,
-    sample_rank), rank 1 = smallest key.  Rows with NULL or
-    non-positive weight are excluded (a zero-weight row has inclusion
-    probability 0 by definition).  Null strata values form their own
-    stratum (null-safe joins throughout).
-
-    Scale shape — top-n-per-stratum WITHOUT a per-stratum window: a
-    window partitioned on strata alone serializes each mega-stratum
-    into one task (the audited cliff).  Instead (1) each row's bucket
-    = #power-of-two boundaries ≤ ξ, an EXACT comparison ladder
-    (power-of-two doubles are exact literals; counting boundaries is
-    monotone BY CONSTRUCTION — ``floor(log2(ξ))`` would be one libm
-    rounding away from inverting a boundary pair, the same
-    double-evaluation class of hazard as an uncached approx
-    boundary).  Deterministic pure per-row expression: no boundary
-    frame, no cache;
-    (2) per-(stratum, bucket) counts fold to cumulative offsets;
-    (3) only rows in buckets whose offset < n can be top-n — every
-    other row is dropped WITHOUT ranking (for uniform-ish u the
-    small-key buckets are the thin geometric tail, so the ranked
-    candidate set is O(n) per stratum); (4) exact rank = offset +
-    row_number within (stratum, bucket), ties (astronomically
-    unlikely sub-ulp key collisions) broken by id.  Parallelism is
-    strata × candidate-buckets; the offsets frame broadcasts."""
-    w = F.col(weight_col).cast("double")
-    u = (
-        F.conv(F.substring(F.md5(F.col(id_col).cast("string")), 1, 8), 16, 10)
-        .cast("double")
-        + F.lit(1.0)
-    ) / F.lit(4294967296.0)
-    # geometric bucket ladder: exact power-of-two doubles spanning the
-    # practical key range; keys outside collapse into the end buckets
-    # (still ordered ranges — balance degrades, never correctness)
-    ladder = F.array(*[F.lit(2.0**k) for k in range(-48, 49)])
-    d = (
-        df.filter(w > 0)
-        .select(
-            *strata,
-            F.col(id_col),
-            w.alias("weight"),
-            (u / w).alias("skey"),
-        )
-        .withColumn(
-            "__bkt",
-            F.size(F.filter(ladder, lambda b: b <= F.col("skey"))).cast(
-                "long"
-            ),
-        )
-    )
-    return _topn_by_bucketed_key(d, strata, n_per_stratum, id_col, ("weight",))
-
-
-def _topn_by_bucketed_key(
-    d: DataFrame,
-    strata: list[str] | tuple[str, ...],
-    n_per_stratum: int,
-    id_col: str,
-    payload_cols: tuple[str, ...],
-) -> DataFrame:
-    """Exact top-n-per-stratum by ascending ``skey`` WITHOUT a
-    per-stratum window — the tail of ``weighted_sample_flag``.  ``d`` must carry ``skey`` (the order
-    key), ``__bkt`` (a monotone-in-skey bucket id), ``strata``,
-    ``id_col`` and ``payload_cols``.  Per-(stratum, bucket) counts
-    fold to cumulative offsets; only buckets whose offset < n can
-    hold top-n rows, so everything else drops WITHOUT ranking; exact
-    rank = offset + row_number within (stratum, bucket), ties broken
-    by id.  Parallelism is strata × candidate-buckets; the offsets
-    frame broadcasts."""
-    counts = d.groupBy(*strata, "__bkt").agg(F.count(F.lit(1)).alias("__c"))
-    w_off = (
-        Window.partitionBy(*strata)
-        .orderBy("__bkt")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    offsets = counts.select(
-        *strata,
-        "__bkt",
-        F.coalesce(F.sum("__c").over(w_off), F.lit(0)).alias("__off"),
-    ).filter(F.col("__off") < n_per_stratum)
-    keys = [*strata, "__bkt"]
-    off2 = offsets.withColumnsRenamed({k: f"__r_{k}" for k in keys})
-    cond = functools.reduce(
-        Column.__and__,
-        [F.col(k).eqNullSafe(F.col(f"__r_{k}")) for k in keys],
-    )
-    w_rank = Window.partitionBy(*strata, "__bkt").orderBy("skey", id_col)
-    return (
-        d.join(F.broadcast(off2), cond)
-        .withColumn(
-            "sample_rank",
-            (F.col("__off") + F.row_number().over(w_rank)).cast("long"),
-        )
-        .filter(F.col("sample_rank") <= n_per_stratum)
-        .select(*strata, id_col, *payload_cols, "skey", "sample_rank")
     )
 
 
@@ -1418,179 +1300,6 @@ def tfidf_topk(
     )
 
 
-def bm25_topk(
-    df: DataFrame,
-    query_ids,
-    k: int = 5,
-    k1: float = 1.2,
-    b: float = 0.75,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    tf_table: DataFrame | None = None,
-) -> DataFrame:
-    """Top-k BM25 lexical retrieval: score every corpus document
-    against each query document's term set and keep the k best
-    (Robertson & Zaragoza, "The Probabilistic Relevance Framework:
-    BM25 and Beyond", FnTIR 2009 — the Lucene-default ranking
-    function).  The lexical complement of the embedding retrieval
-    family: catches keyword matches embeddings blur, costs no
-    vector pass, and its candidate set is bounded by the query
-    terms' posting lists rather than the corpus.
-
-    score(q, d) = Σ_{t ∈ q ∩ d} idf(t) · tf·(k1+1) /
-                  (tf + k1·(1 − b + b·dl/avgdl)),
-    idf = ln(1 + (N − df + ½)/(df + ½))  — the Lucene form, always
-    positive, no negative-score clamp needed.
-
-    Exactness contract (the tfidf_topk discipline, extended): the idf
-    — the only transcendental — is decimal-rounded at 6 dp per term
-    (``exact_round``); every other factor is pure double arithmetic
-    in an operation order the DuckDB oracle mirrors token-for-token,
-    so both engines multiply bitwise-identical factors.  Per-term
-    contributions then sum in decimal(28,8) (order-independent) with
-    a final 4-dp round, and the rank window orders on that rounded
-    sum with a doc-id tiebreak — cross-engine drift cannot reorder.
-
-    100 TB shape: everything derives from the ``(id, term, tf)``
-    frame (share it via ``tf_table`` when a TF-IDF pass already built
-    it).  The query-term relation is |Q|·terms rows — BROADCAST, so
-    the postings join never shuffles the corpus side on anything but
-    its existing term key; the per-query-vocab df table is broadcast
-    likewise; doc lengths join doc-keyed only for posting-list
-    SURVIVORS.  Driver never sees a row.  Self-matches (query doc
-    retrieving itself) are excluded."""
-    if tf_table is None:
-        terms = df.select(
-            F.col(id_col), F.explode(tokens_col(text_col)).alias("term")
-        )
-        tf_table = terms.groupBy(id_col, "term").agg(
-            F.count(F.lit(1)).alias("tf")
-        )
-    tf = tf_table
-    dl = tf.groupBy(id_col).agg(F.sum("tf").alias("dl"))
-    stats = dl.agg(
-        F.count(F.lit(1)).alias("n_docs"), F.sum("dl").alias("total_dl")
-    )
-    qterms = tf.where(F.col(id_col).isin(list(query_ids))).select(
-        F.col(id_col).alias("query_id"), "term"
-    )
-    # df over the query vocabulary only — same values the full term
-    # df table would carry, but bounded by |Q ∪ terms| so it stays
-    # broadcast-able no matter the corpus
-    qdf = (
-        tf.join(F.broadcast(qterms.select("term").distinct()), "term", "left_semi")
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("df"))
-    )
-    cand = (
-        tf.join(F.broadcast(qterms), "term")
-        .where(F.col(id_col) != F.col("query_id"))
-        .join(F.broadcast(qdf), "term")
-        .join(dl, id_col)
-        .crossJoin(F.broadcast(stats))
-    )
-    avgdl = F.col("total_dl").cast("double") / F.col("n_docs")
-    idf_r = exact_round(
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + F.lit(0.5))
-            / (F.col("df") + F.lit(0.5))
-        ),
-        6,
-    )
-    num = F.col("tf") * F.lit(k1 + 1.0)
-    denom = F.col("tf") + F.lit(k1) * (
-        F.lit(1.0 - b) + F.lit(b) * F.col("dl") / avgdl
-    )
-    contrib = (idf_r * num / denom).alias("contrib")
-    grouped = (
-        cand.select("query_id", F.col(id_col), contrib)
-        .groupBy("query_id", id_col)
-        .agg(
-            F.count(F.lit(1)).alias("n_terms"),
-            F.expr(sql_exact_sum("contrib", 4)).alias("bm25"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("bm25").desc(), F.col(id_col).asc()
-    )
-    return (
-        grouped.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "n_terms", "bm25", "rank")
-    )
-
-
-# ---------------------------------------------------------------------------
-# Reciprocal Rank Fusion (hybrid retrieval)
-# ---------------------------------------------------------------------------
-
-
-def rrf_fuse(
-    legs: dict[str, DataFrame],
-    c: int = 60,
-    k: int = 10,
-    query_col: str = "query_id",
-    item_col: str = "item_id",
-    rank_col: str = "rank",
-) -> DataFrame:
-    """Reciprocal Rank Fusion (Cormack, Clarke & Büttcher, SIGIR'09):
-    merge per-query ranked lists from heterogeneous retrievers by
-    ``score(d) = Σ_legs 1/(c + rank_leg(d))`` — the standard hybrid
-    lexical+semantic combiner; a doc absent from a leg contributes 0.
-    ``legs`` maps leg name → (query, item, rank) frame; output carries
-    one nullable ``<name>_rank`` per leg plus (rrf_score, rrf_rank),
-    top-k per query, item-id tiebreak.
-
-    Cross-engine exactness: each term is ONE IEEE division of exact
-    integers and the score a fixed-width sum of ≤len(legs) such
-    doubles — no transcendental, no across-row float sum — so every
-    engine orders candidates identically.
-
-    Scale shape: each leg is already a per-query top-n (bounded by
-    construction — the fused pool is ≤ Σ n_leg rows per query), so
-    the outer joins and the final rank window touch only
-    |queries| × pool rows no matter the corpus size behind the
-    legs."""
-    fused: DataFrame | None = None
-    names = list(legs)
-    for name in names:
-        leg = legs[name].select(
-            query_col,
-            item_col,
-            F.col(rank_col).cast("int").alias(f"{name}_rank"),
-        )
-        fused = (
-            leg
-            if fused is None
-            else fused.join(leg, [query_col, item_col], "full_outer")
-        )
-    score = functools.reduce(
-        Column.__add__,
-        [
-            F.coalesce(
-                F.lit(1.0) / (F.lit(c) + F.col(f"{n}_rank")), F.lit(0.0)
-            )
-            for n in names
-        ],
-    )
-    w = Window.partitionBy(query_col).orderBy(
-        F.col("rrf_score").desc(), F.col(item_col).asc()
-    )
-    return (
-        fused.withColumn("rrf_score", score)
-        .withColumn("rrf_rank", F.row_number().over(w).cast("int"))
-        .filter(F.col("rrf_rank") <= k)
-        .select(
-            query_col,
-            item_col,
-            *[f"{n}_rank" for n in names],
-            "rrf_score",
-            "rrf_rank",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # Cluster representative selection
 # ---------------------------------------------------------------------------
@@ -2014,203 +1723,6 @@ def prepare_training_corpus(
     return packed, report
 
 
-# ---------------------------------------------------------------------------
-# Coverage-maximizing source selection (submodular greedy)
-# ---------------------------------------------------------------------------
-
-# The greedy runs on a mask-count SUMMARY whose size is bounded by
-# 2^|sources| regardless of corpus size; past ~20 sources the pull
-# stops being "bounded driver state" and selection should go
-# hierarchical (select within source groups, then across groups).
-COVERAGE_MAX_SOURCES = 20
-
-
-def coverage_sources(
-    df: DataFrame, source_col: str = "source"
-) -> list[str]:
-    """The fixed source universe (sorted, bit i = i-th source).  For a
-    one-shot build it derives from the frame; an INCREMENTAL loop must
-    pass the same registry-known list at every batch — a batch that
-    happens to lack a source must not renumber the bits."""
-    srcs = [
-        r[0]
-        for r in df.where(F.col(source_col).isNotNull())
-        .select(source_col)
-        .distinct()
-        .orderBy(source_col)
-        .collect()
-    ]
-    if len(srcs) > COVERAGE_MAX_SOURCES:
-        raise ValueError(
-            f"source_coverage: {len(srcs)} sources exceeds the "
-            f"{COVERAGE_MAX_SOURCES}-source mask bound (2^|S| driver "
-            "summary); select hierarchically over source groups instead"
-        )
-    return srcs
-
-
-def ngram_masks(
-    df: DataFrame,
-    sources: list[str],
-    text_col: str = "text",
-    source_col: str = "source",
-    ngram_k: int = 3,
-) -> DataFrame:
-    """Per-ngram source bitmasks ``(ng, mask)`` — the coverage INDEX.
-    ``bit_or`` is associative, commutative, and idempotent, so the
-    index is MERGEABLE exactly like the CMS (cell = ngram, merge =
-    bit_or instead of sum): masks(C1 ∪ C2) = bit_or-merge(masks(C1),
-    masks(C2)), replayed batches change nothing, and per-ingest-batch
-    indexes accrue as append-only segments.  Unlike the CMS grid the state grows with
-    DISTINCT ngrams — the dedup-index contrast, stated not hidden."""
-    if len(sources) > COVERAGE_MAX_SOURCES:
-        raise ValueError(
-            f"source_coverage: {len(sources)} sources exceeds the "
-            f"{COVERAGE_MAX_SOURCES}-source mask bound"
-        )
-    spark = df.sparkSession
-    idx = F.broadcast(
-        local_rows_df(
-            spark,
-            [(s, i) for i, s in enumerate(sources)],
-            f"{source_col} string, __idx int",
-        )
-    )
-    pairs = (
-        df.where(
-            F.col(source_col).isNotNull() & F.col(text_col).isNotNull()
-        )
-        .select(
-            F.col(source_col),
-            F.explode(
-                shingles_from_tokens(F.split(F.col(text_col), " "), ngram_k)
-            ).alias("ng"),
-        )
-    )
-    return (
-        pairs.join(idx, source_col)
-        .groupBy("ng")
-        # shiftleft by a COLUMN needs the SQL form (the PySpark helper
-        # only takes a literal bit count)
-        .agg(
-            F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), __idx)")).alias(
-                "mask"
-            )
-        )
-    )
-
-
-def masks_summary(index: DataFrame) -> DataFrame:
-    """Collapse the (ng, mask) index to the ``(mask, cnt)`` summary
-    the greedy optimizes over — ≤ 2^|sources| rows regardless of
-    corpus size."""
-    return index.groupBy("mask").agg(F.count(F.lit(1)).alias("cnt"))
-
-
-def source_coverage_masks(
-    df: DataFrame,
-    text_col: str = "text",
-    source_col: str = "source",
-    ngram_k: int = 3,
-) -> DataFrame:
-    """The distributed half of greedy source selection: collapse the
-    corpus to ``(mask, cnt)`` — for every distinct word-``ngram_k``-gram,
-    the bitmask of sources containing it (bit i = i-th source in
-    lexicographic order), counted per distinct mask.
-
-    Scale shape: one shingle explode, then ``bit_or`` straight to
-    masks (OR is idempotent, so no distinct pass is needed — repeated
-    (source, ngram) hits set the same bit), one hash-agg to mask
-    counts — all map-side combinable, two real exchanges total.
-    The output is ≤ 2^|sources| rows
-    (≤ 1M at the COVERAGE_MAX_SOURCES=20 cap) INDEPENDENT of
-    corpus size — the whole point: a 100 TB corpus folds into a ≤16 MB
-    coverage summary that a driver (or a notebook) can optimize over
-    exactly."""
-    srcs = coverage_sources(df, source_col)
-    return masks_summary(
-        ngram_masks(df, srcs, text_col, source_col, ngram_k)
-    )
-
-
-def source_coverage_greedy(
-    df: DataFrame,
-    k_select: int = 5,
-    text_col: str = "text",
-    source_col: str = "source",
-    ngram_k: int = 3,
-) -> DataFrame:
-    """Greedy coverage-maximizing source selection — "which
-    ``k_select`` sources, taken together, cover the most distinct
-    n-grams?"  The curation question behind corpus mixing: coverage
-    (distinct n-grams) is monotone submodular, so the greedy sweep is
-    within (1 − 1/e) ≈ 63% of the optimal subset (Nemhauser,
-    Wolsey & Fisher 1978) — and in practice the ranking is what gets
-    used: sources ordered by MARGINAL novelty, with the diminishing
-    returns made visible.
-
-    Returns one row per greedy pick: ``(sel_rank, source, gain,
-    covered, coverage_frac)`` — gain = distinct n-grams this pick adds
-    over everything already selected, covered = running total,
-    coverage_frac = covered / all distinct n-grams.  Ties break to the
-    lexicographically smaller source; exhausted coverage still picks
-    (gain 0) so the output is always ``k_select`` rows (or |sources|
-    if fewer).
-
-    Exactness: the greedy runs on the EXACT mask-count summary from
-    ``source_coverage_masks`` (bounded driver pull ≤ 2^|S| rows — the
-    quantile-bracket precedent, not a data collect), so gains are
-    exact integers and the single coverage division is reproduced
-    bit-for-bit by the SQL oracle's unrolled greedy."""
-    srcs = coverage_sources(df, source_col)
-    summary = masks_summary(
-        ngram_masks(df, srcs, text_col, source_col, ngram_k)
-    )
-    return greedy_from_summary(df.sparkSession, summary, srcs, k_select)
-
-
-def greedy_from_summary(
-    spark,
-    summary: DataFrame,
-    sources: list[str],
-    k_select: int,
-) -> DataFrame:
-    """The greedy sweep over an already-built ``(mask, cnt)`` summary —
-    shared by the one-shot build and the incremental flow (whose
-    summary comes off the PERSISTED streamed index instead of a
-    corpus scan).  Bounded driver pull ≤ 2^|sources| rows."""
-    masks = [(r["mask"], r["cnt"]) for r in summary.collect()]
-    total = sum(c for _, c in masks)
-    picked = 0
-    covered = 0
-    rows = []
-    for rank in range(1, min(k_select, len(sources)) + 1):
-        best = None
-        for i, s in enumerate(sources):
-            bit = 1 << i
-            if picked & bit:
-                continue
-            gain = sum(
-                c for m, c in masks if (m & bit) and not (m & picked)
-            )
-            if best is None or gain > best[0] or (
-                gain == best[0] and s < best[1]
-            ):
-                best = (gain, s, bit)
-        gain, s, bit = best
-        picked |= bit
-        covered += gain
-        rows.append(
-            (rank, s, gain, covered, (covered / total) if total else 0.0)
-        )
-    return local_rows_df(
-        spark,
-        rows,
-        "sel_rank int, source string, gain bigint, covered bigint,"
-        " coverage_frac double",
-    )
-
-
 def chi_square_independence(
     df: DataFrame,
     a_col: str,
@@ -2289,147 +1801,4 @@ def chi_square_independence(
         "dof",
         "n",
         (F.col("chi2") > F.lit(float(critical))).alias("verdict"),
-    )
-
-
-# Poisson(1) inverse-CDF ladder: P(≤k) thresholds for k = 0..4; a
-# hash-uniform above the last threshold draws weight 5.  Literal
-# doubles, identical in both engines.
-POISSON1_CDF = (
-    0.36787944117144233,  # e^-1
-    0.7357588823428847,
-    0.9196986029286058,
-    0.9810118431238462,
-    0.9963401531726563,
-)
-
-
-def poisson_bootstrap_ci(
-    df: DataFrame,
-    value_col: str,
-    id_col: str = "doc_id",
-    n_replicates: int = 20,
-    z: float = 1.96,
-) -> DataFrame:
-    """Deterministic Poisson bootstrap — the SCALABLE bootstrap: the
-    classic resample-n-rows-n-times bootstrap needs coordinated
-    sampling, but replacing each row's replicate multiplicity with an
-    independent Poisson(1) draw gives the same asymptotics with ONE
-    corpus pass and no coordination (the standard big-data bootstrap
-    construction).  Draws are hash-derived — ``md5(id:replicate)`` →
-    uniform → inverse-CDF ladder — so the "randomness" is exact,
-    reproducible, and engine-portable (the weighted-sample ξ
-    discipline).
-
-    Returns one row: the full-sample ``estimate`` (mean of
-    ``value_col``), the bootstrap ``boot_mean``/``boot_std`` over
-    ``n_replicates`` replicate means, and the normal-approximation
-    ``ci_lo``/``ci_hi`` at ±z·σ — the error bar a corpus-level
-    number ships with.
-
-    Exactness: integer values make every replicate's Σw·x and Σw
-    EXACT integer sums; replicate means are single divisions; the
-    replicate-level moments run 9dp-rounded decimal sums over the
-    bounded B-row frame — bitwise vs the unexpanded-CTE oracle.
-
-    100 TB shape: one explode(B) per row feeding ONE hash-agg whose
-    map-side combine collapses each partition to B rows; everything
-    after is window arithmetic over the B-row frame."""
-    b_arr = F.sequence(F.lit(0), F.lit(n_replicates - 1))
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col(id_col).cast("string"),
-                        F.lit(":"),
-                        F.col("__b").cast("string"),
-                    )
-                ),
-                1,
-                8,
-            ),
-            16,
-            10,
-        ).cast("long")
-        .cast("double")
-        / F.lit(4294967296.0)
-    )
-    w = (
-        F.when(u < POISSON1_CDF[0], 0)
-        .when(u < POISSON1_CDF[1], 1)
-        .when(u < POISSON1_CDF[2], 2)
-        .when(u < POISSON1_CDF[3], 3)
-        .when(u < POISSON1_CDF[4], 4)
-        .otherwise(5)
-        .cast("long")
-    )
-    reps = (
-        df.select(
-            F.col(id_col), F.col(value_col).cast("long").alias("__x")
-        )
-        .select("*", F.explode(b_arr).alias("__b"))
-        .select("__b", (w * F.col("__x")).alias("__wx"), w.alias("__w"))
-        .groupBy("__b")
-        .agg(F.sum("__wx").alias("__swx"), F.sum("__w").alias("__sw"))
-        .select(
-            exact_round(
-                F.col("__swx").cast("double") / F.col("__sw").cast("double"),
-                9,
-            ).alias("__m")
-        )
-    )
-    wall = Window.partitionBy(F.lit(1))
-    stats = (
-        reps.withColumn(
-            "boot_mean",
-            exact_round(
-                F.sum(F.col("__m").cast("decimal(28,9)"))
-                .over(wall)
-                .cast("double")
-                / F.lit(float(n_replicates)),
-                9,
-            ),
-        )
-        .withColumn(
-            "__dev2",
-            exact_round(
-                (F.col("__m") - F.col("boot_mean"))
-                * (F.col("__m") - F.col("boot_mean")),
-                9,
-            ),
-        )
-        .withColumn(
-            "boot_std",
-            exact_round(
-                F.sqrt(
-                    F.sum(F.col("__dev2").cast("decimal(28,9)"))
-                    .over(wall)
-                    .cast("double")
-                    / F.lit(float(n_replicates - 1))
-                ),
-                9,
-            ),
-        )
-        .limit(1)
-        .select("boot_mean", "boot_std")
-    )
-    est = df.agg(
-        exact_round(
-            F.sum(F.col(value_col).cast("long")).cast("double")
-            / F.count(F.lit(1)).cast("double"),
-            9,
-        ).alias("estimate")
-    )
-    return est.crossJoin(F.broadcast(stats)).select(
-        "estimate",
-        "boot_mean",
-        "boot_std",
-        exact_round(
-            F.col("boot_mean") - F.lit(float(z)) * F.col("boot_std"), 9
-        ).alias("ci_lo"),
-        exact_round(
-            F.col("boot_mean") + F.lit(float(z)) * F.col("boot_std"), 9
-        ).alias("ci_hi"),
-        F.lit(n_replicates).cast("long").alias("n_replicates"),
     )

@@ -400,9 +400,9 @@ def simhash(
     Expressed as explode → SWAR-packed vote sums → bit assembly in one
     SQL expression; one shuffle on id_col, and building it runs no
     job.  Bit-exact DuckDB oracle:
-    ``plans/extended_queries.py`` DEDUP_SIMHASH_SQL /
-    DEDUP_SIMHASH_PAIRS_SQL replay the same two-half nibble recovery
-    (driver-green since r03), so this is hash-checked, not rows-only.
+    ``plans/extended_queries.py`` DEDUP_SIMHASH_SQL replays the same
+    two-half nibble recovery (driver-green since r03), so this is
+    hash-checked, not rows-only.
 
     Per-document shingle cap (enforced at runtime, ADVICE r05): the
     SWAR-packed vote counting accumulates each bit's ones-count in a
@@ -796,7 +796,7 @@ def incremental_simhash_dedup(
     Contract (enforced): the pigeonhole screen is only complete when
     ``max_hamming < n_bands`` (more flipped bits than bands could
     miss every band) and ``64 % n_bands == 0`` (a remainder would
-    leave high bits unbanded) — mirrors ``dedup_simhash``'s bits<=64
+    leave high bits unbanded) — mirrors ``simhash``'s bits<=64
     assert."""
     if max_hamming >= n_bands:
         raise ValueError(
@@ -853,97 +853,3 @@ def incremental_simhash_dedup(
     fresh = new_docs.join(fresh_ids, id_col, "left_semi")
     sig_delta = new_sig.join(fresh_ids, id_col, "left_semi")
     return fresh, sig_delta
-
-
-def retention_ledger(
-    df: DataFrame,
-    pairs: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    group_col: str = "source",
-) -> DataFrame:
-    """Per-group dedup retention ledger — "what did dedup cost us,
-    and whom": for every group, exact docs/tokens retained under the
-    normalized-fingerprint keep-min rule, near-dup docs/tokens
-    retained under the cluster-representative rule over the supplied
-    ``pairs`` evidence (``(id_a, id_b)`` rows — injectable, so the
-    accounting semantics unit-test independently of LSH tuning), the
-    intersection of the two stages, and the doc/token retention
-    rates.  The pipeline-ops readout a data owner reads per source
-    BEFORE the pruned corpus ships.
-
-    Semantics: stage flags are computed per document on the FULL
-    corpus and intersected (a doc survives 'final' iff it is both its
-    fingerprint group's min id and its near-dup component's min id) —
-    flag intersection, not sequential re-mining on survivors.
-
-    Exactness: counts and token sums are exact integers; the two
-    rates are single IEEE divisions of exact ints, 9dp-rounded —
-    bitwise cross-engine.
-
-    100 TB shape: one cached narrow scan feeds the fingerprint
-    grouping (one exchange on the digest), the per-doc flag join
-    (one exchange on id), and the group rollup (one exchange on the
-    group key, map-side combined).  Component labels attach by a
-    plain key join — bounded by the documents that HAVE near-dups,
-    the honest dedup shape."""
-    from ..functions import exact_round
-    from .graph import connected_components
-
-    base = df.select(
-        F.col(id_col),
-        F.col(group_col).alias("__grp"),
-        F.size(F.split(F.col(text_col), " ")).cast("long").alias("__ntok"),
-        F.md5(
-            F.regexp_replace(
-                F.trim(F.lower(F.col(text_col))), "\\s+", " "
-            )
-        ).alias("__fp"),
-    )
-    kept = base.groupBy("__fp").agg(F.min(id_col).alias("__kept"))
-    comps = connected_components(pairs).select(
-        F.col("node").alias(id_col), F.col("label").alias("__rep")
-    )
-    flags = (
-        base.join(kept, "__fp")
-        .join(comps, id_col, "left")
-        .select(
-            "__grp",
-            "__ntok",
-            F.when(F.col(id_col) == F.col("__kept"), 1)
-            .otherwise(0)
-            .alias("__ex"),
-            F.when(
-                F.col("__rep").isNull()
-                | (F.col("__rep") == F.col(id_col)),
-                1,
-            )
-            .otherwise(0)
-            .alias("__nr"),
-        )
-    )
-    agg = flags.groupBy(F.col("__grp").alias(group_col)).agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("__ntok").alias("n_tokens"),
-        F.sum("__ex").alias("exact_kept"),
-        F.sum(F.col("__ex") * F.col("__ntok")).alias("exact_tokens"),
-        F.sum("__nr").alias("near_kept"),
-        F.sum(F.col("__nr") * F.col("__ntok")).alias("near_tokens"),
-        F.sum(F.col("__ex") * F.col("__nr")).alias("final_kept"),
-        F.sum(
-            F.col("__ex") * F.col("__nr") * F.col("__ntok")
-        ).alias("final_tokens"),
-    )
-    return agg.select(
-        "*",
-        exact_round(
-            F.col("final_kept").cast("double")
-            / F.col("n_docs").cast("double"),
-            9,
-        ).alias("doc_retention"),
-        exact_round(
-            F.col("final_tokens").cast("double")
-            / F.col("n_tokens").cast("double"),
-            9,
-        ).alias("token_retention"),
-    )

@@ -283,7 +283,10 @@ def pq_train_encode(
         # codeword is an expression — map-only, replacing the former
         # broadcast join + row_number window (a (id, m)-keyed sort
         # exchange per pass).  Same (dist asc, code asc) tie-break,
-        # same strict-left-fold doubles — codes are bit-identical.
+        # same strict-left-fold doubles — codes are bit-identical.  A
+        # subspace with no codeword packs an empty array, whose min is
+        # NULL: that (row, subspace) gets no code, as under the
+        # oracle's inner join on m.
         best = F.array_min(
             F.transform(
                 F.filter(F.col("__packed"), lambda c: c["m"] == F.col("m")),
@@ -296,6 +299,7 @@ def pq_train_encode(
         return (
             subs.crossJoin(F.broadcast(_pack_rows(cb, "m", "code", "cv")))
             .withColumn("__best", best)
+            .where(F.col("__best").isNotNull())
             .select(
                 id_col,
                 *carry_cols,
@@ -637,7 +641,7 @@ def brute_force_topk_arrow(
 
 
 # Production knob derivation — sf0.5 sweep, SCALE.md "Round-7
-# rehearsal" (tools/routed_rehearsal.py): on the worst-case
+# rehearsal": on the worst-case
 # near-isotropic corpus at k=100/n_super=10, the EXACT two-stage
 # assignment (n_probe = n_super, untrained) is 2.35× cheaper than the
 # flat n·k scan at recall 1.0 — the win is the plan shape (two narrow
@@ -1588,74 +1592,6 @@ def incremental_pq_dedup(
     return fresh, index_delta
 
 
-# --- Johnson–Lindenstrauss random projection ---------------------------------
-
-# Mersenne prime + public LCG constants (Knuth / Numerical Recipes).
-# The sign matrix s(i, j) = 1 − 2·((f(i)·g(j)) mod P mod 2) is the
-# PRODUCT of two per-axis LCG streams: a single linear form in
-# (i, j) has its parity perfectly correlated across columns (adding
-# an odd constant flips parity uniformly — measured |cor| = 1.0),
-# while the product form measures max |column correlation| 0.22 over
-# a 64×16 grid, at the level of a truly random ±1 matrix (E max over
-# 120 pairs ≈ 0.33).  Pure BIGINT arithmetic, shared verbatim with
-# the DuckDB oracle: (dim·2654435761) stays < 2^63 up to dim ≈ 3.4e9
-# and both mod-P residues are < 2^31, so the product fits BIGINT.
-JL_P = 2_147_483_647
-JL_I = (2654435761, 1013904223)
-JL_J = (22695477, 1)
-
-
-def _jl_sign(i: Column, j: Column) -> Column:
-    # Cast the sequence indices to long FIRST (ADVICE r12): sequence
-    # elements are int32, and int32 · 22695477 overflows in Spark for
-    # j ≥ ~95 while the DuckDB oracle computes BIGINT throughout — the
-    # promotion keeps both engines in the shared-BIGINT contract for
-    # any out_dim / input dim.
-    fi = (i.cast("long") * F.lit(JL_I[0]) + F.lit(JL_I[1])) % F.lit(JL_P)
-    fj = (j.cast("long") * F.lit(JL_J[0]) + F.lit(JL_J[1])) % F.lit(JL_P)
-    return (F.lit(1) - F.lit(2) * (fi * fj % F.lit(JL_P) % F.lit(2))).cast(
-        "double"
-    )
-
-
-def jl_project(
-    df: DataFrame,
-    out_dim: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    proj_col: str = "jl",
-) -> DataFrame:
-    """Johnson–Lindenstrauss dimension reduction with a DETERMINISTIC
-    ±1 projection (Achlioptas '03: a Rademacher matrix satisfies the
-    JL lemma — no Gaussian sampling needed): out[j] = Σ_i v[i]·s(i,j)
-    / √out_dim, preserving pairwise distances within ~1/√out_dim.
-
-    100 TB shape: the projection is ONE map-only whole-stage-codegen
-    expression per row — no shuffle, no join, no UDF, no driver state
-    (the sign matrix is arithmetic, never materialized).  Reducing
-    64-dim → 16-dim cuts every downstream ANN / k-means / SemDeDup
-    distance evaluation 4× and the embedding shuffle bytes with it;
-    at warehouse scale you project once at ingest and run the screen
-    stages in JL space, re-ranking survivors with full vectors
-    (``pq_rerank_topk``'s discipline).
-
-    Cross-engine exactness: the strict left fold mirrors DuckDB's
-    ``list_reduce`` term-for-term on identical doubles, so projected
-    components are bitwise-reproducible (the cosine-oracle precedent).
-    """
-    v = _as_double_vec(vec_col)
-    idx = F.sequence(F.lit(0), F.size(F.col(vec_col)) - 1)
-    inv = F.lit(float(out_dim) ** 0.5)
-    comps = F.transform(
-        F.sequence(F.lit(0), F.lit(out_dim - 1)),
-        lambda j: _fold_sum(
-            F.zip_with(v, idx, lambda x, i: x * _jl_sign(i, j))
-        )
-        / inv,
-    )
-    return df.select(F.col(id_col), comps.alias(proj_col))
-
-
 def occupancy_balance(
     occ: DataFrame, cell_col: str = "bin", count_col: str = "cnt"
 ) -> DataFrame:
@@ -1705,5 +1641,3 @@ def occupancy_balance(
             9,
         ).alias("imbalance"),
     )
-
-

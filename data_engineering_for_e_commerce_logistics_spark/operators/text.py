@@ -208,8 +208,7 @@ def ols_fit(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
     inputs report NULLs (never a division error).  Inputs are assumed
     9dp-pre-rounded; the five sums accumulate as DECIMAL(28,9) and
     the closed forms are a handful of IEEE ops on identical doubles,
-    9dp-rounded — bitwise cross-engine (shared by the Zipf and Heaps
-    fits)."""
+    9dp-rounded — bitwise cross-engine."""
 
     def _dsum(col):
         return F.sum(col.cast("decimal(28,9)")).cast("double")
@@ -280,198 +279,6 @@ def sql_ols_ctes(
          END AS r2
   FROM {s_name}
 )"""
-
-
-def zipf_fit(
-    df: DataFrame, text_col: str = "text", top_n: int = 100
-) -> DataFrame:
-    """Zipf-law fit over the corpus token-frequency ranking — the
-    corpus-health fingerprint: natural text ranks follow
-    ``freq ∝ rank^slope`` with slope ≈ −1; a slope drifting toward 0
-    flags templated/boilerplate-heavy text, a cliff past −1.5 flags
-    vocabulary collapse (the signals a pre-training mix review reads
-    next to the quality funnel).
-
-    Output, one padded frame:
-
-    * ``variant='top'`` — the top-``top_n`` tokens as
-      ``(k=rank, tok, n=count)`` (deterministic count-desc/token-asc
-      total order);
-    * ``variant='fit'`` — the in-engine OLS of ``ln freq`` on
-      ``ln rank`` over those rows: ``(v1=slope, v2=intercept,
-      v3=r2)``; a zero-variance degenerate fit reports NULLs;
-    * ``variant='totals'`` — ``(k=n_tokens, n=vocab_size)`` (the
-      Heaps-law coordinates; kept as exact BIGINTs — at corpus scale
-      token totals exceed double precision).
-
-    Cross-engine exactness: ln outputs are 9dp-rounded, the five OLS
-    sums accumulate as DECIMAL(28,9), and the closed-form
-    slope/intercept/R² are a handful of IEEE ops on identical
-    doubles, rounded once at 9dp.
-
-    100 TB shape: one word-count exchange on the token key (map-side
-    combine — the canonical wordcount), a TakeOrdered top-``top_n``
-    pull (never a global sort), and the regression runs on the
-    bounded ``top_n``-row frame."""
-    from pyspark.sql import Window
-
-    toks = df.select(
-        F.explode(tokens_col(text_col)).alias("tok")
-    ).where(F.col("tok") != "")
-    # two consumers (totals + top-N): cache the vocab-bounded counts
-    # so the corpus wordcount runs once
-    tf = toks.groupBy("tok").agg(F.count(F.lit(1)).alias("c")).cache()
-    totals = tf.agg(
-        F.sum("c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("vocab_size"),
-    )
-    top = tf.orderBy(F.col("c").desc(), F.col("tok").asc()).limit(top_n)
-    w = Window.orderBy(F.col("c").desc(), F.col("tok").asc())
-    ranked = (
-        top.withColumn("k", F.row_number().over(w).cast("long"))
-        .withColumn(
-            "x", exact_round(F.log(F.col("k").cast("double")), 9)
-        )
-        .withColumn(
-            "y", exact_round(F.log(F.col("c").cast("double")), 9)
-        )
-        .cache()  # top_n rows, two consumers (top leg + the OLS sums)
-    )
-
-    fit = ols_fit(ranked, "x", "y")
-    ns = F.lit(None).cast("string")
-    nl = F.lit(None).cast("long")
-    nd = F.lit(None).cast("double")
-    top_leg = ranked.select(
-        F.lit("top").alias("variant"),
-        "k",
-        "tok",
-        F.col("c").alias("n"),
-        nd.alias("v1"),
-        nd.alias("v2"),
-        nd.alias("v3"),
-    )
-    fit_leg = fit.select(
-        F.lit("fit").alias("variant"),
-        nl.alias("k"),
-        ns.alias("tok"),
-        nl.alias("n"),
-        F.col("slope").alias("v1"),
-        F.col("intercept").alias("v2"),
-        F.col("r2").alias("v3"),
-    )
-    tot_leg = totals.select(
-        F.lit("totals").alias("variant"),
-        F.col("n_tokens").alias("k"),
-        ns.alias("tok"),
-        F.col("vocab_size").alias("n"),
-        nd.alias("v1"),
-        nd.alias("v2"),
-        nd.alias("v3"),
-    )
-    return top_leg.unionByName(fit_leg).unionByName(tot_leg)
-
-
-def vocab_growth(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Heaps-law vocabulary growth curve WITHOUT a global sort: the
-    16 checkpoints are md5-nibble prefixes of the doc-id hash (each a
-    uniform random ~1/16 corpus slice, so checkpoint c = "the first
-    c/16 of a shuffled corpus"), and each token's contribution is its
-    FIRST-occurrence bucket ``min(nibble)`` — one aggregate per token
-    instead of per-checkpoint distinct counts.  The curve
-    ``vocab(n_tokens)`` plus the in-engine Heaps fit
-    ``ln V = ln K + β·ln N`` (natural text: β ≈ 0.7; β → 1 means the
-    corpus keeps minting vocabulary — OOV pressure for a fixed
-    tokenizer; β → 0 means saturation — more data buys no new words).
-
-    Output: ``variant='curve'`` rows ``(k=checkpoint 0–15, n_docs,
-    n_tokens, vocab)`` — cumulative, monotone — and ``variant='fit'``
-    ``(v1=beta, v2=intercept, v3=r2)`` over the non-empty
-    checkpoints.
-
-    100 TB shape: one exchange on the token key (min-bucket
-    aggregate, map-side combined), one on the 16-value bucket key;
-    the cumulative curve and the fit are window/aggregate arithmetic
-    on the bounded 16-row spine.  No sort, no join touches the
-    corpus."""
-    from pyspark.sql import Window
-
-    nib = F.conv(
-        F.substring(F.md5(F.col(id_col).cast("string")), 1, 1), 16, 10
-    ).cast("int")
-    base = df.select(
-        nib.alias("b"),
-        F.size(F.split(F.col(text_col), " ")).cast("long").alias("__nt"),
-        F.split(F.col(text_col), " ").alias("__toks"),
-    )
-    doc_agg = base.groupBy("b").agg(
-        F.count(F.lit(1)).alias("nd"), F.sum("__nt").alias("nt")
-    )
-    tok_first = (
-        base.select("b", F.explode("__toks").alias("tok"))
-        .where(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.min("b").alias("fb"))
-        .groupBy("fb")
-        .agg(F.count(F.lit(1)).alias("nv"))
-    )
-    spine = (
-        df.agg(F.count(F.lit(1)).alias("__n"))
-        .select(
-            F.explode(F.sequence(F.lit(0), F.lit(15))).alias("b")
-        )
-    )
-    w = Window.orderBy("b").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    curve = (
-        spine.join(F.broadcast(doc_agg), "b", "left")
-        .join(
-            F.broadcast(tok_first.withColumnRenamed("fb", "b")),
-            "b",
-            "left",
-        )
-        .na.fill({"nd": 0, "nt": 0, "nv": 0})
-        .select(
-            "b",
-            F.sum("nd").over(w).alias("n_docs"),
-            F.sum("nt").over(w).alias("n_tokens"),
-            F.sum("nv").over(w).alias("vocab"),
-        )
-        .cache()
-    )
-    pts = curve.where(
-        (F.col("n_tokens") > 0) & (F.col("vocab") > 0)
-    ).select(
-        exact_round(F.log(F.col("n_tokens").cast("double")), 9).alias("x"),
-        exact_round(F.log(F.col("vocab").cast("double")), 9).alias("y"),
-    )
-    fit = ols_fit(pts, "x", "y")
-    nl = F.lit(None).cast("long")
-    nd_ = F.lit(None).cast("double")
-    curve_leg = curve.select(
-        F.lit("curve").alias("variant"),
-        F.col("b").cast("long").alias("k"),
-        "n_docs",
-        "n_tokens",
-        "vocab",
-        nd_.alias("v1"),
-        nd_.alias("v2"),
-        nd_.alias("v3"),
-    )
-    fit_leg = fit.select(
-        F.lit("fit").alias("variant"),
-        nl.alias("k"),
-        nl.alias("n_docs"),
-        nl.alias("n_tokens"),
-        nl.alias("vocab"),
-        F.col("slope").alias("v1"),
-        F.col("intercept").alias("v2"),
-        F.col("r2").alias("v3"),
-    )
-    return curve_leg.unionByName(fit_leg)
 
 
 def bpe_train(

@@ -14,7 +14,6 @@ from pyspark.sql import functions as F
 
 from ..catalog import load_tables
 from ..functions import exact_round, local_rows_df, sql_exact_round, sql_exact_sum
-from ..operators import cleaners
 
 # --- Ordered string aggregation --------------------------------------------
 
@@ -406,39 +405,6 @@ SELECT quantile_cont(l_extendedprice, 0.25) AS price_q25,
 FROM lineitem
 """
 
-# --- Backward fill (P4's other direction) ----------------------------------
-
-
-def bfill_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    masked = ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        "event_type",
-        F.when(F.col("event_type") == "view", F.lit(None))
-        .otherwise(F.col("value"))
-        .alias("value"),
-    )
-    return cleaners.fill_directional(
-        masked,
-        ["value"],
-        order_by=["ts", "event_id"],
-        partition_by=["user_id"],
-        direction="backward",
-    )
-
-
-BFILL_EVENTS_SQL = """
-SELECT event_id, user_id, ts, event_type,
-       first_value(value IGNORE NULLS) OVER (
-         PARTITION BY user_id ORDER BY ts, event_id
-         ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS value
-FROM (SELECT event_id, user_id, ts, event_type,
-             CASE WHEN event_type = 'view' THEN NULL ELSE value END AS value
-      FROM events)
-"""
-
 # --- As-of join (time-series; oracle = DuckDB native ASOF JOIN) ------------
 
 
@@ -546,44 +512,6 @@ LIMIT 10
 """
 
 # --- Window-function breadth (§2.6: ranking, offsets, distribution) --------
-
-
-def window_functions_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """rank/dense_rank/ntile, lag/lead offsets, percent_rank/cume_dist
-    over a deterministic per-customer order sequence — one Window
-    exchange on o_custkey serves every function."""
-    from pyspark.sql import Window
-
-    o = load_tables(spark, sf_dir, ("orders",))["orders"]
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        "o_orderdate",
-        F.row_number().over(w).alias("seq"),
-        F.rank().over(w).alias("rnk"),
-        F.dense_rank().over(w).alias("drnk"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.lag("o_totalprice", 1).over(w).alias("prev_value"),
-        F.lead("o_totalprice", 1).over(w).alias("next_value"),
-        exact_round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        exact_round(F.cume_dist().over(w), 6).alias("cume"),
-    )
-
-
-WINDOW_FUNCTIONS_SQL = """
-SELECT o_orderkey, o_custkey, o_orderdate,
-       row_number() OVER w AS seq,
-       rank() OVER w AS rnk,
-       dense_rank() OVER w AS drnk,
-       ntile(4) OVER w AS quartile,
-       lag(o_totalprice, 1) OVER w AS prev_value,
-       lead(o_totalprice, 1) OVER w AS next_value,
-       cast(round(cast(percent_rank() OVER w as decimal(28,8)), 6) as double) AS pct_rank,
-       cast(round(cast(cume_dist() OVER w as decimal(28,8)), 6) as double) AS cume
-FROM orders
-WINDOW w AS (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey)
-"""
 
 
 def window_time_orders(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -22,21 +22,6 @@ DEDUP_KEY = ["l_orderkey", "l_partkey"]
 DEDUP_ORDER = ["l_linenumber", "l_suppkey"]
 
 
-def dedup_keep_first(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    return cleaners.remove_duplicates(li, DEDUP_KEY, "first", DEDUP_ORDER)
-
-
-def dedup_keep_last(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    return cleaners.remove_duplicates(li, DEDUP_KEY, "last", DEDUP_ORDER)
-
-
-def dedup_drop_all(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_tables(spark, sf_dir, ("lineitem",))["lineitem"]
-    return cleaners.remove_duplicates(li, DEDUP_KEY, False)
-
-
 _DEDUP_PROJ = """
 l_orderkey, l_partkey, l_suppkey, l_linenumber, l_quantity, l_extendedprice,
 l_discount, l_tax, l_returnflag, l_linestatus, l_shipdate
@@ -124,29 +109,6 @@ SELECT * FROM ({_MASKED_EVENTS_SQL}) WHERE value IS NOT NULL
 """
 
 
-def fill_constant_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return cleaners.fill_constant(_masked_events(spark, sf_dir), 0.0, ["value"])
-
-
-FILL_CONSTANT_SQL = f"""
-SELECT event_id, user_id, ts, event_type, coalesce(value, 0.0) AS value
-FROM ({_MASKED_EVENTS_SQL})
-"""
-
-
-def fill_median_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Type-aware default fill (P5): numeric → exact median of non-nulls."""
-    df = _masked_events(spark, sf_dir)
-    return cleaners.fill_default(df, numeric_cols=["value"], string_cols=[])
-
-
-FILL_MEDIAN_SQL = f"""
-WITH m AS (SELECT quantile_cont(value, 0.5) AS med FROM ({_MASKED_EVENTS_SQL}))
-SELECT event_id, user_id, ts, event_type, coalesce(value, m.med) AS value
-FROM ({_MASKED_EVENTS_SQL}), m
-"""
-
-
 def fill_strategies_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P3+P5 in one driver-checked result: constant fill and exact-
     median fill applied to twin copies of the masked column — both
@@ -206,23 +168,6 @@ SELECT event_id, user_id, ts, event_type,
        first_value(value IGNORE NULLS) OVER (
          PARTITION BY user_id ORDER BY ts, event_id
          ROWS BETWEEN CURRENT ROW AND UNBOUNDED FOLLOWING) AS value_bfill
-FROM ({_MASKED_EVENTS_SQL})
-"""
-
-
-def ffill_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P4 forward-fill per user along (ts, event_id) — explicit order."""
-    df = _masked_events(spark, sf_dir)
-    return cleaners.fill_directional(
-        df, ["value"], order_by=["ts", "event_id"], partition_by=["user_id"]
-    )
-
-
-FFILL_SQL = f"""
-SELECT event_id, user_id, ts, event_type,
-       last_value(value IGNORE NULLS) OVER (
-         PARTITION BY user_id ORDER BY ts, event_id
-         ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS value
 FROM ({_MASKED_EVENTS_SQL})
 """
 

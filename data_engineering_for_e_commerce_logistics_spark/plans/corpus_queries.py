@@ -15,22 +15,14 @@ Exactness notes (cross-engine):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..functions import (
-    exact_round,
-    local_rows_df,
-    sql_exact_avg,
-    sql_exact_round,
-    sql_exact_sum,
-)
+from ..functions import exact_round, sql_exact_avg, sql_exact_round
 from ..operators import corpus, text
 from ..operators.dedup import sql_shingles
 from .extended_queries import (
-    INC_B1_LT,
-    INC_B2_GE,
     QUALITY_SCORE_EXPR,
     QUALITY_T_SUBSELECT,
     _EN_STOP_SQL,
@@ -503,71 +495,6 @@ FROM (SELECT cluster_key FROM labeled
 
 CLUSTER_SAFE_SPLIT_SQL = _cluster_safe_split_sql()
 
-# --- Weighted sampling (Sequential Poisson, r14 debut candidate) -----------
-
-WEIGHTED_SAMPLE_PER_SOURCE = 40
-WEIGHTED_SAMPLE_GLOBAL = 100
-
-
-def corpus_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weight-proportional corpus subsampling (pre-built r12, r14
-    registry candidate): Sequential Poisson Sampling keyed on
-    ``u/n_chars`` — longer documents are proportionally likelier to
-    be drawn, the length/quality-weighted mix rule pretraining
-    pipelines use instead of uniform draws.  Two variants under one
-    tagged union: exactly 40 per source (domain-balanced) and exactly
-    100 global, both from the SAME deterministic keys, so a doc's
-    global draw and its within-source draw agree on ξ.  Each leg is
-    a 3-column pruned scan + the exponent-ladder top-n (no
-    per-stratum window).  See ``corpus.weighted_sample_flag``."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    per = corpus.weighted_sample_flag(
-        docs, "n_chars", WEIGHTED_SAMPLE_PER_SOURCE, ("source",)
-    ).select(
-        F.lit("per_source").alias("variant"),
-        "source",
-        "doc_id",
-        "weight",
-        "skey",
-        "sample_rank",
-    )
-    glob = corpus.weighted_sample_flag(
-        docs, "n_chars", WEIGHTED_SAMPLE_GLOBAL, ()
-    ).select(
-        F.lit("global").alias("variant"),
-        F.lit(None).cast("string").alias("source"),
-        "doc_id",
-        "weight",
-        "skey",
-        "sample_rank",
-    )
-    return per.unionByName(glob)
-
-
-CORPUS_WEIGHTED_SAMPLE_SQL = f"""
-WITH k AS (
-  SELECT doc_id, source, CAST(n_chars AS DOUBLE) AS weight,
-         ((('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT + 1)::DOUBLE
-          / 4294967296.0) / CAST(n_chars AS DOUBLE) AS skey
-  FROM documents WHERE CAST(n_chars AS DOUBLE) > 0
-)
-SELECT * FROM (
-  SELECT 'per_source' AS variant, source, doc_id, weight, skey,
-         CAST(row_number() OVER (
-             PARTITION BY source ORDER BY skey, doc_id) AS BIGINT)
-           AS sample_rank
-  FROM k
-) WHERE sample_rank <= {WEIGHTED_SAMPLE_PER_SOURCE}
-UNION ALL
-SELECT * FROM (
-  SELECT 'global' AS variant, CAST(NULL AS VARCHAR) AS source, doc_id,
-         weight, skey,
-         CAST(row_number() OVER (ORDER BY skey, doc_id) AS BIGINT)
-           AS sample_rank
-  FROM k
-) WHERE sample_rank <= {WEIGHTED_SAMPLE_GLOBAL}
-"""
-
 # --- Hashed logistic quality classifier --------------------------------------
 
 QC_BUCKETS = 64
@@ -973,63 +900,6 @@ SELECT source_a, source_b,
 FROM terms GROUP BY source_a, source_b
 """
 
-# --- Zipf-law corpus fingerprint --------------------------------------------
-
-ZIPF_TOP_N = 100
-
-
-def zipf_fit_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf-law fit over the corpus token ranking (pre-built r13;
-    ``operators/text.py:zipf_fit``): the top-100 tokens with their
-    exact counts, the in-engine OLS of ln freq on ln rank (natural
-    text: slope ≈ −1 — drift toward 0 flags boilerplate, past −1.5
-    vocabulary collapse), and the exact (n_tokens, vocab_size)
-    Heaps coordinates.  One word-count exchange + a TakeOrdered
-    top-100 pull; the regression runs on the bounded 100-row frame."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return text.zipf_fit(docs, top_n=ZIPF_TOP_N)
-
-
-ZIPF_FIT_SQL = f"""
-WITH toks AS (
-  SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-),
-tf AS (
-  SELECT tok, CAST(count(*) AS BIGINT) AS c
-  FROM toks WHERE tok <> '' GROUP BY tok
-),
-tot AS (
-  SELECT CAST(sum(c) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS vocab_size
-  FROM tf
-),
-ranked AS (
-  SELECT tok, c,
-         CAST(row_number() OVER (ORDER BY c DESC, tok ASC) AS BIGINT) AS k
-  FROM tf
-  ORDER BY c DESC, tok ASC LIMIT {ZIPF_TOP_N}
-),
-xy AS (
-  SELECT k, tok, c,
-         {sql_exact_round("ln(CAST(k AS DOUBLE))", 9)} AS x,
-         {sql_exact_round("ln(CAST(c AS DOUBLE))", 9)} AS y
-  FROM ranked
-),
-{text.sql_ols_ctes("xy", "x", "y")}
-SELECT 'top' AS variant, k, tok, c AS n,
-       CAST(NULL AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2,
-       CAST(NULL AS DOUBLE) AS v3
-FROM xy
-UNION ALL
-SELECT 'fit', CAST(NULL AS BIGINT), CAST(NULL AS VARCHAR),
-       CAST(NULL AS BIGINT), slope, intercept, r2
-FROM fit
-UNION ALL
-SELECT 'totals', n_tokens, CAST(NULL AS VARCHAR), vocab_size,
-       CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE), CAST(NULL AS DOUBLE)
-FROM tot
-"""
-
 # --- Water-filling token-budget quotas --------------------------------------
 
 QUOTA_BUDGET = 22000.0
@@ -1258,277 +1128,6 @@ FROM fin
 
 MIXTURE_PLANNING_SQL = _mixture_planning_sql()
 
-# --- Heaps-law vocabulary growth --------------------------------------------
-
-
-def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heaps-law vocabulary growth (pre-built r13;
-    ``operators/text.py:vocab_growth``): 16 md5-nibble corpus-prefix
-    checkpoints, each token attributed to its FIRST-occurrence bucket
-    (one min-aggregate per token — no per-checkpoint distinct), the
-    cumulative (docs, tokens, vocab) curve, and the in-engine Heaps
-    fit ln V = ln K + β·ln N.  β → 1 = the corpus keeps minting
-    vocabulary (OOV pressure for a fixed tokenizer), β → 0 =
-    saturation: more data buys no new words — the data-scaling
-    signal read next to the Zipf slope."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return text.vocab_growth(docs)
-
-
-VOCAB_GROWTH_SQL = f"""
-WITH base AS (
-  SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 1))::INT AS b,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-         string_split(text, ' ') AS toks
-  FROM documents
-),
-doc_agg AS (
-  SELECT b, CAST(count(*) AS BIGINT) AS nd, CAST(sum(nt) AS BIGINT) AS nt
-  FROM base GROUP BY b
-),
-tok_first AS (
-  SELECT fb AS b, CAST(count(*) AS BIGINT) AS nv FROM (
-    SELECT tok, min(b) AS fb FROM (
-      SELECT b, unnest(toks) AS tok FROM base
-    ) WHERE tok <> '' GROUP BY tok
-  ) GROUP BY fb
-),
-spine AS (SELECT unnest(generate_series(0, 15)) AS b),
-curve AS (
-  SELECT s.b,
-         CAST(sum(coalesce(d.nd, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_docs,
-         CAST(sum(coalesce(d.nt, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_tokens,
-         CAST(sum(coalesce(t.nv, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab
-  FROM spine s
-  LEFT JOIN doc_agg d USING (b)
-  LEFT JOIN tok_first t USING (b)
-),
-xy AS (
-  SELECT {sql_exact_round("ln(CAST(n_tokens AS DOUBLE))", 9)} AS x,
-         {sql_exact_round("ln(CAST(vocab AS DOUBLE))", 9)} AS y
-  FROM curve WHERE n_tokens > 0 AND vocab > 0
-),
-{text.sql_ols_ctes("xy", "x", "y")}
-SELECT 'curve' AS variant, CAST(b AS BIGINT) AS k, n_docs, n_tokens,
-       vocab, CAST(NULL AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2,
-       CAST(NULL AS DOUBLE) AS v3
-FROM curve
-UNION ALL
-SELECT 'fit', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
-       CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), slope, intercept, r2
-FROM fit
-"""
-
-# --- Token-stats suite (Zipf + Heaps off one shared aggregate) --------------
-
-
-def token_stats_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Zipf fingerprint + Heaps growth in ONE slot off ONE shared
-    aggregate (pre-built r13): the exploded token stream folds ONCE
-    into ``(token → count, first-bucket)`` — the count column feeds
-    the Zipf ranking/fit/totals, the first-bucket column feeds the
-    Heaps curve/fit — so the two corpus-statistics specs' cells come
-    from a single wordcount exchange instead of two.  Every leg's
-    cells are bit-identical to the standalone specs
-    (parts-equivalence pinned).  Legs: 'top' (k=rank, tok, n=count),
-    'zipf_fit' / 'heaps_fit' (v1=slope, v2=intercept, v3=r2),
-    'totals' (k=n_tokens, n=vocab_size), 'curve' (k=checkpoint,
-    n=n_docs, n2=n_tokens, n3=vocab)."""
-    from pyspark.sql import Window
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    nib = F.conv(
-        F.substring(F.md5(F.col("doc_id").cast("string")), 1, 1), 16, 10
-    ).cast("int")
-    base = docs.select(
-        nib.alias("b"),
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("__nt"),
-        F.split(F.col("text"), " ").alias("__toks"),
-    )
-    tf = (
-        base.select("b", F.explode("__toks").alias("tok"))
-        .where(F.col("tok") != "")
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("c"), F.min("b").alias("fb"))
-        .cache()
-    )
-    totals = tf.agg(
-        F.sum("c").alias("n_tokens"),
-        F.count(F.lit(1)).alias("vocab_size"),
-    )
-    top = tf.orderBy(F.col("c").desc(), F.col("tok").asc()).limit(
-        ZIPF_TOP_N
-    )
-    wz = Window.orderBy(F.col("c").desc(), F.col("tok").asc())
-    ranked = (
-        top.withColumn("k", F.row_number().over(wz).cast("long"))
-        .withColumn(
-            "x", exact_round(F.log(F.col("k").cast("double")), 9)
-        )
-        .withColumn(
-            "y", exact_round(F.log(F.col("c").cast("double")), 9)
-        )
-        .cache()
-    )
-    zfit = text.ols_fit(ranked, "x", "y")
-
-    doc_agg = base.groupBy("b").agg(
-        F.count(F.lit(1)).alias("nd"), F.sum("__nt").alias("nt")
-    )
-    tok_first = tf.groupBy("fb").agg(F.count(F.lit(1)).alias("nv"))
-    spine = docs.agg(F.count(F.lit(1)).alias("__n")).select(
-        F.explode(F.sequence(F.lit(0), F.lit(15))).alias("b")
-    )
-    wc = Window.orderBy("b").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    curve = (
-        spine.join(F.broadcast(doc_agg), "b", "left")
-        .join(
-            F.broadcast(tok_first.withColumnRenamed("fb", "b")),
-            "b",
-            "left",
-        )
-        .na.fill({"nd": 0, "nt": 0, "nv": 0})
-        .select(
-            "b",
-            F.sum("nd").over(wc).alias("n_docs"),
-            F.sum("nt").over(wc).alias("n_tokens"),
-            F.sum("nv").over(wc).alias("vocab"),
-        )
-        .cache()
-    )
-    pts = curve.where(
-        (F.col("n_tokens") > 0) & (F.col("vocab") > 0)
-    ).select(
-        exact_round(F.log(F.col("n_tokens").cast("double")), 9).alias("x"),
-        exact_round(F.log(F.col("vocab").cast("double")), 9).alias("y"),
-    )
-    hfit = text.ols_fit(pts, "x", "y")
-
-    nl = F.lit(None).cast("long")
-    ns = F.lit(None).cast("string")
-    nd_ = F.lit(None).cast("double")
-
-    def _leg(df, variant, **cols):
-        out = [F.lit(variant).alias("variant")]
-        for name in ("k", "tok", "n", "n2", "n3", "v1", "v2", "v3"):
-            if name in cols:
-                out.append(cols[name].alias(name))
-            elif name == "tok":
-                out.append(ns.alias(name))
-            elif name.startswith("v"):
-                out.append(nd_.alias(name))
-            else:
-                out.append(nl.alias(name))
-        return df.select(*out)
-
-    top_leg = _leg(
-        ranked, "top", k=F.col("k"), tok=F.col("tok"), n=F.col("c")
-    )
-    zfit_leg = _leg(
-        zfit, "zipf_fit",
-        v1=F.col("slope"), v2=F.col("intercept"), v3=F.col("r2"),
-    )
-    tot_leg = _leg(
-        totals, "totals", k=F.col("n_tokens"), n=F.col("vocab_size")
-    )
-    curve_leg = _leg(
-        curve, "curve",
-        k=F.col("b").cast("long"), n=F.col("n_docs"),
-        n2=F.col("n_tokens"), n3=F.col("vocab"),
-    )
-    hfit_leg = _leg(
-        hfit, "heaps_fit",
-        v1=F.col("slope"), v2=F.col("intercept"), v3=F.col("r2"),
-    )
-    return (
-        top_leg.unionByName(zfit_leg)
-        .unionByName(tot_leg)
-        .unionByName(curve_leg)
-        .unionByName(hfit_leg)
-    )
-
-
-TOKEN_STATS_SUITE_SQL = f"""
-WITH base AS (
-  SELECT ('0x' || substr(md5(doc_id::VARCHAR), 1, 1))::INT AS b,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS nt,
-         string_split(text, ' ') AS toks
-  FROM documents
-),
-tf AS MATERIALIZED (
-  SELECT tok, CAST(count(*) AS BIGINT) AS c, min(b) AS fb FROM (
-    SELECT b, unnest(toks) AS tok FROM base
-  ) WHERE tok <> '' GROUP BY tok
-),
-tot AS (
-  SELECT CAST(sum(c) AS BIGINT) AS n_tokens,
-         CAST(count(*) AS BIGINT) AS vocab_size
-  FROM tf
-),
-ranked AS (
-  SELECT tok, c,
-         CAST(row_number() OVER (ORDER BY c DESC, tok ASC) AS BIGINT) AS k
-  FROM tf
-  ORDER BY c DESC, tok ASC LIMIT {ZIPF_TOP_N}
-),
-zxy AS (
-  SELECT k, tok, c,
-         {sql_exact_round("ln(CAST(k AS DOUBLE))", 9)} AS x,
-         {sql_exact_round("ln(CAST(c AS DOUBLE))", 9)} AS y
-  FROM ranked
-),
-{text.sql_ols_ctes("zxy", "x", "y", names=("zs", "zfit"))},
-doc_agg AS (
-  SELECT b, CAST(count(*) AS BIGINT) AS nd, CAST(sum(nt) AS BIGINT) AS nt
-  FROM base GROUP BY b
-),
-tok_first AS (
-  SELECT fb AS b, CAST(count(*) AS BIGINT) AS nv FROM tf GROUP BY fb
-),
-spine AS (SELECT unnest(generate_series(0, 15)) AS b),
-curve AS (
-  SELECT s.b,
-         CAST(sum(coalesce(d.nd, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_docs,
-         CAST(sum(coalesce(d.nt, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS n_tokens,
-         CAST(sum(coalesce(t.nv, 0)) OVER (ORDER BY s.b
-              ROWS UNBOUNDED PRECEDING) AS BIGINT) AS vocab
-  FROM spine s
-  LEFT JOIN doc_agg d USING (b)
-  LEFT JOIN tok_first t USING (b)
-),
-hxy AS (
-  SELECT {sql_exact_round("ln(CAST(n_tokens AS DOUBLE))", 9)} AS x,
-         {sql_exact_round("ln(CAST(vocab AS DOUBLE))", 9)} AS y
-  FROM curve WHERE n_tokens > 0 AND vocab > 0
-),
-{text.sql_ols_ctes("hxy", "x", "y", names=("hs", "hfit"))}
-SELECT 'top' AS variant, k, tok, c AS n,
-       CAST(NULL AS BIGINT) AS n2, CAST(NULL AS BIGINT) AS n3,
-       CAST(NULL AS DOUBLE) AS v1, CAST(NULL AS DOUBLE) AS v2,
-       CAST(NULL AS DOUBLE) AS v3
-FROM zxy
-UNION ALL
-SELECT 'zipf_fit', NULL, NULL, NULL, NULL, NULL, slope, intercept, r2
-FROM zfit
-UNION ALL
-SELECT 'totals', n_tokens, NULL, vocab_size, NULL, NULL, NULL, NULL, NULL
-FROM tot
-UNION ALL
-SELECT 'curve', CAST(b AS BIGINT), NULL, n_docs, n_tokens, vocab,
-       NULL, NULL, NULL
-FROM curve
-UNION ALL
-SELECT 'heaps_fit', NULL, NULL, NULL, NULL, NULL, slope, intercept, r2
-FROM hfit
-"""
-
 # --- Sequence packing -------------------------------------------------------
 
 PACK_TOKEN_BUDGET = 512
@@ -1636,237 +1235,6 @@ SELECT doc_id, term, tf, df, tfidf, rank
 FROM ranked WHERE rank <= {TFIDF_TOPK}
 """
 
-
-# --- Lexical retrieval suite: TF-IDF terms + BM25 query retrieval (THE r20
-# --- trade, pre-built r09) ---------------------------------------------------
-
-BM25_K1 = 1.2
-BM25_B = 0.75
-
-
-_BM25_IDF = sql_exact_round(
-    "ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))", 6
-)
-_BM25_CONTRIB = (
-    f"{_BM25_IDF} * (tf * (CAST({BM25_K1} AS DOUBLE) + 1.0)) / "
-    f"(tf + CAST({BM25_K1} AS DOUBLE) * ((1.0 - CAST({BM25_B} AS DOUBLE)) + "
-    f"CAST({BM25_B} AS DOUBLE) * dl / (CAST(total_dl AS DOUBLE) / n_docs)))"
-)
-
-
-# --- Hybrid retrieval: Reciprocal Rank Fusion --------------------------------
-
-RRF_QUERY_IDS = list(range(10))
-RRF_POOL = 20
-RRF_C = 60
-RRF_K = 10
-
-
-def hybrid_retrieval_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid lexical+semantic retrieval via Reciprocal Rank Fusion
-    (Cormack et al., SIGIR'09 — the standard production combiner):
-    the first 10 ids query BOTH retrievers over the paired corpus
-    views (BM25 over ``documents`` text, exact cosine over
-    ``embeddings`` vectors), each yields its top-{pool}, and per-doc
-    ranks fuse as Σ 1/(60 + rank); top-10 fused per query.
-
-    Scale shape: both legs are the already-registered bounded shapes
-    (broadcast query terms / query vectors; the corpus side never
-    self-joins), and the fusion itself touches only
-    |queries| × 2·pool rows — full-outer join + one per-query window
-    over ≤40 candidates, independent of corpus size.  No
-    transcendental enters the fused score (exact-int divisions), so
-    engines order identically without rounding."""
-    from ..operators import similarity
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    # cache the (doc, term, tf) frame: bm25_topk consumes it four ways
-    # (query terms, query-vocab df, candidates, doc lengths) — without
-    # the cache each consumer re-explodes the corpus (measured 126s →
-    # ~45s at sf2.5)
-    tf = (
-        docs.select("doc_id", F.explode(text.tokens_col("text")).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .cache()
-    )
-    lex = corpus.bm25_topk(
-        docs, RRF_QUERY_IDS, k=RRF_POOL, k1=BM25_K1, b=BM25_B, tf_table=tf
-    ).select("query_id", F.col("doc_id").alias("item_id"), "rank")
-    sem = similarity.brute_force_topk(
-        emb, query_ids=RRF_QUERY_IDS, k=RRF_POOL
-    ).select("query_id", F.col("neighbor_id").alias("item_id"), "rank")
-    return corpus.rrf_fuse(
-        {"lex": lex, "sem": sem}, c=RRF_C, k=RRF_K
-    )
-
-
-HYBRID_RETRIEVAL_RRF_SQL = f"""
-WITH terms AS (
-  SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents
-),
-tf AS MATERIALIZED (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-  FROM terms GROUP BY doc_id, term
-),
-doclen AS (SELECT doc_id, CAST(sum(tf) AS BIGINT) AS dl FROM tf GROUP BY doc_id),
-stats AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(dl) AS BIGINT) AS total_dl FROM doclen),
-qt AS (SELECT doc_id AS query_id, term FROM tf
-       WHERE doc_id IN ({", ".join(map(str, RRF_QUERY_IDS))})),
-qdf AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf
-        WHERE term IN (SELECT DISTINCT term FROM qt) GROUP BY term),
-contrib AS (
-  SELECT q.query_id, t.doc_id,
-         {_BM25_CONTRIB} AS contrib
-  FROM tf t
-  JOIN qt q USING (term)
-  JOIN qdf USING (term)
-  JOIN doclen l ON l.doc_id = t.doc_id
-  CROSS JOIN stats
-  WHERE t.doc_id <> q.query_id
-),
-bm AS (
-  SELECT query_id, doc_id, {sql_exact_sum("contrib", 4)} AS bm25
-  FROM contrib GROUP BY query_id, doc_id
-),
-lex AS (
-  SELECT query_id, doc_id AS item_id, rank FROM (
-    SELECT *, CAST(row_number() OVER (
-              PARTITION BY query_id ORDER BY bm25 DESC, doc_id ASC) AS INT)
-              AS rank
-    FROM bm
-  ) WHERE rank <= {RRF_POOL}
-),
-e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-nv AS (
-  SELECT vec_id, v,
-         sqrt(list_reduce(list_transform(v, x -> x * x), (a, b) -> a + b))
-           AS nrm
-  FROM e
-),
-qv AS (SELECT vec_id AS query_id, v AS qv, nrm AS qnrm FROM nv
-       WHERE vec_id IN ({", ".join(map(str, RRF_QUERY_IDS))})),
-cs AS (
-  SELECT qv.query_id, c.vec_id AS item_id,
-         list_reduce(list_transform(list_zip(qv.qv, c.v), p -> p[1] * p[2]),
-                     (a, b) -> a + b) / (qv.qnrm * c.nrm) AS cosine
-  FROM qv, nv c WHERE qv.query_id <> c.vec_id
-),
-sem AS (
-  SELECT query_id, item_id, rank FROM (
-    SELECT *, CAST(row_number() OVER (
-              PARTITION BY query_id ORDER BY cosine DESC, item_id) AS INT)
-              AS rank
-    FROM cs
-  ) WHERE rank <= {RRF_POOL}
-),
-fused AS (
-  SELECT coalesce(l.query_id, s.query_id) AS query_id,
-         coalesce(l.item_id, s.item_id) AS item_id,
-         l.rank AS lex_rank, s.rank AS sem_rank,
-         coalesce(1.0 / ({RRF_C} + l.rank), 0.0)
-           + coalesce(1.0 / ({RRF_C} + s.rank), 0.0) AS rrf_score
-  FROM lex l FULL OUTER JOIN sem s
-    ON l.query_id = s.query_id AND l.item_id = s.item_id
-)
-SELECT query_id, item_id, lex_rank, sem_rank, rrf_score, rrf_rank FROM (
-  SELECT *, CAST(row_number() OVER (
-            PARTITION BY query_id ORDER BY rrf_score DESC, item_id) AS INT)
-            AS rrf_rank
-  FROM fused
-) WHERE rrf_rank <= {RRF_K}
-"""
-
-# --- Hard-negative mining (retriever-training pairs) -------------------------
-
-
-def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mine BM25 hard negatives for dense-retriever training (the
-    DPR / RocketQA recipe: the strongest negatives are documents a
-    lexical retriever scores HIGH but that are not true neighbors).
-    With no relevance labels in the corpus, the exact-cosine top-pool
-    stands in for the positive set — so a hard negative is a doc in
-    the BM25 top-``RRF_POOL`` that is NOT in the semantic
-    top-``RRF_POOL`` for the same query.
-
-    Emits the full lexical pool per query with ``sem_rank`` (NULL ⇔
-    hard negative) and ``hn_rank`` — the training-pair order, densest
-    lexical confusions first.
-
-    Scale shape: both legs are the registered bounded retrievers
-    (broadcast query terms / query vectors, corpus never self-joins);
-    the mining join touches only |queries| × pool rows, and the
-    hn_rank window partitions on (query, flag) over ≤ pool rows per
-    group — bounded by construction, independent of corpus size.
-    Shares the one cached (doc, term, tf) corpus pass with the other
-    lexical legs (a future registry trade can fuse this with
-    ``hybrid_retrieval_rrf`` off one shared pool)."""
-    from ..operators import similarity
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    tf = (
-        docs.select("doc_id", F.explode(text.tokens_col("text")).alias("term"))
-        .groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .cache()
-    )
-    lex = corpus.bm25_topk(
-        docs, RRF_QUERY_IDS, k=RRF_POOL, k1=BM25_K1, b=BM25_B, tf_table=tf
-    ).select(
-        "query_id",
-        F.col("doc_id").alias("item_id"),
-        F.col("rank").alias("lex_rank"),
-    )
-    sem = similarity.brute_force_topk(
-        emb, query_ids=RRF_QUERY_IDS, k=RRF_POOL
-    ).select(
-        "query_id",
-        F.col("neighbor_id").alias("item_id"),
-        F.col("rank").alias("sem_rank"),
-    )
-    base = lex.join(F.broadcast(sem), ["query_id", "item_id"], "left").withColumn(
-        "is_hard_negative", F.col("sem_rank").isNull()
-    )
-    w = Window.partitionBy("query_id", "is_hard_negative").orderBy("lex_rank")
-    return base.select(
-        "query_id",
-        "item_id",
-        "lex_rank",
-        "sem_rank",
-        "is_hard_negative",
-        F.when(F.col("is_hard_negative"), F.row_number().over(w))
-        .cast("int")
-        .alias("hn_rank"),
-    )
-
-
-def _hard_negative_sql() -> str:
-    """Reuse the RRF oracle's two retrieval legs verbatim (same
-    constants, same CTE chain) and swap the fusion tail for the
-    mining select — the SQL-surgery pattern of _cluster_reps_sql."""
-    prefix, _ = HYBRID_RETRIEVAL_RRF_SQL.rsplit(",\nfused AS (", 1)
-    return f"""{prefix},
-hn AS (
-  SELECT l.query_id, l.item_id, l.rank AS lex_rank, s.rank AS sem_rank,
-         s.rank IS NULL AS is_hard_negative
-  FROM lex l LEFT JOIN sem s
-    ON l.query_id = s.query_id AND l.item_id = s.item_id
-)
-SELECT query_id, item_id, lex_rank, sem_rank, is_hard_negative,
-       CASE WHEN is_hard_negative THEN CAST(row_number() OVER (
-            PARTITION BY query_id, is_hard_negative
-            ORDER BY lex_rank) AS INT) END AS hn_rank
-FROM hn
-"""
-
-
-HARD_NEGATIVE_MINING_SQL = _hard_negative_sql()
 
 # --- Cluster representative selection ---------------------------------------
 
@@ -2591,297 +1959,6 @@ FROM d JOIN trates USING (source)
 )
 
 
-# --- Coverage-maximizing source selection (submodular greedy) ----------------
-#
-# Unit-first pre-build (r13): registers when an r15+ slot frees.  The
-# Spark side collapses the corpus to the exact (mask, cnt) coverage
-# summary (bounded by 2^|sources| — see operators/corpus.py) and runs
-# the greedy on the driver; the oracle UNROLLS the same greedy as
-# K nested argmax CTEs over the identical mask table (the
-# corpus_quality_classifier unrolled-GD precedent), so every gain is
-# an exact integer and the single coverage division matches bitwise.
-
-COVERAGE_K_SELECT = 5
-COVERAGE_NGRAM_K = 3
-
-
-def source_coverage_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return corpus.source_coverage_greedy(
-        docs, k_select=COVERAGE_K_SELECT, ngram_k=COVERAGE_NGRAM_K
-    )
-
-
-def _source_coverage_sql() -> str:
-    shift = "(CAST(1 AS BIGINT) << s.idx)"
-    ctes = [
-        "tok AS (SELECT source, string_split(text, ' ') AS tok\n"
-        "  FROM documents WHERE source IS NOT NULL AND text IS NOT NULL)",
-        "pairs AS (SELECT source, ng\n"
-        f"  FROM tok, UNNEST({sql_shingles('tok', COVERAGE_NGRAM_K)})"
-        " AS u(ng))",
-        "sidx AS (SELECT source,\n"
-        "  CAST(row_number() OVER (ORDER BY source) - 1 AS BIGINT) AS idx\n"
-        "  FROM (SELECT DISTINCT source FROM documents"
-        " WHERE source IS NOT NULL))",
-        "ngmask AS (SELECT ng,\n"
-        "  CAST(bit_or(CAST(1 AS BIGINT) << sidx.idx) AS BIGINT) AS mask\n"
-        "  FROM pairs JOIN sidx USING (source) GROUP BY ng)",
-        "mc AS (SELECT mask, CAST(count(*) AS BIGINT) AS cnt"
-        " FROM ngmask GROUP BY mask)",
-        "tot AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS total"
-        " FROM mc)",
-    ]
-    prev_picked = "CAST(0 AS BIGINT)"
-    prev_covered = "CAST(0 AS BIGINT)"
-    finals = []
-    for i in range(1, COVERAGE_K_SELECT + 1):
-        if i == 1:
-            g = (
-                f"g{i} AS (SELECT s.source, s.idx,\n"
-                f"  CAST(coalesce(SUM(CASE WHEN (m.mask & {shift}) <> 0"
-                f" THEN m.cnt END), 0) AS BIGINT) AS gain\n"
-                "  FROM sidx s LEFT JOIN mc m ON TRUE\n"
-                "  GROUP BY s.source, s.idx)"
-            )
-            p = (
-                f"p{i} AS (SELECT source, gain,\n"
-                f"  ({prev_picked} | (CAST(1 AS BIGINT) << idx)) AS picked,\n"
-                f"  ({prev_covered} + gain) AS covered\n"
-                f"  FROM g{i} ORDER BY gain DESC, source LIMIT 1)"
-            )
-        else:
-            g = (
-                f"g{i} AS (SELECT s.source, s.idx, p.picked AS prev_picked,"
-                " p.covered AS prev_covered,\n"
-                f"  CAST(coalesce(SUM(CASE WHEN (m.mask & {shift}) <> 0"
-                " AND (m.mask & p.picked) = 0"
-                f" THEN m.cnt END), 0) AS BIGINT) AS gain\n"
-                f"  FROM sidx s CROSS JOIN p{i - 1} p"
-                " LEFT JOIN mc m ON TRUE\n"
-                f"  WHERE (p.picked & {shift}) = 0\n"
-                "  GROUP BY s.source, s.idx, p.picked, p.covered)"
-            )
-            p = (
-                f"p{i} AS (SELECT source, gain,\n"
-                "  (prev_picked | (CAST(1 AS BIGINT) << idx)) AS picked,\n"
-                "  (prev_covered + gain) AS covered\n"
-                f"  FROM g{i} ORDER BY gain DESC, source LIMIT 1)"
-            )
-        ctes.append(g)
-        ctes.append(p)
-        finals.append(
-            f"SELECT CAST({i} AS INT) AS sel_rank, p{i}.source, p{i}.gain,"
-            f" p{i}.covered,\n"
-            "  CASE WHEN tot.total = 0 THEN 0.0"
-            f" ELSE CAST(p{i}.covered AS DOUBLE) / CAST(tot.total AS DOUBLE)"
-            f" END AS coverage_frac\n  FROM p{i} CROSS JOIN tot"
-        )
-    return (
-        "WITH " + ",\n".join(ctes) + "\n"
-        + "\nUNION ALL\n".join(finals)
-    )
-
-
-SOURCE_COVERAGE_SQL = _source_coverage_sql()
-
-
-# --- Incremental coverage (SEVENTH incremental-ingest family; r13) -----------
-#
-# The coverage index (ng → source bitmask) is MERGEABLE with bit_or —
-# associative, commutative, IDEMPOTENT — so batches accrue as
-# append-only per-batch segments merged with bit_or, and a replayed
-# batch changes nothing.  Per-batch cost is the batch's
-# own shingle pass plus the bounded summary refresh — the corpus is
-# never re-read; state grows with DISTINCT ngrams (the dedup-index
-# contrast).  The fresh spec
-# proves the accrual law end-to-end: the greedy over the two-batch
-# accrued index must EQUAL the one-shot full-corpus greedy (the
-# standard %10 batch split covers every doc with a 20% re-ingest
-# overlap), so the greedy leg's oracle is SOURCE_COVERAGE_SQL
-# reused verbatim; the novelty leg reports what batch 2 actually
-# added per source — the per-ingest readout a curation loop watches.
-
-
-def incremental_coverage_fresh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from .extended_queries import _inc_batches
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    srcs = corpus.coverage_sources(docs)
-    b1, b2 = _inc_batches(docs)
-    idx1 = corpus.ngram_masks(b1, srcs, ngram_k=COVERAGE_NGRAM_K).cache()
-    idx2 = corpus.ngram_masks(b2, srcs, ngram_k=COVERAGE_NGRAM_K).cache()
-    accrued = (
-        idx1.unionByName(idx2)
-        .groupBy("ng")
-        .agg(F.bit_or("mask").alias("mask"))
-    )
-    greedy = corpus.greedy_from_summary(
-        spark, corpus.masks_summary(accrued), srcs, COVERAGE_K_SELECT
-    ).select(
-        F.lit("greedy").alias("variant"),
-        "sel_rank",
-        "source",
-        "gain",
-        "covered",
-        "coverage_frac",
-    )
-    new2 = idx2.join(idx1, "ng", "left_anti")
-    new_summary = corpus.masks_summary(new2).collect()
-    novelty_rows = []
-    for i, s in enumerate(srcs):
-        bit = 1 << i
-        novelty_rows.append(
-            (s, sum(r["cnt"] for r in new_summary if r["mask"] & bit))
-        )
-    novelty = local_rows_df(
-        spark, novelty_rows, "source string, gain bigint"
-    ).select(
-        F.lit("batch_novelty").alias("variant"),
-        F.lit(None).cast("int").alias("sel_rank"),
-        "source",
-        "gain",
-        F.lit(None).cast("bigint").alias("covered"),
-        F.lit(None).cast("double").alias("coverage_frac"),
-    )
-    return greedy.unionByName(novelty)
-
-
-def _incremental_coverage_sql() -> str:
-    sh = sql_shingles("tok", COVERAGE_NGRAM_K)
-    return f"""
-WITH greedy_leg AS ({SOURCE_COVERAGE_SQL}),
-itok AS (
-  SELECT doc_id, source, string_split(text, ' ') AS tok
-  FROM documents WHERE source IS NOT NULL AND text IS NOT NULL
-),
-ng1 AS (
-  SELECT DISTINCT ng FROM itok, UNNEST({sh}) AS u(ng)
-  WHERE doc_id % 10 < {{b1}}
-),
-p2 AS (
-  SELECT DISTINCT source, ng FROM itok, UNNEST({sh}) AS u(ng)
-  WHERE doc_id % 10 >= {{b2}}
-),
-delta AS (
-  SELECT p2.source, CAST(count(DISTINCT p2.ng) AS BIGINT) AS gain
-  FROM p2 LEFT JOIN ng1 ON p2.ng = ng1.ng
-  WHERE ng1.ng IS NULL
-  GROUP BY p2.source
-),
-allsrc AS (SELECT DISTINCT source FROM documents WHERE source IS NOT NULL)
-SELECT 'greedy' AS variant, sel_rank, source, gain, covered, coverage_frac
-FROM greedy_leg
-UNION ALL
-SELECT 'batch_novelty', CAST(NULL AS INT), allsrc.source,
-       CAST(coalesce(delta.gain, 0) AS BIGINT),
-       CAST(NULL AS BIGINT), CAST(NULL AS DOUBLE)
-FROM allsrc LEFT JOIN delta ON allsrc.source = delta.source
-""".format(b1=INC_B1_LT, b2=INC_B2_GE)
-
-
-INCREMENTAL_COVERAGE_SQL = _incremental_coverage_sql()
-
-
-# --- Tokenizer fertility stats (r13 pre-build; BPE-family widening) ----------
-#
-# The tokenizer-health report every multilingual pipeline watches:
-# per-language FERTILITY (BPE tokens per whitespace word — how many
-# subwords a word fragments into) and compression (word chars per
-# token).  A language whose fertility runs hot is under-served by the
-# vocab (its words shatter to characters), the signal behind vocab
-# re-budgeting.  Reuses the trained encode chain (BPE_ENCODE_SQL as a
-# CTE) — no new tokenizer machinery; all aggregates are exact-integer
-# sums with ONE IEEE division each, so the ratios are cross-engine
-# bitwise.
-
-
-def tokenizer_fertility_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    _, vocab = text.bpe_train(
-        docs, n_merges=BPE_N_MERGES, return_vocab=True
-    )
-    enc = text.bpe_encode(docs, vocab).select("doc_id", "n_tokens")
-    toks = F.filter(
-        F.split(F.lower(F.col("text")), "\\s+"), lambda w: w != ""
-    )
-    meta = docs.where(F.col("lang").isNotNull()).select(
-        "doc_id",
-        "lang",
-        F.greatest(F.size(toks), F.lit(0)).alias("n_words"),
-        F.coalesce(
-            F.aggregate(
-                toks,
-                F.lit(0).cast("long"),
-                lambda acc, w: acc + F.length(w),
-            ),
-            F.lit(0).cast("long"),
-        ).alias("n_chars"),
-    )
-    agg = (
-        meta.join(enc, "doc_id")
-        .groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("n_words").alias("n_words"),
-            F.sum("n_tokens").alias("n_tokens"),
-            F.sum("n_chars").alias("n_chars"),
-        )
-    )
-    return agg.select(
-        "lang",
-        "n_docs",
-        "n_words",
-        "n_tokens",
-        "n_chars",
-        F.when(F.col("n_words") == 0, F.lit(0.0))
-        .otherwise(
-            F.col("n_tokens").cast("double") / F.col("n_words").cast("double")
-        )
-        .alias("fertility"),
-        F.when(F.col("n_tokens") == 0, F.lit(0.0))
-        .otherwise(
-            F.col("n_chars").cast("double") / F.col("n_tokens").cast("double")
-        )
-        .alias("chars_per_token"),
-    )
-
-
-def _tokenizer_fertility_sql() -> str:
-    return f"""
-WITH enc_out AS MATERIALIZED ({BPE_ENCODE_SQL}),
-meta AS (
-  SELECT doc_id, lang,
-         list_filter(string_split_regex(lower(text), '\\s+'),
-                     w -> w <> '') AS ws
-  FROM documents WHERE lang IS NOT NULL
-),
-per_doc AS (
-  SELECT m.doc_id, m.lang,
-         CAST(coalesce(len(m.ws), 0) AS BIGINT) AS n_words,
-         CAST(coalesce(list_sum(list_transform(m.ws, w -> length(w))), 0)
-              AS BIGINT) AS n_chars,
-         e.n_tokens
-  FROM meta m JOIN enc_out e USING (doc_id)
-)
-SELECT lang,
-       CAST(count(*) AS BIGINT) AS n_docs,
-       CAST(sum(n_words) AS BIGINT) AS n_words,
-       CAST(sum(n_tokens) AS BIGINT) AS n_tokens,
-       CAST(sum(n_chars) AS BIGINT) AS n_chars,
-       CASE WHEN sum(n_words) = 0 THEN 0.0
-            ELSE CAST(sum(n_tokens) AS DOUBLE) / CAST(sum(n_words) AS DOUBLE)
-       END AS fertility,
-       CASE WHEN sum(n_tokens) = 0 THEN 0.0
-            ELSE CAST(sum(n_chars) AS DOUBLE) / CAST(sum(n_tokens) AS DOUBLE)
-       END AS chars_per_token
-FROM per_doc GROUP BY lang
-"""
-
-
-TOKENIZER_FERTILITY_SQL = _tokenizer_fertility_sql()
-
-
 def __getattr__(name: str):
     """Lazy cross-module SQL (see the CORPUS_DECON_SUITE_SQL note):
     resolved on first access, after both plan modules finish init."""
@@ -2949,96 +2026,3 @@ SELECT cast(sum(cast(term AS DECIMAL(28,9))) AS DOUBLE) AS chi2,
          AS verdict
 FROM t
 """
-
-
-# --- Poisson bootstrap CI (mean tokens per doc) ------------------------------
-
-BOOT_B = 20
-BOOT_Z = 1.96
-
-
-def corpus_mean_tokens_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Mean tokens-per-document with a deterministic Poisson-bootstrap
-    95% CI (pre-built r13; ``operators/corpus.py:
-    poisson_bootstrap_ci``): the error bar a corpus-level number
-    ships with, computed scalably — hash-derived Poisson(1) replicate
-    weights, one corpus pass, B-row statistics frame."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    v = docs.select(
-        "doc_id",
-        F.size(F.split(F.col("text"), " ")).cast("long").alias("ntok"),
-    )
-    return corpus.poisson_bootstrap_ci(
-        v, "ntok", n_replicates=BOOT_B, z=BOOT_Z
-    )
-
-
-def _boot_sql() -> str:
-    from ..operators.corpus import POISSON1_CDF
-
-    t = POISSON1_CDF
-    b = BOOT_B
-    return f"""
-WITH v AS (
-  SELECT doc_id,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS x
-  FROM documents
-),
-ex AS (
-  SELECT doc_id, x, unnest(generate_series(0, {b - 1})) AS bb FROM v
-),
-wgt AS (
-  SELECT bb,
-         CAST(CASE WHEN u < {t[0]} THEN 0
-                   WHEN u < {t[1]} THEN 1
-                   WHEN u < {t[2]} THEN 2
-                   WHEN u < {t[3]} THEN 3
-                   WHEN u < {t[4]} THEN 4
-                   ELSE 5 END AS BIGINT) AS w, x
-  FROM (
-    SELECT bb, x,
-           CAST(('0x' || substr(md5(doc_id::VARCHAR || ':' || bb::VARCHAR),
-                                1, 8))::BIGINT AS DOUBLE)
-             / 4294967296.0 AS u
-    FROM ex
-  )
-),
-reps AS (
-  SELECT {sql_exact_round(
-      "CAST(sum(w * x) AS DOUBLE) / CAST(sum(w) AS DOUBLE)", 9)} AS m
-  FROM wgt GROUP BY bb
-),
-mm AS (
-  SELECT m,
-         {sql_exact_round(
-             "cast(sum(cast(m AS DECIMAL(28,9))) OVER () AS DOUBLE)"
-             f" / {float(b)}", 9)} AS boot_mean
-  FROM reps
-),
-dev AS (
-  SELECT boot_mean,
-         {sql_exact_round("(m - boot_mean) * (m - boot_mean)", 9)} AS d2
-  FROM mm
-),
-sd AS (
-  SELECT boot_mean,
-         {sql_exact_round(
-             "sqrt(cast(sum(cast(d2 AS DECIMAL(28,9))) OVER () AS DOUBLE)"
-             f" / {float(b - 1)})", 9)} AS boot_std
-  FROM dev LIMIT 1
-),
-est AS (
-  SELECT {sql_exact_round(
-      "CAST(sum(x) AS DOUBLE) / CAST(count(*) AS DOUBLE)", 9)}
-    AS estimate
-  FROM v
-)
-SELECT estimate, boot_mean, boot_std,
-       {sql_exact_round(f"boot_mean - {BOOT_Z} * boot_std", 9)} AS ci_lo,
-       {sql_exact_round(f"boot_mean + {BOOT_Z} * boot_std", 9)} AS ci_hi,
-       CAST({b} AS BIGINT) AS n_replicates
-FROM est, sd
-"""
-
-
-CORPUS_MEAN_TOKENS_CI_SQL = _boot_sql()

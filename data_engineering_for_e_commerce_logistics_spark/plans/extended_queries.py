@@ -151,15 +151,6 @@ WHERE len(list_intersect(a.ws, b.ws))::DOUBLE /
 """
 
 
-def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash signatures — fully oracle-checked since r03: the 64-bit
-    assembly IS portable SQL (md5 hex nibble → strpos, per-bit vote
-    sums, shift/CASE assembly with the sign bit mapped to -2^63), so
-    DuckDB reproduces every signature bit-exactly."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return dedup.simhash(docs)
-
-
 def _simhash_oracle_sql(bits: int = 64, shingle_k: int = 2) -> str:
     """Generate the DuckDB twin of ``operators.dedup.simhash``:
     same shingles, same md5 nibble bits, same +1/-1 votes, same
@@ -209,32 +200,12 @@ FROM v
 DEDUP_SIMHASH_SQL = _simhash_oracle_sql()
 
 
-def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs via hamming-band buckets.  Oracle = the
-    all-pairs xor/bit_count scan over the (oracle-identical)
-    signatures: the pigeonhole banding is LOSSLESS for
-    max_hamming < n_bands, so the banded engine result and the oracle's
-    quadratic scan are the same set by construction, not approximately.
-    (≥95% recall vs n-gram-jaccard ground truth asserted in pytest.)"""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return dedup.simhash_near_pairs(dedup.simhash(docs), max_hamming=3)
-
-
-DEDUP_SIMHASH_PAIRS_SQL = f"""
-WITH sig AS ({DEDUP_SIMHASH_SQL})
-SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-       CAST(bit_count(xor(a.simhash, b.simhash)) AS INTEGER) AS hamming
-FROM sig a JOIN sig b ON a.doc_id < b.doc_id
-WHERE bit_count(xor(a.simhash, b.simhash)) <= 3
-"""
-
-
 def dedup_simhash_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merged-variants consolidation (r08, the r09-earmarked trade
     pulled forward to fund the capstone's driver row): the signature
-    table (``dedup_simhash``) and the hamming-banded near-dup pairs
-    (``dedup_simhash_pairs``) union under one padded shape — one
-    hamming family, one spec, every original output cell preserved.
+    table and the hamming-banded near-dup pairs union under one
+    padded shape — one hamming family, one spec, every original output
+    cell preserved.
     The 64-bit signature rides as a DECIMAL STRING pad column so the
     comparison stays bit-exact (a double pad would round past the
     53-bit mantissa); every other numeric pad follows the suite

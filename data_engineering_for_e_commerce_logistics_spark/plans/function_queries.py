@@ -1,6 +1,6 @@
-"""Scalar-function breadth queries: date/time parts, array/lambda
-functions (SURVEY §2.7 completeness beyond the reference's narrow
-usage), and the SCD2 dimension-history operator.
+"""Scalar-function breadth queries: array/lambda functions (SURVEY
+§2.7 completeness beyond the reference's narrow usage) and the SCD2
+dimension-history operator.
 """
 
 from __future__ import annotations
@@ -9,43 +9,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-
-# --- Date/time parts --------------------------------------------------------
-
-
-def time_functions_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Calendar decomposition + interval arithmetic + day diffs — the
-    time-dimension toolkit for lifecycle timestamps (ref cleaners'
-    delivery math generalized)."""
-    o = load_tables(spark, sf_dir, ("orders",))["orders"]
-    ts = F.col("o_orderdate")
-    return o.select(
-        "o_orderkey",
-        F.year(ts).alias("order_year"),
-        F.quarter(ts).alias("order_quarter"),
-        F.month(ts).alias("order_month"),
-        F.dayofmonth(ts).alias("order_day"),
-        F.hour(ts).alias("order_hour"),
-        F.date_trunc("month", ts).alias("month_start"),
-        (ts + F.expr("INTERVAL 30 DAYS")).alias("due_date"),
-        F.datediff(
-            F.lit("2000-01-01").cast("timestamp").cast("date"), ts.cast("date")
-        ).alias("days_to_y2k"),
-    )
-
-
-TIME_FUNCTIONS_SQL = """
-SELECT o_orderkey,
-       extract(year FROM o_orderdate)::INT    AS order_year,
-       extract(quarter FROM o_orderdate)::INT AS order_quarter,
-       extract(month FROM o_orderdate)::INT   AS order_month,
-       extract(day FROM o_orderdate)::INT     AS order_day,
-       extract(hour FROM o_orderdate)::INT    AS order_hour,
-       date_trunc('month', o_orderdate)       AS month_start,
-       o_orderdate + INTERVAL 30 DAY          AS due_date,
-       date_diff('day', o_orderdate::DATE, DATE '2000-01-01')::INT AS days_to_y2k
-FROM orders
-"""
 
 # --- Array / lambda functions ----------------------------------------------
 

@@ -2795,517 +2795,6 @@ FROM corp c LEFT JOIN per_vec p USING (vec_id)
 """
 
 
-# --- Johnson–Lindenstrauss projection (map-only dim reduction) ---------------
-
-JL_OUT_DIM = 16
-JL_DIST_IDS = 20  # pairwise distance-preservation leg: first N vectors
-
-
-def jl_project_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic JL projection 64→16 (r12 unit-first;
-    ``operators/similarity.py:jl_project``) with its own evidence leg:
-
-    * 'comp' rows — every vector's projected components, exploded, so
-      the driver hash pins the map-only transform cell-exactly;
-    * 'dist' rows — for the first JL_DIST_IDS vectors, every pair's
-      (projected squared distance / original squared distance): the
-      JL lemma made visible inside the oracle-checked result (ratios
-      cluster around 1; the unit test asserts the ε-band, the oracle
-      asserts cross-engine equality).
-
-    Scale: the comp leg is one shuffle-free codegen expression over
-    the corpus; the dist leg joins a broadcast {JL_DIST_IDS}-row frame
-    against itself — bounded by construction."""
-    from ..operators.similarity import _sq_dist, jl_project
-
-    emb = load_tables(spark, sf_dir, ("embeddings",))["embeddings"]
-    proj = jl_project(emb, out_dim=JL_OUT_DIM)
-    comp = proj.select(
-        F.lit("comp").alias("variant"),
-        F.col("vec_id").alias("a"),
-        F.posexplode("jl").alias("b", "__x"),
-    ).select(
-        "variant",
-        "a",
-        F.col("b").cast("bigint").alias("b"),
-        exact_round(F.col("__x"), 6).alias("x"),
-    )
-
-    sub = (
-        emb.where(F.col("vec_id") < JL_DIST_IDS)
-        .join(proj, "vec_id")
-        .select(
-            "vec_id",
-            F.transform("embedding", lambda z: z.cast("double")).alias("v"),
-            "jl",
-        )
-    )
-    rhs = sub.select(
-        F.col("vec_id").alias("b_id"),
-        F.col("v").alias("bv"),
-        F.col("jl").alias("bjl"),
-    )
-    dist = (
-        sub.join(F.broadcast(rhs), F.col("vec_id") < F.col("b_id"))
-        .select(
-            F.lit("dist").alias("variant"),
-            F.col("vec_id").alias("a"),
-            F.col("b_id").alias("b"),
-            _sq_dist(F.col("jl"), F.col("bjl")).alias("__jd"),
-            _sq_dist(F.col("v"), F.col("bv")).alias("__od"),
-        )
-        .where(F.col("__od") > 0)
-        .select(
-            "variant",
-            "a",
-            "b",
-            exact_round(F.col("__jd") / F.col("__od"), 4).alias("x"),
-        )
-    )
-    return comp.unionByName(dist)
-
-
-def _jl_sql() -> str:
-    from ..operators.similarity import JL_I, JL_J, JL_P
-
-    sign = (
-        f"(1 - 2 * ((i * {JL_I[0]} + {JL_I[1]}) % {JL_P}"
-        f" * ((j * {JL_J[0]} + {JL_J[1]}) % {JL_P}) % {JL_P} % 2))"
-    )
-    inv = repr(float(JL_OUT_DIM) ** 0.5)
-    sqd = (
-        "list_reduce(list_transform(list_zip({a}, {b}),"
-        " p -> (p[1] - p[2]) * (p[1] - p[2])), (x, y) -> x + y)"
-    )
-    return f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, zz -> CAST(zz AS DOUBLE)) AS v
-  FROM embeddings
-),
-proj AS (
-  SELECT vec_id,
-         list_transform(range(0, {JL_OUT_DIM}), j ->
-           list_reduce(
-             list_transform(range(0, len(v)),
-               i -> v[i + 1] * {sign}),
-             (x, y) -> x + y) / {inv}) AS jl
-  FROM e
-),
-comp AS (
-  SELECT 'comp' AS variant, vec_id AS a,
-         CAST(generate_subscripts(jl, 1) - 1 AS BIGINT) AS b,
-         {sql_exact_round('unnest(jl)', 6)} AS x
-  FROM proj
-),
-sub AS (
-  SELECT e.vec_id, e.v, p.jl FROM e JOIN proj p USING (vec_id)
-  WHERE e.vec_id < {JL_DIST_IDS}
-),
-dist AS (
-  SELECT 'dist' AS variant, s.vec_id AS a, t.vec_id AS b,
-         {sql_exact_round(sqd.format(a='s.jl', b='t.jl') + ' / ' + sqd.format(a='s.v', b='t.v'), 4)} AS x
-  FROM sub s JOIN sub t ON s.vec_id < t.vec_id
-  WHERE {sqd.format(a='s.v', b='t.v')} > 0
-)
-SELECT * FROM comp UNION ALL SELECT * FROM dist
-"""
-
-
-JL_PROJECT_SQL = _jl_sql()
-
-
-# --- Near-dup verify-threshold sweep ----------------------------------------
-
-SWEEP_THRESHOLDS = (0.5, 0.6, 0.7, 0.8, 0.9)
-
-
-def dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup verify-threshold sensitivity sweep (pre-built r13):
-    mine the LSH candidates ONCE at the loosest threshold, then read
-    pair count / affected docs / removed docs / dup rate at every
-    sweep point — the tuning curve that answers "what does moving the
-    Jaccard cut from 0.6 to 0.8 actually cost" WITHOUT re-mining per
-    candidate threshold.  Honest scope: candidates come from the
-    registered banding (tuned for ~0.6), so the sweep measures
-    verify-threshold sensitivity GIVEN that candidate set, and
-    ``n_removed`` uses the keep-min-per-PAIR rule (distinct
-    greater-side ids), not full cluster transitivity.
-
-    Scale: one banded mine (never all-pairs), the verified-pair frame
-    cached once; the sweep itself is a broadcast of 5 threshold rows
-    against the bounded pair frame."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    pairs = dedup.minhash_lsh_dedup(
-        docs,
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_k=SHINGLE_K,
-        threshold=SWEEP_THRESHOLDS[0],
-    ).cache()
-    th = docs.agg(F.count(F.lit(1)).alias("__nd")).select(
-        "__nd",
-        F.explode(
-            F.array(*[F.lit(t) for t in SWEEP_THRESHOLDS])
-        ).alias("t"),
-    )
-    pt = pairs.crossJoin(F.broadcast(th.select("t"))).where(
-        F.col("jaccard") >= F.col("t")
-    )
-    agg = pt.groupBy("t").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.countDistinct("id_b").alias("n_removed"),
-    )
-    aff = (
-        pt.select(
-            "t", F.explode(F.array("id_a", "id_b")).alias("__id")
-        )
-        .groupBy("t")
-        .agg(F.countDistinct("__id").alias("n_docs_affected"))
-    )
-    return (
-        th.join(F.broadcast(agg), "t", "left")
-        .join(F.broadcast(aff), "t", "left")
-        .na.fill({"n_pairs": 0, "n_removed": 0, "n_docs_affected": 0})
-        .select(
-            F.col("t").alias("threshold"),
-            "n_pairs",
-            "n_docs_affected",
-            "n_removed",
-            exact_round(
-                F.col("n_removed").cast("double")
-                / F.col("__nd").cast("double"),
-                9,
-            ).alias("dup_rate"),
-        )
-    )
-
-
-DEDUP_SWEEP_SQL = f"""
-WITH {minhash_pipeline_ctes(SWEEP_THRESHOLDS[0])},
-nn AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-th AS (
-  SELECT unnest({list(SWEEP_THRESHOLDS)}) AS t, n_docs FROM nn
-),
-pt AS (
-  SELECT th.t, v.id_a, v.id_b FROM verified v JOIN th ON v.jaccard >= th.t
-),
-agg AS (
-  SELECT t, CAST(count(*) AS BIGINT) AS n_pairs,
-         CAST(count(DISTINCT id_b) AS BIGINT) AS n_removed
-  FROM pt GROUP BY t
-),
-aff AS (
-  SELECT t, CAST(count(DISTINCT id) AS BIGINT) AS n_docs_affected FROM (
-    SELECT t, id_a AS id FROM pt UNION SELECT t, id_b FROM pt
-  ) GROUP BY t
-)
-SELECT th.t AS threshold,
-       coalesce(agg.n_pairs, 0) AS n_pairs,
-       coalesce(aff.n_docs_affected, 0) AS n_docs_affected,
-       coalesce(agg.n_removed, 0) AS n_removed,
-       {sql_exact_round(
-           "CAST(coalesce(agg.n_removed, 0) AS DOUBLE)"
-           " / CAST(th.n_docs AS DOUBLE)", 9)} AS dup_rate
-FROM th
-LEFT JOIN agg ON th.t = agg.t
-LEFT JOIN aff ON th.t = aff.t
-"""
-
-
-def lsh_forensics_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """THE future one-mine LSH consolidation vehicle (pre-built r13):
-    verified pairs, connected-component cluster labels, the
-    per-source retention ledger, and the threshold sensitivity sweep
-    — four forensic readouts off ONE cached banded mine at the
-    loosest sweep threshold (the registered-cut legs filter it to
-    ≥ {THRESHOLD}, an identical set to mining at {THRESHOLD}
-    directly since verify stores exact Jaccards).  Registering this
-    retires minhash_cluster_suite + dedup_retention_ledger +
-    dedup_threshold_sweep into one slot; every leg's cells are
-    bit-identical to its standalone spec (parts-equivalence pinned).
-
-    Pads: pairs → (k1=id_a, k2=id_b, v1=jaccard); clusters →
-    (k1=doc_id, k2=cluster_id); ledger → (s=source, n1..n8 counts,
-    v1/v2 retention rates); sweep → (v1=threshold, n1..n3 counts,
-    v2=dup_rate)."""
-    from ..operators.graph import connected_components
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    base = docs.select("doc_id", "text", "source").cache()
-    mine = dedup.minhash_lsh_dedup(
-        base,
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_k=SHINGLE_K,
-        threshold=SWEEP_THRESHOLDS[0],
-    ).cache()
-    pairs06 = mine.where(F.col("jaccard") >= THRESHOLD).cache()
-    clusters = connected_components(pairs06)
-    ledger = dedup.retention_ledger(base, pairs06)
-    th = base.agg(F.count(F.lit(1)).alias("__nd")).select(
-        "__nd",
-        F.explode(
-            F.array(*[F.lit(t) for t in SWEEP_THRESHOLDS])
-        ).alias("t"),
-    )
-    pt = mine.crossJoin(F.broadcast(th.select("t"))).where(
-        F.col("jaccard") >= F.col("t")
-    )
-    sweep_agg = pt.groupBy("t").agg(
-        F.count(F.lit(1)).alias("n_pairs"),
-        F.countDistinct("id_b").alias("n_removed"),
-    )
-    sweep_aff = (
-        pt.select("t", F.explode(F.array("id_a", "id_b")).alias("__id"))
-        .groupBy("t")
-        .agg(F.countDistinct("__id").alias("n_docs_affected"))
-    )
-    sweep = (
-        th.join(F.broadcast(sweep_agg), "t", "left")
-        .join(F.broadcast(sweep_aff), "t", "left")
-        .na.fill({"n_pairs": 0, "n_removed": 0, "n_docs_affected": 0})
-        .select(
-            F.col("t"),
-            "n_pairs",
-            "n_docs_affected",
-            "n_removed",
-            exact_round(
-                F.col("n_removed").cast("double")
-                / F.col("__nd").cast("double"),
-                9,
-            ).alias("dup_rate"),
-        )
-    )
-    nl = F.lit(None).cast("long")
-    ns = F.lit(None).cast("string")
-    nd_ = F.lit(None).cast("double")
-
-    def _pad(df, **cols):
-        out = []
-        for name in (
-            "k1", "k2", "s",
-            "n1", "n2", "n3", "n4", "n5", "n6", "n7", "n8",
-            "v1", "v2",
-        ):
-            if name in cols:
-                out.append(cols[name].alias(name))
-            elif name == "s":
-                out.append(ns.alias(name))
-            elif name.startswith("n") or name.startswith("k"):
-                out.append(nl.alias(name))
-            else:
-                out.append(nd_.alias(name))
-        return df.select(cols["variant"].alias("variant"), *out)
-
-    p_leg = _pad(
-        pairs06,
-        variant=F.lit("pairs"),
-        k1=F.col("id_a"),
-        k2=F.col("id_b"),
-        v1=F.col("jaccard"),
-    )
-    c_leg = _pad(
-        clusters,
-        variant=F.lit("clusters"),
-        k1=F.col("node"),
-        k2=F.col("label"),
-    )
-    l_leg = _pad(
-        ledger,
-        variant=F.lit("ledger"),
-        s=F.col("source"),
-        n1=F.col("n_docs"),
-        n2=F.col("n_tokens"),
-        n3=F.col("exact_kept"),
-        n4=F.col("exact_tokens"),
-        n5=F.col("near_kept"),
-        n6=F.col("near_tokens"),
-        n7=F.col("final_kept"),
-        n8=F.col("final_tokens"),
-        v1=F.col("doc_retention"),
-        v2=F.col("token_retention"),
-    )
-    s_leg = _pad(
-        sweep,
-        variant=F.lit("sweep"),
-        n1=F.col("n_pairs"),
-        n2=F.col("n_docs_affected"),
-        n3=F.col("n_removed"),
-        v1=F.col("t"),
-        v2=F.col("dup_rate"),
-    )
-    return p_leg.unionByName(c_leg).unionByName(l_leg).unionByName(s_leg)
-
-
-LSH_FORENSICS_SQL = f"""
-WITH RECURSIVE
-{minhash_pipeline_ctes(SWEEP_THRESHOLDS[0])},
-v06 AS (SELECT * FROM verified WHERE jaccard >= {THRESHOLD}),
-nodes AS (
-  SELECT DISTINCT id FROM (
-    SELECT id_a AS id FROM v06 UNION SELECT id_b FROM v06)
-),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM v06
-  UNION SELECT id_b, id_a FROM v06
-),
-reach(node, root) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-),
-comp AS (SELECT node AS doc_id, min(root) AS rep FROM reach GROUP BY node),
-lbase AS (
-  SELECT doc_id, source,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok,
-         md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fp
-  FROM documents
-),
-fpk AS (SELECT fp, min(doc_id) AS kept FROM lbase GROUP BY fp),
-flags AS (
-  SELECT b.source, b.ntok,
-         CASE WHEN b.doc_id = k.kept THEN 1 ELSE 0 END AS ex,
-         CASE WHEN c.rep IS NULL OR c.rep = b.doc_id THEN 1 ELSE 0 END AS nr
-  FROM lbase b JOIN fpk k USING (fp) LEFT JOIN comp c USING (doc_id)
-),
-ledger AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(ntok) AS BIGINT) AS n_tokens,
-         CAST(sum(ex) AS BIGINT) AS exact_kept,
-         CAST(sum(ex * ntok) AS BIGINT) AS exact_tokens,
-         CAST(sum(nr) AS BIGINT) AS near_kept,
-         CAST(sum(nr * ntok) AS BIGINT) AS near_tokens,
-         CAST(sum(ex * nr) AS BIGINT) AS final_kept,
-         CAST(sum(ex * nr * ntok) AS BIGINT) AS final_tokens
-  FROM flags GROUP BY source
-),
-nn AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM documents),
-th AS (SELECT unnest({list(SWEEP_THRESHOLDS)}) AS t, n_docs FROM nn),
-pt AS (
-  SELECT th.t, v.id_a, v.id_b FROM verified v JOIN th ON v.jaccard >= th.t
-),
-sagg AS (
-  SELECT t, CAST(count(*) AS BIGINT) AS n_pairs,
-         CAST(count(DISTINCT id_b) AS BIGINT) AS n_removed
-  FROM pt GROUP BY t
-),
-saff AS (
-  SELECT t, CAST(count(DISTINCT id) AS BIGINT) AS n_docs_affected FROM (
-    SELECT t, id_a AS id FROM pt UNION SELECT t, id_b FROM pt
-  ) GROUP BY t
-)
-SELECT 'pairs' AS variant, id_a AS k1, id_b AS k2,
-       CAST(NULL AS VARCHAR) AS s,
-       CAST(NULL AS BIGINT) AS n1, CAST(NULL AS BIGINT) AS n2,
-       CAST(NULL AS BIGINT) AS n3, CAST(NULL AS BIGINT) AS n4,
-       CAST(NULL AS BIGINT) AS n5, CAST(NULL AS BIGINT) AS n6,
-       CAST(NULL AS BIGINT) AS n7, CAST(NULL AS BIGINT) AS n8,
-       jaccard AS v1, CAST(NULL AS DOUBLE) AS v2
-FROM v06
-UNION ALL
-SELECT 'clusters', node, min(root), NULL,
-       NULL, NULL, NULL, NULL, NULL, NULL, NULL, NULL,
-       NULL, NULL
-FROM reach GROUP BY node
-UNION ALL
-SELECT 'ledger', NULL, NULL, source,
-       n_docs, n_tokens, exact_kept, exact_tokens,
-       near_kept, near_tokens, final_kept, final_tokens,
-       {sql_exact_round(
-           "CAST(final_kept AS DOUBLE) / CAST(n_docs AS DOUBLE)", 9)},
-       {sql_exact_round(
-           "CAST(final_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE)", 9)}
-FROM ledger
-UNION ALL
-SELECT 'sweep', NULL, NULL, NULL,
-       coalesce(sagg.n_pairs, 0), coalesce(saff.n_docs_affected, 0),
-       coalesce(sagg.n_removed, 0), NULL, NULL, NULL, NULL, NULL,
-       th.t,
-       {sql_exact_round(
-           "CAST(coalesce(sagg.n_removed, 0) AS DOUBLE)"
-           " / CAST(th.n_docs AS DOUBLE)", 9)}
-FROM th
-LEFT JOIN sagg ON th.t = sagg.t
-LEFT JOIN saff ON th.t = saff.t
-"""
-
-
-def dedup_retention_ledger(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source dedup retention ledger (pre-built r13;
-    ``operators/dedup.py:retention_ledger`` over the registered LSH
-    miner's pair evidence): exact-fingerprint and near-dup-cluster
-    keep rules as per-doc flags, intersected, rolled up per source
-    with exact doc/token counts and 9dp retention rates — the
-    what-did-dedup-cost-us readout a data owner signs off before the
-    pruned corpus ships.  Scale: one cached narrow scan, one exchange
-    each on digest / id / source; pair evidence from banded LSH,
-    never all-pairs."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    base = docs.select("doc_id", "text", "source").cache()
-    pairs = dedup.minhash_lsh_dedup(
-        base,
-        num_hashes=NUM_HASHES,
-        bands=BANDS,
-        shingle_k=SHINGLE_K,
-        threshold=THRESHOLD,
-    )
-    return dedup.retention_ledger(base, pairs)
-
-
-DEDUP_RETENTION_SQL = f"""
-WITH RECURSIVE
-{minhash_pipeline_ctes()},
-nodes AS (
-  SELECT DISTINCT id FROM (
-    SELECT id_a AS id FROM verified UNION SELECT id_b FROM verified)
-),
-edges AS (
-  SELECT id_a AS src, id_b AS dst FROM verified
-  UNION SELECT id_b, id_a FROM verified
-),
-reach(node, root) AS (
-  SELECT id, id FROM nodes
-  UNION
-  SELECT e.dst, r.root FROM reach r JOIN edges e ON e.src = r.node
-),
-comp AS (SELECT node AS doc_id, min(root) AS rep FROM reach GROUP BY node),
-base AS (
-  SELECT doc_id, source,
-         CAST(len(string_split(text, ' ')) AS BIGINT) AS ntok,
-         md5(regexp_replace(trim(lower(text)), '\\s+', ' ', 'g')) AS fp
-  FROM documents
-),
-fpk AS (SELECT fp, min(doc_id) AS kept FROM base GROUP BY fp),
-flags AS (
-  SELECT b.source, b.ntok,
-         CASE WHEN b.doc_id = k.kept THEN 1 ELSE 0 END AS ex,
-         CASE WHEN c.rep IS NULL OR c.rep = b.doc_id THEN 1 ELSE 0 END AS nr
-  FROM base b JOIN fpk k USING (fp) LEFT JOIN comp c USING (doc_id)
-),
-agg AS (
-  SELECT source,
-         CAST(count(*) AS BIGINT) AS n_docs,
-         CAST(sum(ntok) AS BIGINT) AS n_tokens,
-         CAST(sum(ex) AS BIGINT) AS exact_kept,
-         CAST(sum(ex * ntok) AS BIGINT) AS exact_tokens,
-         CAST(sum(nr) AS BIGINT) AS near_kept,
-         CAST(sum(nr * ntok) AS BIGINT) AS near_tokens,
-         CAST(sum(ex * nr) AS BIGINT) AS final_kept,
-         CAST(sum(ex * nr * ntok) AS BIGINT) AS final_tokens
-  FROM flags GROUP BY source
-)
-SELECT *,
-       {sql_exact_round(
-           "CAST(final_kept AS DOUBLE) / CAST(n_docs AS DOUBLE)", 9)}
-         AS doc_retention,
-       {sql_exact_round(
-           "CAST(final_tokens AS DOUBLE) / CAST(n_tokens AS DOUBLE)", 9)}
-         AS token_retention
-FROM agg
-"""
-
-
 def ann_balance_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF index balance report (pre-built r13;
     ``operators/similarity.py:occupancy_balance`` over the registered

@@ -330,7 +330,7 @@ def sql_api_params(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``query(sql, params)`` binding ``:name`` params) on Spark's native
     ``spark.sql(sql, args=...)`` — bound server-side by Catalyst, no
     string interpolation.  Also exercises the raw SQL→DataFrame S16
-    surface the un-parameterized twin (sql_api_order_summary) covers."""
+    surface."""
     from ..catalog import register_views
 
     register_views(spark, sf_dir, ("orders",))
@@ -444,21 +444,6 @@ SELECT date_trunc('hour', ts) AS window_start,
 FROM events
 GROUP BY 1, 2
 """
-
-# --- S16: SQL passthrough (spark.sql over the named-table catalog) ---------
-
-
-def sql_api_order_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The reference's query() path (db_loader.py:415-427): raw SQL in,
-    DataFrame out.  The SQL text is dialect-neutral — the *same string*
-    is compiled by Catalyst here and by DuckDB as the oracle, proving
-    the spark.sql surface end-to-end."""
-    from ..catalog import register_views
-    from .views import V_ORDER_SUMMARY_SQL
-
-    register_views(spark, sf_dir)
-    return spark.sql(V_ORDER_SUMMARY_SQL)
-
 
 # --- Session windows (batch twin of streaming.sessionize) ------------------
 

@@ -180,43 +180,3 @@ def test_bpe_encode_keeps_wordless_documents(spark):
         assert out[1].tokens == ["ab</w>"]
         for d in (2, 3, 4):
             assert out[d].tokens == [] and out[d].n_tokens == 0
-
-
-def test_tokenizer_fertility_matches_duckdb(spark):
-    """Per-language fertility/compression report off the trained
-    encode chain: exact-integer sums + one IEEE division each, so the
-    ratios match DuckDB bitwise (pre-built r13)."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        corpus_queries as xc,
-    )
-    from tests.oracle import compare_frames, duckdb_conn
-
-    sf = "/root/testdata/sf0.01"
-    spdf = xc.tokenizer_fertility_stats(spark, sf).toPandas()
-    conn = duckdb_conn(sf)
-    try:
-        opdf = conn.execute(xc.TOKENIZER_FERTILITY_SQL).fetchdf()
-    finally:
-        conn.close()
-    assert compare_frames(spdf, opdf, "tokenizer_fertility_stats") == []
-
-
-def test_tokenizer_fertility_laws(spark):
-    """Every language present, and fertility > 1 by construction: a
-    word encodes to at least its symbol sequence plus '</w>', so
-    tokens strictly outnumber words on any non-empty corpus."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        corpus_queries as xc,
-    )
-
-    rows = {
-        r.lang: r
-        for r in xc.tokenizer_fertility_stats(
-            spark, "/root/testdata/sf0.01"
-        ).collect()
-    }
-    assert set(rows) == {"de", "en", "es", "fr", "zh"}
-    for lang, r in rows.items():
-        assert r.n_docs > 0 and r.n_words > 0, lang
-        assert r.fertility > 1.0, lang
-        assert r.n_tokens > r.n_words, lang

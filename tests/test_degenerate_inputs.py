@@ -81,3 +81,11 @@ def test_empty_orders_manifest_pruned_scan(spark, sf_empty):
     answers with no rows in the table's schema."""
     want = _matches_oracle(spark, "manifest_pruned_orders", sf_empty)
     assert len(want) == 0
+
+
+def test_one_row_ivfpq_suite_encodes_nothing(spark, sf_one):
+    """The one vector is a coarse centroid, so no residual seeds a
+    codeword: every subspace's codebook is empty, and a vector with no
+    codeword in its subspace gets no code (the oracle's inner join)."""
+    want = _matches_oracle(spark, "ivfpq_suite", sf_one)
+    assert len(want) == 0

@@ -634,24 +634,6 @@ def test_incremental_dedup_suite_shared_cached_scan(spark):
     assert "InMemoryTableScan" in plan
 
 
-def test_weighted_sample_bucketed_topn_shape(spark):
-    """Weighted sampling's 100 TB shape: the exact-rank window
-    partitions on (stratum, exponent-bucket) — never on the stratum
-    alone (the mega-stratum cliff) — the offsets side joins by
-    BROADCAST after its candidate-bucket prune, and nothing
-    range-partitions or globally sorts the corpus."""
-    from data_engineering_for_e_commerce_logistics_spark.plans import (
-        corpus_queries as xc,
-    )
-
-    plan = _plan_of(spark, xc.corpus_weighted_sample)
-    assert "__bkt" in plan
-    assert "BroadcastHashJoin" in plan
-    assert "CartesianProduct" not in plan
-    assert "rangepartitioning" not in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_decontaminate_semantic_map_only_corpus(spark):
     """The semantic decon's 100 TB shape is MAP-ONLY over the corpus:
     the benchmark collapses to one broadcast row (its tiny agg may

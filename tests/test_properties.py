@@ -603,43 +603,6 @@ def test_quota_feasible_and_bounded_any_frame(spark, rows, budget):
     assert sum(r.quota for r in out) <= min(budget, total_avail) + tol
 
 
-ledger_corpora = st.lists(
-    st.tuples(
-        st.integers(min_value=0, max_value=1),  # source bucket
-        st.integers(min_value=0, max_value=4),  # text id (dups likely)
-    ),
-    min_size=1,
-    max_size=15,
-)
-
-
-@given(rows=ledger_corpora)
-@settings(**SETTINGS)
-def test_ledger_conservation_any_corpus(spark, rows):
-    """For ANY corpus (exact dups planted by construction) and NO near
-    -dup evidence: near stage keeps everything, exact stage keeps one
-    doc per distinct text, totals conserve."""
-    from data_engineering_for_e_commerce_logistics_spark.operators.dedup import (
-        retention_ledger,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            (i, f"src{s}", f"text body number {t}")
-            for i, (s, t) in enumerate(rows)
-        ],
-        "doc_id long, source string, text string",
-    )
-    pairs = spark.createDataFrame([], "id_a long, id_b long")
-    out = retention_ledger(docs, pairs).collect()
-    assert sum(r.n_docs for r in out) == len(rows)
-    assert sum(r.near_kept for r in out) == len(rows)
-    distinct_texts = len({t for _, t in rows})
-    assert sum(r.exact_kept for r in out) == distinct_texts
-    for r in out:
-        assert r.final_kept == r.exact_kept  # near keeps all
-
-
 event_timelines = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=3),   # user (collisions)
