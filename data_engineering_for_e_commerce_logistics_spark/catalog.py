@@ -9,7 +9,6 @@ plan per query instead of eagerly materialized stage outputs.
 
 from __future__ import annotations
 
-import os
 from functools import lru_cache
 
 import pyarrow.parquet as pq

@@ -263,8 +263,6 @@ def remove_duplicates(
 # Timestamps (ref cleaners.py:132-172)
 # ---------------------------------------------------------------------------
 
-TIMESTAMP_NAME_PATTERNS = ("timestamp", "date", "_at", "_ts", "ts")
-
 
 def discover_timestamp_columns(df: DataFrame) -> list[str]:
     """Name-pattern discovery (ref :292-295): any column whose name

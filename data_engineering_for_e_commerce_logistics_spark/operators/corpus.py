@@ -432,38 +432,6 @@ def split_assign(
     )
 
 
-def cluster_safe_split(
-    df: DataFrame,
-    clusters: DataFrame,
-    id_col: str = "doc_id",
-    cluster_col: str = "cluster_id",
-) -> DataFrame:
-    """Leakage-safe train/val/test assignment: every member of a
-    near-duplicate cluster lands in the SAME split, so a test document
-    can never have a near-copy in train (the contamination channel
-    row-level hashing leaves open — ``split_assign`` keyed on doc_id
-    happily separates two 0.95-Jaccard twins across the boundary).
-
-    ``clusters`` maps member ids → cluster representative (the
-    LSH connected-components output); docs outside any cluster are
-    their own singleton cluster (coalesce to own id), and the split
-    key is md5 of the CLUSTER id — members inherit the representative
-    draw, split fractions stay 13/2/1 over clusters.
-
-    Scale shape: one left equi-join of the corpus against the cluster
-    map (a small fraction of the corpus — only near-dup members
-    appear) + the per-row hash map; no window, no corpus self-join.
-    At 100 TB the cluster map is the dedup pipeline's existing
-    byproduct — this operator adds one join to work already done."""
-    key = F.coalesce(F.col(cluster_col), F.col(id_col))
-    joined = (
-        df.join(clusters.select(id_col, cluster_col), id_col, "left")
-        .withColumn("cluster_key", key)
-        .drop(cluster_col)
-    )
-    return split_assign(joined, id_col="cluster_key")
-
-
 def stratified_sample_flag(
     df: DataFrame,
     strata: list[str],
@@ -587,11 +555,10 @@ def hashed_ngram_buckets(
 ) -> DataFrame:
     """One row per hashed word-{1,2}-gram OCCURRENCE: (id, carry…, b)
     with ``b = md5(feature) mod n_buckets`` — the feature extractor
-    shared by the DoReMi domain grid and the hashed quality
-    classifier.  Pure per-row array expressions (split → zip_with →
-    explode), no shuffle, whole-stage codegen; the md5/conv bucket is
-    the repo's engine-portable hash (same text → same bucket in
-    Spark and DuckDB)."""
+    of ``domain_bucket_grid``.  Pure per-row array expressions
+    (split → zip_with → explode), no shuffle, whole-stage codegen; the
+    md5/conv bucket is the repo's engine-portable hash (same text →
+    same bucket in Spark and DuckDB)."""
     t = F.split(F.col(text_col), " ")
     n = F.size(t)
     bigrams = F.when(
@@ -625,12 +592,11 @@ def domain_bucket_grid(
     n_buckets: int = 64,
 ) -> DataFrame:
     """The densified (domain × bucket) hashed-{1,2}-gram LM grid
-    shared by the DoReMi reweighter and the divergence matrix: ONE
-    fused hash-agg collapses the corpus to K×B counts (map-side
-    combine bounds the exchange at K·B rows per partition), then a
-    per-domain count MAP densifies every bucket — missing cells carry
-    the add-½ smoothing mass, and the map lookup avoids a join
-    entirely.  Returns ``(__dom, n_feats, b, c, p_own)`` with
+    the divergence matrix reads: ONE fused hash-agg collapses the
+    corpus to K×B counts (map-side combine bounds the exchange at K·B
+    rows per partition), then a per-domain count MAP densifies every
+    bucket — missing cells carry the add-½ smoothing mass, and the map
+    lookup avoids a join entirely.  Returns ``(__dom, n_feats, b, c, p_own)`` with
     ``p_own = (2c+1)/(2·n_feats+B)`` (exact-integer ratio, one IEEE
     division — bit-stable cross-engine)."""
     feats = hashed_ngram_buckets(
@@ -689,8 +655,7 @@ def source_divergence_matrix(
     near-dups), this catches two crawls that merely write alike
     (style/topic overlap no near-dup miner sees).  JS is symmetric
     and bounded in [0, ln 2]; a pair near 0 is stylistic duplication
-    — the redundancy signal a mixture planner reads next to DoReMi's
-    excess-loss numbers.
+    — the redundancy signal a mixture planner reads.
 
     Returns one row per unordered pair (``dom_a < dom_b``):
     ``(source_a, source_b, js_div)`` with
@@ -735,479 +700,8 @@ def source_divergence_matrix(
 
 
 # ---------------------------------------------------------------------------
-# DoReMi-style domain mixture reweighting (multiplicative weights)
+# Domain mixing
 # ---------------------------------------------------------------------------
-
-
-def domain_reweight(
-    df: DataFrame,
-    domain_col: str = "source",
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-    n_iters: int = 3,
-    eta: float = 1.0,
-    smooth: float = 0.2,
-) -> DataFrame:
-    """DoReMi-style domain mixture reweighting (Xie et al., NeurIPS
-    2023: Domain Reweighting with Minimax Optimization) with the
-    repo's hashed-n-gram bucket LMs standing in for the proxy model.
-
-    Per multiplicative-weights iteration, exactly the DoReMi loop:
-
-    1. the PROXY model is the α-weighted mixture LM
-       ``p_mix[b] = Σ_d α_d · p_d[b]`` over the per-domain add-½
-       smoothed bucket distributions;
-    2. each domain's EXCESS LOSS is its cross-entropy under the
-       mixture minus under its OWN LM (the domain-achievable floor —
-       DoReMi's reference-model role), clipped at 0:
-       ``max(0, H(q_d, p_mix) − H(q_d, p_d))``.  A distinct or
-       under-weighted domain reads high;
-    3. ``α ← normalize(α · exp(η · excess))``.
-
-    After ``n_iters`` rounds the final α is smoothed with uniform:
-    ``weight = (1−smooth)·α + smooth/K`` (the paper's mixing step).
-    Deltas from the paper, stated honestly: the proxy is a bucket
-    n-gram LM (no gradient training inside the loop — the mixture
-    distribution IS the α-response), and the output is the final-round
-    α rather than the across-rounds average.
-
-    Returns one row per domain: ``(domain, n_docs, n_feats, loss_own,
-    loss_mix, excess, alpha, weight)`` with loss_mix/excess/alpha from
-    the final iteration.
-
-    Cross-engine exactness: every transcendental (ln, exp) output is
-    9dp-rounded before it enters a sum (the PSI recipe); sums
-    accumulate as DECIMAL before ONE double cast; everything else is
-    single IEEE ops on identical inputs, so the unrolled-CTE DuckDB
-    oracle replays bitwise.
-
-    100 TB shape: ONE fused hash-agg over the exploded features
-    collapses the corpus to a (domains × buckets) count grid —
-    map-side combine bounds the exchange at K·B rows per partition —
-    and the whole optimization loop runs AS WINDOW EXPRESSIONS over
-    that bounded statistics frame in one linear plan: no joins, no
-    broadcast-build jobs, no per-iteration caches (the first cut
-    used broadcast joins per round — 17 tiny driver jobs and 10.1s
-    solo at sf0.1; the window form is one job after the corpus
-    pass).  Driver holds no data."""
-    grid = domain_bucket_grid(
-        df, domain_col, text_col, id_col, n_buckets
-    )
-    wd = Window.partitionBy("__dom")
-    wb = Window.partitionBy("b")
-    wall = Window.partitionBy(F.lit(1))
-    g = (
-        grid.withColumn("lnp_own", exact_round(F.log("p_own"), 9))
-        .withColumn(
-            "loss_own",
-            -F.sum(
-                (F.col("c") * F.col("lnp_own")).cast("decimal(28,8)")
-            )
-            .over(wd)
-            .cast("double")
-            / F.col("n_feats").cast("double"),
-        )
-        .withColumn(
-            "__k",
-            F.sum(
-                F.when(F.col("b") == 0, 1).otherwise(0)
-            ).over(wall),
-        )
-        .withColumn(
-            "alpha", F.lit(1.0) / F.col("__k").cast("double")
-        )
-    )
-    for _ in range(n_iters):
-        g = (
-            g.withColumn(
-                "__pm",
-                F.sum(
-                    exact_round(
-                        F.col("alpha") * F.col("p_own"), 9
-                    ).cast("decimal(28,9)")
-                )
-                .over(wb)
-                .cast("double"),
-            )
-            .withColumn("__lnpm", exact_round(F.log("__pm"), 9))
-            .withColumn(
-                "loss_mix",
-                -F.sum(
-                    (F.col("c") * F.col("__lnpm")).cast(
-                        "decimal(28,8)"
-                    )
-                )
-                .over(wd)
-                .cast("double")
-                / F.col("n_feats").cast("double"),
-            )
-            .withColumn(
-                "excess",
-                F.greatest(
-                    F.col("loss_mix") - F.col("loss_own"), F.lit(0.0)
-                ),
-            )
-            .withColumn(
-                "__raw",
-                exact_round(
-                    F.col("alpha")
-                    * exact_round(
-                        F.exp(F.lit(eta) * F.col("excess")), 9
-                    ),
-                    9,
-                ),
-            )
-            .withColumn(
-                "__z",
-                F.sum(
-                    F.when(
-                        F.col("b") == 0,
-                        F.col("__raw").cast("decimal(28,9)"),
-                    )
-                )
-                .over(wall)
-                .cast("double"),
-            )
-            .withColumn(
-                "alpha", exact_round(F.col("__raw") / F.col("__z"), 9)
-            )
-        )
-    n_docs = df.groupBy(F.col(domain_col).alias("__dom")).agg(
-        F.count(F.lit(1)).alias("n_docs")
-    )
-    return (
-        g.where(F.col("b") == 0)
-        .join(F.broadcast(n_docs), "__dom")
-        .select(
-            F.col("__dom").alias(domain_col),
-            "n_docs",
-            "n_feats",
-            "loss_own",
-            "loss_mix",
-            "excess",
-            "alpha",
-            exact_round(
-                F.lit(1.0 - smooth) * F.col("alpha")
-                + F.lit(smooth) / F.col("__k").cast("double"),
-                9,
-            ).alias("weight"),
-        )
-    )
-
-
-def calibration_bins(
-    df: DataFrame,
-    score_col: str = "score",
-    label_col: str = "y",
-    n_bins: int = 10,
-) -> DataFrame:
-    """Reliability diagram + Expected Calibration Error for a scored
-    frame: rows bucket by ``least(floor(score·n_bins), n_bins−1)``,
-    each bin reports ``(n, n_pos, mean_score, frac_pos, gap)`` and
-    every row carries the overall ``ece = Σ_b n_b·gap_b / N`` — the
-    standard check that a quality filter's scores MEAN what they say
-    before anyone thresholds on them (a miscalibrated 0.9 is not a
-    90% precision cut).
-
-    Cross-engine exactness: scores are assumed pre-rounded (every
-    in-engine classifier emits 9dp sigmoids); per-bin means are
-    decimal sums with one rounded division; gaps subtract identical
-    doubles; the ECE accumulates 9dp-rounded ``n·gap`` terms as
-    DECIMAL — bitwise vs the DuckDB mirror.
-
-    Scale: one groupBy on ≤``n_bins`` keys (map-side combine collapses
-    each partition to n_bins rows before the exchange), then window
-    expressions over the bounded bin frame — the scored corpus is
-    read once and never re-keyed."""
-    b = F.least(
-        F.floor(F.col(score_col) * n_bins), F.lit(n_bins - 1)
-    ).cast("long")
-    bins = df.groupBy(b.alias("bin")).agg(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.col(score_col).cast("decimal(28,9)"))
-        .cast("double")
-        .alias("__ssum"),
-        F.sum(F.col(label_col).cast("long")).alias("n_pos"),
-    )
-    wall = Window.partitionBy(F.lit(1))
-    out = (
-        bins.withColumn(
-            "mean_score",
-            exact_round(F.col("__ssum") / F.col("n").cast("double"), 9),
-        )
-        .withColumn(
-            "frac_pos",
-            exact_round(
-                F.col("n_pos").cast("double") / F.col("n").cast("double"),
-                9,
-            ),
-        )
-        .withColumn(
-            "gap", F.abs(F.col("mean_score") - F.col("frac_pos"))
-        )
-        .withColumn("__N", F.sum("n").over(wall))
-        .withColumn(
-            "__esum",
-            F.sum(
-                exact_round(
-                    F.col("n").cast("double") * F.col("gap"), 9
-                ).cast("decimal(28,9)")
-            )
-            .over(wall)
-            .cast("double"),
-        )
-    )
-    return out.select(
-        "bin",
-        "n",
-        "n_pos",
-        "mean_score",
-        "frac_pos",
-        "gap",
-        exact_round(
-            F.col("__esum") / F.col("__N").cast("double"), 9
-        ).alias("ece"),
-    )
-
-
-def token_quota_plan(
-    avail: DataFrame,
-    budget: float,
-    group_col: str = "source",
-    avail_col: str = "avail_tokens",
-    weight_col: str = "weight",
-    n_rounds: int = 3,
-) -> DataFrame:
-    """Water-filling token-budget allocation — the step that turns
-    mixture WEIGHTS (DoReMi, temperature sampling) into realizable
-    sampler QUOTAS: each group's ideal share ``w_d·B`` is capped at
-    its available tokens, the surplus re-flows to the uncapped groups
-    by renormalized weight, ``n_rounds`` times (each round can only
-    cap more groups, so K rounds reach the fixpoint; 3 handles any
-    practical mixture).  Without this step a naive ``w_d·B`` quota
-    silently under-fills the budget whenever a small hot domain runs
-    out — the classic oversampling bug.
-
-    Input: one row per group ``(group_col, avail_col BIGINT,
-    weight_col ≥ 0, any scale — normalized internally)``.  Output
-    adds ``weight`` (normalized, 9dp), ``quota`` (allocated tokens,
-    double), and ``capped`` (1 = allocation hit availability).
-
-    Exactness: weights normalize through 9dp-rounded decimal sums;
-    allocated-token sums are EXACT BIGINTs (caps allocate the integer
-    availability); shares and quotas are single IEEE ops on identical
-    doubles, 9dp-rounded — bitwise vs the unrolled-CTE oracle.
-
-    Scale: the frame is one row per GROUP — every step is window
-    arithmetic over that bounded frame (the DoReMi window-loop
-    pattern); the corpus appears only in whatever aggregate built
-    ``avail``."""
-    wall = Window.partitionBy(F.lit(1))
-    g = avail.select(
-        F.col(group_col).alias("__grp"),
-        F.col(avail_col).cast("long").alias("__avail"),
-        exact_round(F.col(weight_col).cast("double"), 9).alias("__w"),
-    )
-    g = g.withColumn(
-        "__wsum",
-        F.sum(F.col("__w").cast("decimal(28,9)"))
-        .over(wall)
-        .cast("double"),
-    ).withColumn(
-        "wn", exact_round(F.col("__w") / F.col("__wsum"), 9)
-    ).withColumn("cap", F.lit(0))
-
-    def _round_cols(frame):
-        allocated = F.sum(
-            F.when(F.col("cap") == 1, F.col("__avail")).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).over(wall)
-        r = F.lit(float(budget)) - allocated.cast("double")
-        wact = (
-            F.sum(
-                F.when(
-                    F.col("cap") == 0,
-                    F.col("wn").cast("decimal(28,9)"),
-                )
-            )
-            .over(wall)
-            .cast("double")
-        )
-        share = F.when(
-            (F.col("cap") == 0) & (wact > 0),
-            exact_round(F.col("wn") / wact, 9),
-        )
-        quota = share * r
-        return frame.withColumn("__quota", quota)
-
-    for _ in range(n_rounds):
-        g = _round_cols(g).withColumn(
-            "cap",
-            F.when(F.col("cap") == 1, 1)
-            .when(
-                F.col("__quota") >= F.col("__avail").cast("double"), 1
-            )
-            .otherwise(0),
-        ).drop("__quota")
-    g = _round_cols(g)
-    return g.select(
-        F.col("__grp").alias(group_col),
-        F.col("__avail").alias(avail_col),
-        F.col("wn").alias("weight"),
-        F.when(F.col("cap") == 1, F.col("__avail").cast("double"))
-        .otherwise(exact_round(F.col("__quota"), 9))
-        .alias("quota"),
-        F.col("cap").alias("capped"),
-    )
-
-
-# ---------------------------------------------------------------------------
-# Hashed-feature logistic quality classifier (fastText-style filter)
-# ---------------------------------------------------------------------------
-
-
-def train_quality_classifier(
-    df: DataFrame,
-    label: Column,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    n_buckets: int = 64,
-    iters: int = 3,
-    step: float = 0.5,
-) -> DataFrame:
-    """fastText-style quality classifier, trained IN the engine: a
-    logistic regression over hashed {1,2}-gram frequency features
-    (x_b = count_b / n_feats), fit by ``iters`` full-batch gradient
-    steps and applied back to every document.  The standard
-    pretraining-corpus filter (CCNet / GPT-3 / LLaMA pipelines) uses
-    exactly this shape with a weak label — here ``label`` marks the
-    reference slice the filter should prefer.  Returns one row per
-    doc: (id, y, n_feats, score, pred).
-
-    Cross-engine exactness: noise can only enter through exp(); every
-    sigmoid is rounded to the 9dp decimal grid, every per-row
-    gradient/margin term is one IEEE multiply of bit-identical
-    doubles rounded to 9dp, and every across-row SUM aggregates
-    DECIMAL(28,9) — so Spark's unordered partial aggregation, the
-    unrolled DuckDB oracle, and any cluster size agree bitwise.
-
-    Scale shape — textbook distributed full-batch GD: the (doc,
-    bucket) frequency frame is built once (two hash-aggs) and cached;
-    per iteration, the margin pass joins it against the BROADCAST
-    64-row weight table and folds per doc (map-side combine), the
-    gradient pass folds per bucket (64 keys), and the weight update
-    is a 64×64 join — model state never leaves the plan, no driver
-    collect, no UDF.  Iteration count is fixed and small, the plan
-    stays bounded (the bpe_train precedent applies if it ever
-    grows)."""
-    spark = df.sparkSession
-    feats = hashed_ngram_buckets(
-        df.select(id_col, text_col), text_col, id_col, n_buckets
-    )
-    cnt = feats.groupBy(id_col, "b").agg(F.count(F.lit(1)).alias("c"))
-    nf = cnt.groupBy(id_col).agg(F.sum("c").alias("n_feats"))
-    # bucket n_buckets is the intercept: x = 1.0 for every doc, so the
-    # model calibrates the base rate instead of anchoring scores at 0.5
-    x = (
-        cnt.join(nf, id_col)
-        .select(
-            id_col,
-            "b",
-            (F.col("c").cast("double") / F.col("n_feats")).alias("x"),
-        )
-        .unionByName(
-            nf.select(
-                id_col,
-                F.lit(n_buckets).cast("long").alias("b"),
-                F.lit(1.0).alias("x"),
-            )
-        )
-        .cache()
-    )
-    meta = df.select(
-        F.col(id_col), label.cast("int").alias("y")
-    ).join(nf, id_col)
-    n_docs = meta.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
-
-    w = spark.range(n_buckets + 1).select(
-        F.col("id").alias("b"), F.lit(0.0).alias("w")
-    )
-    dec9 = "decimal(28,9)"
-    for _ in range(iters):
-        margin = (
-            x.join(F.broadcast(w), "b")
-            .groupBy(id_col)
-            .agg(
-                F.sum(
-                    exact_round(F.col("w") * F.col("x"), 9).cast(dec9)
-                )
-                .cast("double")
-                .alias("margin")
-            )
-        )
-        p = meta.join(margin, id_col).select(
-            id_col,
-            "y",
-            exact_round(
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))), 9
-            ).alias("p"),
-        )
-        grad = (
-            x.join(p, id_col)
-            .groupBy("b")
-            .agg(
-                F.sum(
-                    exact_round(
-                        (F.col("y") - F.col("p")) * F.col("x"), 9
-                    ).cast(dec9)
-                )
-                .cast("double")
-                .alias("gsum")
-            )
-            .crossJoin(F.broadcast(n_docs))
-            .select("b", (F.col("gsum") / F.col("n_docs")).alias("g"))
-        )
-        w = (
-            w.join(grad, "b", "left")
-            .select(
-                "b",
-                exact_round(
-                    F.col("w")
-                    + F.lit(step) * F.coalesce(F.col("g"), F.lit(0.0)),
-                    9,
-                ).alias("w"),
-            )
-        )
-
-    final_margin = (
-        x.join(F.broadcast(w), "b")
-        .groupBy(id_col)
-        .agg(
-            F.sum(exact_round(F.col("w") * F.col("x"), 9).cast(dec9))
-            .cast("double")
-            .alias("margin")
-        )
-    )
-    return meta.join(final_margin, id_col).select(
-        id_col,
-        "y",
-        "n_feats",
-        exact_round(
-            F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))), 9
-        ).alias("score"),
-        F.when(
-            exact_round(
-                F.lit(1.0) / (F.lit(1.0) + F.exp(-F.col("margin"))), 9
-            )
-            >= 0.5,
-            1,
-        )
-        .otherwise(0)
-        .cast("int")
-        .alias("pred"),
-    )
 
 
 def domain_mix_sample(

@@ -12,7 +12,6 @@ them lazily and Catalyst optimizes across stage boundaries.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from . import cleaners
 

@@ -26,14 +26,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType(), False),
-        T.StructField("mime", T.StringType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("meta_json", T.StringType()),
-    ]
-)
 
 IMAGE_FEATURES_SCHEMA = T.StructType(
     [

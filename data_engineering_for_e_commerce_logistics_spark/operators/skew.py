@@ -15,7 +15,7 @@ map-side combine stops collapsing (high-cardinality keys + hot key).
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 

@@ -243,221 +243,3 @@ def event_funnel(
     return counts.select(
         F.explode(F.array(*rows)).alias("__r")
     ).select("__r.*")
-
-
-def cohort_retention(
-    df: DataFrame,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Weekly cohort retention matrix — the second classic
-    event-analytics readout: users cohort by the ISO week of their
-    FIRST activity, and cell (cohort_week, period) counts the cohort
-    members active ``period`` weeks later, with the retention rate
-    against the cohort's own period-0 size.
-
-    Exactness: week truncation is ISO-Monday in both engines
-    (verified), periods are exact integer week multiples, counts are
-    exact, and the rate is one 9dp-rounded division.
-
-    100 TB shape: distinct (user, week) activity → one exchange; the
-    first-week aggregate and the matrix rollup reuse the user key;
-    cohort sizes are a broadcast-sized frame (≤ weeks) joined back by
-    cohort.  No window over the corpus."""
-    from pyspark.sql import functions as F
-
-    from ..functions import exact_round
-
-    act = (
-        df.select(
-            F.col(user_col).alias("__u"),
-            F.date_trunc("week", F.col(ts_col).cast("timestamp"))
-            .cast("date")
-            .alias("__wk"),
-        )
-        .distinct()
-    )
-    first = act.groupBy("__u").agg(F.min("__wk").alias("__cohort"))
-    mat = (
-        act.join(first, "__u")
-        .select(
-            "__cohort",
-            (F.datediff(F.col("__wk"), F.col("__cohort")) / 7)
-            .cast("long")
-            .alias("period"),
-        )
-        .groupBy("__cohort", "period")
-        .agg(F.count(F.lit(1)).alias("n_users"))
-    )
-    sizes = mat.where(F.col("period") == 0).select(
-        "__cohort", F.col("n_users").alias("__n0")
-    )
-    return (
-        mat.join(F.broadcast(sizes), "__cohort")
-        .select(
-            F.col("__cohort").alias("cohort_week"),
-            "period",
-            "n_users",
-            exact_round(
-                F.col("n_users").cast("double")
-                / F.col("__n0").cast("double"),
-                9,
-            ).alias("retention"),
-        )
-    )
-
-
-def event_transition_matrix(
-    df: DataFrame,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    ts_col: str = "ts",
-    id_col: str = "event_id",
-) -> DataFrame:
-    """First-order Markov transition matrix of user behavior: for
-    every ordered pair of event types, the count of CONSECUTIVE
-    occurrences in some user's timeline and the row-normalized
-    transition probability ``P(next = b | current = a)`` — the
-    what-do-users-do-next readout behind funnel design.
-
-    Determinism: each user's timeline orders by ``(ts, id)`` (the
-    sessionize tiebreak), so equal timestamps cannot flip a
-    transition between engines; counts are exact and each probability
-    is one 9dp-rounded division.
-
-    100 TB shape: ONE shuffle on the user key — the timeline
-    collects into a sorted array and consecutive pairs come from a
-    ``zip_with`` of the array against its own tail (pure codegen, no
-    self-join, no window over the corpus); the pair rollup is
-    ≤ |types|² rows and the row totals broadcast back."""
-    from pyspark.sql import functions as F
-
-    from ..functions import exact_round
-
-    per_user = (
-        df.select(
-            F.col(user_col).alias("__u"),
-            F.struct(
-                F.unix_micros(F.col(ts_col).cast("timestamp")).alias("t"),
-                F.col(id_col).alias("i"),
-                F.col(type_col).alias("e"),
-            ).alias("__s"),
-        )
-        .groupBy("__u")
-        .agg(F.array_sort(F.collect_list("__s")).alias("__a"))
-    )
-    pairs = per_user.select(
-        F.explode(
-            F.when(
-                F.size("__a") >= 2,
-                F.zip_with(
-                    F.slice("__a", 1, F.size("__a") - 1),
-                    F.slice("__a", 2, F.size("__a") - 1),
-                    lambda a, b: F.struct(
-                        a["e"].alias("from_type"), b["e"].alias("to_type")
-                    ),
-                ),
-            ).otherwise(F.array().cast(
-                "array<struct<from_type:string,to_type:string>>"
-            ))
-        ).alias("__p")
-    ).select("__p.*")
-    counts = pairs.groupBy("from_type", "to_type").agg(
-        F.count(F.lit(1)).alias("n")
-    )
-    totals = counts.groupBy("from_type").agg(F.sum("n").alias("__tot"))
-    return counts.join(F.broadcast(totals), "from_type").select(
-        "from_type",
-        "to_type",
-        "n",
-        exact_round(
-            F.col("n").cast("double") / F.col("__tot").cast("double"), 9
-        ).alias("prob"),
-    )
-
-
-def ab_conversion_test(
-    df: DataFrame,
-    convert_type: str,
-    user_col: str = "user_id",
-    type_col: str = "event_type",
-    z_critical: float = 1.96,
-) -> DataFrame:
-    """Two-proportion z-test between the md5-parity user split — the
-    experimentation readout: bucket users deterministically (the
-    hash-split discipline every A/B assignment uses), measure each
-    bucket's conversion (did the user ever emit ``convert_type``),
-    and test the rate difference against the pooled-variance normal
-    approximation.  Returns one row: per-bucket ``(n, conv, rate)``,
-    the ``z`` statistic, and ``significant = |z| > z_critical``.
-
-    Exactness: user conversion flags and bucket counts are exact
-    integers; rates, the pooled estimate, and z are a handful of IEEE
-    ops on exact ratios, 9dp-rounded — bitwise cross-engine (the md5
-    parity bucket uses the portable hash family).
-
-    100 TB shape: one user-keyed aggregate (max-flag per user,
-    map-side combined) then a 2-row rollup; nothing else."""
-    from pyspark.sql import functions as F
-
-    from ..functions import exact_round
-
-    bucket = F.pmod(
-        F.conv(
-            F.substring(F.md5(F.col(user_col).cast("string")), 1, 8),
-            16,
-            10,
-        ).cast("long"),
-        F.lit(2),
-    )
-    per_user = (
-        df.select(
-            F.col(user_col).alias("__u"),
-            bucket.alias("__g"),
-            F.when(F.col(type_col) == convert_type, 1)
-            .otherwise(0)
-            .alias("__c"),
-        )
-        .groupBy("__u", "__g")
-        .agg(F.max("__c").alias("__conv"))
-    )
-    agg = per_user.groupBy().agg(
-        F.sum(F.when(F.col("__g") == 0, 1).otherwise(0))
-        .cast("long")
-        .alias("n_a"),
-        F.sum(F.when(F.col("__g") == 0, F.col("__conv")).otherwise(0))
-        .cast("long")
-        .alias("conv_a"),
-        F.sum(F.when(F.col("__g") == 1, 1).otherwise(0))
-        .cast("long")
-        .alias("n_b"),
-        F.sum(F.when(F.col("__g") == 1, F.col("__conv")).otherwise(0))
-        .cast("long")
-        .alias("conv_b"),
-    )
-    ra = F.col("conv_a").cast("double") / F.col("n_a").cast("double")
-    rb = F.col("conv_b").cast("double") / F.col("n_b").cast("double")
-    pooled = (F.col("conv_a") + F.col("conv_b")).cast("double") / (
-        F.col("n_a") + F.col("n_b")
-    ).cast("double")
-    se = F.sqrt(
-        pooled
-        * (F.lit(1.0) - pooled)
-        * (
-            F.lit(1.0) / F.col("n_a").cast("double")
-            + F.lit(1.0) / F.col("n_b").cast("double")
-        )
-    )
-    z = F.when(se > 0, exact_round((rb - ra) / se, 9))
-    return agg.select(
-        "n_a",
-        "conv_a",
-        exact_round(ra, 9).alias("rate_a"),
-        "n_b",
-        "conv_b",
-        exact_round(rb, 9).alias("rate_b"),
-        z.alias("z"),
-        F.coalesce(
-            F.abs(z) > F.lit(float(z_critical)), F.lit(False)
-        ).alias("significant"),
-    )

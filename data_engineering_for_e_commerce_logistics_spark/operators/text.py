@@ -202,85 +202,6 @@ def fingerprint(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def ols_fit(df: DataFrame, x_col: str, y_col: str) -> DataFrame:
-    """Closed-form OLS of ``y_col`` on ``x_col`` over a BOUNDED frame
-    → one row ``(slope, intercept, r2)``; degenerate zero-variance
-    inputs report NULLs (never a division error).  Inputs are assumed
-    9dp-pre-rounded; the five sums accumulate as DECIMAL(28,9) and
-    the closed forms are a handful of IEEE ops on identical doubles,
-    9dp-rounded — bitwise cross-engine."""
-
-    def _dsum(col):
-        return F.sum(col.cast("decimal(28,9)")).cast("double")
-
-    x, y = F.col(x_col), F.col(y_col)
-    s = df.agg(
-        F.count(F.lit(1)).cast("double").alias("nn"),
-        _dsum(x).alias("sx"),
-        _dsum(y).alias("sy"),
-        _dsum(exact_round(x * x, 9)).alias("sxx"),
-        _dsum(exact_round(x * y, 9)).alias("sxy"),
-        _dsum(exact_round(y * y, 9)).alias("syy"),
-    )
-    cov = F.col("nn") * F.col("sxy") - F.col("sx") * F.col("sy")
-    varx = F.col("nn") * F.col("sxx") - F.col("sx") * F.col("sx")
-    vary = F.col("nn") * F.col("syy") - F.col("sy") * F.col("sy")
-    return s.select(
-        F.when(varx > 0, exact_round(cov / varx, 9)).alias("slope"),
-        F.when(
-            varx > 0,
-            exact_round(
-                (F.col("sy") - (cov / varx) * F.col("sx")) / F.col("nn"),
-                9,
-            ),
-        ).alias("intercept"),
-        F.when(
-            (varx > 0) & (vary > 0),
-            exact_round((cov * cov) / (varx * vary), 9),
-        ).alias("r2"),
-    )
-
-
-def sql_ols_ctes(
-    src: str, x: str, y: str, names: tuple[str, str] = ("s", "fit")
-) -> str:
-    """The DuckDB mirror of ``ols_fit`` as two CTE bodies (default
-    ``s``/``fit``; pass ``names`` when one query embeds several fits)
-    reading from CTE ``src`` with expressions ``x``/``y`` (both
-    9dp-pre-rounded)."""
-    from ..functions import sql_exact_round as r9
-
-    s_name, fit_name = names
-    return f"""{s_name} AS (
-  SELECT CAST(count(*) AS DOUBLE) AS nn,
-         cast(sum(cast(({x}) AS DECIMAL(28,9))) AS DOUBLE) AS sx,
-         cast(sum(cast(({y}) AS DECIMAL(28,9))) AS DOUBLE) AS sy,
-         cast(sum(cast({r9(f"({x}) * ({x})", 9)} AS DECIMAL(28,9)))
-              AS DOUBLE) AS sxx,
-         cast(sum(cast({r9(f"({x}) * ({y})", 9)} AS DECIMAL(28,9)))
-              AS DOUBLE) AS sxy,
-         cast(sum(cast({r9(f"({y}) * ({y})", 9)} AS DECIMAL(28,9)))
-              AS DOUBLE) AS syy
-  FROM {src}
-),
-{fit_name} AS (
-  SELECT CASE WHEN nn * sxx - sx * sx > 0 THEN
-           {r9("(nn * sxy - sx * sy) / (nn * sxx - sx * sx)", 9)}
-         END AS slope,
-         CASE WHEN nn * sxx - sx * sx > 0 THEN
-           {r9(
-               "(sy - ((nn * sxy - sx * sy) / (nn * sxx - sx * sx)) * sx)"
-               " / nn", 9)}
-         END AS intercept,
-         CASE WHEN nn * sxx - sx * sx > 0 AND nn * syy - sy * sy > 0 THEN
-           {r9(
-               "((nn * sxy - sx * sy) * (nn * sxy - sx * sy))"
-               " / ((nn * sxx - sx * sx) * (nn * syy - sy * sy))", 9)}
-         END AS r2
-  FROM {s_name}
-)"""
-
-
 def bpe_train(
     df: DataFrame,
     text_col: str = "text",

@@ -176,15 +176,6 @@ def semi_anti_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     return semi.unionByName(anti).select("bucket", "n_orders")
 
 
-SEMI_ANTI_ORDERS_SQL = """
-SELECT 'with_items' AS bucket, count(*) AS n_orders FROM orders o
-WHERE EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
-UNION ALL
-SELECT 'without_items' AS bucket, count(*) AS n_orders FROM orders o
-WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.o_orderkey)
-"""
-
-
 def set_semi_anti_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Semi/anti joins (EXISTS / NOT EXISTS) and set operations
     (INTERSECT / EXCEPT) in one driver-checked result — four labeled
@@ -840,16 +831,6 @@ def set_ops_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     return both.unionByName(only_f).select("bucket", "n_customers")
 
-
-SET_OPS_CUSTOMERS_SQL = """
-WITH f_cust AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'F'),
-     p_cust AS (SELECT DISTINCT o_custkey FROM orders WHERE o_orderstatus = 'P')
-SELECT 'both_f_and_p' AS bucket, count(*) AS n_customers
-FROM (SELECT o_custkey FROM f_cust INTERSECT SELECT o_custkey FROM p_cust)
-UNION ALL
-SELECT 'only_f' AS bucket, count(*) AS n_customers
-FROM (SELECT o_custkey FROM f_cust EXCEPT SELECT o_custkey FROM p_cust)
-"""
 
 SET_SEMI_ANTI_OPS_SQL = """
 SELECT bucket, n_orders AS n_rows FROM (
@@ -2058,271 +2039,3 @@ FROM c
 
 
 FUNNEL_EVENTS_SQL = _funnel_sql()
-
-
-def cohort_retention_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Weekly cohort retention over events (pre-built r13;
-    ``operators/temporal.py:cohort_retention``): ISO-week cohorts by
-    first activity, per-period active counts, rates against each
-    cohort's own period-0 size.  One distinct-activity exchange +
-    user-keyed aggregates + a broadcast cohort-size join."""
-    from ..operators.temporal import cohort_retention
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    return cohort_retention(ev)
-
-
-COHORT_RETENTION_EVENTS_SQL = """
-WITH act AS (
-  SELECT DISTINCT user_id,
-         CAST(date_trunc('week', ts) AS DATE) AS wk
-  FROM events
-),
-first_wk AS (
-  SELECT user_id, min(wk) AS cohort FROM act GROUP BY user_id
-),
-mat AS (
-  SELECT f.cohort,
-         CAST(datediff('day', f.cohort, a.wk) / 7 AS BIGINT) AS period,
-         CAST(count(*) AS BIGINT) AS n_users
-  FROM act a JOIN first_wk f USING (user_id)
-  GROUP BY f.cohort, 2
-),
-sizes AS (
-  SELECT cohort, n_users AS n0 FROM mat WHERE period = 0
-)
-SELECT m.cohort AS cohort_week, m.period, m.n_users,
-       cast(round(cast((CAST(m.n_users AS DOUBLE) / CAST(s.n0 AS DOUBLE))
-                       as decimal(28,12)), 9) as double) AS retention
-FROM mat m JOIN sizes s USING (cohort)
-"""
-
-
-def event_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """First-order Markov transition matrix over events (pre-built
-    r13; ``operators/temporal.py:event_transition_matrix``): counts
-    and row-normalized probabilities of consecutive event-type pairs
-    per user timeline — one user-keyed shuffle, pairs via a codegen
-    zip of each sorted timeline against its own tail, ≤ |types|²
-    output rows."""
-    from ..operators.temporal import event_transition_matrix
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    return event_transition_matrix(ev)
-
-
-EVENT_TRANSITIONS_SQL = """
-WITH ordered AS (
-  SELECT user_id, event_type,
-         lead(event_type) OVER (PARTITION BY user_id
-                                ORDER BY ts, event_id) AS next_type
-  FROM events
-),
-pairs AS (
-  SELECT event_type AS from_type, next_type AS to_type
-  FROM ordered WHERE next_type IS NOT NULL
-),
-counts AS (
-  SELECT from_type, to_type, CAST(count(*) AS BIGINT) AS n
-  FROM pairs GROUP BY from_type, to_type
-),
-totals AS (
-  SELECT from_type, CAST(sum(n) AS BIGINT) AS tot FROM counts GROUP BY 1
-)
-SELECT c.from_type, c.to_type, c.n,
-       cast(round(cast((CAST(c.n AS DOUBLE) / CAST(t.tot AS DOUBLE))
-                       as decimal(28,12)), 9) as double) AS prob
-FROM counts c JOIN totals t USING (from_type)
-"""
-
-
-def event_analytics_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The events-side consolidation vehicle (pre-built r13): funnel
-    conversion + weekly cohort retention + the Markov transition
-    matrix off ONE cached events scan — the three product-analytics
-    readouts a session of dashboard questions actually asks, in one
-    future registry slot.  Every leg's cells are bit-identical to its
-    standalone spec (parts-equivalence pinned).  Pads: funnel →
-    (k=step, s1=name, n, v1=conv, v2=drop); cohort → (d=cohort_week,
-    k=period, n, v1=retention); transitions → (s1=from, s2=to, n,
-    v1=prob)."""
-    from ..operators.temporal import (
-        cohort_retention,
-        event_funnel,
-        event_transition_matrix,
-    )
-
-    ev = (
-        load_tables(spark, sf_dir, ("events",))["events"]
-        .select("event_id", "ts", "user_id", "event_type")
-        .cache()
-    )
-    fun = event_funnel(ev, FUNNEL_STEPS)
-    coh = cohort_retention(ev)
-    tra = event_transition_matrix(ev)
-    nl = F.lit(None).cast("long")
-    ns = F.lit(None).cast("string")
-    ndt = F.lit(None).cast("date")
-    nd_ = F.lit(None).cast("double")
-    f_leg = fun.select(
-        F.lit("funnel").alias("variant"),
-        F.col("step").alias("k"),
-        F.col("name").alias("s1"),
-        ns.alias("s2"),
-        ndt.alias("d"),
-        F.col("n_users").alias("n"),
-        F.col("conv_from_first").alias("v1"),
-        F.col("drop_from_prev").alias("v2"),
-    )
-    c_leg = coh.select(
-        F.lit("cohort").alias("variant"),
-        F.col("period").alias("k"),
-        ns.alias("s1"),
-        ns.alias("s2"),
-        F.col("cohort_week").alias("d"),
-        F.col("n_users").alias("n"),
-        F.col("retention").alias("v1"),
-        nd_.alias("v2"),
-    )
-    t_leg = tra.select(
-        F.lit("transitions").alias("variant"),
-        nl.alias("k"),
-        F.col("from_type").alias("s1"),
-        F.col("to_type").alias("s2"),
-        ndt.alias("d"),
-        F.col("n").alias("n"),
-        F.col("prob").alias("v1"),
-        nd_.alias("v2"),
-    )
-    return f_leg.unionByName(c_leg).unionByName(t_leg)
-
-
-EVENT_ANALYTICS_SUITE_SQL = f"""
-WITH fun AS MATERIALIZED ({FUNNEL_EVENTS_SQL}),
-coh AS MATERIALIZED ({COHORT_RETENTION_EVENTS_SQL}),
-tra AS MATERIALIZED ({EVENT_TRANSITIONS_SQL})
-SELECT 'funnel' AS variant, step AS k, name AS s1,
-       CAST(NULL AS VARCHAR) AS s2, CAST(NULL AS DATE) AS d,
-       n_users AS n, conv_from_first AS v1, drop_from_prev AS v2
-FROM fun
-UNION ALL
-SELECT 'cohort', period, NULL, NULL, cohort_week, n_users, retention,
-       NULL
-FROM coh
-UNION ALL
-SELECT 'transitions', NULL, from_type, to_type, NULL, n, prob, NULL
-FROM tra
-"""
-
-
-AB_Z_CRITICAL = 1.96
-
-
-def ab_purchase_test(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Two-proportion z-test on purchase conversion between the
-    md5-parity user split (pre-built r13; ``operators/temporal.py:
-    ab_conversion_test``): the experimentation readout — one
-    user-keyed max-flag aggregate, a 2-row rollup, and the
-    pooled-variance z with an α=0.05 verdict."""
-    from ..operators.temporal import ab_conversion_test
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    return ab_conversion_test(ev, "purchase", z_critical=AB_Z_CRITICAL)
-
-
-AB_PURCHASE_SQL = f"""
-WITH per_user AS (
-  SELECT user_id,
-         (('0x' || substr(md5(user_id::VARCHAR), 1, 8))::BIGINT % 2) AS g,
-         max(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END) AS conv
-  FROM events GROUP BY user_id
-),
-agg AS (
-  SELECT CAST(sum(CASE WHEN g = 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_a,
-         CAST(sum(CASE WHEN g = 0 THEN conv ELSE 0 END) AS BIGINT)
-           AS conv_a,
-         CAST(sum(CASE WHEN g = 1 THEN 1 ELSE 0 END) AS BIGINT) AS n_b,
-         CAST(sum(CASE WHEN g = 1 THEN conv ELSE 0 END) AS BIGINT)
-           AS conv_b
-  FROM per_user
-),
-calc AS (
-  SELECT *,
-         CAST(conv_a AS DOUBLE) / CAST(n_a AS DOUBLE) AS ra,
-         CAST(conv_b AS DOUBLE) / CAST(n_b AS DOUBLE) AS rb,
-         CAST(conv_a + conv_b AS DOUBLE) / CAST(n_a + n_b AS DOUBLE) AS pp
-  FROM agg
-),
-zc AS (
-  SELECT *,
-         CASE WHEN sqrt(pp * (1.0 - pp)
-                        * (1.0 / CAST(n_a AS DOUBLE)
-                           + 1.0 / CAST(n_b AS DOUBLE))) > 0
-              THEN {sql_exact_round(
-                  "(rb - ra) / sqrt(pp * (1.0 - pp)"
-                  " * (1.0 / CAST(n_a AS DOUBLE)"
-                  "    + 1.0 / CAST(n_b AS DOUBLE)))", 9)}
-         END AS z
-  FROM calc
-)
-SELECT n_a, conv_a, {sql_exact_round("ra", 9)} AS rate_a,
-       n_b, conv_b, {sql_exact_round("rb", 9)} AS rate_b,
-       z, coalesce(abs(z) > {AB_Z_CRITICAL}, FALSE) AS significant
-FROM zc
-"""
-
-
-def retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Retention half-life (pre-built r13): pooled exponential-decay
-    fit over the weekly cohort retention curve — OLS of ln(retention)
-    on period (periods ≥ 1, the shared ``text.ols_fit`` machinery's
-    third consumer), reported as (slope, intercept, r2, half_life)
-    where ``half_life = −ln2/slope`` weeks (NULL when retention is
-    not decaying).  The one-number product-health summary on top of
-    the cohort matrix; everything after the cohort aggregate is
-    arithmetic on a ≤ cohorts×periods frame."""
-    from ..operators.temporal import cohort_retention
-    from ..operators.text import ols_fit
-
-    ev = load_tables(spark, sf_dir, ("events",))["events"]
-    mat = cohort_retention(ev)
-    pts = mat.where(
-        (F.col("period") >= 1) & (F.col("retention") > 0)
-    ).select(
-        exact_round(F.col("period").cast("double"), 9).alias("x"),
-        exact_round(F.log(F.col("retention")), 9).alias("y"),
-    )
-    fit = ols_fit(pts, "x", "y")
-    ln2 = 0.6931471805599453
-    return fit.select(
-        "slope",
-        "intercept",
-        "r2",
-        F.when(
-            F.col("slope") < 0,
-            exact_round(F.lit(-ln2) / F.col("slope"), 9),
-        ).alias("half_life_weeks"),
-    )
-
-
-def _retention_decay_sql() -> str:
-    from ..operators.text import sql_ols_ctes
-
-    ln2 = 0.6931471805599453
-    return f"""
-WITH coh AS MATERIALIZED ({COHORT_RETENTION_EVENTS_SQL}),
-xy AS (
-  SELECT {sql_exact_round("CAST(period AS DOUBLE)", 9)} AS x,
-         {sql_exact_round("ln(retention)", 9)} AS y
-  FROM coh WHERE period >= 1 AND retention > 0
-),
-{sql_ols_ctes("xy", "x", "y")}
-SELECT slope, intercept, r2,
-       CASE WHEN slope < 0 THEN
-         {sql_exact_round(f"-{ln2} / slope", 9)}
-       END AS half_life_weeks
-FROM fit
-"""
-
-
-RETENTION_DECAY_SQL = _retention_decay_sql()

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..catalog import load_tables
-from ..functions import exact_round, sql_exact_avg, sql_exact_round
+from ..functions import sql_exact_avg, sql_exact_round
 from ..operators import corpus, text
 from ..operators.dedup import sql_shingles
 from .extended_queries import (
@@ -400,406 +400,13 @@ SELECT doc_id, lang, hash_key, split,
 FROM t
 """
 
-# --- Leakage-safe cluster split (pre-built r12) ------------------------------
-
-
-def cluster_safe_split_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Contamination-proof corpus split (``corpus.cluster_safe_split``):
-    near-dup clusters from the LSH pipeline assign atomically to one
-    split, so no test doc has a train near-copy.  Three evidence legs
-    under one tagged union:
-
-    * 'doc' — every doc's cluster key and inherited split;
-    * 'audit' — per-split doc and cluster counts (the 13/2/1 hash
-      fractions hold over CLUSTERS, the unit of assignment);
-    * 'leak' — the count of clusters spanning >1 split: the operator's
-      defining invariant, deterministically 0, hash-checked (the
-      est_ge_exact discipline — state the law as a checked cell).
-
-    Scale: the cluster map is the dedup pipeline's byproduct (bounded
-    by near-dup membership, not corpus size); the audit legs add two
-    hash-aggs over (cluster_key, split) pairs."""
-    from . import graph_queries as gq
-
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    clusters = gq.dedup_clusters(spark, sf_dir)
-    labeled = corpus.cluster_safe_split(
-        docs.select("doc_id"), clusters
-    ).select("doc_id", "cluster_key", "split")
-    nb = F.lit(None).cast("bigint")
-    doc_rows = labeled.select(
-        F.lit("doc").alias("variant"),
-        "doc_id",
-        "cluster_key",
-        "split",
-        nb.alias("n_docs"),
-        nb.alias("n_clusters"),
-    )
-    audit = labeled.groupBy("split").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.countDistinct("cluster_key").alias("n_clusters"),
-    ).select(
-        F.lit("audit").alias("variant"),
-        nb.alias("doc_id"),
-        nb.alias("cluster_key"),
-        "split",
-        "n_docs",
-        "n_clusters",
-    )
-    leak = (
-        labeled.groupBy("cluster_key")
-        .agg(F.countDistinct("split").alias("__ns"))
-        .where(F.col("__ns") > 1)
-        .agg(F.count(F.lit(1)).alias("n_clusters"))
-        .select(
-            F.lit("leak").alias("variant"),
-            nb.alias("doc_id"),
-            nb.alias("cluster_key"),
-            F.lit(None).cast("string").alias("split"),
-            nb.alias("n_docs"),
-            "n_clusters",
-        )
-    )
-    return doc_rows.unionByName(audit).unionByName(leak)
-
-
-def _cluster_safe_split_sql() -> str:
-    from .graph_queries import DEDUP_CLUSTERS_SQL
-
-    body, final = DEDUP_CLUSTERS_SQL.rsplit("SELECT", 1)
-    return f"""{body}
-, clusters AS (SELECT{final})
-, labeled AS (
-  SELECT d.doc_id,
-         coalesce(c.cluster_id, d.doc_id) AS cluster_key,
-         CASE WHEN substr(md5(coalesce(c.cluster_id, d.doc_id)::VARCHAR),
-                          1, 1) < 'd' THEN 'train'
-              WHEN substr(md5(coalesce(c.cluster_id, d.doc_id)::VARCHAR),
-                          1, 1) < 'f' THEN 'val'
-              ELSE 'test' END AS split
-  FROM documents d LEFT JOIN clusters c USING (doc_id)
-)
-SELECT 'doc' AS variant, doc_id, cluster_key, split,
-       CAST(NULL AS BIGINT) AS n_docs, CAST(NULL AS BIGINT) AS n_clusters
-FROM labeled
-UNION ALL
-SELECT 'audit', NULL, NULL, split, count(*),
-       count(DISTINCT cluster_key)
-FROM labeled GROUP BY split
-UNION ALL
-SELECT 'leak', NULL, NULL, NULL, NULL, CAST(count(*) AS BIGINT)
-FROM (SELECT cluster_key FROM labeled
-      GROUP BY cluster_key HAVING count(DISTINCT split) > 1)
-"""
-
-
-CLUSTER_SAFE_SPLIT_SQL = _cluster_safe_split_sql()
-
-# --- Hashed logistic quality classifier --------------------------------------
-
-QC_BUCKETS = 64
-QC_ITERS = 3
-QC_STEP = 0.5
-QC_LABEL_SOURCE = "src0"
-
-
-def corpus_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """fastText-style corpus quality filter trained in-engine: hashed
-    {1,2}-gram frequency features, logistic regression fit by 3
-    full-batch gradient steps against the weak label
-    ``source = 'src0'`` (the reference slice), scored back over every
-    document — the CCNet/GPT-3/LLaMA filtering step as a Spark plan.
-    Model state is a 64-row broadcast table each iteration; the
-    corpus-side frequency frame is built once and cached; gradients
-    are 64-key map-side-combined folds.  Every sigmoid is 9dp-rounded
-    and every across-row sum is DECIMAL(28,9), so the unrolled DuckDB
-    oracle reproduces training bit-for-bit."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return corpus.train_quality_classifier(
-        docs,
-        F.col("source") == QC_LABEL_SOURCE,
-        n_buckets=QC_BUCKETS,
-        iters=QC_ITERS,
-        step=QC_STEP,
-    )
-
-
-def _qc_iter_block(i: int) -> str:
-    """One unrolled GD iteration: margins under w{i-1}, sigmoids,
-    per-bucket mean gradient, updated w{i} (the bpe_merges unrolled-
-    iteration precedent)."""
-    return f"""
-m{i} AS (
-  SELECT x.doc_id,
-         cast(sum(cast({sql_exact_round("w.w * x.x", 9)} AS DECIMAL(28,9)))
-              AS DOUBLE) AS margin
-  FROM x JOIN w{i - 1} w USING (b) GROUP BY x.doc_id
-),
-p{i} AS (
-  SELECT d.doc_id, d.y,
-         {sql_exact_round("1.0 / (1.0 + exp(-m.margin))", 9)} AS p
-  FROM meta d JOIN m{i} m USING (doc_id)
-),
-g{i} AS (
-  SELECT x.b,
-         cast(sum(cast({sql_exact_round("(p.y - p.p) * x.x", 9)}
-                       AS DECIMAL(28,9))) AS DOUBLE)
-           / (SELECT n_docs FROM nn) AS g
-  FROM x JOIN p{i} p USING (doc_id) GROUP BY x.b
-),
-w{i} AS (
-  SELECT w.b,
-         {sql_exact_round(f"w.w + {QC_STEP} * coalesce(g.g, 0.0)", 9)} AS w
-  FROM w{i - 1} w LEFT JOIN g{i} g USING (b)
-)"""
-
-
-CORPUS_QUALITY_CLASSIFIER_SQL = f"""
-WITH tok AS (
-  SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
-),
-feats AS (
-  SELECT doc_id,
-         (('0x' || substr(md5(f), 1, 8))::BIGINT % {QC_BUCKETS}) AS b
-  FROM (
-    SELECT doc_id,
-           unnest(list_concat(t,
-             list_transform(generate_series(1, greatest(len(t) - 1, 0)),
-                            i -> t[i] || ' ' || t[i + 1]))) AS f
-    FROM tok
-  )
-),
-cnt AS (SELECT doc_id, b, count(*) AS c FROM feats GROUP BY doc_id, b),
-nf AS (
-  SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats FROM cnt GROUP BY doc_id
-),
-x AS (
-  SELECT cnt.doc_id, b, cnt.c::DOUBLE / nf.n_feats AS x
-  FROM cnt JOIN nf USING (doc_id)
-  UNION ALL
-  SELECT doc_id, {QC_BUCKETS} AS b, 1.0 AS x FROM nf
-),
-meta AS (
-  SELECT d.doc_id,
-         CAST(CASE WHEN d.source = '{QC_LABEL_SOURCE}' THEN 1 ELSE 0 END
-              AS INT) AS y,
-         nf.n_feats
-  FROM documents d JOIN nf USING (doc_id)
-),
-nn AS (SELECT count(*)::DOUBLE AS n_docs FROM meta),
-w0 AS (SELECT unnest(generate_series(0, {QC_BUCKETS})) AS b, 0.0 AS w),
-{",".join(_qc_iter_block(i) for i in range(1, QC_ITERS + 1))},
-mf AS (
-  SELECT x.doc_id,
-         cast(sum(cast({sql_exact_round("w.w * x.x", 9)} AS DECIMAL(28,9)))
-              AS DOUBLE) AS margin
-  FROM x JOIN w{QC_ITERS} w USING (b) GROUP BY x.doc_id
-)
-SELECT d.doc_id, d.y, d.n_feats,
-       {sql_exact_round("1.0 / (1.0 + exp(-mf.margin))", 9)} AS score,
-       CAST(CASE WHEN {sql_exact_round("1.0 / (1.0 + exp(-mf.margin))", 9)}
-                      >= 0.5
-                 THEN 1 ELSE 0 END AS INT) AS pred
-FROM meta d JOIN mf USING (doc_id)
-"""
-
-# --- Classifier calibration (reliability diagram + ECE) ---------------------
-
-CALIB_BINS = 10
-
-
-def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Reliability diagram + ECE over the in-engine trained quality
-    classifier (pre-built r13; ``operators/corpus.py:
-    calibration_bins`` composed on ``train_quality_classifier``):
-    ten score-decile bins each reporting mean predicted probability
-    vs observed positive fraction, every row carrying the corpus
-    ECE — the is-a-0.9-really-90% check run before anyone thresholds
-    the filter.  Scale: the scored corpus folds to ≤10 bin rows
-    through one map-side-combined groupBy; everything after is window
-    arithmetic on the bounded bin frame."""
-    scored = corpus_quality_classifier(spark, sf_dir)
-    return corpus.calibration_bins(
-        scored, score_col="score", label_col="y", n_bins=CALIB_BINS
-    )
-
-
-QUALITY_CALIBRATION_SQL = f"""
-WITH scored AS MATERIALIZED ({CORPUS_QUALITY_CLASSIFIER_SQL}),
-bins AS (
-  SELECT least(CAST(floor(score * {CALIB_BINS}) AS BIGINT),
-               {CALIB_BINS - 1}) AS bin,
-         CAST(count(*) AS BIGINT) AS n,
-         cast(sum(cast(score AS DECIMAL(28,9))) AS DOUBLE) AS ssum,
-         CAST(sum(y) AS BIGINT) AS n_pos
-  FROM scored GROUP BY 1
-),
-calc AS (
-  SELECT bin, n, n_pos,
-         {sql_exact_round("ssum / CAST(n AS DOUBLE)", 9)} AS mean_score,
-         {sql_exact_round("CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)", 9)}
-           AS frac_pos
-  FROM bins
-),
-g AS (SELECT *, abs(mean_score - frac_pos) AS gap FROM calc),
-tot AS (
-  SELECT CAST(sum(n) AS BIGINT) AS nn,
-         cast(sum(cast({sql_exact_round("CAST(n AS DOUBLE) * gap", 9)}
-                       AS DECIMAL(28,9))) AS DOUBLE) AS esum
-  FROM g
-)
-SELECT g.bin, g.n, g.n_pos, g.mean_score, g.frac_pos, g.gap,
-       {sql_exact_round("tot.esum / CAST(tot.nn AS DOUBLE)", 9)} AS ece
-FROM g CROSS JOIN tot
-"""
-
-def quality_classifier_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Classifier + calibration in ONE slot off ONE training chain
-    (pre-built r13): the
-    in-engine trained scored frame is cached once; variant 'scored'
-    carries every doc's (y, n_feats, score, pred) verbatim and
-    variant 'calib' carries the reliability bins + ECE — the
-    standalone ``quality_calibration_bins`` replays the whole 63-job
-    training chain for ~0.3s of calibration arithmetic, so pairing
-    them is nearly free (solo: suite ≈ classifier alone).  Cells are
-    bit-identical to both standalone specs (parts-equivalence
-    pinned)."""
-    scored = corpus_quality_classifier(spark, sf_dir).cache()
-    nd = F.lit(None).cast("double")
-    s_leg = scored.select(
-        F.lit("scored").alias("variant"),
-        F.col("doc_id").alias("k"),
-        F.col("y").cast("long").alias("y"),
-        F.col("n_feats").alias("n"),
-        F.col("score").alias("s1"),
-        F.col("pred").cast("double").alias("s2"),
-        nd.alias("s3"),
-        nd.alias("s4"),
-    )
-    c_leg = corpus.calibration_bins(
-        scored, score_col="score", label_col="y", n_bins=CALIB_BINS
-    ).select(
-        F.lit("calib").alias("variant"),
-        F.col("bin").alias("k"),
-        F.col("n_pos").alias("y"),
-        "n",
-        F.col("mean_score").alias("s1"),
-        F.col("frac_pos").alias("s2"),
-        F.col("gap").alias("s3"),
-        F.col("ece").alias("s4"),
-    )
-    return s_leg.unionByName(c_leg)
-
-
-QUALITY_CLASSIFIER_SUITE_SQL = f"""
-WITH scored AS MATERIALIZED ({CORPUS_QUALITY_CLASSIFIER_SQL}),
-bins AS (
-  SELECT least(CAST(floor(score * {CALIB_BINS}) AS BIGINT),
-               {CALIB_BINS - 1}) AS bin,
-         CAST(count(*) AS BIGINT) AS n,
-         cast(sum(cast(score AS DECIMAL(28,9))) AS DOUBLE) AS ssum,
-         CAST(sum(y) AS BIGINT) AS n_pos
-  FROM scored GROUP BY 1
-),
-calc AS (
-  SELECT bin, n, n_pos,
-         {sql_exact_round("ssum / CAST(n AS DOUBLE)", 9)} AS mean_score,
-         {sql_exact_round("CAST(n_pos AS DOUBLE) / CAST(n AS DOUBLE)", 9)}
-           AS frac_pos
-  FROM bins
-),
-g AS (SELECT *, abs(mean_score - frac_pos) AS gap FROM calc),
-tot AS (
-  SELECT CAST(sum(n) AS BIGINT) AS nn,
-         cast(sum(cast({sql_exact_round("CAST(n AS DOUBLE) * gap", 9)}
-                       AS DECIMAL(28,9))) AS DOUBLE) AS esum
-  FROM g
-)
-SELECT 'scored' AS variant, doc_id AS k, CAST(y AS BIGINT) AS y,
-       n_feats AS n, score AS s1, CAST(pred AS DOUBLE) AS s2,
-       CAST(NULL AS DOUBLE) AS s3, CAST(NULL AS DOUBLE) AS s4
-FROM scored
-UNION ALL
-SELECT 'calib', g.bin, g.n_pos, g.n, g.mean_score, g.frac_pos, g.gap,
-       {sql_exact_round("tot.esum / CAST(tot.nn AS DOUBLE)", 9)}
-FROM g CROSS JOIN tot
-"""
-
-# --- DoReMi-style domain mixture reweighting --------------------------------
+# --- Per-source hashed-bigram LM grid --------------------------------------
 
 DR_BUCKETS = 64
-DR_ITERS = 3
-DR_ETA = 1.0
-DR_SMOOTH = 0.2
 
 
-def domain_reweight_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """DoReMi-style domain mixture reweighting (pre-built r13;
-    ``operators/corpus.py:domain_reweight``): three unrolled
-    multiplicative-weights rounds where the proxy is the α-weighted
-    mixture of per-source hashed-bigram bucket LMs and each source's
-    excess loss is its cross-entropy under the mixture minus under
-    its own LM.  Sources whose text the shared mixture models worst
-    earn weight — the domain-mixture optimizer a pre-training data
-    pipeline runs before sampling.
-
-    Scale: ONE fused hash-agg collapses the corpus to the
-    (sources × {DR_BUCKETS})-bucket count grid; the whole optimization
-    loop runs on that cached statistics frame with broadcast-only
-    joins — the corpus is read exactly once."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    return corpus.domain_reweight(
-        docs,
-        domain_col="source",
-        n_buckets=DR_BUCKETS,
-        n_iters=DR_ITERS,
-        eta=DR_ETA,
-        smooth=DR_SMOOTH,
-    )
-
-
-def _dr_iter_block(i: int) -> str:
-    """One multiplicative-weights round as CTEs (the _qc_iter_block
-    unrolling pattern): mixture LM under a{i-1}, per-source
-    cross-entropy, clipped excess vs the own-LM floor, exponentiated
-    re-normalized update."""
-    term = sql_exact_round("a.alpha * g.p_own", 9)
-    ex = sql_exact_round(f"exp({DR_ETA} * excess)", 9)
-    return f"""pm{i} AS (
-  SELECT g.b,
-         cast(sum(cast({term} AS DECIMAL(28,9))) AS DOUBLE) AS p_mix
-  FROM grid2 g JOIN a{i - 1} a USING (source) GROUP BY g.b
-),
-pmr{i} AS (SELECT b, {sql_exact_round("ln(p_mix)", 9)} AS lnp_mix
-           FROM pm{i}),
-lm{i} AS (
-  SELECT g.source,
-         - cast(sum(cast(g.c * p.lnp_mix AS DECIMAL(28,8))) AS DOUBLE)
-           / CAST(max(g.n_feats) AS DOUBLE) AS loss_mix
-  FROM grid2 g JOIN pmr{i} p USING (b) GROUP BY g.source
-),
-st{i} AS (
-  SELECT a.source, a.alpha, l.loss_mix,
-         greatest(l.loss_mix - o.loss_own, 0.0) AS excess
-  FROM a{i - 1} a JOIN lm{i} l USING (source) JOIN lown o USING (source)
-),
-r{i} AS (
-  SELECT source, loss_mix, excess,
-         {sql_exact_round(f"alpha * {ex}", 9)} AS raw
-  FROM st{i}
-),
-z{i} AS (SELECT cast(sum(cast(raw AS DECIMAL(28,9))) AS DOUBLE) AS z
-         FROM r{i}),
-a{i} AS (
-  SELECT source, loss_mix, excess,
-         {sql_exact_round(f"raw / (SELECT z FROM z{i})", 9)} AS alpha
-  FROM r{i}
-)"""
-
-
-# The shared (domain × bucket) LM-grid CTE chain — used verbatim by
-# DOMAIN_REWEIGHT_SQL and SOURCE_DIVERGENCE_SQL (mirrors
-# operators/corpus.py:domain_bucket_grid).
+# The (domain × bucket) LM-grid CTE chain SOURCE_DIVERGENCE_SQL reads
+# (mirrors operators/corpus.py:domain_bucket_grid).
 DOMAIN_GRID_CTES = f"""tok AS (
   SELECT doc_id, source, string_split(text, ' ') AS t FROM documents
 ),
@@ -830,39 +437,6 @@ grid AS (
                           AS BIGINT) AS b) gs
   LEFT JOIN cnts c ON c.source = t.source AND c.b = gs.b
 )"""
-
-DOMAIN_REWEIGHT_SQL = f"""
-WITH {DOMAIN_GRID_CTES},
-nd AS (
-  SELECT source, CAST(count(*) AS BIGINT) AS n_docs
-  FROM documents GROUP BY source
-),
-kk AS (SELECT CAST(count(*) AS BIGINT) AS k FROM tot),
-grid2 AS (
-  SELECT *, {sql_exact_round("ln(p_own)", 9)} AS lnp_own FROM grid
-),
-lown AS (
-  SELECT source,
-         - cast(sum(cast(c * lnp_own AS DECIMAL(28,8))) AS DOUBLE)
-           / CAST(max(n_feats) AS DOUBLE) AS loss_own
-  FROM grid2 GROUP BY source
-),
-a0 AS (
-  SELECT source, 1.0 / CAST((SELECT k FROM kk) AS DOUBLE) AS alpha
-  FROM tot
-),
-{",".join(_dr_iter_block(i) for i in range(1, DR_ITERS + 1))}
-SELECT t.source, nd.n_docs, t.n_feats, o.loss_own, a.loss_mix, a.excess,
-       a.alpha,
-       {sql_exact_round(
-           f"{1.0 - DR_SMOOTH} * a.alpha"
-           f" + {DR_SMOOTH} / CAST((SELECT k FROM kk) AS DOUBLE)", 9)}
-         AS weight
-FROM tot t
-JOIN nd USING (source)
-JOIN lown o USING (source)
-JOIN a{DR_ITERS} a USING (source)
-"""
 
 
 def source_divergence_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -899,234 +473,6 @@ SELECT source_a, source_b,
        cast(sum(cast(t AS DECIMAL(28,9))) AS DOUBLE) AS js_div
 FROM terms GROUP BY source_a, source_b
 """
-
-# --- Water-filling token-budget quotas --------------------------------------
-
-QUOTA_BUDGET = 22000.0
-QUOTA_ROUNDS = 3
-
-
-def token_quota_plan_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Water-filling quota realization (pre-built r13;
-    ``operators/corpus.py:token_quota_plan``): per-source available
-    tokens from one corpus aggregate, a deterministic skewed weight
-    (sqrt-temperature × an md5-derived 1–5 multiplier so the capping
-    branch actually exercises at the driver scale), and a fixed
-    22000-token budget allocated by 3 water-filling rounds — capped sources take their availability, surplus re-flows
-    by renormalized weight.  The step between mixture weights
-    (DoReMi / temperature) and a sampler that cannot draw tokens a
-    source does not have."""
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    av = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.col("text"), " ")).cast("long")).alias(
-            "avail_tokens"
-        )
-    )
-    mult = (
-        F.pmod(
-            F.conv(
-                F.substring(F.md5(F.col("source")), 1, 2), 16, 10
-            ).cast("int"),
-            F.lit(5),
-        )
-        + 1
-    )
-    weighted = av.withColumn(
-        "weight",
-        exact_round(
-            F.sqrt(F.col("avail_tokens").cast("double"))
-            * mult.cast("double"),
-            9,
-        ),
-    )
-    return corpus.token_quota_plan(
-        weighted, budget=QUOTA_BUDGET, n_rounds=QUOTA_ROUNDS
-    )
-
-
-def _wf_round_block(i: int, budget: float) -> str:
-    share = sql_exact_round("wn / wact", 9)
-    return f"""r{i} AS (
-  SELECT source, avail_tokens, wn,
-         CASE WHEN cap = 1 OR
-                   ({share}) * ({budget} - CAST(alloc AS DOUBLE))
-                   >= CAST(avail_tokens AS DOUBLE)
-              THEN 1 ELSE 0 END AS cap
-  FROM (
-    SELECT *,
-           sum(CASE WHEN cap = 1 THEN avail_tokens
-                    ELSE CAST(0 AS BIGINT) END) OVER () AS alloc,
-           cast(sum(CASE WHEN cap = 0
-                         THEN cast(wn AS DECIMAL(28,9)) END) OVER ()
-                AS DOUBLE) AS wact
-    FROM r{i - 1}
-  )
-)"""
-
-
-def _token_quota_sql() -> str:
-    b = QUOTA_BUDGET
-    share = sql_exact_round("wn / wact", 9)
-    rounds = ",\n".join(
-        _wf_round_block(i, b) for i in range(1, QUOTA_ROUNDS + 1)
-    )
-    return f"""
-WITH av AS (
-  SELECT source,
-         CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-           AS avail_tokens
-  FROM documents GROUP BY source
-),
-w0a AS (
-  SELECT source, avail_tokens,
-         {sql_exact_round(
-             "sqrt(CAST(avail_tokens AS DOUBLE))"
-             " * CAST(1 + (('0x' || substr(md5(source), 1, 2))::INT % 5)"
-             "       AS DOUBLE)", 9)} AS w
-  FROM av
-),
-r0 AS (
-  SELECT source, avail_tokens,
-         {sql_exact_round("w / wsum", 9)} AS wn, 0 AS cap
-  FROM (
-    SELECT *,
-           cast(sum(cast(w AS DECIMAL(28,9))) OVER () AS DOUBLE) AS wsum
-    FROM w0a
-  )
-),
-{rounds},
-fin AS (
-  SELECT *,
-         sum(CASE WHEN cap = 1 THEN avail_tokens
-                  ELSE CAST(0 AS BIGINT) END) OVER () AS alloc,
-         cast(sum(CASE WHEN cap = 0
-                       THEN cast(wn AS DECIMAL(28,9)) END) OVER ()
-              AS DOUBLE) AS wact
-  FROM r{QUOTA_ROUNDS}
-)
-SELECT source, avail_tokens, wn AS weight,
-       CASE WHEN cap = 1 THEN CAST(avail_tokens AS DOUBLE)
-            ELSE {sql_exact_round(
-                f"(({share}) * ({b} - CAST(alloc AS DOUBLE)))", 9)}
-       END AS quota,
-       cap AS capped
-FROM fin
-"""
-
-
-TOKEN_QUOTA_SQL = _token_quota_sql()
-
-# --- Mixture planning suite (reweight → quota, one chain) -------------------
-
-SUITE_QUOTA_BUDGET = 26000.0
-
-
-def mixture_planning_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The end-to-end mixture-planning chain in ONE spec (pre-built
-    r13): DoReMi multiplicative-weights reweighting decides the
-    per-source mixture, and the water-filling planner turns those
-    exact weights into realizable token quotas under availability
-    caps — optimizer → allocator, the two decisions a pre-training
-    data pipeline makes before any sampler draws.  Variant
-    'reweight' carries every ``domain_reweight_mixture`` cell
-    verbatim (cached once, the suite pattern); variant 'quota'
-    carries the allocation under a 26000-token budget sized so caps
-    exercise at the driver scale."""
-    rw = domain_reweight_mixture(spark, sf_dir).cache()
-    docs = load_tables(spark, sf_dir, ("documents",))["documents"]
-    av = docs.groupBy("source").agg(
-        F.sum(F.size(F.split(F.col("text"), " ")).cast("long")).alias(
-            "avail_tokens"
-        )
-    )
-    plan = corpus.token_quota_plan(
-        av.join(rw.select("source", "weight"), "source"),
-        budget=SUITE_QUOTA_BUDGET,
-        n_rounds=QUOTA_ROUNDS,
-    )
-    nl = F.lit(None).cast("long")
-    nd_ = F.lit(None).cast("double")
-    r_leg = rw.select(
-        F.lit("reweight").alias("variant"),
-        F.col("source").alias("s"),
-        F.col("n_docs").alias("n1"),
-        F.col("n_feats").alias("n2"),
-        F.col("loss_own").alias("v1"),
-        F.col("loss_mix").alias("v2"),
-        F.col("excess").alias("v3"),
-        F.col("alpha").alias("v4"),
-        F.col("weight").alias("v5"),
-        nd_.alias("v6"),
-    )
-    q_leg = plan.select(
-        F.lit("quota").alias("variant"),
-        F.col("source").alias("s"),
-        F.col("avail_tokens").alias("n1"),
-        F.col("capped").cast("long").alias("n2"),
-        nd_.alias("v1"),
-        nd_.alias("v2"),
-        nd_.alias("v3"),
-        nd_.alias("v4"),
-        F.col("weight").alias("v5"),
-        F.col("quota").alias("v6"),
-    )
-    return r_leg.unionByName(q_leg)
-
-
-def _mixture_planning_sql() -> str:
-    b = SUITE_QUOTA_BUDGET
-    share = sql_exact_round("wn / wact", 9)
-    rounds = ",\n".join(
-        _wf_round_block(i, b) for i in range(1, QUOTA_ROUNDS + 1)
-    )
-    return f"""
-WITH rw AS MATERIALIZED ({DOMAIN_REWEIGHT_SQL}),
-av AS (
-  SELECT source,
-         CAST(sum(len(string_split(text, ' '))) AS BIGINT)
-           AS avail_tokens
-  FROM documents GROUP BY source
-),
-w0a AS (
-  SELECT av.source, av.avail_tokens,
-         {sql_exact_round("rw.weight", 9)} AS w
-  FROM av JOIN rw USING (source)
-),
-r0 AS (
-  SELECT source, avail_tokens,
-         {sql_exact_round("w / wsum", 9)} AS wn, 0 AS cap
-  FROM (
-    SELECT *,
-           cast(sum(cast(w AS DECIMAL(28,9))) OVER () AS DOUBLE) AS wsum
-    FROM w0a
-  )
-),
-{rounds},
-fin AS (
-  SELECT *,
-         sum(CASE WHEN cap = 1 THEN avail_tokens
-                  ELSE CAST(0 AS BIGINT) END) OVER () AS alloc,
-         cast(sum(CASE WHEN cap = 0
-                       THEN cast(wn AS DECIMAL(28,9)) END) OVER ()
-              AS DOUBLE) AS wact
-  FROM r{QUOTA_ROUNDS}
-)
-SELECT 'reweight' AS variant, source AS s, n_docs AS n1, n_feats AS n2,
-       loss_own AS v1, loss_mix AS v2, excess AS v3, alpha AS v4,
-       weight AS v5, CAST(NULL AS DOUBLE) AS v6
-FROM rw
-UNION ALL
-SELECT 'quota', source, avail_tokens, CAST(cap AS BIGINT),
-       NULL, NULL, NULL, NULL, wn,
-       CASE WHEN cap = 1 THEN CAST(avail_tokens AS DOUBLE)
-            ELSE {sql_exact_round(
-                f"(({share}) * ({b} - CAST(alloc AS DOUBLE)))", 9)}
-       END
-FROM fin
-"""
-
-
-MIXTURE_PLANNING_SQL = _mixture_planning_sql()
 
 # --- Sequence packing -------------------------------------------------------
 
@@ -1171,35 +517,6 @@ def corpus_domain_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     return corpus.domain_mix_sample(docs)
 
-
-CORPUS_DOMAIN_MIX_SQL = """
-WITH counts AS (
-  SELECT source, count(*) AS n_source FROM documents GROUP BY source
-),
-tot AS (
-  SELECT CAST(sum(n_source) AS BIGINT) AS n_total,
-         CAST(count(*) AS BIGINT) AS n_sources
-  FROM counts
-),
-rates AS (
-  SELECT source,
-         least(1.0, (n_total::DOUBLE / n_sources) / n_source) AS rate
-  FROM counts CROSS JOIN tot
-),
-d AS (
-  SELECT doc_id, source,
-         ('0x' || substr(md5(doc_id::VARCHAR), 1, 8))::BIGINT::DOUBLE
-           / 4294967296.0 AS hash_frac
-  FROM documents
-)
-SELECT d.doc_id, d.source,
-       {hf} AS hash_frac,
-       {rt} AS rate,
-       d.hash_frac < rates.rate AS kept
-FROM d JOIN rates USING (source)
-""".format(
-    hf=sql_exact_round("d.hash_frac", 8), rt=sql_exact_round("rates.rate", 8)
-)
 
 # --- TF-IDF top terms -------------------------------------------------------
 

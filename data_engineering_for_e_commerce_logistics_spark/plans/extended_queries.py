@@ -126,12 +126,6 @@ verified AS (
 """
 
 
-DEDUP_MINHASH_SQL = f"""
-WITH {minhash_pipeline_ctes()}
-SELECT id_a, id_b, jaccard FROM verified
-"""
-
-
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_tables(spark, sf_dir, ("documents",))["documents"]
     return dedup.ngram_jaccard_pairs(

@@ -577,54 +577,6 @@ def kmeans_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-KMEANS_REFINE_SQL = f"""
-WITH e AS (
-  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v
-  FROM embeddings
-),
-seeds AS (SELECT vec_id AS centroid_id, v AS cv FROM e WHERE vec_id < {N_CENTROIDS}),
-s0 AS (
-  SELECT e.vec_id, e.v, c.centroid_id,
-         list_reduce(list_transform(list_zip(e.v, c.cv),
-                     p -> (p[1] - p[2]) * (p[1] - p[2])), (a, b) -> a + b) AS dist
-  FROM e, seeds c
-),
-assign0 AS (
-  SELECT vec_id, v, centroid_id AS cell_round1 FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY vec_id ORDER BY dist ASC, centroid_id ASC) AS rn
-    FROM s0
-  ) WHERE rn = 1
-),
-dims AS (
-  SELECT cell_round1, unnest(v) AS val,
-         generate_subscripts(v, 1) - 1 AS dim
-  FROM assign0
-),
-refined AS (
-  SELECT centroid_id, list(cval ORDER BY dim) AS cv FROM (
-    SELECT cell_round1 AS centroid_id, dim,
-           cast(sum(cast(val as decimal(28,8))) as double) / count(*) AS cval
-    FROM dims GROUP BY 1, 2
-  ) GROUP BY centroid_id
-),
-s1 AS (
-  SELECT a.vec_id, c.centroid_id,
-         list_reduce(list_transform(list_zip(a.v, c.cv),
-                     p -> (p[1] - p[2]) * (p[1] - p[2])), (a2, b2) -> a2 + b2) AS dist
-  FROM assign0 a, refined c
-),
-assign1 AS (
-  SELECT vec_id, centroid_id AS cell_round2 FROM (
-    SELECT *, row_number() OVER (
-        PARTITION BY vec_id ORDER BY dist ASC, centroid_id ASC) AS rn
-    FROM s1
-  ) WHERE rn = 1
-)
-SELECT a0.vec_id, a0.cell_round1, a1.cell_round2
-FROM assign0 a0 JOIN assign1 a1 ON a0.vec_id = a1.vec_id
-"""
-
 # --- Multi-iteration k-means (the full iterative algorithm, oracle-checked) -
 
 KMEANS_N_ITER = 3
@@ -740,9 +692,6 @@ def _kmeans_iterations_sql(n_iter: int = KMEANS_N_ITER) -> str:
         + ",\n".join(ctes)
         + f"\nSELECT vec_id, centroid_id AS cell FROM assign{n_iter - 1}"
     )
-
-
-KMEANS_ITERATIONS_SQL = _kmeans_iterations_sql()
 
 
 def kmeans_suite(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -18,8 +18,6 @@ The reference's extraction layer is pandas read_csv + requests JSON
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T

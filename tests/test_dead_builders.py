@@ -1,9 +1,14 @@
-"""Guard against dead builders: every top-level ``(spark, sf_dir)``
-builder in ``plans/`` is registered, reached by name from a registered
-builder, or named below.  The list holds the unregistered runway still
-to retire (ROADMAP direction 3) and the retired suite parts that tests
-compare their suites against.  A retirement batch shrinks it; a new
-builder must be registered or reached, never merely added."""
+"""Guard against dead code in ``plans/``.
+
+Every top-level ``(spark, sf_dir)`` builder is registered, reached by
+name from a registered builder, or named below.  The list holds the
+unregistered runway still to retire (ROADMAP direction 3) and the
+retired suite parts that tests compare their suites against.  A
+retirement batch shrinks it; a new builder must be registered or
+reached, never merely added.
+
+Every top-level ``*_SQL`` constant is read somewhere: an oracle text
+nothing reads is dead weight that still costs its build at import."""
 
 from __future__ import annotations
 
@@ -12,27 +17,14 @@ import pathlib
 
 from data_engineering_for_e_commerce_logistics_spark.plans.registry import all_specs
 
-PLANS = pathlib.Path(__file__).resolve().parent.parent / (
-    "data_engineering_for_e_commerce_logistics_spark/plans"
-)
+ROOT = pathlib.Path(__file__).resolve().parent.parent
+PACKAGE = ROOT / "data_engineering_for_e_commerce_logistics_spark"
+PLANS = PACKAGE / "plans"
+# Everything that may read a plan module's constant.
+READERS = (PACKAGE, ROOT / "tests", ROOT / "tools", ROOT / "perfbench",
+           ROOT / "dags", ROOT / "bench.py", ROOT / "__spark_entry__.py")
 
 RUNWAY_TO_RETIRE = {
-    # quality-classifier trio
-    "corpus_quality_classifier",
-    "quality_calibration_bins",
-    "quality_classifier_suite",
-    # mixture-planning trio
-    "domain_reweight_mixture",
-    "token_quota_plan_sources",
-    "mixture_planning_suite",
-    # events five
-    "ab_purchase_test",
-    "cohort_retention_events",
-    "event_analytics_suite",
-    "event_transitions",
-    "retention_decay_fit",
-    # singles
-    "cluster_safe_split_documents",
     "ann_balance_report",
     "embedding_diversity_report",
     "source_overlap_matrix",
@@ -88,3 +80,31 @@ def _unreached_builders() -> set[str]:
 
 def test_unregistered_builders_are_listed():
     assert _unreached_builders() == RUNWAY_TO_RETIRE | SUITE_PART_REFERENCES
+
+
+def _sql_constants() -> set[str]:
+    return {
+        target.id
+        for path in PLANS.glob("*.py")
+        for node in ast.parse(path.read_text()).body
+        if isinstance(node, ast.Assign)
+        for target in node.targets
+        if isinstance(target, ast.Name) and target.id.endswith("_SQL")
+    }
+
+
+def _names_read() -> set[str]:
+    read: set[str] = set()
+    for reader in READERS:
+        paths = reader.rglob("*.py") if reader.is_dir() else [reader]
+        for path in paths:
+            for node in ast.walk(ast.parse(path.read_text())):
+                if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+                    read.add(node.id)
+                elif isinstance(node, ast.Attribute):
+                    read.add(node.attr)
+    return read
+
+
+def test_every_sql_constant_is_read():
+    assert sorted(_sql_constants() - _names_read()) == []

@@ -563,46 +563,6 @@ def test_diversity_bounds_any_frame(spark, rows):
         assert r.spread >= -1e-7
 
 
-quota_frames = st.lists(
-    st.tuples(
-        st.integers(min_value=1, max_value=10_000),  # avail tokens
-        st.floats(min_value=0.01, max_value=100.0,
-                  allow_nan=False, allow_infinity=False),  # weight
-    ),
-    min_size=1,
-    max_size=12,
-)
-
-
-@given(rows=quota_frames, budget=st.integers(min_value=1, max_value=50_000))
-@settings(**SETTINGS)
-def test_quota_feasible_and_bounded_any_frame(spark, rows, budget):
-    """For ANY availability/weight frame and budget, with rounds = K
-    (the guaranteed fixpoint): every capped quota equals availability,
-    no quota is negative, and the total never exceeds
-    min(budget, total availability) beyond rounding."""
-    from data_engineering_for_e_commerce_logistics_spark.operators.corpus import (
-        token_quota_plan,
-    )
-
-    df = spark.createDataFrame(
-        [(f"s{i}", a, w) for i, (a, w) in enumerate(rows)],
-        "source string, avail_tokens long, weight double",
-    )
-    out = token_quota_plan(
-        df, budget=float(budget), n_rounds=len(rows)
-    ).collect()
-    total_avail = sum(a for a, _ in rows)
-    tol = 1e-4 * max(budget, 1)
-    for r in out:
-        if r.capped == 1:
-            assert r.quota == float(r.avail_tokens)
-        else:
-            assert r.quota >= -1e-9
-            assert r.quota <= r.avail_tokens + tol
-    assert sum(r.quota for r in out) <= min(budget, total_avail) + tol
-
-
 event_timelines = st.lists(
     st.tuples(
         st.integers(min_value=0, max_value=3),   # user (collisions)
@@ -640,36 +600,3 @@ def test_funnel_stages_monotone_any_timeline(spark, rows):
     users = len({u for u, _, _ in rows})
     assert out[1] >= out[2] >= out[3]
     assert out[1] <= users
-
-
-@given(rows=event_timelines)
-@settings(**SETTINGS)
-def test_transition_rows_stochastic_any_timeline(spark, rows):
-    """For ANY event set: every from-type's transition probabilities
-    sum to 1 (within the 9dp rounding) and total transition count is
-    exactly Σ_user max(0, events_u − 1)."""
-    from datetime import datetime
-
-    from data_engineering_for_e_commerce_logistics_spark.operators.temporal import (
-        event_transition_matrix,
-    )
-
-    df = spark.createDataFrame(
-        [
-            (u, i, datetime(2024, 1, 1, 0, 0, s), e)
-            for i, (u, s, e) in enumerate(rows)
-        ],
-        "user_id long, event_id long, ts timestamp, event_type string",
-    )
-    out = event_transition_matrix(df).collect()
-    per_user = {}
-    for u, _, _ in rows:
-        per_user[u] = per_user.get(u, 0) + 1
-    want_total = sum(max(0, c - 1) for c in per_user.values())
-    assert sum(r.n for r in out) == want_total
-    by_from = {}
-    for r in out:
-        by_from.setdefault(r.from_type, 0.0)
-        by_from[r.from_type] += r.prob
-    for tot in by_from.values():
-        assert abs(tot - 1.0) < 1e-6
