@@ -9,11 +9,12 @@ against ~0.15s for a JVM-literal plan (optimization guide §4: the
 JVM↔Python boundary is the cost, and these rows never need it).
 
 ``local_rows_df`` builds the same rows as LITERAL expressions —
-``range(1) → explode(array(struct(...)))`` — so the frame is a pure
-JVM plan: one task, zero Python workers, zero pickling, and the
-values/column types are exactly those of the declared DDL (every
-literal is cast to its field type, matching createDataFrame's
-verified conversion for the scalar types used here).
+``range(1, numPartitions=1) → explode(array(struct(...)))`` — so the
+frame is a pure JVM plan: one task (a bare ``range(1)`` would have
+``defaultParallelism`` partitions, all but one empty), zero Python
+workers, zero pickling, and the values/column types are exactly those
+of the declared DDL (every literal is cast to its field type, matching
+createDataFrame's verified conversion for the scalar types used here).
 
 Intended for BOUNDED driver-computed results (profile reports,
 quantile brackets, greedy selections, trained merge tables — tens to
@@ -81,7 +82,7 @@ def local_rows_df(
         # (StructType.simpleString() is already the struct<...> element
         # type the array cast needs)
         return (
-            spark.range(1)
+            spark.range(1, numPartitions=1)
             .select(
                 F.explode(
                     F.array().cast(f"array<{st.simpleString()}>")
@@ -90,7 +91,7 @@ def local_rows_df(
             .select("__r.*")
         )
     return (
-        spark.range(1)
+        spark.range(1, numPartitions=1)
         .select(F.explode(F.array(*structs)).alias("__r"))
         .select("__r.*")
     )

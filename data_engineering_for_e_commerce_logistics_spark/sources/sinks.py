@@ -393,8 +393,17 @@ class RunMetrics:
 
 def log_etl_run(spark: SparkSession, metrics: RunMetrics, path: str) -> None:
     """S18: append one audit row per run (db_loader.py:443-474;
-    schema.sql:180-192)."""
+    schema.sql:180-192).
+
+    The row is built as JVM literals (``local_rows_df``): its write
+    runs one job of one task and starts no Python worker, where
+    ``createDataFrame`` on a list maps a pickled RDD through a worker
+    in each of ``defaultParallelism`` tasks.  Parquet reads back
+    all-nullable, so the log reads back as ``RUN_LOG_SCHEMA`` whichever
+    way a file was written."""
     import datetime
+
+    from ..functions import local_rows_df
 
     row = [
         (
@@ -410,7 +419,7 @@ def log_etl_run(spark: SparkSession, metrics: RunMetrics, path: str) -> None:
             metrics.error_message,
         )
     ]
-    spark.createDataFrame(row, RUN_LOG_SCHEMA).write.mode("append").parquet(path)
+    local_rows_df(spark, row, RUN_LOG_SCHEMA).write.mode("append").parquet(path)
 
 
 # --- Views / DDL (S19) ------------------------------------------------------

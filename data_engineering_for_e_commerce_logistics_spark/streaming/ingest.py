@@ -19,14 +19,16 @@ effectively-exactly-once output on top of checkpointed offsets.
 
 State partitions: a stateful operator keeps one state store per
 shuffle partition and commits every one of them each micro-batch,
-however few rows it holds.  The rollup streams' state is bounded (a
-few thousand rows), so ``start_rollup_stream`` and
-``start_sliding_rollup_stream`` start their query with
-``spark.sql.shuffle.partitions`` capped at the cluster's default
-parallelism (``_start_bounded_state``) instead of the session's
-batch-sized value.  Spark records the partition count in the
-checkpoint's offset log and a restart reuses it, so a checkpoint
-started with more partitions keeps them.
+however few rows it holds.  ``start_rollup_stream`` and
+``start_sliding_rollup_stream`` start their query on ONE state
+partition (``_start_bounded_state``), at any input rate: the rollup's
+state is (windows in the watermark horizon × event types), and every
+map task partially aggregates its rows before the state shuffle, so
+the stateful stage is as small as a global aggregate's final stage.
+The scan and the partial aggregation keep full parallelism.  Spark
+records the partition count in the checkpoint's offset log and a
+restart reuses it, so a checkpoint started with more partitions keeps
+them.
 """
 
 from __future__ import annotations
@@ -133,10 +135,10 @@ def start_rollup_stream(
     availableNow processes the current backlog then stops — the batch
     refresh mode; drop it for a continuously-running micro-batch job.
 
-    The rollup's state is bounded, so a new checkpoint runs it on
-    min(spark.sql.shuffle.partitions, defaultParallelism) state
-    partitions; an existing checkpoint keeps the count it was started
-    with (``_start_bounded_state``).
+    The rollup's state is (windows in the watermark horizon × event
+    types), so a new checkpoint runs it on one state partition; an
+    existing checkpoint keeps the count it was started with
+    (``_start_bounded_state``).
     """
     rollup = windowed_rollup(
         read_event_stream(spark, source_path), window_duration, watermark
@@ -172,19 +174,26 @@ def _upsert_batches(sink_path: str, key_columns: list[str]):
 
 
 def _start_bounded_state(spark: SparkSession, writer):
-    """Start ``writer`` with ``spark.sql.shuffle.partitions`` capped at
-    ``defaultParallelism``, for streams whose state stays small.
+    """Start ``writer`` with ``spark.sql.shuffle.partitions`` set to 1,
+    for aggregations whose state is bounded by windows × groups.
 
     Each state partition is a state store committed every micro-batch,
-    so a batch-sized count (the session's 32) costs per-batch commits
-    and tasks that a few thousand state rows do not need.  The conf is
-    set only around ``start()``: the query clones the session there,
-    and the caller's session gets its value back.  A new checkpoint
-    records the capped count in its offset log; a restarted one
-    restores the count it recorded, so its state keeps its layout."""
+    and each commit writes checkpoint files, so the session's
+    batch-sized count (32) costs per-batch commits and tasks that the
+    state does not need.  Every map task partially aggregates its rows
+    before the state shuffle, so one partition receives at most
+    (windows × groups) rows per map task, whatever the input rate;
+    the scan and the partial aggregation keep full parallelism.  The
+    ``foreachBatch`` body runs in the query's session, so it also
+    plans on one partition: the rollup sink is (hours × event types)
+    rows.  The conf is set only around ``start()``: the query clones
+    the session there, and the caller's session gets its value back.
+    A new checkpoint records the count in its offset log; a restarted
+    one restores the count it recorded, so its state keeps its
+    layout."""
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
-    spark.conf.set(key, str(min(int(prev), spark.sparkContext.defaultParallelism)))
+    spark.conf.set(key, "1")
     try:
         return writer.start()
     finally:
@@ -457,8 +466,7 @@ def start_sliding_rollup_stream(
     because sliding windows of different durations may share a start.
 
     Bounded state, like ``start_rollup_stream``: a new checkpoint runs
-    on min(spark.sql.shuffle.partitions, defaultParallelism) state
-    partitions and an existing one keeps its count."""
+    on one state partition and an existing one keeps its count."""
     rollup = sliding_rollup(
         read_event_stream(spark, source_path), window_duration, slide, watermark
     )

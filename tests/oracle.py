@@ -10,7 +10,6 @@ not noise).
 
 from __future__ import annotations
 
-import math
 import os
 
 import duckdb

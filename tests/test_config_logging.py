@@ -5,8 +5,6 @@ from __future__ import annotations
 import json
 import logging
 
-import pytest
-
 from data_engineering_for_e_commerce_logistics_spark.config import Config, get_config
 from data_engineering_for_e_commerce_logistics_spark.logging_utils import StageLogger
 

@@ -7,8 +7,6 @@ oracle bitwise; the plan must shuffle statistics, never the corpus."""
 
 import math
 
-from pyspark.sql import functions as F
-
 from data_engineering_for_e_commerce_logistics_spark.operators.similarity import (
     diversity_report,
 )

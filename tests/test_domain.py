@@ -3,9 +3,6 @@ own entity flows, test_transform.py style)."""
 
 from __future__ import annotations
 
-import pytest
-from pyspark.sql import functions as F
-
 from data_engineering_for_e_commerce_logistics_spark.operators import domain
 
 

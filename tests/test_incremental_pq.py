@@ -6,8 +6,6 @@ always-catches-replicas property."""
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import functions as F
 
 from data_engineering_for_e_commerce_logistics_spark.catalog import read_parquet_table

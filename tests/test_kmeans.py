@@ -3,7 +3,6 @@ convergence toward tighter cells over iterations."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_for_e_commerce_logistics_spark.catalog import read_parquet_table

@@ -4,7 +4,6 @@ fan-out — with the stubbed decoder injected (no media libs here)."""
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_engineering_for_e_commerce_logistics_spark.catalog import read_parquet_table
 from data_engineering_for_e_commerce_logistics_spark.operators import multimodal

@@ -4,7 +4,6 @@
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from data_engineering_for_e_commerce_logistics_spark.operators import cleaners
 from data_engineering_for_e_commerce_logistics_spark.operators.validators import (
@@ -78,19 +77,27 @@ def test_pipeline_critical_abort(spark, tmp_path):
     assert log.first().status == "failed"
 
 
-def _run_counting_jobs(spark, pipeline, group: str):
-    """Run ``pipeline`` under a job group; return its result and the
-    number of Spark jobs it started."""
+def run_counting_jobs(spark, action, group: str):
+    """Run ``action()`` under a job group; return its result, the
+    number of Spark jobs it started and the number of tasks their
+    stages ran."""
     sc = spark.sparkContext
     sc.setJobGroup(group, group)
     try:
-        result = pipeline.run()
+        result = action()
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
     # the status tracker is fed by the listener bus, asynchronously
     sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return result, len(sc.statusTracker().getJobIdsForGroup(group))
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    tasks = sum(
+        tracker.getStageInfo(stage).numTasks
+        for job in jobs
+        for stage in tracker.getJobInfo(job).stageIds
+    )
+    return result, len(jobs), tasks
 
 
 def test_cli_loader_runs_no_recount(spark, sf_dir, tmp_path):
@@ -100,8 +107,8 @@ def test_cli_loader_runs_no_recount(spark, sf_dir, tmp_path):
     from data_engineering_for_e_commerce_logistics_spark.__main__ import build_pipeline
 
     out = str(tmp_path / "observed")
-    result, jobs = _run_counting_jobs(
-        spark, build_pipeline(spark, sf_dir, out), "cli-observed-loader"
+    result, jobs, _ = run_counting_jobs(
+        spark, build_pipeline(spark, sf_dir, out).run, "cli-observed-loader"
     )
     assert result.status == "success"
     written = {n: spark.read.parquet(f"{out}/{n}").count() for n in result.rows}
@@ -113,8 +120,8 @@ def test_cli_loader_runs_no_recount(spark, sf_dir, tmp_path):
         sinks.write_parquet(df, f"{recount_out}/{name}", mode="overwrite"),
         df.count(),
     )[1]
-    recount_result, recount_jobs = _run_counting_jobs(
-        spark, recounting, "cli-recounting-loader"
+    recount_result, recount_jobs, _ = run_counting_jobs(
+        spark, recounting.run, "cli-recounting-loader"
     )
     assert recount_result.rows == result.rows
     assert recount_jobs - jobs >= 7, (jobs, recount_jobs)

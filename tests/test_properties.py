@@ -8,9 +8,6 @@ per-example budget)."""
 
 from __future__ import annotations
 
-import math
-
-import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F

@@ -4,7 +4,6 @@ test_load.py re-expressed for the Spark engine."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -222,6 +221,44 @@ def test_run_log_append(spark, tmp_path):
     log = spark.read.parquet(path)
     assert log.count() == 2
     assert {r.run_id for r in log.collect()} == {"r1", "r2"}
+
+
+def test_run_log_row_is_one_task_and_keeps_its_schema(spark, tmp_path):
+    """Each run-log append runs one job of one task; the log reads back
+    as ``RUN_LOG_SCHEMA``, every field as logged and ``started_at`` the
+    run's start instant."""
+    import dataclasses
+    import datetime
+
+    from pyspark.sql.types import _parse_datatype_string
+
+    from tests.test_pipeline import run_counting_jobs
+
+    path = str(tmp_path / "runlog")
+    runs = [
+        sinks.RunMetrics(
+            run_id="r1", source="api", started_at=1_700_000_000.25, rows_loaded=10
+        ),
+        sinks.RunMetrics(
+            run_id="r2",
+            source="csv",
+            status="failed",
+            started_at=1_700_003_600.5,
+            validation_passed=False,
+            error_message="boom",
+        ),
+    ]
+    for m in runs:
+        _, jobs, tasks = run_counting_jobs(
+            spark, lambda m=m: sinks.log_etl_run(spark, m, path), f"run-log-{m.run_id}"
+        )
+        assert (jobs, tasks) == (1, 1)
+    log = spark.read.parquet(path)
+    assert log.schema == _parse_datatype_string(sinks.RUN_LOG_SCHEMA)
+    got = {r.run_id: r.asDict() for r in log.collect()}
+    for m in runs:
+        started = datetime.datetime.fromtimestamp(m.started_at)
+        assert got[m.run_id] == {**dataclasses.asdict(m), "started_at": started}
 
 
 def test_jdbc_sink_roundtrip_embedded_derby(spark, tmp_path):

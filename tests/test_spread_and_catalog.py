@@ -1,21 +1,22 @@
-"""Round-14 optimization internals: the guarded scan fan-out and the
-catalog scan-plan memo (focused tests per the optimization-round brief
-— every touched operator internal gets one)."""
+"""Optimization internals: the guarded scan fan-out, the catalog
+scan-plan memo and the JVM-literal local frames (focused tests per the
+optimization-round brief — every touched operator internal gets
+one)."""
 
 from __future__ import annotations
 
 import logging
 import os
 
-import pytest
-from pyspark.sql import functions as F
-
 from data_engineering_for_e_commerce_logistics_spark.catalog import (
-    _SCAN_CACHE,
     clear_scan_cache,
     read_parquet_table,
 )
-from data_engineering_for_e_commerce_logistics_spark.functions import spread_scan
+from data_engineering_for_e_commerce_logistics_spark.functions import (
+    local_rows_df,
+    spread_scan,
+)
+from tests.test_pipeline import run_counting_jobs
 
 SF = os.environ.get("SPARK_GRAFT_TEST_SF_DIR", "/root/testdata/sf0.001")
 
@@ -120,3 +121,17 @@ def test_diversity_spread_clamp_hides_no_real_negative(spark):
     np_spread = (np.linalg.norm(vs, axis=1) ** 2).mean() - mean_v @ mean_v
     assert out["spread"] >= 0.0
     assert abs(out["spread"] - max(np_spread, 0.0)) < 1e-6
+
+
+def test_local_rows_df_runs_one_task(spark):
+    """A noop write of a ``local_rows_df`` frame, with rows or empty,
+    runs one job of one task, whatever the cluster's parallelism."""
+    schema = "k int, v string"
+    for label, rows in (("rows", [(1, "a"), (2, "b")]), ("empty", [])):
+        df = local_rows_df(spark, rows, schema)
+        _, jobs, tasks = run_counting_jobs(
+            spark,
+            lambda df=df: df.write.format("noop").mode("overwrite").save(),
+            f"local-rows-{label}",
+        )
+        assert (jobs, tasks) == (1, 1), label

@@ -4,7 +4,6 @@ frame without restarting the query."""
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from data_engineering_for_e_commerce_logistics_spark.catalog import read_parquet_table

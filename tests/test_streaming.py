@@ -393,10 +393,13 @@ def _assert_matches_hourly_batch(spark, sink: str, events):
     assert j.filter(~F.col("n_events").eqNullSafe(F.col("b_n"))).count() == 0
 
 
-def test_rollup_stream_state_partitions_sized_to_cluster(spark, tmp_path):
-    """A new rollup checkpoint gets min(shuffle partitions,
-    defaultParallelism) state partitions, and the caller's session
-    keeps its own shuffle partition count."""
+@pytest.mark.parametrize(
+    "start", ["start_rollup_stream", "start_sliding_rollup_stream"]
+)
+def test_rollup_stream_runs_on_one_state_partition(spark, tmp_path, start):
+    """A new rollup checkpoint gets one state partition, whatever the
+    session's shuffle partition count, and the caller's session keeps
+    its own count."""
     source = str(tmp_path / "events_src_sized")
     read_parquet_table(spark, f"{SF_DIR}/events.parquet").write.parquet(source)
     key = "spark.sql.shuffle.partitions"
@@ -405,12 +408,13 @@ def test_rollup_stream_state_partitions_sized_to_cluster(spark, tmp_path):
     spark.conf.set(key, str(parallelism + 2))
     try:
         ckpt = str(tmp_path / "ckpt_sized")
-        q = ingest.start_rollup_stream(spark, source, str(tmp_path / "sink"), ckpt)
+        q = getattr(ingest, start)(spark, source, str(tmp_path / "sink"), ckpt)
         assert spark.conf.get(key) == str(parallelism + 2)
         q.awaitTermination(120)
     finally:
         spark.conf.set(key, prev)
-    assert _state_partitions(ckpt) == parallelism
+    assert q.exception() is None
+    assert _state_partitions(ckpt) == 1
 
 
 def test_rollup_checkpoint_keeps_its_partition_count_on_restart(spark, tmp_path):
